@@ -247,10 +247,20 @@ def two_phase_row_number(
     ``approxQuantile`` job instead of one eager job per metric — r9,
     st_rfm): split values only steer bucket load balance, the produced
     rank is exact for ANY splits (all ties of ``primary`` share a bucket
-    by construction of ``range_bucket``)."""
+    by construction of ``range_bucket``). Raises ValueError when ``df``
+    already has ``out_col`` or one of the internal ``_bkt``, ``_one``,
+    ``_lrn``, ``_off__one`` columns (they would come out duplicated or
+    ambiguous)."""
+    in_cols = df.columns
+    taken = {out_col.lower(), "_bkt", "_one", "_lrn", "_off__one"}
+    clash = [c for c in in_cols if c.lower() in taken]
+    if clash:
+        raise ValueError(
+            f"two_phase_row_number: input already has column(s) {clash}; "
+            "rename them or pick another out_col"
+        )
     if splits is None:
         splits = quantile_splits(df, primary, n_buckets)
-    in_cols = df.columns
     bucketed = df.selectExpr(
         "*",
         f"({range_bucket_sql(_qid(primary), splits)}) AS `_bkt`",

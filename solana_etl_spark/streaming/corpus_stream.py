@@ -43,6 +43,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from solana_etl_spark.operators.dedup import dedup_index
 from solana_etl_spark.operators.text import quality_predicate
+from solana_etl_spark.streaming import state
 from solana_etl_spark.streaming.dedup_stream import dedup_batch_against_index
 
 
@@ -124,12 +125,9 @@ def start_streaming_corpus_pipeline(
         ).persist()
         try:
             new_exact, new_bands = dedup_index(deduped)
-            new_exact.write.mode("overwrite").parquet(
-                os.path.join(index_dir, "exact", f"batch={batch_id}")
-            )
-            new_bands.write.mode("overwrite").parquet(
-                os.path.join(index_dir, "bands", f"batch={batch_id}")
-            )
+            for sub, rows in (("exact", new_exact), ("bands", new_bands)):
+                sub_dir = os.path.join(index_dir, sub)
+                state.commit(rows, sub_dir, "batch", batch_id)
             decontaminate_stage(deduped, eval_docs).write.mode(
                 "overwrite"
             ).parquet(os.path.join(survivors_dir, f"batch={batch_id}"))

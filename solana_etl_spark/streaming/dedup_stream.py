@@ -14,9 +14,10 @@ subdirectories keyed by batch_id, the ``append_csv_exactly_once`` pattern).
 Retry safety: foreachBatch is at-least-once, so a crash after this batch's
 index write but before the checkpoint commit re-runs the same batch_id —
 which would then see ITS OWN index entries and classify every row as a
-duplicate. The index loader therefore excludes the current batch_id's
-partition; the re-run recomputes the same survivors and overwrites the same
-paths, converging instead of erasing.
+duplicate. The index loader therefore reads every committed ``batch=``
+version (streaming/state.py) except the current batch_id's; the re-run
+recomputes the same survivors and overwrites the same paths, converging
+instead of erasing.
 
 At 100 TB the index tables are small-by-construction (16-byte hashes and
 band keys, not documents); per-batch cost is two anti-joins keyed on narrow
@@ -28,7 +29,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -39,6 +39,7 @@ from solana_etl_spark.operators.dedup import (
     incremental_dedup,
     lsh_duplicate_ids,
 )
+from solana_etl_spark.streaming import state
 
 
 #: Marker file recording the schema an index table was persisted with.
@@ -53,13 +54,14 @@ _FORMAT_MARKER = "_index_schema"
 def _check_index_format(path: str, schema: str) -> None:
     """Fail loudly on a persisted index whose format predates ``schema``.
 
-    Three states: marker matches → proceed; marker differs OR committed
-    data exists without a marker (pre-versioning index) → raise with a
-    rewrite instruction; no marker and no data (fresh index) → stamp the
-    marker now, BEFORE the first batch write, so a crash between the
-    first write and any later stamp can never produce the unversioned
-    state. The marker lives beside the ``batch=`` dirs with a leading
-    underscore, so Spark readers and compaction both ignore it.
+    Three states: marker matches → proceed; marker differs OR data
+    exists without a marker (pre-versioning index; any ``batch=`` dir
+    counts, committed or not) → raise with a rewrite instruction; no
+    marker and no data (fresh index) → stamp the marker now, BEFORE the
+    first batch write, so a crash between the first write and any later
+    stamp can never produce the unversioned state. The marker lives
+    beside the ``batch=`` dirs with a leading underscore, so Spark
+    readers and compaction both ignore it.
     """
     marker = os.path.join(path, _FORMAT_MARKER)
     if os.path.exists(marker):
@@ -74,9 +76,7 @@ def _check_index_format(path: str, schema: str) -> None:
                 "formats, which would silently admit duplicates"
             )
         return
-    if os.path.isdir(path) and any(
-        n.startswith("batch=") for n in os.listdir(path)
-    ):
+    if state.versions(SparkSession.active(), path, "batch", False):
         raise ValueError(
             f"persisted index at {path} has no {_FORMAT_MARKER} marker "
             f"(written by a pre-versioning engine); expected schema "
@@ -93,34 +93,23 @@ def _check_index_format(path: str, schema: str) -> None:
 def _read_index(
     spark: SparkSession, path: str, schema: str, exclude_batch: int | None
 ) -> DataFrame:
-    """Read an index table; tolerate ONLY its nonexistence (first batch).
+    """Read an index table: the union of its committed ``batch=``
+    versions, empty before the first commit.
 
-    Any other failure (storage error, corrupt footer, or a format-marker
+    Every failure (storage error, corrupt footer, or a format-marker
     mismatch — see ``_check_index_format``) must raise: silently deduping
     against an empty or mis-typed index would admit duplicates and
     permanently pollute the corpus. ``exclude_batch`` drops the current
-    batch_id's own partition so a foreachBatch retry never reads its
+    batch_id's own version so a foreachBatch retry never reads its
     first attempt's output (see module docstring).
     """
     _check_index_format(path, schema)
-    try:
-        df = spark.read.option("basePath", path).parquet(path)
-    except AnalysisException as e:
-        # a dir that exists but holds zero COMMITTED files (crash during
-        # the first index write — _temporary only) reads as
-        # UNABLE_TO_INFER_SCHEMA and is the same "no index yet" state as
-        # nonexistence: the parquet commit protocol guarantees uncommitted
-        # files are never readable, so this cannot hide a real index
-        if (
-            "PATH_NOT_FOUND" in str(e)
-            or "Path does not exist" in str(e)
-            or "UNABLE_TO_INFER_SCHEMA" in str(e)
-        ):
-            return spark.createDataFrame([], schema)
-        raise
-    if exclude_batch is not None and "batch" in df.columns:
-        df = df.filter(F.col("batch") != exclude_batch)
-    return df.select(*schema.replace(",", " ").split()[::2])
+    ids = [
+        b for b in state.versions(spark, path, "batch") if b != exclude_batch
+    ]
+    return state.read(spark, path, "batch", ids, schema).select(
+        *schema.replace(",", " ").split()[::2]
+    )
 
 
 def dedup_batch_against_index(
@@ -191,12 +180,9 @@ def start_streaming_corpus_ingest(
             os.path.join(survivors_dir, f"batch={batch_id}")
         )
         new_exact, new_bands = dedup_index(written)
-        new_exact.write.mode("overwrite").parquet(
-            os.path.join(index_dir, "exact", f"batch={batch_id}")
-        )
-        new_bands.write.mode("overwrite").parquet(
-            os.path.join(index_dir, "bands", f"batch={batch_id}")
-        )
+        for sub, rows in (("exact", new_exact), ("bands", new_bands)):
+            sub_dir = os.path.join(index_dir, sub)
+            state.commit(rows, sub_dir, "batch", batch_id)
         maybe_compact_indexes(
             spark,
             [os.path.join(index_dir, "exact"), os.path.join(index_dir, "bands")],

@@ -9,23 +9,20 @@ the same registers, arrival order never matters, and the streaming
 result equals the batch sketch over the same files — hence value-hash
 oracle-checkable (the tenth stream-equals-batch family).
 
-State versioning follows sample_stream: ``batch=k`` holds the registers
-AFTER batch k; a retry re-reads its predecessor (batch < current),
-recomputes, and overwrites only its own partition; versions older than
-the predecessor are pruned after each successful write.
+State is versioned through streaming/state.py: ``batch=k`` holds the
+registers AFTER batch k; a retry re-reads the newest committed version
+below its own id, recomputes, and overwrites only its own directory;
+the two newest committed versions are kept after each write.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from solana_etl_spark.operators.sketch import HLL_P, hll_registers
-from solana_etl_spark.streaming.sample_stream import _prune_state
+from solana_etl_spark.streaming import state
 
 
 def _state_schema(
@@ -50,28 +47,13 @@ def read_hll_state(
 ) -> DataFrame:
     """The current register table: newest committed ``batch=k`` (or the
     newest below ``before_batch`` for a retrying batch)."""
-    try:
-        df = spark.read.option("basePath", state_dir).parquet(state_dir)
-    except AnalysisException as e:
-        if (
-            "PATH_NOT_FOUND" in str(e)
-            or "Path does not exist" in str(e)
-            or "UNABLE_TO_INFER_SCHEMA" in str(e)
-        ):
-            return spark.createDataFrame(
-                [], _state_schema(group_cols, group_types)
-            )
-        raise
-    if before_batch is not None:
-        df = df.filter(F.col("batch") < before_batch)
-    latest = df.agg(F.max("batch")).first()[0]
-    if latest is None:
-        return spark.createDataFrame(
-            [], _state_schema(group_cols, group_types)
-        )
-    return df.filter(F.col("batch") == latest).select(
-        *group_cols, "bucket", "reg"
-    )
+    return state.read_latest(
+        spark,
+        state_dir,
+        "batch",
+        _state_schema(group_cols, group_types),
+        before_batch,
+    ).select(*group_cols, "bucket", "reg")
 
 
 def update_hll_batch(
@@ -103,10 +85,8 @@ def update_hll_batch(
         .groupBy(*group_cols, "bucket")
         .agg(F.max("reg").alias("reg"))
     )
-    new_state.write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"batch={batch_id}")
-    )
-    _prune_state(spark, state_dir, keep_from=batch_id - 1)
+    state.commit(new_state, state_dir, "batch", batch_id)
+    state.prune(spark, state_dir, "batch", retain=2)
 
 
 def start_streaming_hll(

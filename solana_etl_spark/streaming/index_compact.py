@@ -34,37 +34,24 @@ of directories and one that lists hundreds of thousands.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import SparkSession
+
+from solana_etl_spark.streaming import state
 
 # default cadence wired into the stream writers: fold history every
 # N micro-batches, keeping the live partition count ~N + 1 generation
 DEFAULT_COMPACT_EVERY = 16
 
 
-def _batch_dirs(path: str) -> dict[int, str]:
-    """{batch_id: dirname} for every ``batch=<int>`` partition dir."""
-    out: dict[int, str] = {}
-    if not os.path.isdir(path):
-        return out
-    for name in os.listdir(path):
-        if not name.startswith("batch="):
-            continue
-        try:
-            out[int(name.split("=", 1)[1])] = name
-        except ValueError:
-            continue
-    return out
-
-
 def compact_index(
     spark: SparkSession, path: str, before_batch: int, min_partitions: int = 4
 ) -> int:
-    """Fold every committed partition with id < ``before_batch``
-    (including prior compacted generations — their ids are negative) into
-    one single-file generation whose id is ``min(existing ids, 0) − 1``
-    — fresh by construction, so the rename target can NEVER pre-exist,
+    """Fold every partition with id < ``before_batch`` (including prior
+    compacted generations — their ids are negative) into one single-file
+    generation whose id is ``min(existing ids, 0) − 1`` over EVERY
+    ``batch=<int>`` dir, committed or not — fresh by construction, so
+    the rename target can NEVER pre-exist,
     even when a crash between the rename and the covered-dir deletes
     leaves a stale generation behind and the micro-batch retries the
     same compaction. (The previous ``-(before_batch)-1`` scheme wedged
@@ -81,24 +68,18 @@ def compact_index(
     nothing readers see. There is no window where committed rows are
     unreadable. (The rename is atomic on a real filesystem; on an
     object store, substitute its commit protocol.)"""
-    dirs = _batch_dirs(path)
-    covered = {b: d for b, d in dirs.items() if b < before_batch}
+    ids = state.versions(spark, path, "batch", committed=False)
+    covered = [b for b in ids if b < before_batch]
     if len(covered) < min_partitions:
         return 0
-    target = min(0, min(dirs)) - 1
+    target = min(0, min(ids)) - 1
     tmp = os.path.join(path, "_compact_tmp")
-    src = spark.read.option("basePath", path).parquet(
-        *[os.path.join(path, d) for d in covered.values()]
-    )
-    payload = [c for c in src.columns if c != "batch"]
+    src = state.read(spark, path, "batch", covered, None)
     # one file: the compacted generation is small by construction
     # (hashes/keys, not documents) and is broadcast into per-batch joins
-    src.select(*payload).distinct().coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    os.rename(tmp, os.path.join(path, f"batch={target}"))
-    for d in covered.values():
-        shutil.rmtree(os.path.join(path, d), ignore_errors=True)
+    src.distinct().coalesce(1).write.mode("overwrite").parquet(tmp)
+    os.rename(tmp, state.version_path(path, "batch", target))
+    state.drop(spark, path, "batch", covered)
     return len(covered)
 
 

@@ -56,6 +56,7 @@ from solana_etl_spark.operators.audio import (
     audio_fingerprints,
     fingerprint_pairs_from_sigs,
 )
+from solana_etl_spark.streaming import state
 from solana_etl_spark.streaming.dedup_stream import _read_index
 
 # geometry derives from operators/audio.py — the in-batch pair miner and
@@ -163,8 +164,8 @@ def start_streaming_media_dedup(
         survivors.write.mode("overwrite").parquet(
             os.path.join(survivors_dir, f"batch={batch_id}")
         )
-        _band_rows(sigs).write.mode("overwrite").parquet(
-            os.path.join(index_dir, "fps", f"batch={batch_id}")
+        state.commit(
+            _band_rows(sigs), os.path.join(index_dir, "fps"), "batch", batch_id
         )
         maybe_compact_indexes(
             spark, [os.path.join(index_dir, "fps")], batch_id, cadence

@@ -29,41 +29,24 @@ maintenance is charter scale machinery.
 
 from __future__ import annotations
 
-import os
-import re
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from solana_etl_spark.operators.merge import merge_snapshot
-
-_VDIR = re.compile(r"^v=(\d+)$")
+from solana_etl_spark.streaming import state
 
 
 def snapshot_versions(snapshot_dir: str) -> list[int]:
-    if not os.path.isdir(snapshot_dir):
-        return []
-    out = []
-    for name in os.listdir(snapshot_dir):
-        m = _VDIR.match(name)
-        # only committed snapshots count (_SUCCESS marker): a crashed
-        # half-write must not become someone's parent
-        if m and os.path.exists(os.path.join(snapshot_dir, name, "_SUCCESS")):
-            out.append(int(m.group(1)))
-    return sorted(out)
+    """Committed snapshot versions, oldest first (streaming/state.py)."""
+    return state.versions(SparkSession.active(), snapshot_dir, "v")
 
 
 def current_snapshot(spark: SparkSession, snapshot_dir: str) -> DataFrame:
-    versions = snapshot_versions(snapshot_dir)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshot under {snapshot_dir}")
-    return spark.read.parquet(os.path.join(snapshot_dir, f"v={versions[-1]}"))
+    return state.read_latest(spark, snapshot_dir, "v")
 
 
 def prune_snapshots(snapshot_dir: str, retain: int = 3) -> None:
-    for v in snapshot_versions(snapshot_dir)[:-retain]:
-        shutil.rmtree(os.path.join(snapshot_dir, f"v={v}"), ignore_errors=True)
+    state.prune(SparkSession.active(), snapshot_dir, "v", retain)
 
 
 def apply_changes_batch(
@@ -77,19 +60,17 @@ def apply_changes_batch(
 ) -> None:
     """Merge one micro-batch of changes into snapshot ``v=batch_id``."""
     base_cols = [c for c in batch_df.columns if c not in (op_col, version_col)]
-    parents = [v for v in snapshot_versions(snapshot_dir) if v < batch_id]
-    if parents:
-        base = spark.read.parquet(
-            os.path.join(snapshot_dir, f"v={parents[-1]}")
-        ).select(*base_cols)
-    else:
-        base = spark.createDataFrame([], batch_df.select(*base_cols).schema)
+    base = state.read_latest(
+        spark,
+        snapshot_dir,
+        "v",
+        batch_df.select(*base_cols).schema,
+        before=batch_id,
+    ).select(*base_cols)
     merged = merge_snapshot(
         base, batch_df, keys, version_col=version_col, op_col=op_col
     )
-    merged.write.mode("overwrite").parquet(
-        os.path.join(snapshot_dir, f"v={batch_id}")
-    )
+    state.commit(merged, snapshot_dir, "v", batch_id)
 
 
 def start_merge_stream(

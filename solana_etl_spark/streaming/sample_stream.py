@@ -14,25 +14,22 @@ union, so
   batch-SQL-expressible, hence value-hash oracle-checkable.
 
 State is versioned per micro-batch (``batch=k`` = the sample AFTER batch
-k, a pure function of the batch prefix) and discovered through Spark's
-partition mechanism — no filesystem listing, so any object store works;
-a retry re-reads its predecessor's state (``batch < current``), recomputes
-the same output, and overwrites only its own partition — the same
-convergence recipe as the streaming dedup index. At 100 TB the state is
+k, a pure function of the batch prefix) through streaming/state.py: a
+retry re-reads the newest committed version below its own id,
+recomputes the same output and overwrites only its own directory, and
+the two newest committed versions are kept. At 100 TB the state is
 n rows regardless of corpus size and the per-batch cost is one
 TakeOrderedAndProject over (batch ∪ n state rows).
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from solana_etl_spark.functions.hashing import hash64
+from solana_etl_spark.streaming import state
 
 SAMPLE_N = 100
 
@@ -54,59 +51,12 @@ def read_sample(
 ) -> DataFrame:
     """The current sample: the newest committed ``batch=k`` state (or the
     newest with k < before_batch, which a retrying batch uses so it never
-    reads its own first attempt). Only the nonexistence of the state dir
-    is tolerated (first batch); the max-batch probe is a 1-row driver
-    scalar, like every bounded-state collect in this repo. ``key_type``
-    shapes the empty no-state-yet frame so non-long keys (string ids)
-    union cleanly with their first batch."""
-    try:
-        df = spark.read.option("basePath", state_dir).parquet(state_dir)
-    except AnalysisException as e:
-        # missing dir (first batch) OR an existing dir with ZERO committed
-        # files (crash during the very first state write — _temporary only,
-        # which reads as UNABLE_TO_INFER_SCHEMA): both genuinely mean "no
-        # state yet"; the parquet commit protocol guarantees uncommitted
-        # files are never readable, so treating this as empty is safe and
-        # keeps the retry loop convergent instead of permanently wedged
-        if (
-            "PATH_NOT_FOUND" in str(e)
-            or "Path does not exist" in str(e)
-            or "UNABLE_TO_INFER_SCHEMA" in str(e)
-        ):
-            return spark.createDataFrame([], _state_schema(key_type))
-        raise
-    if before_batch is not None:
-        df = df.filter(F.col("batch") < before_batch)
-    latest = df.agg(F.max("batch")).first()[0]
-    if latest is None:
-        return spark.createDataFrame([], _state_schema(key_type))
-    return df.filter(F.col("batch") == latest).select(
-        "doc_id", "sample_rank"
-    )
-
-
-def _prune_state(spark: SparkSession, state_dir: str, keep_from: int) -> None:
-    """Delete ``batch=k`` state versions with k < keep_from. Called after
-    a successful write with keep_from = batch_id − 1: the predecessor
-    stays (a retry of batch_id re-reads it and converges), everything
-    older is dead weight — without this a long-running stream accumulates
-    one partition per micro-batch and read_sample's listing cost grows
-    without bound. Hadoop FS API so any object store works."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(state_dir)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return
-    for status in fs.listStatus(hpath):
-        name = status.getPath().getName()
-        if not name.startswith("batch="):
-            continue
-        try:
-            b = int(name.split("=", 1)[1])
-        except ValueError:
-            continue
-        if b < keep_from:
-            fs.delete(status.getPath(), True)
+    reads its own first attempt). ``key_type`` shapes the empty
+    no-state-yet frame so non-long keys (string ids) union cleanly with
+    their first batch."""
+    return state.read_latest(
+        spark, state_dir, "batch", _state_schema(key_type), before_batch
+    ).select("doc_id", "sample_rank")
 
 
 def update_sample_batch(
@@ -135,10 +85,10 @@ def update_sample_batch(
         .orderBy("sample_rank", "doc_id")
         .limit(n)
     )
-    new_state.write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"batch={batch_id}")
-    )
-    _prune_state(spark, state_dir, keep_from=batch_id - 1)
+    state.commit(new_state, state_dir, "batch", batch_id)
+    # the predecessor stays for a retry of batch_id; anything older is
+    # dead weight that would grow the listing by one dir per batch
+    state.prune(spark, state_dir, "batch", retain=2)
 
 
 def start_streaming_sample(

@@ -1,0 +1,134 @@
+"""Versioned state directories: the one definition every micro-batch
+stream uses to list, read, commit and prune its state.
+
+Each stateful stream keeps its state as ``<dir>/<prefix>=<id>`` parquet
+directories — ``batch=k`` for the snapshot streams (sample, hll, vocab)
+and the append-only indexes (dedup, corpus, web, media), ``v=N`` for the
+view and CDC snapshots. foreachBatch is at-least-once, so version k is
+written as a pure function of committed versions below k with an
+overwrite: a retry of batch k re-reads the same parents and rewrites the
+same directory, and the stream converges. That only holds if every
+stream agrees on which versions are committed, so the rules live here:
+
+* **committed** — a ``<prefix>=<int>`` directory holding ``_SUCCESS``,
+  which the file-output committer writes after every task committed. A
+  directory holding only ``_temporary/`` (crash during the write) or
+  part files without the marker (crash during job commit) is never
+  chosen as a parent.
+* **listing** — on the driver through the Hadoop ``FileSystem`` API, one
+  ``globStatus`` per listing: no Spark job, and the same call serves
+  local paths and object stores. A missing directory has no versions.
+* **reads** — the newest committed version below k, or the union of
+  chosen versions; an empty frame of the caller's schema when there is
+  nothing to read.
+* **pruning** — keep the newest ``retain`` committed versions and
+  delete every older directory, committed or not.
+
+The prefix is a constant at each call site, so state written before this
+module existed reads unchanged.
+"""
+
+from __future__ import annotations
+
+import os
+
+from pyspark.sql import DataFrame, SparkSession
+
+
+def _fs(spark: SparkSession, path: str):
+    """(the Hadoop FileSystem serving ``path``, the Hadoop Path class)."""
+    sc = spark.sparkContext
+    hadoop_path = sc._jvm.org.apache.hadoop.fs.Path
+    fs = hadoop_path(path).getFileSystem(sc._jsc.hadoopConfiguration())
+    return fs, hadoop_path
+
+
+def version_path(path: str, prefix: str, version: int) -> str:
+    return os.path.join(path, f"{prefix}={version}")
+
+
+def versions(
+    spark: SparkSession, path: str, prefix: str, committed: bool = True
+) -> list[int]:
+    """Sorted ids of the ``<prefix>=<int>`` directories under ``path`` —
+    only committed ones unless ``committed=False`` (index compaction
+    must see every id, committed or not, to pick a fresh one)."""
+    fs, hadoop_path = _fs(spark, path)
+    pattern = f"{prefix}=*/_SUCCESS" if committed else f"{prefix}=*"
+    found = fs.globStatus(hadoop_path(os.path.join(path, pattern)))
+    out = []
+    for status in found or []:
+        p = status.getPath()
+        name = (p.getParent() if committed else p).getName()
+        try:
+            out.append(int(name[len(prefix) + 1 :]))
+        except ValueError:
+            continue
+    return sorted(out)
+
+
+def latest(
+    spark: SparkSession, path: str, prefix: str, before: int | None = None
+) -> int | None:
+    """The newest committed version (below ``before`` when given — a
+    retrying batch passes its own id so it never reads its first
+    attempt), or None."""
+    found = versions(spark, path, prefix)
+    if before is not None:
+        found = [v for v in found if v < before]
+    return found[-1] if found else None
+
+
+def read(
+    spark: SparkSession, path: str, prefix: str, ids: list[int], schema
+) -> DataFrame:
+    """The union of versions ``ids`` (payload columns only: each version
+    directory is read as its own base path), or an empty frame of
+    ``schema`` when ``ids`` is empty."""
+    if not ids:
+        return spark.createDataFrame([], schema)
+    return spark.read.parquet(*[version_path(path, prefix, v) for v in ids])
+
+
+def read_latest(
+    spark: SparkSession,
+    path: str,
+    prefix: str,
+    schema=None,
+    before: int | None = None,
+) -> DataFrame:
+    """The newest committed version below ``before``. With none, an
+    empty frame of ``schema``, or FileNotFoundError when no schema is
+    given (a reader that needs existing state)."""
+    v = latest(spark, path, prefix, before)
+    if v is None and schema is None:
+        raise FileNotFoundError(f"no committed {prefix}= version under {path}")
+    return read(spark, path, prefix, [] if v is None else [v], schema)
+
+
+def commit(df: DataFrame, path: str, prefix: str, version: int) -> None:
+    """Write ``df`` as version ``version``. Overwrite, so a retry of the
+    same batch replaces its first attempt instead of adding to it."""
+    df.write.mode("overwrite").parquet(version_path(path, prefix, version))
+
+
+def drop(spark: SparkSession, path: str, prefix: str, ids) -> None:
+    """Delete version directories ``ids`` (recursively; absent ones are
+    a no-op)."""
+    fs, hadoop_path = _fs(spark, path)
+    for v in ids:
+        fs.delete(hadoop_path(version_path(path, prefix, v)), True)
+
+
+def prune(spark: SparkSession, path: str, prefix: str, retain: int) -> None:
+    """Keep the newest ``retain`` committed versions; delete every older
+    directory, committed or not. A retry of batch k reads the newest
+    committed version below k, so callers keep at least 2."""
+    kept = versions(spark, path, prefix)[-retain:]
+    if kept:
+        drop(
+            spark,
+            path,
+            prefix,
+            [v for v in versions(spark, path, prefix, False) if v < kept[0]],
+        )

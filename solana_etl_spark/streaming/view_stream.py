@@ -18,8 +18,8 @@ Per micro-batch N:
 * ``v=N`` is a pure function of committed state strictly below N, so
   at-least-once redelivery converges (same inputs → same overwrite) —
   the same exactly-once recipe as the CDC merge stream, with the
-  ``_SUCCESS``-gated version/batch directories standing in for a
-  transaction log.
+  committed version/batch directories of streaming/state.py standing in
+  for a transaction log.
 
 Scale: per batch, only delta-sized joins run (each delta side broadcasts
 against the accumulated other side); the view grows append-only, so the
@@ -31,39 +31,20 @@ delta terms ARE the new partition.
 from __future__ import annotations
 
 import os
-import re
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from solana_etl_spark.operators.incremental import maintain_join_append
-
-_BDIR = re.compile(r"^batch=(\d+)$")
-_VDIR = re.compile(r"^v=(\d+)$")
-
-
-def _committed(dir_path: str, pattern: re.Pattern) -> list[int]:
-    if not os.path.isdir(dir_path):
-        return []
-    out = []
-    for name in os.listdir(dir_path):
-        m = pattern.match(name)
-        if m and os.path.exists(os.path.join(dir_path, name, "_SUCCESS")):
-            out.append(int(m.group(1)))
-    return sorted(out)
+from solana_etl_spark.streaming import state
 
 
 def _side_union(
     spark: SparkSession, side_dir: str, below: int, schema
 ) -> DataFrame:
-    batches = [b for b in _committed(side_dir, _BDIR) if b < below]
-    if not batches:
-        return spark.createDataFrame([], schema)
-    return spark.read.parquet(
-        *[os.path.join(side_dir, f"batch={b}") for b in batches]
-    )
+    older = [b for b in state.versions(spark, side_dir, "batch") if b < below]
+    return state.read(spark, side_dir, "batch", older, schema)
 
 
 def _split_sides(batch_df: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -88,33 +69,25 @@ def apply_view_batch(
     da, db = _split_sides(batch_df)
     a_dir = os.path.join(state_dir, "a")
     b_dir = os.path.join(state_dir, "b")
-    da.write.mode("overwrite").parquet(
-        os.path.join(a_dir, f"batch={batch_id}")
-    )
-    db.write.mode("overwrite").parquet(
-        os.path.join(b_dir, f"batch={batch_id}")
-    )
+    state.commit(da, a_dir, "batch", batch_id)
+    state.commit(db, b_dir, "batch", batch_id)
     a_old = _side_union(spark, a_dir, batch_id, da.schema)
     b_old = _side_union(spark, b_dir, batch_id, db.schema)
 
     view_dir = os.path.join(state_dir, "view")
-    parents = [v for v in _committed(view_dir, _VDIR) if v < batch_id]
     cols = ["user_id", "signup_ts", "purchase_ts", "value"]
-    if parents:
-        parent = spark.read.parquet(
-            os.path.join(view_dir, f"v={parents[-1]}")
-        )
-    else:
-        parent = spark.createDataFrame(
-            [], a_old.join(db, "user_id").select(*cols).schema
-        )
+    parent = state.read_latest(
+        spark,
+        view_dir,
+        "v",
+        a_old.join(db, "user_id").select(*cols).schema,
+        before=batch_id,
+    )
     # one shared implementation of the delta rule (batch + streaming)
     new_view = maintain_join_append(
         parent, a_old, b_old, da, db, ["user_id"]
     ).select(*cols)
-    new_view.write.mode("overwrite").parquet(
-        os.path.join(view_dir, f"v={batch_id}")
-    )
+    state.commit(new_view, view_dir, "v", batch_id)
 
 
 def prune_view_versions(state_dir: str, retain: int = 3) -> None:
@@ -122,17 +95,13 @@ def prune_view_versions(state_dir: str, retain: int = 3) -> None:
     pruning, every micro-batch rewrites the FULL view into a fresh ``v=N``
     directory and storage grows quadratically in batch count (the same
     guard :func:`merge_stream.prune_snapshots` applies to CDC snapshots)."""
-    view_dir = os.path.join(state_dir, "view")
-    for v in _committed(view_dir, _VDIR)[:-retain]:
-        shutil.rmtree(os.path.join(view_dir, f"v={v}"), ignore_errors=True)
+    state.prune(
+        SparkSession.active(), os.path.join(state_dir, "view"), "v", retain
+    )
 
 
 def current_view(spark: SparkSession, state_dir: str) -> DataFrame:
-    view_dir = os.path.join(state_dir, "view")
-    versions = _committed(view_dir, _VDIR)
-    if not versions:
-        raise FileNotFoundError(f"no committed view under {view_dir}")
-    return spark.read.parquet(os.path.join(view_dir, f"v={versions[-1]}"))
+    return state.read_latest(spark, os.path.join(state_dir, "view"), "v")
 
 
 def start_view_stream(

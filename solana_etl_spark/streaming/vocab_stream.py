@@ -5,13 +5,13 @@ micro-batch and re-train a BPE/WordPiece vocabulary on demand with the
 driver-side hybrid trainer (operators/vocab_driver.py) in seconds,
 without ever re-scanning the corpus.
 
-State recipe: versioned snapshots exactly like streaming/sample_stream
-and streaming/hll_stream — ``batch=k`` holds the word counts AFTER
-batch k; a foreachBatch retry re-reads its predecessor (batch < current)
-and overwrites only its own partition, so at-least-once replays converge
-(word-count summation is not an idempotent merge, but the version chain
-makes each batch's fold exactly-once); versions older than the
-predecessor are pruned after each successful write.
+State recipe: versioned snapshots through streaming/state.py —
+``batch=k`` holds the word counts AFTER batch k; a foreachBatch retry
+re-reads the newest committed version below its own id and overwrites
+only its own directory, so at-least-once replays converge (word-count
+summation is not an idempotent merge, but the version chain makes each
+batch's fold exactly-once); the two newest committed versions are kept
+after each write.
 
 Because counts are additive, the maintained table over a stream equals
 ``word_freq_table`` over the same rows as one batch — bit-exactly. So a
@@ -25,15 +25,12 @@ seconds-scale driver pass over it.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from solana_etl_spark.operators.vocab import word_freq_table
-from solana_etl_spark.streaming.sample_stream import _prune_state
+from solana_etl_spark.streaming import state
 
 _STATE_SCHEMA = "word string, freq long"
 
@@ -45,22 +42,9 @@ def read_word_state(
 ) -> DataFrame:
     """The current (word, freq) table: newest committed ``batch=k`` (or
     the newest below ``before_batch`` for a retrying batch)."""
-    try:
-        df = spark.read.option("basePath", state_dir).parquet(state_dir)
-    except AnalysisException as e:
-        if (
-            "PATH_NOT_FOUND" in str(e)
-            or "Path does not exist" in str(e)
-            or "UNABLE_TO_INFER_SCHEMA" in str(e)
-        ):
-            return spark.createDataFrame([], _STATE_SCHEMA)
-        raise
-    if before_batch is not None:
-        df = df.filter(F.col("batch") < before_batch)
-    latest = df.agg(F.max("batch")).first()[0]
-    if latest is None:
-        return spark.createDataFrame([], _STATE_SCHEMA)
-    return df.filter(F.col("batch") == latest).select("word", "freq")
+    return state.read_latest(
+        spark, state_dir, "batch", _STATE_SCHEMA, before_batch
+    ).select("word", "freq")
 
 
 def update_word_batch(
@@ -81,10 +65,8 @@ def update_word_batch(
         .groupBy("word")
         .agg(F.sum("freq").cast("long").alias("freq"))
     )
-    new_state.write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"batch={batch_id}")
-    )
-    _prune_state(spark, state_dir, keep_from=batch_id - 1)
+    state.commit(new_state, state_dir, "batch", batch_id)
+    state.prune(spark, state_dir, "batch", retain=2)
 
 
 def start_streaming_word_counts(

@@ -35,8 +35,9 @@ same relation batch span dedup hashes).
 
 Retry safety mirrors ``dedup_stream``: foreachBatch is at-least-once,
 every write lands in a ``batch={id}`` subdirectory with overwrite, and
-the index loaders exclude the in-flight batch_id so a retry never reads
-its first attempt's output.
+the index loaders read every committed version (streaming/state.py)
+except the in-flight batch_id, so a retry never reads its first
+attempt's output.
 
 At 100 TB the per-batch cost is the chain's own map-heavy stages plus
 two narrow index anti-joins (32-byte hash / canonical-URL rows) — no
@@ -57,6 +58,7 @@ from solana_etl_spark.operators.c4 import (
     span_hashes,
 )
 from solana_etl_spark.operators.web import canonical_url, url_dedup_keep_best
+from solana_etl_spark.streaming import state
 from solana_etl_spark.streaming.dedup_stream import _read_index
 
 
@@ -144,14 +146,12 @@ def start_streaming_web_pipeline(
         )
         # canonicals of ALL batch rows: any seen canonical suppresses
         # later copies (see module doc)
-        batch_pages.select(
+        urls = batch_pages.select(
             canonical_url(F.col("url")).alias("url_canonical")
-        ).distinct().write.mode("overwrite").parquet(
-            os.path.join(index_dir, "urls", f"batch={batch_id}")
-        )
-        span_hashes(cleaned).write.mode("overwrite").parquet(
-            os.path.join(index_dir, "spans", f"batch={batch_id}")
-        )
+        ).distinct()
+        spans = span_hashes(cleaned)
+        state.commit(urls, os.path.join(index_dir, "urls"), "batch", batch_id)
+        state.commit(spans, os.path.join(index_dir, "spans"), "batch", batch_id)
         maybe_compact_indexes(
             spark,
             [os.path.join(index_dir, "urls"), os.path.join(index_dir, "spans")],

@@ -18,6 +18,12 @@ TOKEN_TX = (
 )
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: a long-running property test (still runs in tier-1)"
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = get_spark(

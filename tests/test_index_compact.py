@@ -8,19 +8,23 @@ from __future__ import annotations
 
 import os
 
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from solana_etl_spark.streaming import state
 from solana_etl_spark.streaming.dedup_stream import (
     _check_index_format,
     _read_index,
     start_streaming_corpus_ingest,
 )
-from solana_etl_spark.streaming.index_compact import (
-    _batch_dirs,
-    compact_index,
-)
+from solana_etl_spark.streaming.index_compact import compact_index
 
 SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
+
+
+def _batch_dirs(path):
+    """Every ``batch=<int>`` id under ``path``, committed or not."""
+    return state.versions(SparkSession.active(), path, "batch", False)
 
 
 def _write_batches(spark, path, n_batches, rows_per_batch=3):

@@ -5,6 +5,7 @@ shape — ties, skew, descending order, degenerate split lists."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -69,6 +70,26 @@ def test_two_phase_row_number_single_bucket_degenerate(spark):
         ).collect()
     )
     assert [rn for _, rn in sorted(got)] == [3, 4, 1, 5, 2]
+
+
+@pytest.mark.parametrize(
+    "taken, out_col",
+    [
+        ("_rn", "_rn"),
+        ("rank", "rank"),
+        ("_bkt", "_rn"),
+        ("_BKT", "_rn"),
+        ("_one", "_rn"),
+        ("_lrn", "_rn"),
+        ("_off__one", "_rn"),
+    ],
+)
+def test_two_phase_row_number_rejects_column_collisions(spark, taken, out_col):
+    df = _df(spark, [5, 1, 9]).withColumn(taken, F.lit(0))
+    with pytest.raises(ValueError, match=taken):
+        two_phase_row_number(
+            df, "v", [F.asc("v"), F.asc("rid")], out_col=out_col, n_buckets=1
+        )
 
 
 def test_exclusive_offsets_descending_direction(spark):

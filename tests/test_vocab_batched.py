@@ -18,6 +18,7 @@ from test_wordpiece import _ref_train as _wp_ref
 
 from solana_etl_spark.operators.vocab import (
     _select_bpe_batch,
+    collect_adjacent_triples,
     train_bpe_merges,
 )
 from solana_etl_spark.operators.wordpiece import (
@@ -202,3 +203,54 @@ def test_select_wp_batch_stale_window_candidate_rejected():
     ]
     got = _select_wp_batch(cand, 2, WP_KNOWN, {}, False, {})
     assert [(a, b) for a, b, _ in got] == [("x", "##y")]
+
+
+# collect_adjacent_triples keys pairs as NUL-joined strings, so a symbol
+# that itself contains NUL can FALSE-match: ("x", "y\0z") and ("x\0y",
+# "z") both key as "x\0y\0z". The extra row may only add to what is
+# collected: an untruncated collect still returns every true triple, and
+# the floor still bounds every true triple a truncated collect leaves out.
+_NUL_CAND = [{"a": "x\x00y", "b": "z"}]
+_NUL_TRIPLES = [
+    ("x", "y\x00z", "q", 9),  # false match: (x, y\0z) is not a candidate
+    ("m", "n", "o", 7),  # not adjacent
+    ("p", "x\x00y", "z", 5),  # true: (·, a, b)
+    ("x\x00y", "z", "w", 4),  # true: (a, b, ·)
+]
+
+
+def _nul_exact():
+    cand = {(c["a"], c["b"]) for c in _NUL_CAND}
+    return {
+        t for t in _NUL_TRIPLES if t[:2] in cand or t[1:3] in cand
+    }
+
+
+def _nul_collect(spark, cap):
+    tri = spark.createDataFrame(
+        _NUL_TRIPLES, "s1 string, s2 string, s3 string, cnt3 long"
+    )
+    rows, floor = collect_adjacent_triples(tri, _NUL_CAND, cap)
+    got = {(r["s1"], r["s2"], r["s3"], r["cnt3"]) for r in rows}
+    exact = got & _nul_exact()
+    exact_floor = (
+        min((t[3] for t in exact), default=0) if len(rows) == cap else 0
+    )
+    return got, floor, exact_floor
+
+
+def test_collect_adjacent_triples_nul_symbol_false_match(spark):
+    got, floor, exact_floor = _nul_collect(spark, cap=100)
+    assert _nul_exact() <= got
+    assert got - _nul_exact() == {("x", "y\x00z", "q", 9)}
+    assert floor <= exact_floor
+
+
+def test_collect_adjacent_triples_nul_symbol_truncated_floor(spark):
+    # cap 2 keeps the false match (9) and one true triple (5): the floor
+    # still bounds the uncollected true triple and stays at or below the
+    # floor of the exactly matched rows
+    got, floor, exact_floor = _nul_collect(spark, cap=2)
+    assert _nul_exact() - got == {("x\x00y", "z", "w", 4)}
+    assert floor <= exact_floor
+    assert all(t[3] <= floor for t in _nul_exact() - got)
