@@ -1,15 +1,20 @@
-"""Round-9 optimization measurement harness (guide §1).
+"""Per-query measurement harness for optimization work.
 
-Two modes:
-  python scripts/measure_r09.py plans [suffix] [name ...]
+Two modes; ``label`` names the measurement (e.g. the round) and goes into
+the output directory and the Spark job descriptions:
+  python scripts/measure.py plans <label> [suffix] [name ...]
       Capture .explain("formatted") for the headline queries into
-      plans/r09/<name>_<suffix>.txt  (suffix default: before).
-  python scripts/measure_r09.py time [n_reps] [name ...]
+      plans/<label>/<name>_<suffix>.txt  (suffix default: before).
+      Plans of two code states compare equal once expression and plan
+      ids are masked (sed -E 's/#[0-9]+/#N/g; s/plan_id=[0-9]+/plan_id=N/g').
+  python scripts/measure.py time <label> [n_reps] [name ...]
       Time each query in isolation with the noop sink (computes every
-      column, discards output — guide §1.4) and with .count() (the bench
-      statistic), printing one JSON line per query.
+      column, discards output) and with .count() (the bench statistic),
+      printing one JSON line per query.
 
-Never used by the bench itself; bench.py stays the driver contract.
+Queries default to bench.HEADLINE; data comes from $SPARK_GRAFT_SF_DIR
+(same default as bench.py). bench.py does not use this script; its own
+timing loop stays the judged statistic.
 """
 
 from __future__ import annotations
@@ -19,38 +24,27 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from solana_etl_spark.session import get_spark  # noqa: E402
 from solana_etl_spark import queries as _q  # noqa: E402
-
-HEADLINE = [
-    "q1_pricing_summary", "q3_topk_revenue", "q5_revenue_by_nation",
-    "q6_forecast_revenue", "a9_conditional_rollup", "m1_balance_modes",
-    "j2_full_outer_coalesce", "w1_topk_per_group", "set_ops",
-    "x1_semantic_extract", "dedup_exact", "dedup_minhash_lsh_pairs",
-    "dedup_simhash_pairs", "dedup_ngram_jaccard", "sim_cosine_topk",
-    "sim_neardup_pairs", "text_quality", "text_fingerprint",
-    "st_sessionize", "pipeline_clean_corpus", "j6_asof_join",
-    "j7_range_join", "s2_stratified_sample", "a14_kmv_distinct",
-    "mm_frame_sample", "solana_e2e",
-]
+from bench import HEADLINE  # noqa: E402
 
 
 def main() -> None:
-    mode = sys.argv[1] if len(sys.argv) > 1 else "plans"
+    if len(sys.argv) < 3 or sys.argv[1] not in ("plans", "time"):
+        sys.exit(__doc__)
+    mode, label = sys.argv[1], sys.argv[2]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name=f"measure-r09-{mode}")
+    spark = get_spark(app_name=f"measure-{label}-{mode}")
     spark.sparkContext.setLogLevel("ERROR")
     qs = _q.all_queries()
 
     if mode == "plans":
-        suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
-        names = sys.argv[3:] or HEADLINE
-        outdir = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "plans", "r09",
-        )
+        suffix = sys.argv[3] if len(sys.argv) > 3 else "before"
+        names = sys.argv[4:] or HEADLINE
+        outdir = os.path.join(ROOT, "plans", label)
         os.makedirs(outdir, exist_ok=True)
         for name in names:
             try:
@@ -63,9 +57,9 @@ def main() -> None:
             with open(os.path.join(outdir, f"{name}_{suffix}.txt"), "w") as f:
                 f.write(plan)
             print(f"wrote {name}_{suffix}.txt ({len(plan)} chars)")
-    elif mode == "time":
-        n = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-        names = sys.argv[3:] or HEADLINE
+    else:
+        n = int(sys.argv[3]) if len(sys.argv) > 3 else 3
+        names = sys.argv[4:] or HEADLINE
         # same warm-up as bench.py
         for t in ("lineitem", "orders", "events", "documents", "embeddings"):
             spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
@@ -74,7 +68,7 @@ def main() -> None:
         ).count()
         results = {}
         for name in names:
-            spark.sparkContext.setJobDescription(f"r09-measure:{name}")
+            spark.sparkContext.setJobDescription(f"{label}-measure:{name}")
             reps_noop, reps_count = [], []
             try:
                 for _ in range(n):

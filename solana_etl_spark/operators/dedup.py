@@ -83,7 +83,7 @@ def word_shingles_sql(text_col: str = "text") -> str:
     naive form re-runs the whole ``split(lower(trim(text)))`` for every
     shingle position (three times per element) — O(len·words) per document.
     Binding leaves one split plus O(words) array lookups (r9)."""
-    w = f"split(lower(trim({text_col})), '\\\\s+')"
+    w = _toks_expr(text_col)
     return (
         f"array_distinct(element_at(transform(array({w}), _ws_w ->"
         " transform(sequence(1, greatest(size(_ws_w) - 1, 1)),"

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from solana_etl_spark.functions.sqltext import ident
+
 
 def impute_group_median(
     df: DataFrame,
@@ -41,12 +43,9 @@ def impute_group_median(
     value on a non-missing row stays NULL (it was not declared missing).
     """
     observed = df.filter(~is_missing & F.col(value_col).isNotNull())
-    grp = observed.groupBy(key_col).agg(
-        F.expr(f"percentile({value_col}, 0.5)").alias("_grp_med")
-    )
-    glob = observed.agg(
-        F.expr(f"percentile({value_col}, 0.5)").alias("_glob_med")
-    )
+    median = f"percentile({ident(value_col)}, 0.5)"
+    grp = observed.groupBy(key_col).agg(F.expr(median).alias("_grp_med"))
+    glob = observed.agg(F.expr(median).alias("_glob_med"))
     if broadcast_groups:
         grp = F.broadcast(grp)
     imputed = F.when(

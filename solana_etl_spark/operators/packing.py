@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from solana_etl_spark.functions.sqltext import ident
 from solana_etl_spark.operators.text import tokens
 
 SEQ_BUDGET = 512  # tokens per packed sequence
@@ -92,15 +93,12 @@ def pack_sequences(
         shard_cols = ["shard"]
     if order_splits:
         from solana_etl_spark.operators.prefix import (
-            _qid,
             exclusive_offsets,
             nullsafe_offsets_join,
             range_bucket,
         )
 
-        bucketed = sel.withColumn(
-            "_bkt", range_bucket(_qid(order_col), order_splits)
-        )
+        bucketed = sel.withColumn("_bkt", range_bucket(order_col, order_splits))
         offs = exclusive_offsets(
             bucketed, ["n_tokens"], group_cols=tuple(part_cols)
         )
@@ -222,7 +220,9 @@ def chunk_documents(
         ),
         F.lit(stride),
     )
-    chunk = F.expr(f"substring({text_col}, CAST(s + 1 AS INT), {chunk_chars})")
+    chunk = F.expr(
+        f"substring({ident(text_col)}, CAST(s + 1 AS INT), {chunk_chars})"
+    )
     return (
         documents.withColumn("s", F.explode(starts))
         .select(

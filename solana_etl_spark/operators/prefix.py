@@ -31,6 +31,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from solana_etl_spark.functions.sqltext import double_lit, ident
+
 N_RANGE_BUCKETS = 64
 
 # Split estimation samples 1-in-SPLIT_SAMPLE_MOD key values (by
@@ -85,41 +87,18 @@ def quantile_splits(
     return sorted({float(q) for q in qs})
 
 
-def _qid(name: str) -> str:
-    """Backtick-quote an identifier for SQL-string building, escaping
-    embedded backticks — ``f"`{name}`"`` would produce a malformed quoted
-    identifier for a column name containing a backtick (ADVICE r9)."""
-    return f"`{name.replace('`', '``')}`"
-
-
-def _double_literal(s: float) -> str:
-    """A float as Spark SQL DOUBLE literal text. ``repr`` + ``D`` suffix
-    pins finite values (a bare ``59.0`` parses as DECIMAL(3,1) and would
-    change comparison type promotion); non-finite values have no literal
-    form — ``repr`` emits ``inf``/``nan``, invalid SQL (ADVICE r9) — so
-    they go through the double() constructor like ``F.lit(float)`` did."""
-    import math
-
-    v = float(s)
-    if math.isinf(v):
-        return "double('-Infinity')" if v < 0 else "double('Infinity')"
-    if math.isnan(v):
-        return "double('NaN')"
-    return f"{v!r}D"
-
-
 def range_bucket_sql(col_expr: str, splits: list[float]) -> str:
     """:func:`range_bucket` as Spark SQL expression text. The Column-API
     chain of 63 ``F.when(...).otherwise(...)`` nodes cost ~400 py4j round
     trips per call (~0.4 s of driver time, ×3 in st_rfm — r9 cProfile);
     one parsed string builds the identical CASE-chain tree. Split
-    literals go through :func:`_double_literal` (DOUBLE-pinned; handles
+    literals go through :func:`sqltext.double_lit` (DOUBLE-pinned; handles
     the ±inf/NaN splits ``approxQuantile`` can return on data containing
     them, which the Column form's ``F.lit(float)`` always accepted)."""
     if not splits:
         return "0"
     return " + ".join(
-        f"(CASE WHEN ({col_expr}) > {_double_literal(s)} THEN 1 ELSE 0 END)"
+        f"(CASE WHEN ({col_expr}) > {double_lit(s)} THEN 1 ELSE 0 END)"
         for s in splits
     )
 
@@ -135,7 +114,7 @@ def range_bucket(col: Column | str, splits: list[float]) -> Column:
     a string to build the chain as one parsed SQL string (r9 — see
     :func:`range_bucket_sql`); a Column argument keeps the py4j form."""
     if isinstance(col, str):
-        return F.expr(range_bucket_sql(col, splits))
+        return F.expr(range_bucket_sql(ident(col), splits))
     if not splits:
         return F.lit(0)
     out = F.lit(0)
@@ -160,21 +139,20 @@ def exclusive_offsets(
     # expression trees built as SQL strings (r10, guide §7.3): the Column-
     # API loops cost a py4j round trip per node, ~3× per call in st_rfm's
     # build — the parsed trees are identical
-    q = _qid
     agg = bucketed.groupBy(*group_cols, bucket_col).agg(
-        *[F.expr(f"sum({q(m)})").alias(f"_t_{m}") for m in measures]
+        *[F.expr(f"sum({ident(m)})").alias(f"_t_{m}") for m in measures]
     )
     left = agg.selectExpr(
-        *[f"{q(g)} AS {q('_l_' + g)}" for g in group_cols],
-        f"{q(bucket_col)} AS `_l_bkt`",
-        *[f"{q('_t_' + m)} AS {q('_l_' + m)}" for m in measures],
+        *[f"{ident(g)} AS {ident('_l_' + g)}" for g in group_cols],
+        f"{ident(bucket_col)} AS `_l_bkt`",
+        *[f"{ident('_t_' + m)} AS {ident('_l_' + m)}" for m in measures],
     )
     # eqNullSafe (<=>): a NULL group key (lang-ID failure, missing tenant)
     # is a real group — plain == would drop its offsets silently
     cond = F.expr(
         " AND ".join(
-            [f"{q('_l_' + g)} <=> {q(g)}" for g in group_cols]
-            + [f"`_l_bkt` {'>' if descending else '<'} {q(bucket_col)}"]
+            [f"{ident('_l_' + g)} <=> {ident(g)}" for g in group_cols]
+            + [f"`_l_bkt` {'>' if descending else '<'} {ident(bucket_col)}"]
         )
     )
     out = (
@@ -183,7 +161,7 @@ def exclusive_offsets(
         .agg(
             *[
                 F.expr(
-                    f"CAST(coalesce(sum({q('_l_' + m)}), 0) AS BIGINT)"
+                    f"CAST(coalesce(sum({ident('_l_' + m)}), 0) AS BIGINT)"
                 ).alias(f"_off_{m}")
                 for m in measures
             ]
@@ -194,9 +172,9 @@ def exclusive_offsets(
     # keep their input exprIds — without this, the self-join resolves the
     # shared attribute to the wrong side (ATTRIBUTE_NOT_FOUND at runtime)
     return out.selectExpr(
-        *[f"{q(g)} AS {q(g)}" for g in group_cols],
-        f"{q(bucket_col)} AS {q(bucket_col)}",
-        *[q("_off_" + m) for m in measures],
+        *[f"{ident(g)} AS {ident(g)}" for g in group_cols],
+        f"{ident(bucket_col)} AS {ident(bucket_col)}",
+        *[ident("_off_" + m) for m in measures],
     )
 
 
@@ -263,7 +241,7 @@ def two_phase_row_number(
         splits = quantile_splits(df, primary, n_buckets)
     bucketed = df.selectExpr(
         "*",
-        f"({range_bucket_sql(_qid(primary), splits)}) AS `_bkt`",
+        f"({range_bucket_sql(ident(primary), splits)}) AS `_bkt`",
         "1 AS `_one`",
     )
     offs = exclusive_offsets(
@@ -274,8 +252,8 @@ def two_phase_row_number(
         bucketed.withColumn("_lrn", F.row_number().over(w))
         .join(F.broadcast(offs), "_bkt")
         .selectExpr(
-            *[_qid(c) for c in in_cols],
-            f"(`_lrn` + `_off__one`) AS {_qid(out_col)}",
+            *[ident(c) for c in in_cols],
+            f"(`_lrn` + `_off__one`) AS {ident(out_col)}",
         )
     )
     return out

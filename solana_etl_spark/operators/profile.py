@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
+from solana_etl_spark.functions.sqltext import string_lit
+
 
 def profile_table(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     """One row per column: n_rows, n_nulls, n_distinct (exact), min/max
@@ -48,9 +50,8 @@ def profile_table(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     # stack(n, name1, nulls1, nd1, min1, max1, avglen1, ...)
     parts = []
     for i, c in enumerate(cols):
-        name_lit = c.replace("\\", "\\\\").replace("'", "\\'")
         parts.append(
-            f"'{name_lit}', __nulls_{i}, __nd_{i}, __min_{i}, __max_{i}, "
+            f"{string_lit(c)}, __nulls_{i}, __nd_{i}, __min_{i}, __max_{i}, "
             f"round(__avglen_{i}, 6)"
         )
     stacked = one.select(

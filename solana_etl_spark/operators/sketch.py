@@ -38,6 +38,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 
 def _mg_partition(key_col: str, k: int):
@@ -102,7 +103,9 @@ def frequent_items(
         df.select(key_col)
         .mapInPandas(
             _mg_partition(key_col, k),
-            schema=f"{key_col} {df.schema[key_col].dataType.simpleString()}",
+            schema=StructType(
+                [StructField(key_col, df.schema[key_col].dataType)]
+            ),
         )
         .distinct()
     )

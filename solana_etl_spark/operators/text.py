@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from solana_etl_spark.functions.hashing import hash32, perm_hash, MINHASH_PERMS
+from solana_etl_spark.functions.sqltext import ident
 
 # fixed stopword lists for the language-ID heuristic (order = tie preference)
 LANG_STOPWORDS: list[tuple[str, tuple[str, ...]]] = [
@@ -45,7 +46,7 @@ def char_ngrams(text_col: str, n: int = NGRAM_N) -> Column:
     every gram position — O(len²) characters per document. Binding drops it
     to one normalization pass plus O(len) substrings (r9, guide §1.2 "make
     the code inside each stage fast")."""
-    s = f"lower(trim({text_col}))"
+    s = f"lower(trim({ident(text_col)}))"
     return F.array_distinct(
         F.expr(
             f"element_at(transform(array({s}), _cg_s ->"
@@ -267,7 +268,8 @@ def word_ngrams(n: int = BOILERPLATE_N) -> Column:
 
 
 def _toks_expr(col: str = "text") -> str:
-    return rf"split(lower(trim({col})), '\\s+')"
+    """:func:`tokens` of column ``col`` as Spark SQL expression text."""
+    return rf"split(lower(trim({ident(col)})), '\\s+')"
 
 
 _TOKS_EXPR = _toks_expr()
@@ -276,8 +278,7 @@ _TOKS_EXPR = _toks_expr()
 def _ngram_expr(n: int, col: str = "text") -> str:
     """Positional word n-grams as a SQL expression; empty array for docs
     shorter than n (guarded — Spark's sequence(1, 0) is DESCENDING [1, 0],
-    not empty). ``col`` is the text column the grams read (interpolated
-    into the expression — callers pass identifiers, not user input)."""
+    not empty). ``col`` is the NAME of the text column the grams read."""
     toks = _toks_expr(col)
     # bind the token array once per row (HOFs are interpreted; the naive
     # form re-runs the split for every gram position — see char_ngrams)

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from solana_etl_spark.functions.sqltext import string_lit
+
 EOW = "</w>"  # end-of-word sentinel, as in the original BPE formulation
 
 
@@ -91,12 +93,6 @@ def merge_pair_expr(
     )
 
 
-def _sql_str(s: str) -> str:
-    """``s`` as a Spark SQL single-quoted string literal (backslash and
-    quote escaped — symbols come straight from corpus words)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 def merge_pair_sql(
     symbols_expr: str, a: str, b: str, merged: str | None = None
 ) -> str:
@@ -109,7 +105,7 @@ def merge_pair_sql(
     pretty-print drift on the simhash SQL strings)."""
     if merged is None:
         merged = a + b
-    la, lb, lm = _sql_str(a), _sql_str(b), _sql_str(merged)
+    la, lb, lm = string_lit(a), string_lit(b), string_lit(merged)
     return (
         f"aggregate({symbols_expr},"
         " named_struct('out', cast(array() as array<string>),"
