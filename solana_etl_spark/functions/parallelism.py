@@ -22,12 +22,11 @@ count): when the scan is a few-file local-parquet read, the footer
 metadata also yields the exact row count, and the target becomes
 ``min(cores·min_factor, ceil(rows / COMPUTE_ROWS_PER_TASK))`` with a
 floor of 1 (an empty or single-batch input is never shuffled at all).
-``COMPUTE_ROWS_PER_TASK`` (env ``SPARK_GRAFT_COMPUTE_ROWS_PER_TASK``,
-default 64) is sized to the measured per-row kernel costs — 0.07–7 ms
-for the media decodes, ~1 ms/doc for the n-gram family — so a task
-carries ≥ ~5–400 ms of compute, far above per-task scheduling overhead,
-while corpus-scale inputs (rows ≥ 64·cores) keep the exact cores-sized
-behavior. Rows-not-bytes is deliberate: per-BYTE compute cost spans
+``COMPUTE_ROWS_PER_TASK`` (a constant, 64) is sized to the measured
+per-row kernel costs — 0.07–7 ms for the media decodes, ~1 ms/doc for
+the n-gram family — so a task carries ≥ ~5–400 ms of compute, far above
+per-task scheduling overhead, while corpus-scale inputs (rows ≥
+64·cores) keep the exact cores-sized behavior. Rows-not-bytes is deliberate: per-BYTE compute cost spans
 ~10^3× across these operators (584 KB of sf0.1 documents drive ~3 s of
 n-gram work), so byte targets either serialize the heavy kernels or
 re-inflate the tiny ones; per-ROW cost is the stable proxy.
@@ -35,14 +34,10 @@ re-inflate the tiny ones; per-ROW cost is the stable proxy.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 #: Minimum rows a compute task should carry before more tasks pay off.
-COMPUTE_ROWS_PER_TASK = int(
-    os.environ.get("SPARK_GRAFT_COMPUTE_ROWS_PER_TASK", "64")
-)
+COMPUTE_ROWS_PER_TASK = 64
 
 
 def _parquet_meta(files: list[str]) -> tuple[int, int] | None:

@@ -3896,8 +3896,6 @@ def stream_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint index — re-ingesting the corpus adds zero rows. The
     multimodal member of the stream-equals-batch gate family (7th row).
     local_only: streaming state dirs are per-run temp."""
-    import tempfile
-
     from solana_etl_spark.sources.synth import ensure_audio_table
     from solana_etl_spark.streaming.media_stream import (
         start_streaming_media_dedup,
@@ -3907,24 +3905,18 @@ def stream_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = spark.read.parquet(f"{d}/audio.parquet").select(
         F.col("clip_id").alias("media_id"), "payload"
     )
-    work = tempfile.mkdtemp(prefix="gate_stream_media_")
-    for p in ("a", "b"):
-        media.coalesce(1).write.mode("overwrite").parquet(f"{work}/src/{p}")
-    stream = (
-        spark.readStream.schema(media.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/src/*/*.parquet")
-    )
-    q = start_streaming_media_dedup(
+    return _stream_gate(
         spark,
-        stream,
-        survivors_dir=f"{work}/out",
-        index_dir=f"{work}/idx",
-        checkpoint_dir=f"{work}/ckpt",
-    )
-    q.awaitTermination(300)
-    return _materialize_and_clean(
-        spark.read.parquet(f"{work}/out").select("media_id", "afp"), work
+        "media",
+        [media.coalesce(1)] * 2,
+        lambda stream, work: start_streaming_media_dedup(
+            spark,
+            stream,
+            survivors_dir=f"{work}/out",
+            index_dir=f"{work}/idx",
+            checkpoint_dir=f"{work}/ckpt",
+        ),
+        lambda work: spark.read.parquet(f"{work}/out").select("media_id", "afp"),
     )
 
 
@@ -7500,37 +7492,34 @@ def stream_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream-equals-batch gate family, and the streaming completion of
     the r8 hybrid trainer. local_only: streaming state dirs are
     per-run temp."""
-    import tempfile
-
     from solana_etl_spark.streaming.vocab_stream import (
         start_streaming_word_counts,
         train_bpe_from_state,
     )
 
     docs = _t(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="gate_stream_vocab_")
-    for p in (0, 1):
-        docs.filter(F.col("doc_id") % 2 == p).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{work}/src/{p}")
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/src/*/*.parquet")
-    )
-    q = start_streaming_word_counts(
+
+    def merges(work: str) -> DataFrame:
+        trained = train_bpe_from_state(
+            spark, f"{work}/state", _BPE_TRAIN_N_MERGES
+        )
+        return spark.createDataFrame(
+            [(i, a, b) for i, (a, b) in enumerate(trained)],
+            "merge_idx long, a string, b string",
+        )
+
+    return _stream_gate(
         spark,
-        stream,
-        state_dir=f"{work}/state",
-        checkpoint_dir=f"{work}/ckpt",
+        "vocab",
+        [docs.filter(F.col("doc_id") % 2 == p).coalesce(1) for p in (0, 1)],
+        lambda stream, work: start_streaming_word_counts(
+            spark,
+            stream,
+            state_dir=f"{work}/state",
+            checkpoint_dir=f"{work}/ckpt",
+        ),
+        merges,
     )
-    q.awaitTermination(300)
-    merges = train_bpe_from_state(spark, f"{work}/state", _BPE_TRAIN_N_MERGES)
-    out = spark.createDataFrame(
-        [(i, a, b) for i, (a, b) in enumerate(merges)],
-        "merge_idx long, a string, b string",
-    )
-    return _materialize_and_clean(out, work)
 
 
 def _bpe_fertility_oracle() -> str:
@@ -9435,42 +9424,60 @@ def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-equal the plain batch GROUP BY oracle. Third member of the
     stream-equals-batch gate family (join view, CDC snapshot, windowed
     agg). local_only: streaming state dirs are per-run temp."""
-    import tempfile
-
     from solana_etl_spark.streaming.windows import windowed_event_counts
 
     ev = _t(spark, sf_dir, "events").select("ts", "event_type", "value")
-    work = tempfile.mkdtemp(prefix="gate_stream_win_")
-    src = f"{work}/src"
-    ev.repartition(4).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*.parquet")
+    return _stream_gate(
+        spark,
+        "win",
+        [ev.repartition(4)],
+        lambda stream, work: (
+            windowed_event_counts(stream)
+            .writeStream.format("memory")
+            .queryName("gate_win_out")
+            .outputMode("complete")
+            .trigger(availableNow=True)
+            .option("checkpointLocation", f"{work}/ckpt")
+            .start()
+        ),
+        lambda work: spark.table("gate_win_out"),
     )
-    q = (
-        windowed_event_counts(stream)
-        .writeStream.format("memory")
-        .queryName("gate_win_out")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{work}/ckpt")
-        .start()
-    )
-    q.awaitTermination(300)
-    return _materialize_and_clean(spark.table("gate_win_out"), work)
 
 
-def _materialize_and_clean(df: DataFrame, work_dir: str) -> DataFrame:
-    """Pin a streaming run's final snapshot into Spark block storage
-    (eager localCheckpoint) so its per-run temp source/state/checkpoint
-    tree can be deleted immediately instead of accumulating one
-    gate_stream_* directory per gate/audit invocation (review finding)."""
+def _stream_gate(
+    spark: SparkSession,
+    name: str,
+    parts: list[DataFrame],
+    start: Callable,
+    result: Callable[[str], DataFrame],
+) -> DataFrame:
+    """One stream-equals-batch gate run. Each frame of ``parts`` lands as
+    its own parquet directory under a fresh ``gate_stream_<name>_`` work
+    dir, and the file stream takes one file per micro-batch
+    (maxFilesPerTrigger=1) — so the landing layout fixes the micro-batch
+    boundaries the oracle checks. ``start(stream, work)`` starts the
+    query; it must end within 300 s (``state.await_end``: a stalled
+    stream raises instead of handing over half-run state).
+    ``result(work)`` is pinned into Spark block storage (eager
+    localCheckpoint) so the work dir can be removed — on failure too."""
     import shutil
+    import tempfile
 
-    pinned = df.localCheckpoint(eager=True)
-    shutil.rmtree(work_dir, ignore_errors=True)
-    return pinned
+    from solana_etl_spark.streaming import state
+
+    work = tempfile.mkdtemp(prefix=f"gate_stream_{name}_")
+    try:
+        for i, part in enumerate(parts):
+            part.write.mode("overwrite").parquet(f"{work}/src/{i}")
+        stream = (
+            spark.readStream.schema(parts[0].schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{work}/src/*/*.parquet")
+        )
+        state.await_end(start(stream, work), 300)
+        return result(work).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 def _stream_corpus_pipeline_oracle() -> str:
@@ -9524,8 +9531,6 @@ def stream_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup stage. Eval slice (src19) is static model-side state. The
     oracle is the batch-SQL pipeline. local_only: streaming state dirs
     are per-run temp."""
-    import tempfile
-
     from solana_etl_spark.streaming.corpus_stream import (
         start_streaming_corpus_pipeline,
     )
@@ -9533,26 +9538,21 @@ def stream_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("source") != "src19")
     eval_docs = docs.filter(F.col("source") == "src19")
-    work = tempfile.mkdtemp(prefix="gate_stream_corpus_")
-    for p in ("a", "b"):
-        corpus.coalesce(1).write.mode("overwrite").parquet(f"{work}/src/{p}")
-    stream = (
-        spark.readStream.schema(corpus.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/src/*/*.parquet")
-    )
-    q = start_streaming_corpus_pipeline(
+    return _stream_gate(
         spark,
-        stream,
-        eval_docs,
-        survivors_dir=f"{work}/out",
-        index_dir=f"{work}/idx",
-        checkpoint_dir=f"{work}/ckpt",
-    )
-    q.awaitTermination(300)
-    return _materialize_and_clean(
-        spark.read.parquet(f"{work}/out").select("doc_id", "lang", "source"),
-        work,
+        "corpus",
+        [corpus.coalesce(1)] * 2,
+        lambda stream, work: start_streaming_corpus_pipeline(
+            spark,
+            stream,
+            eval_docs,
+            survivors_dir=f"{work}/out",
+            index_dir=f"{work}/idx",
+            checkpoint_dir=f"{work}/ckpt",
+        ),
+        lambda work: spark.read.parquet(f"{work}/out").select(
+            "doc_id", "lang", "source"
+        ),
     )
 
 
@@ -9580,8 +9580,6 @@ def stream_attribution_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stream-equals-batch exactly-once claim, enforced by the gate
     rather than only by pytest. local_only: streaming state dirs are
     per-run temp."""
-    import tempfile
-
     from solana_etl_spark.streaming.view_stream import (
         current_view,
         start_view_stream,
@@ -9590,23 +9588,19 @@ def stream_attribution_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select(
         "user_id", "ts", "event_type", "value"
     )
-    work = tempfile.mkdtemp(prefix="gate_stream_attr_")
-    src = f"{work}/src"
-    ev.repartition(3).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*.parquet")
-    )
-    q = start_view_stream(
+    return _stream_gate(
         spark,
-        stream,
-        state_dir=f"{work}/state",
-        checkpoint_dir=f"{work}/ckpt",
-        retain=2,
+        "attr",
+        [ev.repartition(3)],
+        lambda stream, work: start_view_stream(
+            spark,
+            stream,
+            state_dir=f"{work}/state",
+            checkpoint_dir=f"{work}/ckpt",
+            retain=2,
+        ),
+        lambda work: current_view(spark, f"{work}/state"),
     )
-    q.awaitTermination(300)
-    return _materialize_and_clean(current_view(spark, f"{work}/state"), work)
 
 
 @_register(
@@ -9638,8 +9632,6 @@ def stream_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction; a version-ordered split is a stream-source ordering
     assumption this gate query must not make). local_only: streaming state
     dirs are per-run temp."""
-    import tempfile
-
     from solana_etl_spark.streaming.merge_stream import (
         current_snapshot,
         start_merge_stream,
@@ -9652,27 +9644,19 @@ def stream_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "value",
     )
-    work = tempfile.mkdtemp(prefix="gate_stream_cdc_")
-    src = f"{work}/src"
-    changes.repartition(3, F.col("user_id") % 3).write.mode("overwrite").parquet(
-        src
-    )
-    stream = (
-        spark.readStream.schema(changes.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*.parquet")
-    )
-    q = start_merge_stream(
+    return _stream_gate(
         spark,
-        stream,
-        snapshot_dir=f"{work}/snap",
-        checkpoint_dir=f"{work}/ckpt",
-        keys=["user_id"],
-        retain=2,
-    )
-    q.awaitTermination(300)
-    return _materialize_and_clean(
-        current_snapshot(spark, f"{work}/snap"), work
+        "cdc",
+        [changes.repartition(3, F.col("user_id") % 3)],
+        lambda stream, work: start_merge_stream(
+            spark,
+            stream,
+            snapshot_dir=f"{work}/snap",
+            checkpoint_dir=f"{work}/ckpt",
+            keys=["user_id"],
+            retain=2,
+        ),
+        lambda work: current_snapshot(spark, f"{work}/snap"),
     )
 
 
@@ -9705,32 +9689,25 @@ def stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     processing order, which makes the streaming run batch-SQL-expressible.
     Fourth member of the stream-equals-batch gate family. local_only:
     streaming state dirs are per-run temp."""
-    import tempfile
-
     from solana_etl_spark.streaming.dedup_stream import (
         start_streaming_corpus_ingest,
     )
 
     docs = _t(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="gate_stream_dedup_")
-    for p in ("a", "b"):
-        docs.coalesce(1).write.mode("overwrite").parquet(f"{work}/src/{p}")
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/src/*/*.parquet")
-    )
-    q = start_streaming_corpus_ingest(
+    return _stream_gate(
         spark,
-        stream,
-        survivors_dir=f"{work}/out",
-        index_dir=f"{work}/idx",
-        checkpoint_dir=f"{work}/ckpt",
-    )
-    q.awaitTermination(300)
-    return _materialize_and_clean(
-        spark.read.parquet(f"{work}/out").select("doc_id", "lang", "source"),
-        work,
+        "dedup",
+        [docs.coalesce(1)] * 2,
+        lambda stream, work: start_streaming_corpus_ingest(
+            spark,
+            stream,
+            survivors_dir=f"{work}/out",
+            index_dir=f"{work}/idx",
+            checkpoint_dir=f"{work}/ckpt",
+        ),
+        lambda work: spark.read.parquet(f"{work}/out").select(
+            "doc_id", "lang", "source"
+        ),
     )
 
 
@@ -10202,32 +10179,25 @@ def stream_web_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppressed by the persisted canonical-URL index — re-ingesting the
     whole crawl adds zero rows. Fifth member of the stream-equals-batch
     gate family. local_only: streaming state dirs are per-run temp."""
-    import tempfile
-
     from solana_etl_spark.streaming.web_stream import (
         start_streaming_web_pipeline,
     )
 
     pages = _read_web(spark)
-    work = tempfile.mkdtemp(prefix="gate_stream_web_")
-    for p in ("a", "b"):
-        pages.coalesce(1).write.mode("overwrite").parquet(f"{work}/src/{p}")
-    stream = (
-        spark.readStream.schema(pages.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/src/*/*.parquet")
-    )
-    q = start_streaming_web_pipeline(
+    return _stream_gate(
         spark,
-        stream,
-        survivors_dir=f"{work}/out",
-        index_dir=f"{work}/idx",
-        checkpoint_dir=f"{work}/ckpt",
-    )
-    q.awaitTermination(300)
-    return _materialize_and_clean(
-        spark.read.parquet(f"{work}/out").select("page_id", "text_final"),
-        work,
+        "web",
+        [pages.coalesce(1)] * 2,
+        lambda stream, work: start_streaming_web_pipeline(
+            spark,
+            stream,
+            survivors_dir=f"{work}/out",
+            index_dir=f"{work}/idx",
+            checkpoint_dir=f"{work}/ckpt",
+        ),
+        lambda work: spark.read.parquet(f"{work}/out").select(
+            "page_id", "text_final"
+        ),
     )
 
 
@@ -11111,31 +11081,23 @@ def stream_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-free, which is what makes a 'reservoir' exactly maintainable
     under at-least-once streaming. Ninth stream-equals-batch gate row.
     local_only: streaming state dirs are per-run temp."""
-    import tempfile
-
     from solana_etl_spark.streaming.sample_stream import (
         read_sample,
         start_streaming_sample,
     )
 
     docs = _t(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="gate_stream_sample_")
-    for p in ("a", "b"):
-        docs.coalesce(1).write.mode("overwrite").parquet(f"{work}/src/{p}")
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/src/*/*.parquet")
-    )
-    q = start_streaming_sample(
+    return _stream_gate(
         spark,
-        stream,
-        state_dir=f"{work}/state",
-        checkpoint_dir=f"{work}/ckpt",
-    )
-    q.awaitTermination(300)
-    return _materialize_and_clean(
-        read_sample(spark, f"{work}/state"), work
+        "sample",
+        [docs.coalesce(1)] * 2,
+        lambda stream, work: start_streaming_sample(
+            spark,
+            stream,
+            state_dir=f"{work}/state",
+            checkpoint_dir=f"{work}/ckpt",
+        ),
+        lambda work: read_sample(spark, f"{work}/state"),
     )
 
 
@@ -11507,8 +11469,6 @@ def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     idempotent and order-free. Tenth stream-equals-batch gate family;
     the oracle is the batch HLL SQL. local_only: streaming state dirs
     are per-run temp."""
-    import tempfile
-
     from solana_etl_spark.streaming.hll_stream import (
         hll_estimate_from_state,
         read_hll_state,
@@ -11516,28 +11476,23 @@ def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    work = tempfile.mkdtemp(prefix="gate_stream_hll_")
-    for p in ("a", "b"):
-        docs.coalesce(1).write.mode("overwrite").parquet(f"{work}/src/{p}")
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{work}/src/*/*.parquet")
-    )
-    q = start_streaming_hll(
+    return _stream_gate(
         spark,
-        stream,
-        state_dir=f"{work}/state",
-        checkpoint_dir=f"{work}/ckpt",
-        key_col="text",
-        group_cols=("source",),
+        "hll",
+        [docs.coalesce(1)] * 2,
+        lambda stream, work: start_streaming_hll(
+            spark,
+            stream,
+            state_dir=f"{work}/state",
+            checkpoint_dir=f"{work}/ckpt",
+            key_col="text",
+            group_cols=("source",),
+        ),
+        lambda work: hll_estimate_from_state(
+            read_hll_state(spark, f"{work}/state", group_cols=("source",)),
+            group_cols=("source",),
+        ).orderBy("source"),
     )
-    q.awaitTermination(300)
-    est = hll_estimate_from_state(
-        read_hll_state(spark, f"{work}/state", group_cols=("source",)),
-        group_cols=("source",),
-    ).orderBy("source")
-    return _materialize_and_clean(est, work)
 
 
 def _chi2_oracle() -> str:

@@ -32,15 +32,6 @@ def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).parquet(path)
 
 
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """ORC batch sink — the second columnar format the Spark runtime ships
-    natively (predicate pushdown + column pruning + zlib/snappy, like
-    parquet). The reference writes CSV/parquet only (FileOutput.py:173-178);
-    ORC rounds out the warehouse-interchange matrix. Named alias into the
-    format matrix below (one write path, no drift)."""
-    write_table(df, path, fmt="orc", mode=mode)
-
-
 # format name -> (writer, reader) for the batch-sink matrix; every format
 # round-trips the task outputs value-identically (tests/test_format_matrix.py)
 def write_table(df: DataFrame, path: str, fmt: str = "parquet", mode: str = "overwrite") -> None:
@@ -102,14 +93,7 @@ def write_blocks_json(
     many-file layout is deliberate: gzip is non-splittable, so file count =
     read parallelism downstream."""
     with_bucket = blocks_raw.withColumn(
-        "slot_bucket",
-        (
-            F.floor(
-                F.regexp_extract(F.col("path"), r"(\d+)\.json", 1).cast("long")
-                / slots_per_bucket
-            )
-            * slots_per_bucket
-        ).cast("long"),
+        "slot_bucket", _slot_bucket(F.col("path"), slots_per_bucket)
     )
     (
         with_bucket.select("slot_bucket", F.to_json(F.struct("result")).alias("value"))

@@ -25,6 +25,29 @@ from pyspark.sql import functions as F
 from solana_etl_spark.schemas import block_schema
 
 
+def block_rows(
+    reader, paths, account_keys_as_strings: bool = False
+) -> DataFrame:
+    """The ``blocks_raw`` row shape from a batch or streaming JSON reader:
+    ``path`` (``file:`` prefix stripped), ``missing``, ``_corrupt_record``
+    plus the raw ``result`` struct — one definition for ``read_blocks``
+    and the block stream (streaming/pipeline.read_block_stream)."""
+    raw = (
+        reader.schema(block_schema(account_keys_as_strings))
+        # one JSON object spanning the whole file
+        .option("multiLine", "true")
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "_corrupt_record")
+        .json(paths)
+    )
+    return raw.select(
+        F.regexp_replace(F.input_file_name(), "^file:(//)?", "").alias("path"),
+        F.col("result").isNull().alias("missing"),
+        F.col("_corrupt_record"),
+        F.col("result"),
+    )
+
+
 def read_blocks(
     spark: SparkSession,
     paths: str | list[str],
@@ -38,20 +61,4 @@ def read_blocks(
     """
     if isinstance(paths, str):
         paths = [paths]
-
-    schema = block_schema(account_keys_as_strings=account_keys_as_strings)
-    raw = (
-        spark.read.schema(schema)
-        # one JSON object spanning the whole file
-        .option("multiLine", "true")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(paths)
-    )
-
-    return raw.select(
-        F.regexp_replace(F.input_file_name(), "^file:(//)?", "").alias("path"),
-        F.col("result").isNull().alias("missing"),
-        F.col("_corrupt_record"),
-        F.col("result"),
-    )
+    return block_rows(spark.read, paths, account_keys_as_strings)

@@ -45,6 +45,7 @@ from solana_etl_spark.operators.dedup import dedup_index
 from solana_etl_spark.operators.text import quality_predicate
 from solana_etl_spark.streaming import state
 from solana_etl_spark.streaming.dedup_stream import dedup_batch_against_index
+from solana_etl_spark.streaming.index_compact import maybe_compact_indexes
 
 
 def dedup_stage(
@@ -109,12 +110,6 @@ def start_streaming_corpus_pipeline(
     ``start_streaming_corpus_ingest``). ``compact_every`` folds committed
     index partitions every N batches (bounded partition/file count;
     index_compact.DEFAULT_COMPACT_EVERY when None)."""
-    from solana_etl_spark.streaming.index_compact import (
-        DEFAULT_COMPACT_EVERY,
-        maybe_compact_indexes,
-    )
-
-    cadence = DEFAULT_COMPACT_EVERY if compact_every is None else compact_every
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         # One materialization feeds both writes (persist, not re-read):
@@ -128,21 +123,15 @@ def start_streaming_corpus_pipeline(
             for sub, rows in (("exact", new_exact), ("bands", new_bands)):
                 sub_dir = os.path.join(index_dir, sub)
                 state.commit(rows, sub_dir, "batch", batch_id)
-            decontaminate_stage(deduped, eval_docs).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(survivors_dir, f"batch={batch_id}"))
+            survivors = decontaminate_stage(deduped, eval_docs)
+            state.commit(survivors, survivors_dir, "batch", batch_id)
         finally:
             deduped.unpersist()
         maybe_compact_indexes(
             spark,
             [os.path.join(index_dir, "exact"), os.path.join(index_dir, "bands")],
             batch_id,
-            cadence,
+            compact_every,
         )
 
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return state.start_batches(docs_stream, process_batch, checkpoint_dir)

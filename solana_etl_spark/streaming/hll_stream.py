@@ -112,12 +112,7 @@ def start_streaming_hll(
             p=p,
         )
 
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return state.start_batches(docs_stream, process_batch, checkpoint_dir)
 
 
 def hll_estimate_from_state(

@@ -18,7 +18,7 @@ into one compacted generation. Safety rests on two facts:
   duplicates, which the reader tolerates and the next compaction
   removes.
 * A retrying batch k excludes only ``batch == k`` (the
-  ``_read_index`` contract), and compaction covers batches STRICTLY
+  ``state.read_index`` contract), and compaction covers batches STRICTLY
   below the in-flight id — batches whose checkpoint has committed and
   can never retry. Each compacted generation gets a GUARANTEED-FRESH
   negative id (``min(existing ids, 0) − 1``), so a compaction never
@@ -90,8 +90,10 @@ def maybe_compact_indexes(
     compact_every: int | None,
 ) -> None:
     """Stream-writer hook: compact each index every ``compact_every``
-    micro-batches (None disables). Runs AFTER the batch's own index
-    write, covering only batches < batch_id."""
+    micro-batches (None means DEFAULT_COMPACT_EVERY, 0 disables). Runs
+    AFTER the batch's own index write, covering only batches < batch_id."""
+    if compact_every is None:
+        compact_every = DEFAULT_COMPACT_EVERY
     if not compact_every or batch_id <= 0 or batch_id % compact_every:
         return
     for p in index_paths:

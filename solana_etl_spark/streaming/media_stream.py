@@ -57,7 +57,7 @@ from solana_etl_spark.operators.audio import (
     fingerprint_pairs_from_sigs,
 )
 from solana_etl_spark.streaming import state
-from solana_etl_spark.streaming.dedup_stream import _read_index
+from solana_etl_spark.streaming.index_compact import maybe_compact_indexes
 
 # geometry derives from operators/audio.py — the in-batch pair miner and
 # this module's cross-batch index banding MUST agree or the pigeonhole
@@ -104,7 +104,7 @@ def media_batch_against_index(
     ).select(F.col("clip_b").alias("media_id")).distinct()
     sigs = sigs.join(in_batch_losers, "media_id", "left_anti")
 
-    idx = _read_index(
+    idx = state.read_index(
         spark,
         os.path.join(index_dir, "fps"),
         "media_id long, afp long, band int, key long",
@@ -145,13 +145,8 @@ def start_streaming_media_dedup(
     start_streaming_corpus_ingest contract). The index records EVERY
     batch clip (survivor or not): dominance is over all seen clips.
     ``compact_every`` folds committed index partitions every N batches
-    (bounded partition/file count; DEFAULT_COMPACT_EVERY when None)."""
-    from solana_etl_spark.streaming.index_compact import (
-        DEFAULT_COMPACT_EVERY,
-        maybe_compact_indexes,
-    )
-
-    cadence = DEFAULT_COMPACT_EVERY if compact_every is None else compact_every
+    (bounded partition/file count; index_compact.DEFAULT_COMPACT_EVERY
+    when None)."""
 
     def process_batch(batch_media: DataFrame, batch_id: int) -> None:
         # decode ONCE: the checkpointed signatures feed the survivor
@@ -161,19 +156,12 @@ def start_streaming_media_dedup(
         survivors = media_batch_against_index(
             spark, batch_media, index_dir, exclude_batch=batch_id, sigs=sigs
         )
-        survivors.write.mode("overwrite").parquet(
-            os.path.join(survivors_dir, f"batch={batch_id}")
-        )
+        state.commit(survivors, survivors_dir, "batch", batch_id)
         state.commit(
             _band_rows(sigs), os.path.join(index_dir, "fps"), "batch", batch_id
         )
         maybe_compact_indexes(
-            spark, [os.path.join(index_dir, "fps")], batch_id, cadence
+            spark, [os.path.join(index_dir, "fps")], batch_id, compact_every
         )
 
-    return (
-        media_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return state.start_batches(media_stream, process_batch, checkpoint_dir)

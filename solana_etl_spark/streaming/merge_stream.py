@@ -97,9 +97,4 @@ def start_merge_stream(
         if retain is not None:
             prune_snapshots(snapshot_dir, retain)
 
-    return (
-        changes_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return state.start_batches(changes_stream, process_batch, checkpoint_dir)

@@ -14,12 +14,12 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from solana_etl_spark.schemas import block_schema
 from solana_etl_spark.plans.tasks import run_all_tasks_with_handle
 from solana_etl_spark.sinks import append_csv_exactly_once
+from solana_etl_spark.sources.blocks import block_rows
+from solana_etl_spark.streaming import state
 
 
 def read_block_stream(
@@ -29,19 +29,10 @@ def read_block_stream(
     account_keys_as_strings: bool = False,
 ) -> DataFrame:
     """File-based block stream with the same row shape as sources.read_blocks."""
-    raw = (
-        spark.readStream.schema(block_schema(account_keys_as_strings))
-        .option("multiLine", "true")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(f"{blocks_dir}/*")
-    )
-    return raw.select(
-        F.regexp_replace(F.input_file_name(), "^file:(//)?", "").alias("path"),
-        F.col("result").isNull().alias("missing"),
-        F.col("_corrupt_record"),
-        F.col("result"),
+    return block_rows(
+        spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger),
+        f"{blocks_dir}/*",
+        account_keys_as_strings,
     )
 
 
@@ -70,9 +61,4 @@ def start_streaming_load(
             if persisted is not None:
                 persisted.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return state.start_batches(stream, process_batch, checkpoint_dir)

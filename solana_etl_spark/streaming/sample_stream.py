@@ -106,9 +106,4 @@ def start_streaming_sample(
             spark, batch_df, state_dir, batch_id, key_col=key_col, n=n
         )
 
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return state.start_batches(docs_stream, process_batch, checkpoint_dir)

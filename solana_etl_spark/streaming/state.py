@@ -23,16 +23,65 @@ stream agrees on which versions are committed, so the rules live here:
   nothing to read.
 * **pruning** — keep the newest ``retain`` committed versions and
   delete every older directory, committed or not.
+* **indexes** — the append-only set indexes (dedup, corpus, web, media)
+  are read as the union of every committed ``batch=`` version except
+  the in-flight batch, behind a schema marker (``read_index``).
 
 The prefix is a constant at each call site, so state written before this
 module existed reads unchanged.
+
+The micro-batch lifecycle lives here too: every stream starts through
+``start_batches`` (one ``foreachBatch`` query, checkpointed, drained
+with ``availableNow``) and callers that wait for it use ``await_end``,
+which fails on a stream that has not finished instead of letting the
+caller read a half-run stream's state.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
+
+#: Marker file recording the schema an index table was persisted with.
+#: The schema string IS the format version: any column/type change (e.g.
+#: the r8 band-signature ``sig string`` → ``sig long`` narrowing) makes
+#: the reader's expected schema mismatch the marker, and the read fails
+#: loudly instead of silently mixing parquet schemas across the upgrade
+#: boundary of a long-lived index (which would admit near-duplicates).
+FORMAT_MARKER = "_index_schema"
+
+
+def start_batches(
+    stream: DataFrame,
+    process_batch: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+) -> StreamingQuery:
+    """Start ``process_batch`` over every micro-batch of ``stream``: the
+    package's one ``foreachBatch`` query. The checkpoint makes a restart
+    resume after the last committed batch; ``availableNow`` drains what
+    has landed and then ends the query."""
+    return (
+        stream.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def await_end(query: StreamingQuery, timeout_s: float) -> None:
+    """Wait up to ``timeout_s`` for ``query`` to end. A query still
+    running then is stopped and raises TimeoutError: its state is
+    partial, and a caller that read it would compare half a stream. A
+    query that failed raises its own error (awaitTermination's)."""
+    if not query.awaitTermination(timeout_s):
+        query.stop()
+        raise TimeoutError(
+            f"stream {query.name or query.id} did not end within "
+            f"{timeout_s} s; stopped it"
+        )
 
 
 def _fs(spark: SparkSession, path: str):
@@ -132,3 +181,62 @@ def prune(spark: SparkSession, path: str, prefix: str, retain: int) -> None:
             prefix,
             [v for v in versions(spark, path, prefix, False) if v < kept[0]],
         )
+
+
+def check_index_format(path: str, schema: str) -> None:
+    """Fail loudly on a persisted index whose format predates ``schema``.
+
+    Three states: marker matches → proceed; marker differs OR data
+    exists without a marker (pre-versioning index; any ``batch=`` dir
+    counts, committed or not) → raise with a rewrite instruction; no
+    marker and no data (fresh index) → stamp the marker now, BEFORE the
+    first batch write, so a crash between the first write and any later
+    stamp can never produce the unversioned state. The marker lives
+    beside the ``batch=`` dirs with a leading underscore, so Spark
+    readers and compaction both ignore it.
+    """
+    marker = os.path.join(path, FORMAT_MARKER)
+    if os.path.exists(marker):
+        with open(marker, encoding="utf-8") as fh:
+            found = fh.read().strip()
+        if found != schema:
+            raise ValueError(
+                f"persisted index at {path} was written with schema "
+                f"'{found}' but this engine expects '{schema}'; rebuild "
+                "the index (re-run dedup_index over the survivors, or "
+                "drop the index dir to re-bootstrap) — refusing to mix "
+                "formats, which would silently admit duplicates"
+            )
+        return
+    if versions(SparkSession.active(), path, "batch", False):
+        raise ValueError(
+            f"persisted index at {path} has no {FORMAT_MARKER} marker "
+            f"(written by a pre-versioning engine); expected schema "
+            f"'{schema}'. Rebuild the index rather than risking a "
+            "mixed-schema read that silently admits duplicates"
+        )
+    os.makedirs(path, exist_ok=True)
+    tmp = marker + ".tmp"
+    with open(tmp, "w", encoding="utf-8") as fh:
+        fh.write(schema + "\n")
+    os.rename(tmp, marker)
+
+
+def read_index(
+    spark: SparkSession, path: str, schema: str, exclude_batch: int | None
+) -> DataFrame:
+    """Read an index table: the union of its committed ``batch=``
+    versions, empty before the first commit.
+
+    Every failure (storage error, corrupt footer, or a format-marker
+    mismatch — see ``check_index_format``) must raise: silently deduping
+    against an empty or mis-typed index would admit duplicates and
+    permanently pollute the corpus. ``exclude_batch`` drops the current
+    batch_id's own version so a foreachBatch retry never reads its
+    first attempt's output.
+    """
+    check_index_format(path, schema)
+    ids = [b for b in versions(spark, path, "batch") if b != exclude_batch]
+    return read(spark, path, "batch", ids, schema).select(
+        *schema.replace(",", " ").split()[::2]
+    )

@@ -124,9 +124,4 @@ def start_view_stream(
         if retain is not None:
             prune_view_versions(state_dir, retain)
 
-    return (
-        events_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return state.start_batches(events_stream, process_batch, checkpoint_dir)

@@ -82,12 +82,7 @@ def start_streaming_word_counts(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         update_word_batch(spark, batch_df, state_dir, batch_id, text_col)
 
-    return (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return state.start_batches(docs_stream, process_batch, checkpoint_dir)
 
 
 def _collect_state(

@@ -59,7 +59,7 @@ from solana_etl_spark.operators.c4 import (
 )
 from solana_etl_spark.operators.web import canonical_url, url_dedup_keep_best
 from solana_etl_spark.streaming import state
-from solana_etl_spark.streaming.dedup_stream import _read_index
+from solana_etl_spark.streaming.index_compact import maybe_compact_indexes
 
 
 def url_stage(
@@ -71,7 +71,7 @@ def url_stage(
     """In-batch keep-best, then drop canonicals already in the index."""
     keepers = url_dedup_keep_best(batch_pages).select("page_id")
     best = batch_pages.join(keepers, "page_id", "left_semi")
-    url_idx = _read_index(
+    url_idx = state.read_index(
         spark,
         os.path.join(index_dir, "urls"),
         "url_canonical string",
@@ -99,7 +99,7 @@ def web_clean_batch(
     cleaned = c4_line_filter(best).select(
         "page_id", F.col("text_clean").alias("text")
     )
-    span_idx = _read_index(
+    span_idx = state.read_index(
         spark, os.path.join(index_dir, "spans"), "h string", exclude_batch
     )
     # ONE occurrence pass over the ORIGINAL cleaned text: in-batch
@@ -130,20 +130,12 @@ def start_streaming_web_pipeline(
     ``start_streaming_corpus_ingest`` contract). ``compact_every`` folds
     committed index partitions every N batches (bounded partition/file
     count; index_compact.DEFAULT_COMPACT_EVERY when None)."""
-    from solana_etl_spark.streaming.index_compact import (
-        DEFAULT_COMPACT_EVERY,
-        maybe_compact_indexes,
-    )
-
-    cadence = DEFAULT_COMPACT_EVERY if compact_every is None else compact_every
 
     def process_batch(batch_pages: DataFrame, batch_id: int) -> None:
         survivors, cleaned = web_clean_batch(
             spark, batch_pages, index_dir, exclude_batch=batch_id
         )
-        survivors.write.mode("overwrite").parquet(
-            os.path.join(survivors_dir, f"batch={batch_id}")
-        )
+        state.commit(survivors, survivors_dir, "batch", batch_id)
         # canonicals of ALL batch rows: any seen canonical suppresses
         # later copies (see module doc)
         urls = batch_pages.select(
@@ -156,12 +148,7 @@ def start_streaming_web_pipeline(
             spark,
             [os.path.join(index_dir, "urls"), os.path.join(index_dir, "spans")],
             batch_id,
-            cadence,
+            compact_every,
         )
 
-    return (
-        pages_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return state.start_batches(pages_stream, process_batch, checkpoint_dir)

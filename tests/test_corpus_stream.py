@@ -12,6 +12,7 @@ from solana_etl_spark.streaming.corpus_stream import (
     clean_batch,
     start_streaming_corpus_pipeline,
 )
+from solana_etl_spark.streaming.state import await_end
 
 SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
@@ -43,7 +44,7 @@ def _run(spark, stream_dir, out, eval_docs):
         index_dir=f"{out}/index",
         checkpoint_dir=f"{out}/ckpt",
     )
-    q.awaitTermination(120)
+    await_end(q, 120)
 
 
 def test_stream_equals_batch_and_restart_suppresses(spark, tmp_path):

@@ -13,6 +13,7 @@ from solana_etl_spark.streaming.dedup_stream import (
     dedup_batch_against_index,
     start_streaming_corpus_ingest,
 )
+from solana_etl_spark.streaming.state import await_end
 
 SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
@@ -30,7 +31,7 @@ def _run_ingest(spark, stream_dir, out):
         index_dir=f"{out}/index",
         checkpoint_dir=f"{out}/ckpt",
     )
-    q.awaitTermination(120)
+    await_end(q, 120)
 
 
 def test_streaming_ingest_dedups_across_restarts(spark, tmp_path):
@@ -145,50 +146,44 @@ def test_index_format_mismatch_fails_loudly(spark, tmp_path):
     """A persisted index written under a different schema (e.g. the
     pre-r8 'sig string' band signatures) must fail the read loudly, not
     silently mix parquet schemas and admit near-duplicates."""
-    from solana_etl_spark.streaming.dedup_stream import (
-        _FORMAT_MARKER,
-        _read_index,
-    )
+    from solana_etl_spark.streaming.state import FORMAT_MARKER, read_index
 
     idx = str(tmp_path / "index" / "bands")
     os.makedirs(idx, exist_ok=True)
     # legacy engine: string signatures, stamped with the old schema
-    with open(os.path.join(idx, _FORMAT_MARKER), "w") as fh:
+    with open(os.path.join(idx, FORMAT_MARKER), "w") as fh:
         fh.write("band int, sig string\n")
     spark.createDataFrame(
         [(0, "deadbeef")], "band int, sig string"
     ).write.mode("overwrite").parquet(os.path.join(idx, "batch=0"))
     with pytest.raises(ValueError, match="refusing to mix"):
-        _read_index(spark, idx, "band int, sig long", exclude_batch=None)
+        read_index(spark, idx, "band int, sig long", exclude_batch=None)
 
 
 def test_unversioned_index_with_data_fails_loudly(spark, tmp_path):
     """Committed batch partitions with no format marker = an index from a
     pre-versioning engine; the read must refuse rather than guess."""
-    from solana_etl_spark.streaming.dedup_stream import _read_index
+    from solana_etl_spark.streaming.state import read_index
 
     idx = str(tmp_path / "index" / "bands")
     spark.createDataFrame(
         [(0, "deadbeef")], "band int, sig string"
     ).write.mode("overwrite").parquet(os.path.join(idx, "batch=0"))
     with pytest.raises(ValueError, match="no _index_schema marker"):
-        _read_index(spark, idx, "band int, sig long", exclude_batch=None)
+        read_index(spark, idx, "band int, sig long", exclude_batch=None)
 
 
 def test_fresh_index_is_stamped_at_first_read(spark, tmp_path):
     """First read of a not-yet-existing index stamps the marker BEFORE
     any batch write, so the unversioned-with-data state can never arise
     from a crash; the second read round-trips against the stamp."""
-    from solana_etl_spark.streaming.dedup_stream import (
-        _FORMAT_MARKER,
-        _read_index,
-    )
+    from solana_etl_spark.streaming.state import FORMAT_MARKER, read_index
 
     idx = str(tmp_path / "index" / "exact")
-    df = _read_index(spark, idx, "content_hash long", exclude_batch=None)
+    df = read_index(spark, idx, "content_hash long", exclude_batch=None)
     assert df.count() == 0
-    with open(os.path.join(idx, _FORMAT_MARKER)) as fh:
+    with open(os.path.join(idx, FORMAT_MARKER)) as fh:
         assert fh.read().strip() == "content_hash long"
-    assert _read_index(
+    assert read_index(
         spark, idx, "content_hash long", exclude_batch=None
     ).count() == 0

@@ -13,8 +13,6 @@ from pyspark.sql import functions as F
 
 from solana_etl_spark.streaming import state
 from solana_etl_spark.streaming.dedup_stream import (
-    _check_index_format,
-    _read_index,
     start_streaming_corpus_ingest,
 )
 from solana_etl_spark.streaming.index_compact import compact_index
@@ -29,7 +27,7 @@ def _batch_dirs(path):
 
 def _write_batches(spark, path, n_batches, rows_per_batch=3):
     # stamp the format marker the way the stream's first read would
-    _check_index_format(path, "h long, v string")
+    state.check_index_format(path, "h long, v string")
     for b in range(n_batches):
         spark.createDataFrame(
             [(b * 100 + i, f"k{b}_{i}") for i in range(rows_per_batch)],
@@ -79,7 +77,7 @@ def test_retry_exclusion_survives_compaction(spark, tmp_path):
     _write_batches(spark, idx, 5)
     compact_index(spark, idx, before_batch=4)
     # batch 4 retries: must see batches 0-3 (now generation -1), not 4
-    seen = _read_index(spark, idx, "h long, v string", exclude_batch=4)
+    seen = state.read_index(spark, idx, "h long, v string", exclude_batch=4)
     hs = sorted(r["h"] for r in seen.collect())
     assert hs == sorted(b * 100 + i for b in range(4) for i in range(3))
 
@@ -166,7 +164,7 @@ def test_streaming_ingest_with_compaction_matches_uncompacted(
                 checkpoint_dir=str(tmp_path / out / "ckpt"),
                 compact_every=compact_every,
             )
-            q.awaitTermination(120)
+            state.await_end(q, 120)
         return sorted(
             r["doc_id"]
             for r in spark.read.parquet(

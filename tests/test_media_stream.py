@@ -13,6 +13,7 @@ from solana_etl_spark.streaming.media_stream import (
     media_batch_against_index,
     start_streaming_media_dedup,
 )
+from solana_etl_spark.streaming.state import await_end
 
 MEDIA = "media_id long, payload binary"
 
@@ -45,7 +46,7 @@ def _run(spark, src_dir, out):
         index_dir=f"{out}/idx",
         checkpoint_dir=f"{out}/ckpt",
     )
-    q.awaitTermination(120)
+    await_end(q, 120)
 
 
 def test_stream_dominance_and_cross_batch_suppression(spark, tmp_path):

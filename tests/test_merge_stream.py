@@ -15,6 +15,7 @@ from solana_etl_spark.streaming.merge_stream import (
     snapshot_versions,
     start_merge_stream,
 )
+from solana_etl_spark.streaming.state import await_end
 
 SCHEMA = "k long, payload string, price double, op string, version int"
 
@@ -32,7 +33,7 @@ def _run(spark, stream_dir, out):
         checkpoint_dir=f"{out}/ckpt",
         keys=["k"],
     )
-    q.awaitTermination(120)
+    await_end(q, 120)
 
 
 def _rows(df):

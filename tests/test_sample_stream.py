@@ -14,6 +14,7 @@ from solana_etl_spark.streaming.sample_stream import (
     read_sample,
     start_streaming_sample,
 )
+from solana_etl_spark.streaming.state import await_end
 
 N = 10
 
@@ -31,7 +32,7 @@ def _run(spark, stream_dir, out):
         checkpoint_dir=f"{out}/ckpt",
         n=N,
     )
-    q.awaitTermination(120)
+    await_end(q, 120)
 
 
 def _batch_expected(spark, ids):

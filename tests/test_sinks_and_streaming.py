@@ -12,6 +12,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from solana_etl_spark.sinks import append_csv, write_task_outputs
+from solana_etl_spark.streaming.state import await_end
 from tests.conftest import BLOCK_110130000
 
 
@@ -58,8 +59,7 @@ def test_streaming_load_matches_batch(spark, tmp_path):
 
     dest = str(tmp_path / "dest")
     q = start_streaming_load(spark, str(blocks_dir), dest)
-    q.awaitTermination(120)
-    assert not q.isActive or q.awaitTermination(60)
+    await_end(q, 120)
 
     transfers = _csv_rows(os.path.join(dest, "transfers"))
     assert len(transfers) == 394 + 1

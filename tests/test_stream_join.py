@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 
+from solana_etl_spark.streaming.state import await_end
 from solana_etl_spark.streaming.stream_join import interval_join_streams
 
 SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double"
@@ -80,7 +81,7 @@ def test_interval_join_stream_matches_batch(spark, tmp_path):
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
-    q.awaitTermination(120)
+    await_end(q, 120)
     got = sorted(
         (r["l_event_id"], r["r_event_id"])
         for r in spark.sql("SELECT * FROM sj_out").collect()

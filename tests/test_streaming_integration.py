@@ -10,6 +10,7 @@ import shutil
 
 from solana_etl_spark.sources.extract import extract_batch
 from solana_etl_spark.streaming.pipeline import start_streaming_load
+from solana_etl_spark.streaming.state import await_end
 from tests.conftest import BLOCK_110130000
 
 
@@ -42,7 +43,7 @@ def test_extract_then_incremental_stream(spark, tmp_path):
         fixture_fetch, blocks_dir / "0", 1, 2, sleep=lambda _: None, log=lambda _: None
     )
     q = start_streaming_load(spark, f"{blocks_dir}/*", dest, ckpt)
-    q.awaitTermination(120)
+    await_end(q, 120)
 
     blocks_rows_1 = _count_rows(os.path.join(dest, "blocks"))
     assert blocks_rows_1 == 2 + 1  # two empty blocks + header
@@ -50,7 +51,7 @@ def test_extract_then_incremental_stream(spark, tmp_path):
     # batch 2: a real fixture block arrives later; restart picks up ONLY it
     shutil.copy(BLOCK_110130000, blocks_dir / "0" / "110130000.json.gz")
     q2 = start_streaming_load(spark, f"{blocks_dir}/*", dest, ckpt)
-    q2.awaitTermination(180)
+    await_end(q2, 180)
 
     assert _count_rows(os.path.join(dest, "blocks")) == blocks_rows_1 + 1
     assert _count_rows(os.path.join(dest, "transfers")) == 394 + 1
@@ -58,7 +59,7 @@ def test_extract_then_incremental_stream(spark, tmp_path):
 
     # restart with NO new files: checkpoint prevents reprocessing
     q3 = start_streaming_load(spark, f"{blocks_dir}/*", dest, ckpt)
-    q3.awaitTermination(60)
+    await_end(q3, 60)
     assert _count_rows(os.path.join(dest, "transfers")) == 394 + 1
 
 
@@ -92,14 +93,14 @@ def test_midstream_kill_restart_matches_batch(spark, tmp_path):
             break
         time.sleep(0.5)
     q.stop()
-    q.awaitTermination(60)
+    await_end(q, 60)
     n_after_kill = _count_rows(os.path.join(dest, "transactions"))
 
     # restart from the checkpoint; availableNow drains the rest
     q2 = start_streaming_load(
         spark, f"{corpus}/*", dest, ckpt, max_files_per_trigger=48
     )
-    q2.awaitTermination(300)
+    await_end(q2, 300)
     assert not q2.isActive
 
     streamed = spark.read.option("header", False).csv(

@@ -7,18 +7,18 @@ on the driver without a Spark job."""
 
 from __future__ import annotations
 
+import ast
 import os
+import pathlib
 import shutil
 import time
 from datetime import datetime
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
-from solana_etl_spark.streaming.dedup_stream import (
-    _check_index_format,
-    _read_index,
-)
+from solana_etl_spark.streaming import state
 from solana_etl_spark.streaming.hll_stream import (
     read_hll_state,
     update_hll_batch,
@@ -82,7 +82,7 @@ def _merge(spark, d, k):
 
 
 def _index(spark, d, k):
-    _check_index_format(d, "h long")
+    state.check_index_format(d, "h long")
     spark.createDataFrame([(k,)], "h long").write.mode("overwrite").parquet(
         os.path.join(d, f"batch={k}")
     )
@@ -117,7 +117,7 @@ STREAMS = {
     ),
     "index": (
         _index,
-        lambda spark, d: _read_index(spark, d, "h long", exclude_batch=None),
+        lambda spark, d: state.read_index(spark, d, "h long", None),
         lambda d, k: os.path.join(d, f"batch={k}"),
     ),
 }
@@ -161,8 +161,6 @@ def test_uncommitted_version_is_never_the_parent(
 
 
 def test_listing_and_choosing_launch_no_spark_job(spark, tmp_path):
-    from solana_etl_spark.streaming import state
-
     d = str(tmp_path / "state")
     for k in range(3):
         spark.createDataFrame([(k,)], "h long").write.parquet(
@@ -204,7 +202,6 @@ def test_compaction_and_format_check_count_uncommitted_dirs(spark, tmp_path):
     check detects existing data, over EVERY ``batch=`` dir: a marker-less
     dir still occupies its id (renaming onto it would fail with
     ENOTEMPTY) and still is data written without a format marker."""
-    from solana_etl_spark.streaming import state
     from solana_etl_spark.streaming.index_compact import compact_index
 
     idx = str(tmp_path / "idx")
@@ -220,4 +217,108 @@ def test_compaction_and_format_check_count_uncommitted_dirs(spark, tmp_path):
     )
     _uncommit(os.path.join(bare, "batch=0"), "no_success")
     with pytest.raises(ValueError, match="no _index_schema marker"):
-        _check_index_format(bare, "h long")
+        state.check_index_format(bare, "h long")
+
+
+# --- stream lifecycle: start_batches / await_end ----------------------------
+
+
+def _id_stream(spark, tmp_path):
+    src = str(tmp_path / "src")
+    spark.range(3).write.parquet(src)
+    return spark.readStream.schema("id long").parquet(src)
+
+
+def test_await_end_stops_a_stalled_stream_and_raises(spark, tmp_path):
+    """A stream still running at the timeout is stopped and raises: its
+    state is partial, and a caller that read it would compare half a
+    stream (awaitTermination alone returns False and carries on)."""
+
+    def slow_batch(batch_df, batch_id):
+        time.sleep(8)
+
+    q = state.start_batches(
+        _id_stream(spark, tmp_path), slow_batch, str(tmp_path / "ckpt")
+    )
+    with pytest.raises(TimeoutError, match="did not end within 2"):
+        state.await_end(q, 2)
+    assert not q.isActive
+
+
+def test_await_end_propagates_a_failed_batch(spark, tmp_path):
+    def failing_batch(batch_df, batch_id):
+        raise ValueError("batch exploded")
+
+    q = state.start_batches(
+        _id_stream(spark, tmp_path), failing_batch, str(tmp_path / "ckpt")
+    )
+    with pytest.raises(StreamingQueryException, match="batch exploded"):
+        state.await_end(q, 120)
+    assert not q.isActive
+
+
+def test_await_end_returns_once_the_stream_drains(spark, tmp_path):
+    seen = []
+    q = state.start_batches(
+        _id_stream(spark, tmp_path),
+        lambda df, batch_id: seen.extend(r.id for r in df.collect()),
+        str(tmp_path / "ckpt"),
+    )
+    state.await_end(q, 120)
+    assert sorted(seen) == [0, 1, 2] and not q.isActive
+
+
+# --- source guard -----------------------------------------------------------
+
+PKG = pathlib.Path(state.__file__).resolve().parent.parent
+STATE = PKG / "streaming" / "state.py"
+
+
+def _lifecycle_sites(path: pathlib.Path, streaming: bool) -> list[str]:
+    """A ``.foreachBatch(`` call (streams start through
+    state.start_batches), and — for a streaming module — an import of an
+    ``_``-prefixed name from another streaming module."""
+    found = []
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "foreachBatch"
+        ):
+            found.append(f"{path.name}:{node.lineno} .foreachBatch(")
+        elif (
+            streaming
+            and isinstance(node, ast.ImportFrom)
+            and (
+                node.level > 0
+                or (node.module or "").startswith("solana_etl_spark.streaming")
+            )
+        ):
+            found += [
+                f"{path.name}:{node.lineno} import {a.name}"
+                for a in node.names
+                if a.name.startswith("_")
+            ]
+    return found
+
+
+def test_streams_start_only_through_state():
+    sites = [
+        s
+        for p in sorted(PKG.rglob("*.py"))
+        if p != STATE
+        for s in _lifecycle_sites(p, p.parent.name == "streaming")
+    ]
+    assert sites == [], f"start via streaming/state.start_batches: {sites}"
+
+
+def test_lifecycle_guard_sees_a_private_start(tmp_path):
+    probe = tmp_path / "probe.py"
+    probe.write_text(
+        "from solana_etl_spark.streaming.dedup_stream import _read_index\n"
+        "from .state import _fs, versions\n"
+        "q = df.writeStream.foreachBatch(f).start()\n"
+    )
+    assert len(_lifecycle_sites(probe, streaming=True)) == 3
+    assert len(_lifecycle_sites(probe, streaming=False)) == 1
+    assert len(_lifecycle_sites(STATE, streaming=True)) == 1

@@ -7,6 +7,7 @@ import json
 
 import pyspark.sql.functions as F
 
+from solana_etl_spark.streaming.state import await_end
 from solana_etl_spark.streaming.windows import windowed_event_counts
 
 
@@ -47,7 +48,7 @@ def test_batch_and_stream_agree(spark, tmp_path):
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
-    q.awaitTermination(120)
+    await_end(q, 120)
     stream_rows = {
         (str(r.window_start), r.event_type): (r.n_events, r.total_value)
         for r in spark.sql("SELECT * FROM win_out").collect()
@@ -100,7 +101,7 @@ def test_streaming_dedup_bounded_state(spark, tmp_path):
         .option("checkpointLocation", str(tmp_path / "dedup_ckpt"))
         .start()
     )
-    q.awaitTermination(120)
+    await_end(q, 120)
     stream_ids = sorted(
         r.event_id for r in spark.sql("SELECT event_id FROM dedup_out").collect()
     )

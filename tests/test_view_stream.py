@@ -8,6 +8,7 @@ from datetime import datetime
 
 from pyspark.sql import functions as F
 
+from solana_etl_spark.streaming.state import await_end
 from solana_etl_spark.streaming.view_stream import (
     apply_view_batch,
     current_view,
@@ -73,7 +74,7 @@ def test_view_stream_equals_batch_join(spark, tmp_path):
     q = start_view_stream(
         spark, stream, state_dir=state, checkpoint_dir=str(tmp_path / "ckpt")
     )
-    q.awaitTermination(180)
+    await_end(q, 180)
 
     got = sorted(tuple(r) for r in current_view(spark, state).collect())
     assert got == _expected(spark)

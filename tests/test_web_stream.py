@@ -8,6 +8,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from solana_etl_spark.streaming.state import await_end
 from solana_etl_spark.streaming.web_stream import (
     start_streaming_web_pipeline,
     web_clean_batch,
@@ -39,7 +40,7 @@ def _run(spark, stream_dir, out):
         index_dir=f"{out}/index",
         checkpoint_dir=f"{out}/ckpt",
     )
-    q.awaitTermination(120)
+    await_end(q, 120)
 
 
 def _batch_chain(spark, rows):
