@@ -5,8 +5,10 @@ the output directory and the Spark job descriptions:
   python scripts/measure.py plans <label> [suffix] [name ...]
       Capture .explain("formatted") for the headline queries into
       plans/<label>/<name>_<suffix>.txt  (suffix default: before).
-      Plans of two code states compare equal once expression and plan
-      ids are masked (sed -E 's/#[0-9]+/#N/g; s/plan_id=[0-9]+/plan_id=N/g').
+      The checkout path is written as ``<repo>`` (generated corpora such
+      as .e2e_corpus/ live under the checkout), so plans of two checkouts
+      compare equal once expression and plan ids are masked
+      (sed -E 's/#[0-9]+/#N/g; s/plan_id=[0-9]+/plan_id=N/g').
   python scripts/measure.py time <label> [n_reps] [name ...]
       Time each query in isolation with the noop sink (computes every
       column, discards output) and with .count() (the bench statistic),
@@ -51,7 +53,7 @@ def main() -> None:
                 df = qs[name](spark, sf_dir)
                 plan = df._sc._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted"
-                )
+                ).replace(ROOT, "<repo>")
             except Exception as e:  # noqa: BLE001
                 plan = f"ERROR building {name}: {e}"
             with open(os.path.join(outdir, f"{name}_{suffix}.txt"), "w") as f:

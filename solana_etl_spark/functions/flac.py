@@ -4,8 +4,9 @@ the crawl-dominant COMPRESSED lossless audio format.
 Mirrors ``functions/wav.py``'s role: the multimodal kernels get a REAL
 decode (magic + STREAMINFO parse, frame sync, CRC-8/CRC-16 verification,
 rice-coded residual reconstruction, MD5 stream check) instead of a
-deterministic stub, and a corrupt payload raises ValueError into the
-pipeline's error isolation rather than faking samples. FLAC is the right
+deterministic stub, and a corrupt payload raises ValueError rather than
+faking samples (through ``operators.multimodal.map_payloads`` the job
+fails with that error, naming the media_id). FLAC is the right
 first compressed codec for this engine's bit-determinism contract:
 lossless and integer-exact, so the DuckDB oracles can recompute every
 downstream feature from the ground-truth sample arrays and a divergence
@@ -571,14 +572,16 @@ def _read_rice_vec(br: _BitReader, count: int, k: int):
             continue
         if not complete:
             # window is the whole remaining payload: raise what the
-            # sequential reader would have at the first incomplete code —
-            # a terminator never found with more than the unary cap of
-            # zero bits available is "unbounded", anything else ran off
-            # the end of the data
-            if missing.any():
-                bad = int(np.argmax(missing))
-                if nwin - int(s[bad]) > _UNARY_CAP:
-                    raise ValueError("flac: unbounded unary code")
+            # sequential reader would have at the first bad code — a
+            # found terminator past the unary cap before the first
+            # missing one, or a terminator never found with more than the
+            # cap of zero bits available, is "unbounded"; anything else
+            # ran off the end of the data
+            bad = int(np.argmax(missing)) if missing.any() else count
+            if (term[:bad] - s[:bad] > _UNARY_CAP).any():
+                raise ValueError("flac: unbounded unary code")
+            if bad < count and nwin - int(s[bad]) > _UNARY_CAP:
+                raise ValueError("flac: unbounded unary code")
             raise ValueError("flac: truncated bitstream")
         q = term - s
         if (q > _UNARY_CAP).any():
@@ -726,8 +729,8 @@ def decode(payload: bytes):
     lossless proof — the STREAMINFO MD5 of the decoded stream when
     present. Anything structurally wrong (bad magic, missing STREAMINFO,
     stereo/non-16-bit streams, LPC subframes, truncation, CRC or MD5
-    mismatch, bomb-sized declared counts) raises ValueError so the
-    pipeline's error isolation owns the row.
+    mismatch, bomb-sized declared counts) raises ValueError, which fails
+    the media job naming the row's media_id.
     """
     import numpy as np
 

@@ -8,8 +8,8 @@ Exposes the same tiny PIL-compatible subset as functions/png.py
 ``resize((w, h))`` / ``tobytes()``, context-managed), so
 ``operators/multimodal.py``'s capability gate routes ``image/jpeg``
 payloads here when real PIL is unavailable. Undecodable payloads raise
-ValueError — corrupt bytes must surface to pipeline error isolation,
-never produce fake dimensions.
+ValueError — corrupt bytes fail the media job (naming the media_id,
+``operators.multimodal.map_payloads``), never produce fake dimensions.
 
 Scope (ITU-T T.81, the formats that dominate web crawls): baseline
 sequential DCT (SOF0/1) and progressive DCT (SOF2 — spectral-selection
@@ -260,7 +260,7 @@ class _BitReader:
     ahead). A second padding request means the entropy data was
     truncated mid-scan, and completing the decode with synthesized bits
     would hand garbage pixels to a pipeline whose contract is a loud
-    ValueError into error isolation."""
+    ValueError that fails the job."""
 
     def __init__(self, data: bytes, pos: int):
         self.data = data

@@ -8,8 +8,8 @@ Exposes the tiny PIL-compatible subset the multimodal kernels use
 Pillow is not installed and ``image/png`` payloads get a REAL decode
 (signature check, chunk walk, zlib inflate, per-row unfiltering) instead
 of the deterministic stub. Non-PNG image payloads raise ValueError — a
-corrupt payload must surface to the pipeline's error isolation, not fake
-dimensions.
+corrupt payload fails the media job (naming the media_id,
+``operators.multimodal.map_payloads``), never fakes dimensions.
 
 Implements the common subset of the PNG spec (ISO/IEC 15948): 8-bit
 samples, color types 0 (gray), 2 (RGB), 3 (palette), 4 (gray+alpha),

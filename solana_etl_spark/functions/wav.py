@@ -4,8 +4,9 @@ path for this codec-less container.
 Mirrors ``functions/png.py``'s role for the audio modality: the
 multimodal kernels get a REAL decode (RIFF signature check, chunk walk
 with word-alignment padding, fmt validation, PCM extraction) instead of
-a deterministic stub, and a corrupt payload raises ValueError into the
-pipeline's error isolation rather than faking a duration.
+a deterministic stub, and a corrupt payload raises ValueError rather
+than faking a duration (through ``operators.multimodal.map_payloads`` the
+job fails with that error, naming the media_id).
 
 Implements the common subset of the WAVE spec (RIFF "WAVE" form,
 ``fmt `` + ``data`` chunks): integer PCM (format tag 1), mono,
@@ -75,8 +76,8 @@ def decode(payload: bytes):
     The chunk walk honors declared sizes and word-alignment padding and
     tolerates unknown chunks; anything structurally wrong — bad
     signature, truncated chunk, non-PCM/stereo/non-16-bit fmt, missing
-    fmt or data, bomb-sized data — raises ValueError so the pipeline's
-    error isolation (not a fake decode) owns the row.
+    fmt or data, bomb-sized data — raises ValueError (never a fake
+    decode), which fails the media job naming the row's media_id.
     """
     import numpy as np
 

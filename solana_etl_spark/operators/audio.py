@@ -4,7 +4,8 @@ features, and perceptual fingerprint dedup.
 Completes the multimodal surface (charter: image/audio/video as opaque
 binary columns) the way ``operators/multimodal.py`` did for images: the
 payload is an opaque ``binary`` column, the ONLY Python stage is one
-Arrow-batched ``mapInPandas`` decode kernel routed by payload signature
+decode kernel behind the shared Arrow boundary
+(``operators.multimodal.map_payloads``) routed by payload signature
 (``functions/wav.py`` for RIFF, ``functions/flac.py`` for fLaC — both
 vendored, no audio library in this container, sharing the
 ``(rate, samples)`` contract), and everything downstream of the kernel
@@ -25,13 +26,10 @@ at 100 TB of audio the payload bytes never shuffle at all.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from solana_etl_spark.functions.parallelism import ensure_compute_parallelism
+from solana_etl_spark.operators.multimodal import map_payloads
 
 # 61 energy frames -> 60 gradient bits, matching the 60-bit geometry of
 # the image dHash so banded_hamming_pairs (4 bands x 15 bits, exact by
@@ -56,9 +54,10 @@ def _sniff_audio_codec(payload: bytes):
     magic) — the audio analogue of multimodal._sniff_codec: a mixed
     WAV+FLAC table needs no mime column on the decode path, both
     decoders share the ``(rate, samples)`` contract, and a payload that
-    is neither raises ValueError into error isolation. A 4-byte RIFF or
-    fLaC prefix routes to that codec even when the rest is corrupt: its
-    own validation raises the detailed error the isolation tests pin."""
+    is neither raises ValueError (through ``map_payloads`` the job fails
+    naming the media_id). A 4-byte RIFF or fLaC prefix routes to that
+    codec even when the rest is corrupt: its own validation raises the
+    detailed error the corrupt-payload tests pin."""
     from solana_etl_spark.functions import flac, wav
 
     if payload[:4] == b"RIFF":
@@ -83,41 +82,21 @@ def _clip_stats(rate: int, samples) -> tuple:
     return rate, n, duration_us, peak, sum_sq, zc
 
 
+def _decode(payload: bytes):
+    """(rate, samples) from the vendored codec for the payload's signature."""
+    return _sniff_audio_codec(payload).decode(payload)
+
+
 def audio_decode_report(media: DataFrame) -> DataFrame:
     """(media_id, sample_rate, n_samples, duration_us, peak_abs, sum_sq,
-    zero_crossings): one Arrow-batched ``mapInPandas`` pass decoding each
-    payload with the vendored codec for its sniffed signature (WAV or
-    FLAC). A corrupt payload raises
-    ValueError out of the kernel — pipeline error isolation owns it, the
-    report never fakes a decode. Input needs (media_id, payload)."""
-    # guide §4.1 + §2.6: prune, then spread — a single-row-group parquet
-    # scan lands every payload in ONE task (measured: 52 s -> 3.9 s on the
-    # 50k-image decode stage); at real scale the repartition is a no-op
-    media = ensure_compute_parallelism(media.select("media_id", "payload"))
-
-    def report_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                _clip_stats(
-                    *_sniff_audio_codec(bytes(p)).decode(bytes(p))
-                )
-                for p in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "sample_rate": [r[0] for r in rows],
-                    "n_samples": [r[1] for r in rows],
-                    "duration_us": [r[2] for r in rows],
-                    "peak_abs": [r[3] for r in rows],
-                    "sum_sq": [r[4] for r in rows],
-                    "zero_crossings": [r[5] for r in rows],
-                }
-            )
-
-    return media.mapInPandas(report_batches, schema=DECODE_REPORT_SCHEMA)
+    zero_crossings): one Arrow-batched :func:`map_payloads` pass decoding
+    each payload with the vendored codec for its sniffed signature (WAV
+    or FLAC). A corrupt payload fails the job with the codec's error,
+    naming the media_id — the report never fakes a decode. Input needs
+    (media_id, payload)."""
+    return map_payloads(
+        media, lambda p: (_clip_stats(*_decode(p)),), DECODE_REPORT_SCHEMA
+    )
 
 
 def _afp_from_samples(samples) -> int:
@@ -159,33 +138,15 @@ def _afp_from_samples(samples) -> int:
 
 
 def audio_fingerprints(media: DataFrame) -> DataFrame:
-    """(media_id, afp): Arrow-batched kernel — real WAV/FLAC decode by
-    payload signature, then the 60-bit energy-gradient reduction.
-    Corrupt payloads raise into error isolation. Input needs
-    (media_id, payload)."""
-    # guide §4.1 + §2.6: prune, then spread — a single-row-group parquet
-    # scan lands every payload in ONE task (measured: 52 s -> 3.9 s on the
-    # 50k-image decode stage); at real scale the repartition is a no-op
-    media = ensure_compute_parallelism(media.select("media_id", "payload"))
-
-    def fp_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [
-                _afp_from_samples(
-                    _sniff_audio_codec(bytes(p)).decode(bytes(p))[1]
-                )
-                for p in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "afp": pd.Series(out, dtype="int64"),
-                }
-            )
-
-    return media.mapInPandas(fp_batches, schema="media_id long, afp long")
+    """(media_id, afp): Arrow-batched kernel (:func:`map_payloads`) —
+    real WAV/FLAC decode by payload signature, then the 60-bit
+    energy-gradient reduction. A corrupt payload fails the job with the
+    codec's error, naming the media_id. Input needs (media_id, payload)."""
+    return map_payloads(
+        media,
+        lambda p: ((_afp_from_samples(_decode(p)[1]),),),
+        "media_id long, afp long",
+    )
 
 
 def fingerprint_pairs_from_sigs(

@@ -1,6 +1,8 @@
 """Multimodal column plumbing (charter §2.11): opaque ``binary`` payloads +
-typed metadata, with decode / feature-extraction stages as Arrow-batched
-Pandas UDFs over ``mapInPandas``.
+typed metadata, with decode / feature-extraction stages as per-payload
+Python kernels behind ONE Arrow boundary, :func:`map_payloads` (the single
+``mapInPandas`` every media kernel — image here, audio in
+operators/audio.py — runs through, with one NULL/corrupt-payload rule).
 
 Decode/resize are CAPABILITY-GATED (`decode_dims` / `resize_payload`): when
 PIL is importable and the payload is ``image/*``, the real decoder runs;
@@ -25,8 +27,10 @@ holds every operator to.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
+from collections.abc import Callable, Iterable, Iterator, Sequence
 
+import numpy as np
 import pandas as pd
 
 from solana_etl_spark.functions.parallelism import ensure_compute_parallelism
@@ -34,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
+    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -61,13 +66,79 @@ FEATURE_SCHEMA = StructType(
 )
 
 
+_PANDAS_DTYPES = {LongType: "int64", IntegerType: "int32"}
+
+
+def map_payloads(
+    media: DataFrame,
+    kernel: Callable[..., Iterable[tuple]],
+    schema: StructType | str,
+    columns: Sequence[str] = ("payload",),
+) -> DataFrame:
+    """The package's one Arrow boundary for per-payload Python kernels
+    (the reference's per-item ``Transform``, charter §2.9): every media
+    kernel runs through this single ``mapInPandas``.
+
+    ``media`` is pruned to ``media_id`` plus ``columns`` before the opaque
+    kernel (Spark cannot prune through it, guide §4.1) and then spread
+    with ``ensure_compute_parallelism`` (a single-row-group parquet scan
+    lands every payload in ONE task — measured 52 s -> 3.9 s on the
+    50k-image decode stage; at real scale it is a no-op). Per input row
+    ``kernel(payload, *rest)`` gets the values of ``columns`` in order,
+    the first (the payload) as ``bytes``, and returns an iterable of
+    output tuples WITHOUT ``media_id``: one tuple for a one-to-one
+    kernel, any number for a one-to-many one. Each tuple becomes one row
+    of ``schema`` (first field ``media_id``), built with the schema's
+    integer dtypes so an empty batch keeps its types.
+
+    Two rules hold for every kernel:
+
+    * NULL payload (first of ``columns``): the kernel is not called and
+      the row emits nothing.
+    * Kernel error: it propagates with its own type and message plus a
+      ``media_id=<id>`` note, and fails the Spark job — a corrupt
+      payload is never faked into a row or silently dropped.
+    """
+    schema = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    names = schema.names
+    dtypes = [
+        _PANDAS_DTYPES.get(type(f.dataType), "object") for f in schema.fields[1:]
+    ]
+    media = ensure_compute_parallelism(media.select("media_id", *columns))
+
+    def payload_batches(
+        batches: Iterator[pd.DataFrame],
+    ) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids, rows = [], []
+            for media_id, payload, *rest in zip(
+                pdf["media_id"], *(pdf[c] for c in columns)
+            ):
+                if payload is None:
+                    continue
+                try:
+                    for row in kernel(bytes(payload), *rest):
+                        ids.append(media_id)
+                        rows.append(row)
+                except Exception as e:
+                    e.add_note(f"media_id={media_id}")
+                    raise
+            cols = list(zip(*rows)) if rows else [()] * len(dtypes)
+            out = {names[0]: pd.Series(ids, dtype=pdf["media_id"].dtype)}
+            for name, col, dtype in zip(names[1:], cols, dtypes):
+                out[name] = pd.Series(col, dtype=dtype)
+            yield pd.DataFrame(out)
+
+    return media.mapInPandas(payload_batches, schema=schema)
+
+
 def documents_as_media(documents: DataFrame) -> DataFrame:
     """Adapt the documents table into a binary-payload media table (utf-8
     payload + metadata) — the plumbing a real image/audio corpus uses.
 
     Repartitions up to core count when the source arrives in fewer
     partitions (single parquet file → 1 partition → ONE Python worker for
-    every downstream mapInPandas kernel; decode is the expensive stage at
+    every downstream map_payloads kernel; decode is the expensive stage at
     scale and must parallelize)."""
     documents = ensure_compute_parallelism(documents)
     return documents.select(
@@ -94,10 +165,7 @@ def _decode_stub(payload: bytes) -> tuple[int, int]:
     """STUB decode kernel. Deterministic fake dimensions derived from the
     payload; a real deployment replaces this with an image/audio decoder.
 
-    Raises NotImplementedError for mimes we would never fake.
     """
-    if payload is None:
-        raise NotImplementedError("no payload")
     return (len(payload) % 640 + 1, len(payload) % 480 + 1)
 
 
@@ -110,8 +178,9 @@ def _pil_image():
     gate routes only those to it, so an image format with no real
     decoder in a Pillow-less deployment keeps the deterministic stub
     instead of crashing on a signature check. A corrupt payload of a
-    decodable mime raises ValueError from the real decoder — pipeline
-    error isolation must see it, not fake dimensions."""
+    decodable mime raises ValueError from the real decoder, never fake
+    dimensions: through :func:`map_payloads` the job fails with the
+    codec's error, naming the media_id."""
     try:
         from PIL import Image
 
@@ -211,8 +280,6 @@ def _resize_stub(payload: bytes, width: int, height: int) -> bytes:
     bytes — deterministic, size-correct, and cheap. A real deployment
     replaces this with PIL `Image.resize`.
     """
-    if payload is None:
-        raise NotImplementedError("no payload")
     n = width * height
     if len(payload) == 0:
         return b"\x00" * n
@@ -220,53 +287,43 @@ def _resize_stub(payload: bytes, width: int, height: int) -> bytes:
     return (payload * reps)[:n]
 
 
+def _md5(data: bytes) -> str:
+    return hashlib.md5(data).hexdigest()
+
+
+def _features(payload: bytes, mime: str) -> tuple:
+    """One :func:`extract_features` row: (mime, n_bytes, content_md5,
+    width, height)."""
+    return (mime, len(payload), _md5(payload), *decode_dims(payload, mime))
+
+
+def _resized(payload: bytes, mime: str, width: int, height: int) -> tuple:
+    """The resize columns of a :func:`resize` / :func:`decode_report` row:
+    (width, height, resized_md5)."""
+    resized = resize_payload(payload, mime, width, height)
+    return (width, height, _md5(resized))
+
+
 def resize(media: DataFrame, width: int = 32, height: int = 32) -> DataFrame:
-    """Arrow-batched resize stage via ``mapInPandas`` (charter: decode /
-    feature-extract / **resize** / frame-sample). Decode+resample are
-    stubbed (no codecs in-container) but the Spark plumbing is real:
+    """Arrow-batched resize stage through :func:`map_payloads` (charter:
+    decode / feature-extract / **resize** / frame-sample). Decode+resample
+    are stubbed (no codecs in-container) but the Spark plumbing is real:
     binary in, fixed-size binary out, declared schema, batch streaming.
     Emits the resized content hash rather than the raw bytes so results
     stay comparable across engines.
     """
-    import hashlib
 
-    # mapInPandas is opaque to column pruning: Spark ships (and reads from
-    # storage) every input column unless we select first (guide §4.1)
-    # guide §4.1 + §2.6: prune, then spread — a single-row-group parquet
-    # scan lands every payload in ONE task (measured: 52 s -> 3.9 s on the
-    # 50k-image decode stage); at real scale the repartition is a no-op
-    media = ensure_compute_parallelism(
-        media.select("media_id", "mime", "payload")
-    )
+    def row(payload, mime):
+        src = decode_dims(payload, mime)
+        return ((mime, *src, *_resized(payload, mime, width, height)),)
 
-    def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            dims = [
-                decode_dims(p, m) for p, m in zip(pdf["payload"], pdf["mime"])
-            ]
-            resized = [
-                resize_payload(p, m, width, height)
-                for p, m in zip(pdf["payload"], pdf["mime"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "mime": pdf["mime"],
-                    "src_width": [d[0] for d in dims],
-                    "src_height": [d[1] for d in dims],
-                    "width": width,
-                    "height": height,
-                    "resized_md5": [hashlib.md5(r).hexdigest() for r in resized],
-                }
-            )
-
-    return media.mapInPandas(resize_batches, schema=RESIZE_SCHEMA)
+    return map_payloads(media, row, RESIZE_SCHEMA, ("payload", "mime"))
 
 
 def sample_frames(
     media: DataFrame, frame_size: int = FRAME_SIZE, stride: int = FRAME_STRIDE
 ) -> DataFrame:
-    """Frame sampling as a one-to-many ``mapInPandas`` stage (charter:
+    """Frame sampling as a one-to-many :func:`map_payloads` stage (charter:
     decode / feature-extract / resize / **frame-sample**): the payload is
     treated as a frame container of fixed ``frame_size``-byte frames and
     every ``stride``-th frame is emitted as its own row. This is the UDTF
@@ -274,35 +331,13 @@ def sample_frames(
     container parsing is simplified — positional chunking — which keeps the
     kernel SQL-expressible and therefore oracle-checkable end to end.
     """
-    import hashlib
 
-    # prune before the opaque kernel: only (media_id, payload) cross the
-    # Arrow boundary — callers' mime/meta columns never ship (guide §4.1)
-    # guide §4.1 + §2.6: prune, then spread — a single-row-group parquet
-    # scan lands every payload in ONE task (measured: 52 s -> 3.9 s on the
-    # 50k-image decode stage); at real scale the repartition is a no-op
-    media = ensure_compute_parallelism(media.select("media_id", "payload"))
+    def frames(payload):
+        for i in range(0, (len(payload) + frame_size - 1) // frame_size, stride):
+            frame = payload[i * frame_size : (i + 1) * frame_size]
+            yield i, len(frame), _md5(frame)
 
-    def frame_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, lens, md5s = [], [], [], []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                for i in range(0, (len(payload) + frame_size - 1) // frame_size, stride):
-                    frame = payload[i * frame_size : (i + 1) * frame_size]
-                    ids.append(media_id)
-                    idxs.append(i)
-                    lens.append(len(frame))
-                    md5s.append(hashlib.md5(frame).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int64"),
-                    "frame_len": pd.Series(lens, dtype="int64"),
-                    "frame_md5": pd.Series(md5s, dtype="object"),
-                }
-            )
-
-    return media.mapInPandas(frame_batches, schema=FRAME_SCHEMA)
+    return map_payloads(media, frames, FRAME_SCHEMA)
 
 
 DECODE_REPORT_SCHEMA = StructType(
@@ -321,81 +356,26 @@ DECODE_REPORT_SCHEMA = StructType(
 
 
 def decode_report(media: DataFrame, width: int = 32, height: int = 32) -> DataFrame:
-    """Decode + feature-extract + resize in ONE Arrow-batched ``mapInPandas``
-    pass — the fused form of :func:`extract_features` and :func:`resize`
-    (one batch stream instead of two over the same payloads). Both kernels
-    are deterministic functions of the payload (md5 / len arithmetic /
-    cyclic resample), so this whole Python-kernel surface carries a DuckDB
+    """Decode + feature-extract + resize in ONE :func:`map_payloads` pass —
+    the fused form of :func:`extract_features` and :func:`resize` (one
+    batch stream instead of two over the same payloads): each row is the
+    extract_features row followed by the resize columns. Both kernels are
+    deterministic functions of the payload (md5 / len arithmetic / cyclic
+    resample), so this whole Python-kernel surface carries a DuckDB
     value-hash oracle in the registry."""
-    import hashlib
 
-    # guide §4.1 + §2.6: prune, then spread — a single-row-group parquet
-    # scan lands every payload in ONE task (measured: 52 s -> 3.9 s on the
-    # 50k-image decode stage); at real scale the repartition is a no-op
-    media = ensure_compute_parallelism(
-        media.select("media_id", "mime", "payload")
+    def row(payload, mime):
+        return (_features(payload, mime) + _resized(payload, mime, width, height),)
+
+    return map_payloads(media, row, DECODE_REPORT_SCHEMA, ("payload", "mime"))
+
+
+def extract_features(media: DataFrame) -> DataFrame:
+    """Arrow-batched decode/feature stage through :func:`map_payloads` —
+    batches stream through Arrow and the output schema is declared."""
+    return map_payloads(
+        media, lambda p, m: (_features(p, m),), FEATURE_SCHEMA, ("payload", "mime")
     )
-
-    def report_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            dims = [
-                decode_dims(p, m) for p, m in zip(pdf["payload"], pdf["mime"])
-            ]
-            resized = [
-                resize_payload(p, m, width, height)
-                for p, m in zip(pdf["payload"], pdf["mime"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "mime": pdf["mime"],
-                    "n_bytes": [len(p) for p in pdf["payload"]],
-                    "content_md5": [
-                        hashlib.md5(p).hexdigest() for p in pdf["payload"]
-                    ],
-                    "src_width": [d[0] for d in dims],
-                    "src_height": [d[1] for d in dims],
-                    "width": width,
-                    "height": height,
-                    "resized_md5": [hashlib.md5(r).hexdigest() for r in resized],
-                }
-            )
-
-    return media.mapInPandas(report_batches, schema=DECODE_REPORT_SCHEMA)
-
-
-def extract_features(media: DataFrame, batch_size_hint: int = 1024) -> DataFrame:
-    """Arrow-batched decode/feature stage via ``mapInPandas`` — the canonical
-    shape for Python-side media kernels: batches stream through Arrow, rows
-    never materialize one-by-one, and the output schema is declared."""
-    import hashlib
-
-    # guide §4.1 + §2.6: prune, then spread — a single-row-group parquet
-    # scan lands every payload in ONE task (measured: 52 s -> 3.9 s on the
-    # 50k-image decode stage); at real scale the repartition is a no-op
-    media = ensure_compute_parallelism(
-        media.select("media_id", "mime", "payload")
-    )
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            dims = [
-                decode_dims(p, m) for p, m in zip(pdf["payload"], pdf["mime"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "mime": pdf["mime"],
-                    "n_bytes": [len(p) for p in pdf["payload"]],
-                    "content_md5": [
-                        hashlib.md5(p).hexdigest() for p in pdf["payload"]
-                    ],
-                    "width": [d[0] for d in dims],
-                    "height": [d[1] for d in dims],
-                }
-            )
-
-    return media.mapInPandas(decode_batches, schema=FEATURE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -418,8 +398,6 @@ def _dhash_from_gray(width: int, height: int, gray: bytes) -> int:
     the DuckDB oracle reproduces it bit-for-bit from the ground-truth
     pixel array. Bit r·10+c is 1 iff cell (r, c+1) is strictly brighter
     than cell (r, c) — the classic horizontal-gradient dHash."""
-    import numpy as np
-
     gr, gc = DHASH_GRID_ROWS, DHASH_GRID_COLS
     px = (
         np.asarray(gray, dtype=np.int64)
@@ -440,12 +418,13 @@ def _dhash_from_gray(width: int, height: int, gray: bytes) -> int:
 def _sniff_codec(payload: bytes):
     """Vendored codec by payload SIGNATURE (PNG magic / JPEG SOI) — a
     mixed image table needs no mime column on the hash path, and a
-    payload that is neither raises ValueError into error isolation."""
+    payload that is neither raises ValueError (through
+    :func:`map_payloads` the job fails naming the media_id)."""
     from solana_etl_spark.functions import jpeg, png
 
     # a 4-byte PNG prefix routes to the PNG codec even when the rest of
     # the magic is corrupt: its own signature check raises the detailed
-    # "png: bad signature" the error-isolation tests pin
+    # "png: bad signature" the corrupt-payload tests pin
     if payload[:4] == b"\x89PNG":
         return png
     if payload[:2] == b"\xff\xd8":
@@ -453,52 +432,33 @@ def _sniff_codec(payload: bytes):
     raise ValueError("image: neither png nor jpeg payload signature")
 
 
-def dhash_images(media: DataFrame) -> DataFrame:
-    """(media_id, dhash): Arrow-batched ``mapInPandas`` kernel decoding
-    each payload with the vendored codec for its sniffed signature (PNG
-    or baseline JPEG — the REAL decode paths; a corrupt payload raises
-    ValueError into pipeline error isolation) and reducing it to the
-    60-bit gradient signature. RGB payloads reduce to integer-exact luma
-    via the plain channel sum (deterministic, no float weights). Input
-    needs (media_id, payload) columns."""
+def _dhash_payload(payload: bytes) -> int:
+    """dHash of one PNG/JPEG payload, decoded by its sniffed codec."""
     import io
 
-    # guide §4.1 + §2.6: prune, then spread — a single-row-group parquet
-    # scan lands every payload in ONE task (measured: 52 s -> 3.9 s on the
-    # 50k-image decode stage); at real scale the repartition is a no-op
-    media = ensure_compute_parallelism(media.select("media_id", "payload"))
+    with _sniff_codec(payload).open(io.BytesIO(payload)) as im:
+        buf = im.tobytes()
+        if im.channels > 1:
+            a = np.frombuffer(buf, dtype=np.uint8).astype(np.int64)
+            # channel-sum luma over COLOR channels only: ints, no float
+            # weights. Alpha never contributes — for gray+alpha
+            # (channels=2) luma is the gray plane alone, for RGBA the
+            # first three planes.
+            n_color = 1 if im.channels == 2 else 3
+            buf = a.reshape(-1, im.channels)[:, :n_color].sum(axis=1)
+        return _dhash_from_gray(im.width, im.height, buf)
 
-    def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
 
-        for pdf in batches:
-            out = []
-            for payload in pdf["payload"]:
-                payload = bytes(payload)
-                codec = _sniff_codec(payload)
-                with codec.open(io.BytesIO(payload)) as im:
-                    buf = im.tobytes()
-                    if im.channels > 1:
-                        a = np.frombuffer(buf, dtype=np.uint8).astype(np.int64)
-                        # channel-sum luma over COLOR channels only: ints,
-                        # no float weights. Alpha never contributes — for
-                        # gray+alpha (channels=2) luma is the gray plane
-                        # alone, for RGBA the first three planes.
-                        n_color = 1 if im.channels == 2 else 3
-                        buf = a.reshape(-1, im.channels)[:, :n_color].sum(
-                            axis=1
-                        )
-                    h = _dhash_from_gray(im.width, im.height, buf)
-                out.append(h)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "dhash": pd.Series(out, dtype="int64"),
-                }
-            )
-
-    return media.mapInPandas(
-        hash_batches, schema="media_id long, dhash long"
+def dhash_images(media: DataFrame) -> DataFrame:
+    """(media_id, dhash): Arrow-batched kernel (:func:`map_payloads`)
+    decoding each payload with the vendored codec for its sniffed
+    signature (PNG or baseline JPEG — the REAL decode paths; a corrupt
+    payload fails the job with the codec's error, naming the media_id)
+    and reducing it to the 60-bit gradient signature. RGB payloads reduce
+    to integer-exact luma via the plain channel sum (deterministic, no
+    float weights). Input needs (media_id, payload) columns."""
+    return map_payloads(
+        media, lambda p: ((_dhash_payload(p),),), "media_id long, dhash long"
     )
 
 
@@ -535,52 +495,25 @@ def frame_signatures(
 ) -> DataFrame:
     """Per-frame content signatures (exact int64 byte sums) over EVERY
     ``frame_size``-byte frame of the payload — the decode-side half of
-    scene-cut detection, as one Arrow-batched ``mapInPandas`` pass (real
-    byte access, any binary payload). Deterministic integers, so the
-    downstream cut logic is value-hash oracle-checkable.
+    scene-cut detection, as one one-to-many :func:`map_payloads` pass
+    (real byte access, any binary payload). Deterministic integers, so
+    the downstream cut logic is value-hash oracle-checkable.
 
     The per-frame sums run through numpy ``add.reduceat`` over an int64
     view of the payload (guide §4.2: hand whole batches to vectorized
     native code) — bit-identical to the former pure-Python
     ``sum(payload[i*fs:(i+1)*fs])`` loop (integer sums of uint8 values in
     an int64 accumulator cannot round)."""
-    # guide §4.1 + §2.6: prune, then spread — a single-row-group parquet
-    # scan lands every payload in ONE task (measured: 52 s -> 3.9 s on the
-    # 50k-image decode stage); at real scale the repartition is a no-op
-    media = ensure_compute_parallelism(media.select("media_id", "payload"))
 
-    def sig_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def sigs(payload):
+        n_frames = (len(payload) + frame_size - 1) // frame_size
+        if not n_frames:
+            return ()
+        px = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
+        offsets = np.arange(n_frames, dtype=np.int64) * frame_size
+        return enumerate(np.add.reduceat(px, offsets).tolist())
 
-        for pdf in batches:
-            ids, idxs, sigs = [], [], []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    # skip NULL payloads like the other kernels — one null
-                    # row must not TypeError the whole mapInPandas job
-                    continue
-                payload = bytes(payload)
-                n_frames = (len(payload) + frame_size - 1) // frame_size
-                if n_frames:
-                    px = np.frombuffer(payload, dtype=np.uint8).astype(
-                        np.int64
-                    )
-                    offsets = np.arange(n_frames, dtype=np.int64) * frame_size
-                    frame_sums = np.add.reduceat(px, offsets)
-                else:
-                    frame_sums = ()
-                ids.extend([media_id] * n_frames)
-                idxs.extend(range(n_frames))
-                sigs.extend(int(s) for s in frame_sums)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int64"),
-                    "sig": pd.Series(sigs, dtype="int64"),
-                }
-            )
-
-    return media.mapInPandas(sig_batches, schema=SIGNATURE_SCHEMA)
+    return map_payloads(media, sigs, SIGNATURE_SCHEMA)
 
 
 def scene_cut_stats(

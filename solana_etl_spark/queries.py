@@ -41,21 +41,13 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 _REGISTRY: dict[str, QueryFn] = {}
 _ORACLES: dict[str, str] = {}
-# Local-only entries: checked by scripts/check_oracle.py and pytest but NOT
-# exposed to the driver gate, which records at most 50 queries — these are
-# operators whose computation is a strict subset of a registered query (so
-# driver coverage is not reduced), kept verifiable locally.
-_LOCAL_REGISTRY: dict[str, QueryFn] = {}
-_LOCAL_ORACLES: dict[str, str] = {}
 
 
-def _register(name: str, oracle: str | None, local_only: bool = False):
-    reg, orc = (_LOCAL_REGISTRY, _LOCAL_ORACLES) if local_only else (_REGISTRY, _ORACLES)
-
+def _register(name: str, oracle: str | None):
     def deco(fn: QueryFn) -> QueryFn:
-        reg[name] = fn
+        _REGISTRY[name] = fn
         if oracle is not None:
-            orc[name] = oracle
+            _ORACLES[name] = oracle
         return fn
 
     return deco
@@ -132,8 +124,7 @@ DRIVER_ROWS: tuple[str, ...] = (
 
 
 def queries() -> dict[str, QueryFn]:
-    allq = {**_REGISTRY, **_LOCAL_REGISTRY}
-    return {n: allq[n] for n in DRIVER_ROWS}
+    return {n: _REGISTRY[n] for n in DRIVER_ROWS}
 
 
 def oracle_sql() -> dict[str, str]:
@@ -149,13 +140,13 @@ def oracle_sql() -> dict[str, str]:
     ensure_e2e_corpus()
     ensure_images_table()
     ensure_web_table()
-    allo = {**_ORACLES, **_LOCAL_ORACLES}
-    return {n: allo[n] for n in DRIVER_ROWS if n in allo}
+    return {n: _ORACLES[n] for n in DRIVER_ROWS if n in _ORACLES}
 
 
 def all_queries() -> dict[str, QueryFn]:
-    """Driver registry + local-only entries (for the local gate / pytest)."""
-    return {**_REGISTRY, **_LOCAL_REGISTRY}
+    """Every registered query (the local gate / pytest); ``queries()`` is
+    its DRIVER_ROWS subset."""
+    return dict(_REGISTRY)
 
 
 def all_oracle_sql() -> dict[str, str]:
@@ -170,7 +161,7 @@ def all_oracle_sql() -> dict[str, str]:
     ensure_images_table()  # mm_phash_dedup's oracle reads it directly
     ensure_web_table()  # web_/c4_ oracles read it directly
     ensure_audio_table()  # mm_audio_* oracles read it directly
-    return {**_ORACLES, **_LOCAL_ORACLES}
+    return dict(_ORACLES)
 
 
 DEC = "decimal(18,4)"
@@ -570,15 +561,13 @@ def j6_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
            epoch_us(p.ts) - epoch_us(c.ts) AS gap_us
     FROM c ASOF JOIN p ON c.user_id = p.user_id AND c.ts <= p.ts
     """,
-    local_only=True,
 )
 def j10_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FORWARD as-of join: attribute each click to the user's NEXT
     purchase at-or-after it (time-to-conversion) — the mirror direction of
     j6, same single-shuffle union + running-window plan ordered by
     descending timestamp (operators/asof.py direction='forward'). Oracle:
-    DuckDB's native forward ASOF JOIN (l.ts <= r.ts). local_only: driver
-    cap."""
+    DuckDB's native forward ASOF JOIN (l.ts <= r.ts)."""
     from solana_etl_spark.operators.asof import asof_join
 
     ev = _t(spark, sf_dir, "events")
@@ -683,7 +672,6 @@ def j7_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND a.start_ts <= b.end_ts AND b.start_ts <= a.end_ts
     GROUP BY 1, 2
     """,
-    local_only=True,
 )
 def j9_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval×interval OVERLAP join (the sibling of j7's point-in-interval
@@ -692,7 +680,7 @@ def j9_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     report-at-first-overlap-bucket emission (operators/rangejoin.py
     interval_overlap_join) — a hash join on time bucket where the naive
     inequality join plans a cartesian BNLJ. Oracle: DuckDB's native IE
-    join over the same session intervals. local_only: driver cap."""
+    join over the same session intervals."""
     from solana_etl_spark.operators.rangejoin import interval_overlap_join
     from solana_etl_spark.operators.sessionize import session_intervals
 
@@ -923,13 +911,12 @@ def w3_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (PARTITION BY user_id ORDER BY epoch(ts)
                  RANGE BETWEEN 600 PRECEDING AND CURRENT ROW)
     """,
-    local_only=True,
 )
 def w4_range_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time RANGE-frame window (trailing 10-minute moving count/sum
     per user): ``rangeBetween`` on epoch seconds — one shuffle on user_id,
     sort within partition, frame by VALUE distance so same-timestamp events
-    share a frame. local_only: driver cap."""
+    share a frame."""
     e = _t(spark, sf_dir, "events").filter(F.col("user_id") <= 20)
     ts_sec = (F.unix_micros("ts") / F.lit(1_000_000)).cast("double")
     w = (
@@ -1004,7 +991,6 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY event_type, CAST(json_extract(props, '$.k') AS BIGINT)
     """,
-    local_only=True,
 )
 def t3_explode_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M5/T3 analog: JSON-in-string column parsed and grouped (the reference
@@ -1194,7 +1180,7 @@ def _bloom_oracle() -> str:
     """
 
 
-@_register("dedup_bloom_probe", _bloom_oracle(), local_only=True)
+@_register("dedup_bloom_probe", _bloom_oracle())
 def dedup_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter membership pre-filter (operators/sketch.py
     bloom_build/bloom_probe): the filter is built over the even-doc_id
@@ -1204,7 +1190,7 @@ def dedup_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle. The 100 TB posture: the bitmap (≤ m_bits/63 rows)
     BROADCASTS where an exact membership index would shuffle the whole
     probe side; FALSE proves novelty, so only maybe-members continue to
-    the exact anti-join. local_only: driver cap."""
+    the exact anti-join."""
     from solana_etl_spark.operators.sketch import bloom_build, bloom_probe
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
@@ -1221,14 +1207,10 @@ def _minhash_oracle(k: int) -> str:
     return f"SELECT doc_id,\n           {cols}\n    FROM documents"
 
 
-# local_only: the k signature expressions here are the identical minhash_sql
-# exprs the registered dedup_minhash_lsh_pairs oracle builds its sigs CTE
-# from, and the Spark side is the same minhash_signatures() the pairs query
-# composes — a strict computational subset, verified by the local gate to
-# keep the driver registry at its 50-row cap.
-@_register(
-    "dedup_minhash_signatures", _minhash_oracle(dedup.MINHASH_K), local_only=True
-)
+# The k signature expressions here are the identical minhash_sql exprs the
+# registered dedup_minhash_lsh_pairs oracle builds its sigs CTE from, and
+# the Spark side is the same minhash_signatures() the pairs query composes.
+@_register("dedup_minhash_signatures", _minhash_oracle(dedup.MINHASH_K))
 def dedup_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_signatures(_t(spark, sf_dir, "documents"))
 
@@ -1339,7 +1321,6 @@ def _lsh_jaccard_oracle(k: int, band_rows: int, threshold: float) -> str:
     _lsh_jaccard_oracle(
         dedup.MINHASH_K, dedup.LSH_BAND_ROWS, dedup.JACCARD_THRESHOLD
     ),
-    local_only=True,
 )
 def dedup_lsh_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard VALUES on MinHash-LSH candidates
@@ -1348,7 +1329,7 @@ def dedup_lsh_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted index explode (measured: 1.15B candidate rows on a 50k-doc
     Zipf corpus vs 313k LSH candidates). Candidate volume tracks true
     near-dup density; every emitted value is exact; recall is the LSH
-    band recall. local_only: driver cap."""
+    band recall."""
     return dedup.lsh_jaccard_pairs(_t(spark, sf_dir, "documents"))
 
 
@@ -1418,16 +1399,13 @@ def _strip_spans_oracle(w: int) -> str:
     """
 
 
-@_register(
-    "text_strip_dup_spans", _strip_spans_oracle(dedup.SPAN_W), local_only=True
-)
+@_register("text_strip_dup_spans", _strip_spans_oracle(dedup.SPAN_W))
 def text_strip_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The removal half of substring dedup (operators/dedup.py
     strip_duplicated_spans — Lee et al. 2022): every token covered by a
     duplicated span dropped, survivors rejoined in order, with per-doc
     duplicated-token accounting. The strip is a per-row codegen array
-    filter on top of the span table's shuffles. local_only: driver
-    cap."""
+    filter on top of the span table's shuffles."""
     return dedup.strip_duplicated_spans(_t(spark, sf_dir, "documents"))
 
 
@@ -1455,7 +1433,6 @@ def text_strip_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE ROUND(n_inter / least(sa.n_grams, sb.n_grams), 6)
           >= {dedup.CONTAINMENT_THRESHOLD}
     """,
-    local_only=True,
 )
 def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric near-dup pairs by Broder containment
@@ -1464,22 +1441,18 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     chrome-wrapped copy) whose Jaccard is diluted below any useful
     threshold by the big side's union. Same exact single-scan inverted
     index as the Jaccard scorer; deliberately not LSH-seeded (minhash
-    bands are Jaccard-tuned and rarely collide on small-in-big pairs).
-    local_only: driver cap."""
+    bands are Jaccard-tuned and rarely collide on small-in-big pairs)."""
     return dedup.ngram_containment_pairs(_t(spark, sf_dir, "documents"))
 
 
-@_register(
-    "dedup_exact_spans", _dup_spans_oracle(dedup.SPAN_W), local_only=True
-)
+@_register("dedup_exact_spans", _dup_spans_oracle(dedup.SPAN_W))
 def dedup_exact_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring duplicate spans (operators/dedup.py
     duplicated_spans — Lee et al. 2022): maximal token spans covered by a
     w-token window occurring ≥ 2 times corpus-wide, the removal set of
     substring-level dedup that document-level exact/MinHash dedup can't
     see (templated/quoted passages inside otherwise-unique docs). One
-    16-byte-hash count shuffle + a doc-bounded gaps-and-islands window.
-    local_only: driver cap."""
+    16-byte-hash count shuffle + a doc-bounded gaps-and-islands window."""
     return dedup.duplicated_spans(_t(spark, sf_dir, "documents"))
 
 
@@ -1517,7 +1490,6 @@ def _star_edges_oracle(k: int, band_rows: int) -> str:
 @_register(
     "dedup_star_edges",
     _star_edges_oracle(dedup.MINHASH_K, dedup.LSH_BAND_ROWS),
-    local_only=True,
 )
 def dedup_star_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-bucket STAR edges of the LSH collision graph (operators/
@@ -1525,8 +1497,7 @@ def dedup_star_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     LINEAR edge list the cluster family feeds to connected components —
     O(N·bands) rows where the all-pairs expansion is Σ C(bucket, 2).
     Oracled directly so the bench scaling decades can record edge
-    volume next to pair volume. local_only: internal relation of the
-    driver-certified dedup_clusters row."""
+    volume next to pair volume."""
     return dedup.lsh_star_edges(_t(spark, sf_dir, "documents"))
 
 
@@ -1567,7 +1538,6 @@ def _keepers_oracle(k: int, band_rows: int) -> str:
 @_register(
     "dedup_keepers_by_quality",
     _keepers_oracle(dedup.MINHASH_K, dedup.LSH_BAND_ROWS),
-    local_only=True,
 )
 def dedup_keepers_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-aware keeper selection (operators/dedup.py
@@ -1575,8 +1545,7 @@ def dedup_keepers_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     LONGEST version (most tokens, tie → smallest doc_id) instead of the
     min-id — what a cleaning pipeline actually wants (the un-truncated
     variant), chosen by one max-struct aggregate per cluster with no
-    per-cluster sort. Oracle: recursive-CTE closure + rank window.
-    local_only: driver cap."""
+    per-cluster sort. Oracle: recursive-CTE closure + rank window."""
     return dedup.keepers_by_quality(_t(spark, sf_dir, "documents"))
 
 
@@ -1623,7 +1592,6 @@ def _lsh_eval_oracle(k: int, band_rows: int, threshold: float) -> str:
     _lsh_eval_oracle(
         dedup.MINHASH_K, dedup.LSH_BAND_ROWS, dedup.LSH_EVAL_THRESHOLD
     ),
-    local_only=True,
 )
 def dedup_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Precision/recall of the minhash-LSH banding against exact
@@ -1631,7 +1599,7 @@ def dedup_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     measurement that justifies a (k, bands) operating point before
     trusting the dedup index, the same way ann_recall_eval validates
     nprobe. Exact truth is the audit path: at corpus scale it runs on a
-    hash_sample, never the full corpus. local_only: driver cap."""
+    hash_sample, never the full corpus."""
     return dedup.lsh_eval(_t(spark, sf_dir, "documents"))
 
 
@@ -1851,7 +1819,6 @@ def _lsh_bucket_sql_expr(bits: int) -> str:
       ON a.bucket = b.bucket AND a.vec_id < b.vec_id
     WHERE ROUND({_NDOT_SQL}, 6) >= 0.3
     """,
-    local_only=True,
 )
 def sim_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # threshold 0.3 (not the 0.95 semantic default): the synthetic embeddings
@@ -1930,13 +1897,12 @@ def sim_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
            COALESCE(cc.cluster_id, v.vec_id) = v.vec_id AS is_keeper
     FROM embeddings v LEFT JOIN cc USING (vec_id)
     """,
-    local_only=True,
 )
 def sim_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic-dedup capstone over embeddings: LSH-bucketed near-dup pairs
     → pointer-jumping connected components → keeper per cluster, one row per
     input vector. Threshold 0.3 for the near-orthogonal synthetic embeddings
-    (see sim_neardup_pairs). local_only: driver registry at its 50-row cap."""
+    (see sim_neardup_pairs)."""
     return similarity.semantic_dedup(
         _t(spark, sf_dir, "embeddings"), threshold=0.3
     )
@@ -2011,7 +1977,6 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(total_tokens / SUM(total_tokens) OVER (), 6) AS token_share
     FROM g
     """,
-    local_only=True,
 )
 def corpus_mix_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The data-mixing planning table: per (lang, source) stratum — doc
@@ -2020,7 +1985,7 @@ def corpus_mix_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     input to temperature/budgeted mixture rates (s3_mixture_sample) and
     the first number a corpus card reports. One grouped aggregate + a
     1-row broadcast total; the distinct-hash count is the only second
-    phase. local_only: driver cap."""
+    phase."""
     from solana_etl_spark.functions.hashing import hash64
     from solana_etl_spark.operators.dedup import normalized_text
     from solana_etl_spark.operators.text import tokens
@@ -2122,7 +2087,7 @@ def text_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The synthetic corpus contains no PII, so the redaction query injects
 # deterministic URL/email/IP strings (same expression both engines) before
 # redacting — the oracle then checks real match/replace behavior, not a
-# no-op. local_only: the driver registry is at its 50-row cap.
+# no-op.
 _PII_AUG_SQL = """
     SELECT doc_id,
            CASE doc_id % 4
@@ -2152,7 +2117,6 @@ _PII_AUG_SQL = """
                '{text_ops.PII_IP_RE}', '<IP>', 'g') AS text_redacted
     FROM aug
     """,
-    local_only=True,
 )
 def text_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
@@ -2224,13 +2188,12 @@ def _decontam_oracle(n: int) -> str:
 @_register(
     "text_decontaminate",
     _decontam_oracle(5),
-    local_only=True,
 )
 def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/test decontamination: flag training docs (source≠src19) sharing
     word 5-grams with the held-out eval slice (source=src19). Probe side
     broadcast; training side = explode + broadcast join + per-doc count —
-    linear in corpus size (operators/decontam.py). local_only: driver cap."""
+    linear in corpus size (operators/decontam.py)."""
     from solana_etl_spark.operators.decontam import contamination
 
     docs = _t(spark, sf_dir, "documents")
@@ -2258,7 +2221,6 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
            max_eval_cos >= 0.35 AS contaminated
     FROM scored
     """,
-    local_only=True,
 )
 def decontam_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-space decontamination
@@ -2269,7 +2231,7 @@ def decontam_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine ≈ 0.5), so the gate threshold is calibrated to exercise BOTH
     flag branches at every fixture scale. Normalized eval side broadcast;
     corpus streams once, per-vector max partial-aggregates map-side —
-    linear in corpus size. local_only: driver cap."""
+    linear in corpus size."""
     from solana_etl_spark.operators.decontam import semantic_contamination
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -2378,13 +2340,12 @@ _MIXTURE_RATES = {"src0": 10000, "src1": 5000, "src2": 1500}  # bp per source
           CASE source WHEN 'src0' THEN 10000 WHEN 'src1' THEN 5000
                       WHEN 'src2' THEN 1500 ELSE 300 END
     """,
-    local_only=True,
 )
 def s3_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source mixture weighting ("100% of src0, 50% of src1, 15% of
     src2, 3% of the rest") — the corpus-mixing step, as a stateless
     deterministic hash predicate: zero shuffle, retry-safe, recomputable
-    membership (operators/sampling.py). local_only: driver cap."""
+    membership (operators/sampling.py)."""
     from solana_etl_spark.operators.sampling import mixture_sample
 
     return mixture_sample(
@@ -2401,13 +2362,12 @@ def s3_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE 'test' END AS split
     FROM documents
     """,
-    local_only=True,
 )
 def s5_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 80/10/10 corpus split: membership is a pure function
     of the doc key's hash bucket — zero shuffle, retry-safe, and no
     document migrates between splits as the corpus grows (the leakage
-    guarantee row-number splits can't give). local_only: driver cap."""
+    guarantee row-number splits can't give)."""
     from solana_etl_spark.operators.sampling import train_val_test_split
 
     return train_val_test_split(
@@ -2437,7 +2397,6 @@ _EPOCH_FACTORS_BP = {"src0": 25000, "src5": 30000, "src10": 5000}
        OR {hash64_sql("CAST(doc_id AS VARCHAR) || ':' || CAST(epoch AS VARCHAR)")}
           % 10000 < fbp
     """,
-    local_only=True,
 )
 def s6_epoch_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source repetition factors (operators/sampling.py:
@@ -2446,7 +2405,7 @@ def s6_epoch_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc, epoch) copies. Integer part duplicates unconditionally; the
     fractional copy is a deterministic hash draw keyed by (doc, epoch),
     so the realized corpus is reproducible. Pure per-row explode, zero
-    shuffle. local_only: driver cap."""
+    shuffle."""
     from solana_etl_spark.operators.sampling import epoch_upsample
 
     return epoch_upsample(
@@ -2492,7 +2451,6 @@ def s6_epoch_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sh a JOIN sh b ON a.h = b.h AND a.source < b.source
     GROUP BY a.source, b.source
     """,
-    local_only=True,
 )
 def corpus_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-source span-duplication matrix: per source pair, how many
@@ -2501,7 +2459,7 @@ def corpus_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     or syndicate each other (dedup them jointly, budget them once).
     Chunk-granular + CDC boundaries so shared spans survive insertions;
     one hash-keyed self-join over distinct (source, chunk-hash) pairs,
-    16-byte shuffle rows. local_only: driver cap."""
+    16-byte shuffle rows."""
     from solana_etl_spark.operators.dedup import cdc_chunks
 
     docs = _t(spark, sf_dir, "documents")
@@ -2553,15 +2511,13 @@ def corpus_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(CAST(SUM(lp) AS DOUBLE) / COUNT(*), 6) AS avg_logprob
     FROM scored GROUP BY doc_id
     """,
-    local_only=True,
 )
 def lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram-LM document scoring (operators/lm.py bigram_lm_scores): every
     token transition scored by the add-one conditional probability — the
     conditional upgrade of the unigram CCNet signal (word salad with
     plausible unigrams but improbable transitions scores low). Zipf-bounded
-    count tables broadcast; exact-decimal per-doc sums. local_only: driver
-    cap."""
+    count tables broadcast; exact-decimal per-doc sums."""
     from solana_etl_spark.operators.lm import bigram_lm_scores
 
     return bigram_lm_scores(_t(spark, sf_dir, "documents"))
@@ -2614,15 +2570,13 @@ def lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT bigram, c_ab, ROUND(log10(ratio), 6) AS pmi
     FROM scored ORDER BY ratio DESC, bigram LIMIT {text_ops.COLLOC_K}
     """,
-    local_only=True,
 )
 def text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram collocation mining by PMI (operators/text.py collocations):
     top multiword-expression candidates with a min-count floor — the
     phrase-detection / tokenizer-merge-seeding signal. Two map-side-
     combined counts + broadcast unigram lookups + TakeOrdered; ranking by
-    the raw probability ratio keeps ordering engine-exact. local_only:
-    driver cap."""
+    the raw probability ratio keeps ordering engine-exact."""
     return text_ops.collocations(_t(spark, sf_dir, "documents"))
 
 
@@ -2666,7 +2620,6 @@ _N_DRAWS = 1000
     FROM d3 d JOIN items i USING (bucket)
     WHERE d.t >= i.cum_start AND d.t < i.cum_end
     """,
-    local_only=True,
 )
 def s9_categorical_draws(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic weighted-categorical sampler (operators/sampling.py
@@ -2674,7 +2627,7 @@ def s9_categorical_draws(spark: SparkSession, sf_dir: str) -> DataFrame:
     count distribution — the negative-sampling-table primitive, in
     all-integer math (no float CDF). Vocab-bounded global cumsum +
     bucketized integer range join; every draw a pure function of its
-    index. local_only: driver cap."""
+    index."""
     from solana_etl_spark.operators.sampling import categorical_draws
 
     toks = (
@@ -2718,7 +2671,6 @@ def s9_categorical_draws(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(MAX(n_tokens) AS BIGINT) AS n_tokens
     FROM chunks GROUP BY chunk_hash HAVING COUNT(*) >= 2
     """,
-    local_only=True,
 )
 def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shift-robust chunk dedup via content-defined chunking
@@ -2727,7 +2679,7 @@ def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-stride chunking shifts every later boundary; repeated chunk
     hashes across documents with occurrence/doc counts and the
     first-occurrence keeper. Explode + doc-keyed window cumsum + two
-    hash-keyed aggregates, all linear. local_only: driver cap."""
+    hash-keyed aggregates, all linear."""
     from solana_etl_spark.operators.dedup import cdc_duplicate_chunks
 
     return cdc_duplicate_chunks(_t(spark, sf_dir, "documents"))
@@ -2760,15 +2712,14 @@ def _cluster_safe_split_oracle() -> str:
     """
 
 
-@_register("s8_cluster_safe_split", _cluster_safe_split_oracle(), local_only=True)
+@_register("s8_cluster_safe_split", _cluster_safe_split_oracle())
 def s8_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-safe train/val/test split: membership hashes the NEAR-DUP
     CLUSTER id (LSH pairs → connected components, singletons self-keyed),
     not the doc id — so a near-duplicate pair can never straddle train and
     test, the leak a per-document hash split silently allows. Composes two
     individually-oracled operators; the split stays a stateless pure
-    function of content (retry-safe, growth-stable). local_only: driver
-    cap."""
+    function of content (retry-safe, growth-stable)."""
     from solana_etl_spark.operators.sampling import train_val_test_split
 
     docs = _t(spark, sf_dir, "documents")
@@ -2811,13 +2762,12 @@ _SFT_TURNS_CTE = f"""
            CAST(span_end AS BIGINT) AS span_end
     FROM spans WHERE role = 'assistant'
     """,
-    local_only=True,
 )
 def sft_loss_masks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SFT loss-mask accounting (operators/sft.py): token-offset spans of
     assistant turns inside each flattened conversation — what a fine-tuning
     loader needs to mask user context out of the loss. One window cumsum
-    keyed by conv_id is the only shuffle. local_only: driver cap."""
+    keyed by conv_id is the only shuffle."""
     from solana_etl_spark.operators.sft import conversations, loss_mask_spans
 
     return loss_mask_spans(conversations(_t(spark, sf_dir, "documents")))
@@ -2837,12 +2787,11 @@ def sft_loss_masks(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / CAST(SUM(n_tokens) AS DOUBLE), 9) AS mask_ratio
     FROM turns GROUP BY conv_id
     """,
-    local_only=True,
 )
 def sft_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-conversation SFT mix diagnostics (operators/sft.py): prompt vs
     completion token totals and the loss-mask ratio (fraction of tokens
-    trained on). One partial-aggregated groupBy. local_only: driver cap."""
+    trained on). One partial-aggregated groupBy."""
     from solana_etl_spark.operators.sft import conversations, sft_stats
 
     return sft_stats(conversations(_t(spark, sf_dir, "documents")))
@@ -2860,14 +2809,12 @@ def sft_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE doc_id % 4 = 0
     GROUP BY 1
     """,
-    local_only=True,
 )
 def sft_prompt_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conversation dedup by normalized prompt (operators/sft.py
     prompt_dedup): conversations sharing a first user turn leak
     completions across epochs/splits — the SFT analog of document exact
-    dedup. One 16-byte-row hash aggregate over first turns only.
-    local_only: driver cap."""
+    dedup. One 16-byte-row hash aggregate over first turns only."""
     from solana_etl_spark.operators.sft import conversations, prompt_dedup
 
     return prompt_dedup(conversations(_t(spark, sf_dir, "documents")))
@@ -2946,15 +2893,13 @@ _SFT_PACK_BUDGET = 512
                         AS DOUBLE), 9) AS loss_ratio
     FROM allseq a LEFT JOIN loss l ON a.grp = l.grp AND a.seq_id = l.seq_id
     """,
-    local_only=True,
 )
 def pipeline_sft_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SFT capstone (operators/sft.py pack_with_masks): conversations laid
     end-to-end per language group, packed into 512-token sequences, with
     assistant loss-mask spans carried through to per-sequence loss-token
     counts — proves masks survive packing. Three bounded shuffles (turn
-    cumsum, conversation-offset cumsum, final (group, seq) aggregate).
-    local_only: driver cap."""
+    cumsum, conversation-offset cumsum, final (group, seq) aggregate)."""
     from solana_etl_spark.operators.sft import conversations, pack_with_masks
 
     return pack_with_masks(
@@ -2999,7 +2944,6 @@ _PACK_SHARDS = 4
                AS tokens_in_seq
     FROM ex
     """,
-    local_only=True,
 )
 def pack_sharded_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-level sharded packing (operators/packing.py pack_sequences with
@@ -3007,8 +2951,7 @@ def pack_sharded_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     pack group through ONE reducer, so a dominant group (lang='en' is ~90%
     of a web corpus) bounds the whole job at 100 TB. Documents hash into
     (lang, shard) streams and pack independently; sequences are
-    (lang, shard, seq_id) and window state shrinks to ~group/shards.
-    local_only: driver cap."""
+    (lang, shard, seq_id) and window state shrinks to ~group/shards."""
     from solana_etl_spark.operators.packing import pack_sequences
 
     packed = pack_sequences(
@@ -3104,14 +3047,13 @@ def pack_sharded_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM allseq a LEFT JOIN loss l
       ON a.grp = l.grp AND a.shard = l.shard AND a.seq_id = l.seq_id
     """,
-    local_only=True,
 )
 def sft_pack_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """pipeline_sft_e2e with the 100 TB skew valve engaged
     (operators/sft.py pack_with_masks, shards_per_group): conversations
     hash into (lang, shard) streams, each packed and mask-accounted
     independently, so the conversation-offset cumsum never funnels a
-    dominant language through one reducer. local_only: driver cap."""
+    dominant language through one reducer."""
     from solana_etl_spark.operators.sft import conversations, pack_with_masks
 
     return pack_with_masks(
@@ -3245,7 +3187,7 @@ def _semantic_outliers_oracle() -> str:
     """
 
 
-@_register("dq_semantic_outliers", _semantic_outliers_oracle(), local_only=True)
+@_register("dq_semantic_outliers", _semantic_outliers_oracle())
 def dq_semantic_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic outlier detection: the vectors FURTHEST from their nearest
     learned k-means centroid — embeddings no cluster explains, i.e. the
@@ -3253,7 +3195,7 @@ def dq_semantic_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     dq_ family's distributional checks with an embedding-space one). The
     distance is the exact scaled-int64 assignment distance (no float
     surface); deterministic ties by vec_id; TakeOrdered top-N on top of
-    the ann_ivf_assign plan. local_only: driver cap."""
+    the ann_ivf_assign plan."""
     return (
         similarity.ivf_assignments(_t(spark, sf_dir, "embeddings"))
         .orderBy(F.desc("dist"), F.asc("vec_id"))
@@ -3301,12 +3243,11 @@ def _ivf_topk_oracle(k: int, iters: int, dim: int, scale: int, nprobe: int, topk
     _ivf_assign_oracle(
         similarity.IVF_K, similarity.IVF_ITERS, similarity.IVF_DIM, similarity.IVF_SCALE
     ),
-    local_only=True,
 )
 def ann_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF index build: deterministic integer k-means (fixed Lloyd rounds,
     exact int math → bit-identical across engines AND partitionings); output
-    is every vector's inverted-list assignment. local_only: driver cap."""
+    is every vector's inverted-list assignment."""
     return similarity.ivf_assignments(_t(spark, sf_dir, "embeddings"))
 
 
@@ -3322,7 +3263,6 @@ _IVF_TRAIN_BP = 5000  # sampled-training probe: train on half the corpus
         similarity.IVF_SCALE,
         train_bp=_IVF_TRAIN_BP,
     ),
-    local_only=True,
 )
 def ann_ivf_sampled_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB IVF training shape: Lloyd rounds run on a deterministic
@@ -3330,8 +3270,7 @@ def ann_ivf_sampled_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid quality needs ~10⁴–10⁶ vectors, not 10⁹), then EVERY vector
     is assigned in one broadcast-join scan. Exchange count per Lloyd round
     is unchanged vs full training; only the training scan width shrinks.
-    The oracle trains on the identical hash-bucket subset. local_only:
-    driver cap."""
+    The oracle trains on the identical hash-bucket subset."""
     return similarity.ivf_assignments(
         _t(spark, sf_dir, "embeddings"), train_bp=_IVF_TRAIN_BP
     )
@@ -3347,12 +3286,10 @@ def ann_ivf_sampled_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         similarity.IVF_NPROBE,
         similarity.TOPK,
     ),
-    local_only=True,
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF search: probe the nprobe nearest learned centroids, exact top-k
-    within those lists only — touches nprobe/k of the corpus. local_only:
-    driver cap."""
+    within those lists only — touches nprobe/k of the corpus."""
     return similarity.ivf_topk(_t(spark, sf_dir, "embeddings"))
 
 
@@ -3363,12 +3300,11 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(ntile(10) OVER (ORDER BY n_chars, doc_id) AS INT) AS bin
     FROM documents
     """,
-    local_only=True,
 )
 def s4_quantile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact decile binning of a quality signal with deterministic tiebreak
     — curriculum/quality buckets that reproduce bit-identically across
-    engines (percentile sketches don't). local_only: driver cap."""
+    engines (percentile sketches don't)."""
     from solana_etl_spark.operators.sampling import quantile_bins
 
     return quantile_bins(
@@ -3445,12 +3381,11 @@ def a14_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT 'n_chars', nulls_n_chars, nd_n_chars, min_n_chars, max_n_chars, avglen_n_chars FROM one
     ) u
     """,
-    local_only=True,
 )
 def profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-scan per-column dataset profile (operators/profile.py): counts,
     nulls, exact distinct, min/max, avg string length — the data-card pass a
-    pipeline runs before mixing a corpus in. local_only: driver cap."""
+    pipeline runs before mixing a corpus in."""
     from solana_etl_spark.operators.profile import profile_table
 
     return profile_table(
@@ -3466,13 +3401,12 @@ def profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT l.l_orderkey, l.l_extendedprice, o.o_orderstatus, o.o_custkey
     FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
     """,
-    local_only=True,
 )
 def skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic salted fact⋈dim join (operators/skew.py): lineitem
     salted by whole-row xxhash64, orders replicated 8×, joined on
     (key, salt). Result must be row-identical to the plain join — the salt
-    only reshapes the shuffle. local_only: driver cap."""
+    only reshapes the shuffle."""
     from solana_etl_spark.operators.skew import salted_join
 
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
@@ -3490,12 +3424,11 @@ def skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o_orderstatus, COUNT(DISTINCT o_custkey) AS n_distinct
     FROM orders GROUP BY o_orderstatus
     """,
-    local_only=True,
 )
 def skew_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-phase exact count-distinct (operators/skew.py): phase-1 reduce on
     (status, custkey) spreads a hot status across the cluster; phase 2
-    counts per status. Exactly COUNT(DISTINCT). local_only: driver cap."""
+    counts per status. Exactly COUNT(DISTINCT)."""
     from solana_etl_spark.operators.skew import two_phase_count_distinct
 
     return two_phase_count_distinct(
@@ -3567,7 +3500,6 @@ def st_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
                          1, 1024)) AS resized_md5
     FROM documents
     """,
-    local_only=True,
 )
 def mm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from solana_etl_spark.operators.multimodal import (
@@ -3650,7 +3582,7 @@ def _image_dims_oracle() -> str:
     """
 
 
-@_register("mm_image_dims", _image_dims_oracle(), local_only=True)
+@_register("mm_image_dims", _image_dims_oracle())
 def mm_image_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image decode certified on dimensions: every payload of the
     mixed PNG + baseline-JPEG fixture table goes through the vendored
@@ -3658,13 +3590,13 @@ def mm_image_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     PNG, functions/jpeg.py for JPEG, the r8 real-decode path for the
     format that dominates web crawls), and the decoded width/height must
     equal the table's ground-truth columns. The mime is sniffed from the
-    payload signature, exactly as the oracle's CASE does. local_only:
-    driver cap."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from solana_etl_spark.operators.multimodal import decode_dims
+    payload signature (multimodal._sniff_codec), as the oracle's CASE
+    does."""
+    from solana_etl_spark.operators.multimodal import (
+        _sniff_codec,
+        decode_dims,
+        map_payloads,
+    )
     from solana_etl_spark.sources.synth import ensure_images_table
 
     d = ensure_images_table()
@@ -3672,38 +3604,18 @@ def mm_image_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("img_id").alias("media_id"), "payload"
     )
 
-    def dims_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mimes, dims = [], []
-            for p in pdf["payload"]:
-                p = bytes(p)
-                mime = (
-                    "image/png"
-                    if p.startswith(b"\x89PNG")
-                    else "image/jpeg"
-                )
-                mimes.append(mime)
-                dims.append(decode_dims(p, mime))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "mime": mimes,
-                    "n_bytes": [len(bytes(p)) for p in pdf["payload"]],
-                    "src_width": [d0 for d0, _ in dims],
-                    "src_height": [d1 for _, d1 in dims],
-                }
-            )
+    def dims(payload):
+        mime = _sniff_codec(payload).CAN_DECODE[0]
+        return ((mime, len(payload), *decode_dims(payload, mime)),)
 
-    return media.mapInPandas(
-        dims_batches,
-        schema=(
-            "media_id long, mime string, n_bytes long,"
-            " src_width long, src_height long"
-        ),
+    return map_payloads(
+        media,
+        dims,
+        "media_id long, mime string, n_bytes long, src_width long, src_height long",
     )
 
 
-@_register("mm_phash_dedup", _phash_oracle(), local_only=True)
+@_register("mm_phash_dedup", _phash_oracle())
 def mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual-hash image dedup over REAL decoded pixels: the synthetic
     image table (sources/synth.py ensure_images_table — real PNG payloads
@@ -3713,7 +3625,7 @@ def mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the shared banded Hamming-LSH (operators/dedup.py
     banded_hamming_pairs — exact by pigeonhole). The oracle recomputes
     everything from the PIXEL ARRAYS, so a decode divergence anywhere in
-    the PNG path fails the value hash. local_only: driver cap."""
+    the PNG path fails the value hash."""
     from solana_etl_spark.operators.multimodal import dhash_pairs
     from solana_etl_spark.sources.synth import ensure_images_table
 
@@ -3764,7 +3676,7 @@ def _audio_decode_oracle() -> str:
     """
 
 
-@_register("mm_audio_decode", _audio_decode_oracle(), local_only=True)
+@_register("mm_audio_decode", _audio_decode_oracle())
 def mm_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real audio decode over the synthetic WAV corpus
     (sources/synth.py ensure_audio_table — real RIFF payloads including
@@ -3773,7 +3685,7 @@ def mm_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     functions/wav.py parser) reducing each payload to exact integer clip
     features. The oracle recomputes every feature from the SAMPLE
     ARRAYS, so a chunk-walk or PCM-extraction divergence anywhere in the
-    WAV path fails the value hash. local_only: driver cap."""
+    WAV path fails the value hash."""
     from solana_etl_spark.operators.audio import audio_decode_report
     from solana_etl_spark.sources.synth import ensure_audio_table
 
@@ -3844,7 +3756,7 @@ def _audio_fp_oracle() -> str:
     """
 
 
-@_register("mm_audio_fp_dedup", _audio_fp_oracle(), local_only=True)
+@_register("mm_audio_fp_dedup", _audio_fp_oracle())
 def mm_audio_fp_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual-fingerprint audio dedup over REAL decoded PCM: each WAV
     payload decodes through the vendored RIFF parser, reduces to a 60-bit
@@ -3852,8 +3764,7 @@ def mm_audio_fp_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     invariant — the corpus's amplitude-doubled and extra-chunk re-served
     copies collide by construction), and near-dup pairs come from the
     SAME banded Hamming-LSH the image dHash path uses. The oracle
-    recomputes everything from the sample arrays. local_only: driver
-    cap."""
+    recomputes everything from the sample arrays."""
     from solana_etl_spark.operators.audio import audio_fingerprint_pairs
     from solana_etl_spark.sources.synth import ensure_audio_table
 
@@ -3884,7 +3795,7 @@ def _stream_media_oracle() -> str:
     """
 
 
-@_register("stream_media_dedup", _stream_media_oracle(), local_only=True)
+@_register("stream_media_dedup", _stream_media_oracle())
 def stream_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming MEDIA ingest with perceptual-fingerprint dedup against
     the persisted index, as a REAL Structured-Streaming run
@@ -3894,8 +3805,7 @@ def stream_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch dominance-dedup relation (no equal-or-smaller-id clip within
     hamming 3) and the second pass must be fully suppressed by the
     fingerprint index — re-ingesting the corpus adds zero rows. The
-    multimodal member of the stream-equals-batch gate family (7th row).
-    local_only: streaming state dirs are per-run temp."""
+    multimodal member of the stream-equals-batch gate family (7th row)."""
     from solana_etl_spark.sources.synth import ensure_audio_table
     from solana_etl_spark.streaming.media_stream import (
         start_streaming_media_dedup,
@@ -4014,13 +3924,13 @@ def _graph_degrees_oracle() -> str:
     """
 
 
-@_register("solana_graph_degrees", _graph_degrees_oracle(), local_only=True)
+@_register("solana_graph_degrees", _graph_degrees_oracle())
 def solana_graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph analytics over the S12 edge list: per-account in/out degree and
     net lamport flow from the coin-transfer graph of the 240-block corpus,
     checked against an independent DuckDB extraction from the raw JSON.
     Spark shape: edge aggregation (one shuffle per direction, both partially
-    aggregated) + full-outer merge on account. local_only: driver cap."""
+    aggregated) + full-outer merge on account."""
     from solana_etl_spark.api import coin_transfer_edges
     from solana_etl_spark.sources import read_blocks
     from solana_etl_spark.sources.synth import ensure_e2e_corpus
@@ -4150,13 +4060,12 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
     FROM latest WHERE op <> 'D'
     """,
-    local_only=True,
 )
 def merge_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC MERGE (operators/merge.py): a derived changeset — updates
     (key%7), deletes (key%11), a same-version delete/update tie (key%33),
     inserts (key%97) — applied latest-writer-wins to the orders snapshot.
-    Broadcast strategy: the base never shuffles. local_only: driver cap."""
+    Broadcast strategy: the base never shuffles."""
     from solana_etl_spark.operators.merge import merge_snapshot
 
     base = _t(spark, sf_dir, "orders").select(
@@ -4208,12 +4117,11 @@ def _zorder_oracle() -> str:
     """
 
 
-@_register("layout_zorder_key", _zorder_oracle(), local_only=True)
+@_register("layout_zorder_key", _zorder_oracle())
 def layout_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order clustering key (operators/layout.py): interleave the low 12
     bits of (l_orderkey, l_partkey) so one sort order gives both columns
-    file-level locality. Codegen'd integer expressions, zero shuffle.
-    local_only: driver cap."""
+    file-level locality. Codegen'd integer expressions, zero shuffle."""
     from solana_etl_spark.operators.layout import zorder_key
 
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 50 == 0)
@@ -4252,15 +4160,14 @@ def _shard_plan_oracle() -> str:
     """
 
 
-@_register("layout_shard_balance", _shard_plan_oracle(), local_only=True)
+@_register("layout_shard_balance", _shard_plan_oracle())
 def layout_shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weight-balanced training-shard plan
     (operators/layout.py:balanced_shard_plan): hash docs into 256
     deterministic buckets (one map-side-combined pass), deal the BUCKET
     aggregate to 8 shards longest-first round-robin. The only window runs
     over the 256-row bucket table — bounded state regardless of corpus
-    size, so the plan survives 100 TB where per-row NTILE would not.
-    local_only: driver cap."""
+    size, so the plan survives 100 TB where per-row NTILE would not."""
     from solana_etl_spark.operators.layout import balanced_shard_plan
 
     return balanced_shard_plan(
@@ -4286,12 +4193,11 @@ def layout_shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT c_count, COUNT(*) AS custdist FROM c_orders GROUP BY c_count
     """,
-    local_only=True,
 )
 def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Outer-join count distribution (TPC-H Q13 shape): broadcast the
     customer side? No — both sides large at scale; shuffle join on custkey,
-    then the histogram is a tiny second aggregate. local_only: driver cap."""
+    then the histogram is a tiny second aggregate."""
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders")
     joined = c.join(
@@ -4322,12 +4228,11 @@ def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         HAVING SUM(l_quantity) > 110
     )
     """,
-    local_only=True,
 )
 def q20_nested_semijoin_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nested semi-join over a grouped HAVING (TPC-H Q20 shape), written as
     SQL so Catalyst's decorrelation produces the agg→semi-join plan (part
-    dim broadcast into the lineitem scan). local_only: driver cap."""
+    dim broadcast into the lineitem scan)."""
     for t in ("supplier", "lineitem", "part"):
         _t(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(
@@ -4380,13 +4285,13 @@ def _quality_model_oracle() -> str:
     """
 
 
-@_register("quality_model_score", _quality_model_oracle(), local_only=True)
+@_register("quality_model_score", _quality_model_oracle())
 def quality_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear quality-model inference (operators/classifier.py): the
     deterministic text features dotted with a published weight vector as a
     sequential fold — pure codegen'd scan, bit-identical cross-engine.
     (Training is the iterative GD path, pytest-verified vs a numpy
-    reference in tests/test_classifier.py.) local_only: driver cap."""
+    reference in tests/test_classifier.py.)"""
     from solana_etl_spark.operators.classifier import featurize, linear_score
 
     feats = featurize(_t(spark, sf_dir, "documents"))
@@ -4422,14 +4327,14 @@ def _pref_pairs_oracle() -> str:
     """
 
 
-@_register("pref_pairs_quality", _pref_pairs_oracle(), local_only=True)
+@_register("pref_pairs_quality", _pref_pairs_oracle())
 def pref_pairs_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RLHF/DPO preference-pair construction (operators/preference.py):
     per (lang, source) context group, chosen = best-quality doc, rejected
     = worst, positive-margin filter. Single partial-aggregated groupBy —
     both extremes found in one pass via lexicographic struct max/min with
     deterministic doc-id tie-breaks; shuffle volume is group cardinality,
-    not row count. local_only: driver cap."""
+    not row count."""
     from solana_etl_spark.operators.classifier import featurize, linear_score
     from solana_etl_spark.operators.preference import preference_pairs
 
@@ -4462,14 +4367,13 @@ def _best_of_n_oracle() -> str:
     """
 
 
-@_register("pref_best_of_n", _best_of_n_oracle(), local_only=True)
+@_register("pref_best_of_n", _best_of_n_oracle())
 def pref_best_of_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rejection sampling / best-of-n (operators/preference.py best_of_n):
     8 consecutive docs form one candidate group; keep the argmax-quality
     candidate with count + exact-decimal score sum (mean left to the
     consumer — see best_of_n's half-way-tie note). One partial-agg
-    groupBy, struct-max argmax, deterministic ties. local_only: driver
-    cap."""
+    groupBy, struct-max argmax, deterministic ties."""
     from solana_etl_spark.operators.classifier import featurize, linear_score
     from solana_etl_spark.operators.preference import best_of_n
 
@@ -4519,7 +4423,7 @@ def _dpo_e2e_oracle() -> str:
     """
 
 
-@_register("pipeline_dpo_e2e", _dpo_e2e_oracle(), local_only=True)
+@_register("pipeline_dpo_e2e", _dpo_e2e_oracle())
 def pipeline_dpo_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DPO data capstone as ONE lazy plan: conversations → per-conversation
     completion quality (exact-decimal sum of per-assistant-turn 9-decimal
@@ -4528,7 +4432,7 @@ def pipeline_dpo_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties, positive-margin + ≥2-candidates filter) → leakage-safe
     train/val/test split hashed on the GROUP id (both sides of a pair
     always share a split). Three aggregates total, group-cardinality
-    shuffles. local_only: driver cap."""
+    shuffles."""
     from solana_etl_spark.functions.hashing import hash64
     from solana_etl_spark.operators.classifier import featurize, linear_score
     from solana_etl_spark.operators.sft import ROLE_ASSISTANT, conversations
@@ -4600,13 +4504,13 @@ def _incr_agg_oracle() -> str:
     """
 
 
-@_register("incr_agg_merge", _incr_agg_oracle(), local_only=True)
+@_register("incr_agg_merge", _incr_agg_oracle())
 def incr_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental aggregate maintenance (operators/incremental.py): build
     mergeable per-group state on two date halves of lineitem, merge the
     STATES (raw rows of the 'old' half are never rescanned), finalize. The
     oracle aggregates the whole table directly — merge-then-finalize must
-    equal compute-once. local_only: driver cap."""
+    equal compute-once."""
     from solana_etl_spark.operators import incremental as inc
 
     li = _t(spark, sf_dir, "lineitem").select(
@@ -4765,7 +4669,6 @@ def _ivf_batch_recall_oracle(
         similarity.IVF_NPROBE,
         similarity.TOPK,
     ),
-    local_only=True,
 )
 def ann_batch_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PER-QUERY recall@k over a whole query batch (every 100th vector) —
@@ -4773,7 +4676,7 @@ def ann_batch_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/similarity.py ivf_batch_recall); the single-query
     ann_recall_eval measures one point, this measures the distribution.
     Centroids are the only driver state; the approx branch never shuffles
-    the corpus. local_only: driver cap."""
+    the corpus."""
     return similarity.ivf_batch_recall(
         _t(spark, sf_dir, "embeddings"), F.col("vec_id") % 100 == 0
     )
@@ -4789,14 +4692,12 @@ def ann_batch_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         similarity.IVF_NPROBE,
         similarity.TOPK,
     ),
-    local_only=True,
 )
 def ann_ivf_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch ANN over the IVF index (operators/similarity.py
     ivf_batch_topk): every 100th vector is a query, all answered in one
     pass — probe lists from the broadcast centroid table, candidates from
-    a broadcast probe join (no corpus shuffle), per-query window top-k.
-    local_only: driver cap."""
+    a broadcast probe join (no corpus shuffle), per-query window top-k."""
     return similarity.ivf_batch_topk(
         _t(spark, sf_dir, "embeddings"), F.col("vec_id") % 100 == 0
     )
@@ -4835,14 +4736,13 @@ def ann_ivf_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(p.pos_sim - n.neg_sim, 6) AS margin
     FROM neg n JOIN pos p USING (q_id)
     """,
-    local_only=True,
 )
 def ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contrastive-triplet mining (operators/mining.py): per anchor, the
     nearest same-label positive and top-5 highest-similarity WRONG-label
     hard negatives, with the training margin. Broadcast anchor batch ×
     one normalized corpus scan; a single window shuffle keyed by
-    (anchor, same_label). local_only: driver cap."""
+    (anchor, same_label)."""
     from solana_etl_spark.operators.mining import hard_negative_triplets
 
     return hard_negative_triplets(
@@ -4897,15 +4797,13 @@ def ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(score, 6) AS maxsim_score
     FROM ranked WHERE rnk <= {similarity.MAXSIM_K}
     """,
-    local_only=True,
 )
 def ann_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Late-interaction retrieval (operators/similarity.py maxsim_topk):
     ColBERT MaxSim over contiguous subvector decompositions — per query
     subvector take the best candidate-subvector dot, exact-decimal-sum
     the maxima, rank top-5 per query. Bounded query batch broadcast ×
-    one corpus scan + two keyed aggregates + one window. local_only:
-    driver cap."""
+    one corpus scan + two keyed aggregates + one window."""
     return similarity.maxsim_topk(
         _t(spark, sf_dir, "embeddings")
     ).withColumn("rank", F.col("rank").cast("long"))
@@ -4944,15 +4842,13 @@ K_NEG_BUCKETED = 5  # mirrors operators/mining.py K_NEG
            ROUND(sim, 6) AS neg_sim
     FROM ranked WHERE rnk <= {K_NEG_BUCKETED}
     """,
-    local_only=True,
 )
 def ann_hard_negatives_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide hard-negative generation (operators/mining.py
     bucketed_hard_negatives): every vector is an anchor; candidates are
     its sign-LSH bucket's wrong-label members, ranked by cosine — the
     documented scale path of ann_hard_negatives (pair stream per-bucket,
-    never corpus²). One bucket-keyed self-join + one anchor-keyed window.
-    local_only: driver cap."""
+    never corpus²). One bucket-keyed self-join + one anchor-keyed window."""
     from solana_etl_spark.operators.mining import bucketed_hard_negatives
 
     return bucketed_hard_negatives(
@@ -5022,7 +4918,6 @@ _BITEXT_TGT_LABELS = "label >= 5"  # language", 5-9 = "target language"
       AND ROUND(2.0 * ci * kx * ky / (sax * ky + say * kx), 6)
               >= {BITEXT_THRESHOLD}
     """,
-    local_only=True,
 )
 def mine_bitext_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Margin-based bitext mining (operators/mining.py mine_bitext — the
@@ -5033,8 +4928,7 @@ def mine_bitext_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine over the average similarity of BOTH ends' top-k candidate
     neighborhoods. Micro-unit integer cosines make every neighborhood
     sum order-independent; the margin is exact integer arithmetic with
-    one final double division, so the oracle matches bit-for-bit.
-    local_only: driver cap."""
+    one final double division, so the oracle matches bit-for-bit."""
     from solana_etl_spark.operators.mining import mine_bitext
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -5074,12 +4968,11 @@ _CHUNK_SPINE_CTE = f"""d AS (SELECT doc_id, text, length(text) AS n FROM documen
            md5(substring(text, CAST(s + 1 AS BIGINT), {_CHUNK})) AS chunk_md5
     FROM s
     """,
-    local_only=True,
 )
 def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stride-overlapped chunking (operators/packing.py chunk_documents):
     RAG/context windows every 192 chars spanning 256 — per-row positional
-    explode, zero shuffle. local_only: driver cap."""
+    explode, zero shuffle."""
     from solana_etl_spark.operators.packing import chunk_documents
 
     return chunk_documents(
@@ -5113,14 +5006,13 @@ def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM ann JOIN quality ON quality.doc_id = ann.vec_id
     ) WHERE rank <= 5
     """,
-    local_only=True,
 )
 def hybrid_search_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval capstone: batch-ANN candidates (IVF probe, exact
     int distances) re-ranked by the linear quality model (bit-exact scores)
     — quality-passing docs first, then by distance. The shape of a
     retrieval stack: cheap index recall, model-based precision on the
-    candidate set only. local_only: driver cap."""
+    candidate set only."""
     from pyspark.sql.window import Window
     from solana_etl_spark.operators.classifier import featurize, linear_score
 
@@ -5183,13 +5075,12 @@ def hybrid_search_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT 'foreign_key', 'l_orderkey', NULL, v FROM fk
     )
     """,
-    local_only=True,
 )
 def dq_constraint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Declarative data-quality gate (operators/constraints.py): row-level
     rules fused into one scan, key uniqueness as one grouped aggregate, FK
     integrity as one broadcast anti-join — the (rule, violations, passed)
-    report an ingest scheduler gates on. local_only: driver cap."""
+    report an ingest scheduler gates on."""
     from solana_etl_spark.operators import constraints as dq
 
     orders = _t(spark, sf_dir, "orders")
@@ -5231,14 +5122,13 @@ def dq_constraint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT gram, COUNT(*) AS n_docs
     FROM grams GROUP BY gram HAVING COUNT(*) >= 3
     """,
-    local_only=True,
 )
 def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document boilerplate detection (operators/text.py
     cross_doc_ngrams): word 8-grams appearing in >= 3 distinct documents —
     the detection half of C4-style cross-document span dedup (removal:
     strip_boilerplate_ngrams, model-tested). One explode + one count
-    shuffle with map-side combine. local_only: driver cap."""
+    shuffle with map-side combine."""
     return text_ops.cross_doc_ngrams(
         _t(spark, sf_dir, "documents"), n=8, min_docs=3
     )
@@ -5267,13 +5157,12 @@ def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM toks2 t JOIN lm USING (tok)
     GROUP BY t.doc_id
     """,
-    local_only=True,
 )
 def lm_perplexity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style LM quality signal (operators/lm.py): add-one unigram LM
     trained on the corpus in one aggregate, every document scored by its
     average token log-prob (exact-decimal sums after a 9-decimal rounding
-    boundary on log10). local_only: driver cap."""
+    boundary on log10)."""
     from solana_etl_spark.operators.lm import score_documents, train_unigram_lm
 
     docs = _t(spark, sf_dir, "documents")
@@ -5326,15 +5215,13 @@ def lm_perplexity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     CROSS JOIN toov
     GROUP BY t.doc_id
     """,
-    local_only=True,
 )
 def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR-style targeted data selection (operators/dsir.py): every
     document scored by the mean per-token log-likelihood ratio between a
     target-domain unigram LM (en/src0 docs) and the raw-corpus LM —
     positive ratio = looks like the target domain. Two token-count
-    aggregates + one scoring pass with both LM tables broadcast.
-    local_only: driver cap."""
+    aggregates + one scoring pass with both LM tables broadcast."""
     from solana_etl_spark.operators.dsir import importance_weights
 
     docs = _t(spark, sf_dir, "documents")
@@ -5379,7 +5266,7 @@ SELECT node, r AS rank_scaled FROM pr WHERE iter = {_PAGERANK_ITERS}
 """
 
 
-@_register("graph_pagerank", _PAGERANK_ORACLE, local_only=True)
+@_register("graph_pagerank", _PAGERANK_ORACLE)
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative PageRank (operators/graph.py) over the supplier->customer
     trade graph (distinct lineitem-join-orders pairs) — the Pregel-style
@@ -5388,7 +5275,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines), so ranks are bit-identical under any partitioning, task
     retry, or engine; the DuckDB oracle runs the same recurrence as a
     recursive CTE. Dangling-node mass dropped (simple variant — customers
-    have no out-edges). local_only: driver cap."""
+    have no out-edges)."""
     from solana_etl_spark.operators.graph import pagerank
 
     li = _t(spark, sf_dir, "lineitem")
@@ -5415,7 +5302,6 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY tok
     HAVING COUNT(*) >= (2 * (SELECT COUNT(*) FROM t2) + 999) // 1000
     """,
-    local_only=True,
 )
 def sketch_frequent_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded-memory heavy hitters (operators/sketch.py): per-partition
@@ -5423,8 +5309,7 @@ def sketch_frequent_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates — shuffle is O(candidates), not O(distinct tokens). The
     exact verify pass makes the output independent of the sketch, and the
     phi=2/1000 threshold is exact integer math of the corpus size, so the
-    oracle is the plain GROUP BY/HAVING at every scale factor.
-    local_only: driver cap."""
+    oracle is the plain GROUP BY/HAVING at every scale factor."""
     from solana_etl_spark.operators.sketch import frequent_items
     from solana_etl_spark.operators.text import tokens
 
@@ -5448,14 +5333,12 @@ def sketch_frequent_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND p.ts <= v.ts + INTERVAL 10 MINUTE
     WHERE v.event_type = 'view' AND p.event_type = 'purchase'
     """,
-    local_only=True,
 )
 def j8_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stream-stream interval join (streaming/stream_join.py) run in its
     batch mode: view->purchase attribution within a 10-minute horizon. The
     identical expression runs on two watermarked streams with state bounded
-    by watermark+horizon (tests/test_stream_join.py proves stream==batch).
-    local_only: driver cap."""
+    by watermark+horizon (tests/test_stream_join.py proves stream==batch)."""
     from solana_etl_spark.streaming.stream_join import interval_join_streams
 
     ev = _t(spark, sf_dir, "events")
@@ -5492,7 +5375,6 @@ def j8_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
            ) AS value
     FROM q, (SELECT MAX(n) AS n FROM r) r2
     """,
-    local_only=True,
 )
 def a17_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact p50/p90/p99 of l_extendedprice (in cents) WITHOUT a global
@@ -5501,7 +5383,7 @@ def a17_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     each scan. The NTILE plan (s4_quantile_bins) sorts every row; this
     resolves the same exact order statistics with shuffles that carry only
     (quantile, bucket) histograms — the 100 TB selection path. Oracle is
-    the plain ROW_NUMBER rank lookup. local_only: driver cap."""
+    the plain ROW_NUMBER rank lookup."""
     from solana_etl_spark.operators.quantiles import exact_quantiles
 
     cents = _t(spark, sf_dir, "lineitem").select(
@@ -5537,7 +5419,6 @@ def a17_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(round(SUM(v), 4) AS DOUBLE) AS volume
     FROM o GROUP BY key, bucket
     """,
-    local_only=True,
 )
 def ts_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OHLC downsampling (operators/timeseries.py ohlc_resample): hourly
@@ -5545,7 +5426,7 @@ def ts_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     resample. ONE map-side-combined groupBy; open/close resolve as min/max
     over (ts, value) structs so ties at identical timestamps break
     identically in both engines; sums stay exact DECIMAL until the final
-    projection. local_only: driver cap."""
+    projection."""
     from solana_etl_spark.operators.timeseries import ohlc_resample
 
     return ohlc_resample(_t(spark, sf_dir, "events"))
@@ -5571,15 +5452,13 @@ def ts_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
            d.abs_dev > 3 * mad.m AS is_outlier
     FROM d, med, mad
     """,
-    local_only=True,
 )
 def a21_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust outlier detection via exact median/MAD (operators/
     quantiles.py mad_outliers): |x − median| > 3·MAD, both statistics
     exact ceil-rank order statistics from the sort-free histogram
     refinement — the heavy-tail-safe complement of a18's mean/std
-    z-score (a few huge values cannot drag this threshold). All-integer.
-    local_only: driver cap."""
+    z-score (a few huge values cannot drag this threshold). All-integer."""
     from solana_etl_spark.operators.quantiles import mad_outliers
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
@@ -5608,7 +5487,6 @@ def a21_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
                 END AS BIGINT) AS n_chars_w
     FROM documents, cuts
     """,
-    local_only=True,
 )
 def a20_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winsorization at exact p01/p99 (operators/quantiles.py winsorize):
@@ -5616,7 +5494,7 @@ def a20_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresholding — the standard outlier treatment. Cut points resolve via
     sort-free histogram refinement (driver state = two int64 boundaries);
     the clip itself is a pure per-row expression. Oracle: plain ROW_NUMBER
-    rank lookup + CASE clamp. local_only: driver cap."""
+    rank lookup + CASE clamp."""
     from solana_etl_spark.operators.quantiles import winsorize
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
@@ -5758,13 +5636,12 @@ def _pq_adc_oracle(m: int, subdim: int, k: int, iters: int, scale: int, topk: in
 @_register(
     "ann_pq_codes",
     _pq_codes_oracle(pq_ops.PQ_M, pq_ops.PQ_SUBDIM, pq_ops.PQ_K, pq_ops.PQ_ITERS, similarity.IVF_SCALE),
-    local_only=True,
 )
 def ann_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product quantization encode (operators/pq.py): every vector → M=8
     sub-centroid codes under jointly-trained exact-integer codebooks — the
     64× ANN memory cut. Codes emitted subspace-ordered as a '-'-joined
-    string for a type-stable cross-engine hash. local_only: driver cap."""
+    string for a type-stable cross-engine hash."""
     emb = _t(spark, sf_dir, "embeddings")
     return pq_ops.pq_codes(emb).select(
         "vec_id", F.array_join("codes", "-").alias("codes_str")
@@ -5777,13 +5654,12 @@ def ann_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_ops.PQ_M, pq_ops.PQ_SUBDIM, pq_ops.PQ_K, pq_ops.PQ_ITERS,
         similarity.IVF_SCALE, pq_ops.PQ_TOPK,
     ),
-    local_only=True,
 )
 def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ asymmetric-distance search (operators/pq.py): broadcast M*K
     query-to-sub-centroid distance table, approximate distance = sum of M
     lookups per encoded vector, global top-k. Exact integer ADC → value-
-    hash oracle. local_only: driver cap."""
+    hash oracle."""
     emb = _t(spark, sf_dir, "embeddings")
     return pq_ops.pq_adc_topk(emb)
 
@@ -5804,14 +5680,12 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE valid_from <= TIMESTAMP '2024-03-01 00:00:00'
       AND (valid_to IS NULL OR valid_to > TIMESTAMP '2024-03-01 00:00:00')
     """,
-    local_only=True,
 )
 def scd2_user_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD type-2 dimension build (operators/scd.py): every change row
     becomes a [valid_from, valid_to) version interval in ONE key-window
     pass (no self-join), then the as-of lookup reads the dimension exactly
-    as it was at a timestamp with a pure per-row interval filter.
-    local_only: driver cap."""
+    as it was at a timestamp with a pure per-row interval filter."""
     from solana_etl_spark.operators.scd import as_of, scd2_history
 
     hist = scd2_history(
@@ -5895,14 +5769,12 @@ def _ivfpq_oracle(
         pq_ops.PQ_M, pq_ops.PQ_SUBDIM, pq_ops.PQ_K, pq_ops.PQ_ITERS,
         pq_ops.PQ_TOPK,
     ),
-    local_only=True,
 )
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed billion-vector ANN index (operators/pq.py ivfpq_topk):
     IVF coarse probe prunes to nprobe inverted lists, PQ's broadcast ADC
     table scores only those candidates from their 8-byte codes — query
-    time never touches a full-precision vector. Exact integer end-to-end.
-    local_only: driver cap."""
+    time never touches a full-precision vector. Exact integer end-to-end."""
     return pq_ops.ivfpq_topk(_t(spark, sf_dir, "embeddings"))
 
 
@@ -6038,15 +5910,13 @@ def _ivfpq_residual_oracle(
         pq_ops.PQ_M, pq_ops.PQ_SUBDIM, pq_ops.PQ_K, pq_ops.PQ_ITERS,
         pq_ops.PQ_TOPK,
     ),
-    local_only=True,
 )
 def ann_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF+PQ with RESIDUAL encoding (operators/pq.py ivfpq_residual_topk)
     — the canonical Jégou et al. 2011 form: codebooks train on the
     within-list displacement (vector − coarse centroid) and each probed
     list scores candidates against an ADC table built from the QUERY'S
-    residual for that list. Exact int64 end-to-end, value-hash oracled.
-    local_only: driver cap."""
+    residual for that list. Exact int64 end-to-end, value-hash oracled."""
     return pq_ops.ivfpq_residual_topk(_t(spark, sf_dir, "embeddings"))
 
 
@@ -6067,15 +5937,13 @@ def ann_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM supplier s JOIN revenue r ON s.s_suppkey = r.supplier_no
     WHERE r.total_revenue = (SELECT MAX(total_revenue) FROM revenue)
     """,
-    local_only=True,
 )
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape: aggregate view + argmax-with-ties against its own
     MAX. The max is resolved with a single-partition window rank over the
     per-supplier aggregate (supplier-cardinality rows — driver-small), not
     a re-aggregation self-join; revenue stays exact DECIMAL until the final
-    projection so ties are exact, not float-fuzzy. local_only: driver
-    cap."""
+    projection so ties are exact, not float-fuzzy."""
     from pyspark.sql.window import Window
 
     li = _t(spark, sf_dir, "lineitem")
@@ -6133,7 +6001,6 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
       )
     GROUP BY s.s_name
     """,
-    local_only=True,
 )
 def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape (suppliers who were the ONLY late shipper in a
@@ -6142,7 +6009,7 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-order late-supplier set computed once (two map-side-combined
     aggregates), then joined instead of probing correlated subqueries per
     row. 'Late' = shipped >60 days after o_orderdate (this schema carries
-    no receipt/commit dates). local_only: driver cap."""
+    no receipt/commit dates)."""
     li = _t(spark, sf_dir, "lineitem")
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     s = _t(spark, sf_dir, "supplier")
@@ -6204,7 +6071,6 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked
     WHERE cum <= (SELECT 3 * SUM(n_tokens) // 10 FROM q)
     """,
-    local_only=True,
 )
 def budget_select_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Budget-constrained data selection (operators/budget.py): keep the
@@ -6212,8 +6078,7 @@ def budget_select_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     spent — WITHOUT a global sort. The threshold tier is found by weighted
     bucket refinement (histogram passes shuffling only (bucket, weight)
     rows); only the boundary tier gets a window cumsum. The oracle is the
-    naive global window-cumsum — identical selection by construction.
-    local_only: driver cap."""
+    naive global window-cumsum — identical selection by construction."""
     from solana_etl_spark.operators.budget import select_to_budget
     from solana_etl_spark.operators.text import tokens
 
@@ -6267,7 +6132,6 @@ def _cluster_mix_oracle(k: int, iters: int, dim: int, scale: int) -> str:
         similarity.IVF_K, similarity.IVF_ITERS, similarity.IVF_DIM,
         similarity.IVF_SCALE,
     ),
-    local_only=True,
 )
 def cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-balanced corpus mixing: documents are assigned to LEARNED
@@ -6277,8 +6141,7 @@ def cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     in exact integer math so the whole composition is value-reproducible
     cross-engine). The shape of semantic/domain-balanced data mixing:
     cluster counts are a tiny aggregate, the rate map is driver state, and
-    the sampling filter itself is stateless and zero-shuffle.
-    local_only: driver cap."""
+    the sampling filter itself is stateless and zero-shuffle."""
     from solana_etl_spark.operators.sampling import mixture_sample
     from solana_etl_spark.operators.similarity import ivf_assignments
 
@@ -6302,7 +6165,7 @@ def cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 6. Remaining TPC-H query shapes (adapted to the synthetic star schema:
 #    no partsupp/commitdate/shipmode columns — each adaptation is noted).
 #    With q1/q3/q5/q6/q13/q15/q17/q20/q21 above this completes all 22
-#    TPC-H query shapes. All local_only (driver registry is at its 50 cap).
+#    TPC-H query shapes.
 # ---------------------------------------------------------------------------
 
 
@@ -6320,14 +6183,13 @@ def cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
           WHERE l2.l_partkey = p.p_partkey
       )
     """,
-    local_only=True,
 )
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape (correlated scalar MIN subquery: cheapest supplier
     per part; partsupp stands in as lineitem prices). Decorrelated by hand
     into the plan Catalyst would pick: per-part MIN aggregate (map-side
     combined) joined back on (partkey, price). Price equality is exact —
-    MIN copies a stored double, no arithmetic. local_only: driver cap."""
+    MIN copies a stored double, no arithmetic."""
     li = _t(spark, sf_dir, "lineitem")
     p = _t(spark, sf_dir, "part").filter(F.col("p_size") <= 3)
     s = _t(spark, sf_dir, "supplier")
@@ -6366,13 +6228,12 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
       )
     GROUP BY o_orderpriority
     """,
-    local_only=True,
 )
 def q4_order_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: correlated EXISTS over the fact table ('any lineitem
     shipped >45 days after order date' stands in for commit<receipt). The
     EXISTS is a left-semi join with a non-equi residual condition — one
-    shuffle on orderkey, no distinct pass. local_only: driver cap."""
+    shuffle on orderkey, no distinct pass."""
     o = _t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-07-01").cast("timestamp"))
@@ -6410,7 +6271,6 @@ def q4_order_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) shipping
     GROUP BY supp_nation, cust_nation, l_year
     """,
-    local_only=True,
 )
 def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: bilateral trade volume between two nations by year.
@@ -6419,8 +6279,7 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     without a cross-nation blowup; money stays exact DECIMAL to the final
     round. NATION_18<->NATION_19 trades in BOTH directions at every fixture
     scale (sf0.001: 61/25 lineitems), so the oracle check is never vacuous
-    (ADVICE r2: the old NATION_1/NATION_2 pair had zero rows at sf0.001).
-    local_only: driver cap."""
+    (ADVICE r2: the old NATION_1/NATION_2 pair had zero rows at sf0.001)."""
     s = _t(spark, sf_dir, "supplier")
     li = _t(spark, sf_dir, "lineitem")
     o = _t(spark, sf_dir, "orders")
@@ -6483,14 +6342,12 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) all_nations
     GROUP BY o_year
     """,
-    local_only=True,
 )
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape: one nation's share of a region's purchase volume by
     year — two conditional DECIMAL sums in ONE aggregate (no second pass,
     no self-join), ratio taken after exact summation. All five dims
-    broadcast; the only shuffle is the per-year rollup.
-    local_only: driver cap."""
+    broadcast; the only shuffle is the per-year rollup."""
     li = _t(spark, sf_dir, "lineitem")
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
@@ -6544,13 +6401,12 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) profit
     GROUP BY nation, o_year
     """,
-    local_only=True,
 )
 def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape: profit by supplier nation and year over a LIKE'd
     part subset. Supply cost is 10% of retail price (no partsupp table);
     the cost term is rounded to money scale per row so the whole amount
-    stays exact DECIMAL through the rollup. local_only: driver cap."""
+    stays exact DECIMAL through the rollup."""
     li = _t(spark, sf_dir, "lineitem")
     p = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%gear%"))
     s = _t(spark, sf_dir, "supplier")
@@ -6594,13 +6450,12 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, c_custkey ASC
     LIMIT 20
     """,
-    local_only=True,
 )
 def q10_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: top-20 customers by returned-item revenue in a
     window. Returnflag pushes into the lineitem scan, customer/nation
     broadcast, top-k as TakeOrderedAndProject with an exact-decimal sum
-    and a custkey tie-break. local_only: driver cap."""
+    and a custkey tie-break."""
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -6637,7 +6492,6 @@ def q10_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE CAST(val AS DOUBLE) * (SELECT COUNT(*) FROM v)
           > (SELECT CAST(SUM(val) AS DOUBLE) FROM v) * 1.2
     """,
-    local_only=True,
 )
 def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape: per-part inventory value filtered against a global
@@ -6645,7 +6499,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     unlike a fixed fraction). The scalar (total, count) is a one-row
     broadcast cross join over the SAME per-part aggregate — lineitem is
     scanned once, not twice; value stays exact DECIMAL into the
-    comparison. local_only: driver cap."""
+    comparison."""
     li = _t(spark, sf_dir, "lineitem")
     val = F.sum(
         F.round(F.col("l_extendedprice") * F.col("l_quantity"), 4).cast(DEC)
@@ -6680,13 +6534,12 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_shipdate < TIMESTAMP '1997-01-01'
     GROUP BY l_linenumber % 3
     """,
-    local_only=True,
 )
 def q12_priority_by_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape: conditional counts of high/low-priority orders per
     ship group (linenumber buckets stand in for the missing shipmode
     column). One join + one conditional aggregate; the date range pushes
-    into the lineitem scan. local_only: driver cap."""
+    into the lineitem scan."""
     o = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -6720,13 +6573,11 @@ def q12_priority_by_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l_shipdate >= TIMESTAMP '1996-01-01'
       AND l_shipdate < TIMESTAMP '1996-02-01'
     """,
-    local_only=True,
 )
 def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: promo revenue share for one month — both the
     conditional and total DECIMAL sums come out of a single aggregate, the
-    percentage is one rounded double division. Part dim broadcast.
-    local_only: driver cap."""
+    percentage is one rounded double division. Part dim broadcast."""
     li = _t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-02-01").cast("timestamp"))
@@ -6759,14 +6610,13 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
       )
     GROUP BY p_brand, p_type, p_size
     """,
-    local_only=True,
 )
 def q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape: distinct supplier counts per part class, excluding
     a NOT-IN supplier denylist. The denylist is a broadcast anti-join
     (s_suppkey is never null, so NOT IN ≡ anti-join); the count-distinct
     expands to a two-phase aggregate keyed by (class, suppkey) so hot
-    part classes dedup across the cluster. local_only: driver cap."""
+    part classes dedup across the cluster."""
     p = _t(spark, sf_dir, "part").filter(F.col("p_size").isin(1, 2, 3, 4, 5))
     li = _t(spark, sf_dir, "lineitem")
     bad = (
@@ -6798,14 +6648,13 @@ def q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     GROUP BY c.c_custkey, o.o_orderkey, o.o_orderdate
     """,
-    local_only=True,
 )
 def q18_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: orders whose total quantity crosses a threshold —
     an IN-subquery that aggregates the SAME fact table. The per-order sum
     is computed once and used BOTH as the semi-join filter and the output
     value (no second lineitem scan, unlike the literal SQL); quantity sums
-    stay exact DECIMAL. local_only: driver cap."""
+    stay exact DECIMAL."""
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
@@ -6840,14 +6689,13 @@ def q18_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
        OR (p_brand = 'Brand#3' AND p_size BETWEEN 20 AND 50
            AND l_quantity >= 20 AND l_quantity <= 40)
     """,
-    local_only=True,
 )
 def q19_disjunctive_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape: disjunction of per-brand conjunctive ranges across
     BOTH join sides. Catalyst factors the cross-side OR into per-side
     implied filters (quantity range onto the scan, brand/size onto the
     broadcast dim) with the residual OR evaluated post-join — the pattern
-    that breaks naive pushdown. local_only: driver cap."""
+    that breaks naive pushdown."""
     li = _t(spark, sf_dir, "lineitem")
     p = _t(spark, sf_dir, "part")
     q = F.col("l_quantity")
@@ -6903,14 +6751,13 @@ def q19_disjunctive_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
       )
     GROUP BY c.c_nationkey
     """,
-    local_only=True,
 )
 def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: rich customers gone idle (no orders since 2000) —
     a global-average scalar subquery (exact DECIMAL sum, rounded once at
     the cross-engine boundary) plus a NOT EXISTS anti-join on the filtered
     orders table (the date predicate pushes into the anti-join's build
-    side scan). local_only: driver cap."""
+    side scan)."""
     c = _t(spark, sf_dir, "customer")
     o = (
         _t(spark, sf_dir, "orders")
@@ -7020,14 +6867,13 @@ def _bm25_oracle() -> str:
     """
 
 
-@_register("text_bm25_topk", _bm25_oracle(), local_only=True)
+@_register("text_bm25_topk", _bm25_oracle())
 def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 lexical top-k (operators/search.py): per-doc term frequencies
     are row-local array expressions (zero corpus shuffle), the (N, avgdl,
     df) statistics are ONE tiny broadcast aggregate, and the top-k is
     TakeOrderedAndProject. idf/contribution doubles are rounded at 9
-    decimals — the same cross-engine float boundary the LM scorer uses.
-    local_only: driver cap."""
+    decimals — the same cross-engine float boundary the LM scorer uses."""
     from solana_etl_spark.operators.search import bm25_topk
 
     return bm25_topk(_t(spark, sf_dir, "documents"), _BM25_TERMS)
@@ -7071,14 +6917,13 @@ def _rrf_oracle() -> str:
     """
 
 
-@_register("hybrid_rrf_fusion", _rrf_oracle(), local_only=True)
+@_register("hybrid_rrf_fusion", _rrf_oracle())
 def hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval capstone #2: reciprocal-rank fusion of the BM25
     lexical list and the embedding cosine list (the standard
     score-scale-free way to combine lexical and dense retrieval). Both
     lists are top-k-sized → the fusion join is broadcast; rank arithmetic
-    is integer, the two reciprocal terms are added in fixed order.
-    local_only: driver cap."""
+    is integer, the two reciprocal terms are added in fixed order."""
     from solana_etl_spark.operators.search import (
         bm25_topk,
         rrf_fuse,
@@ -7177,13 +7022,13 @@ def _rep_oracle() -> str:
     """
 
 
-@_register("text_repetition_stats", _rep_oracle(), local_only=True)
+@_register("text_repetition_stats", _rep_oracle())
 def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style intra-document repetition filter signals
     (operators/text.py:repetition_stats): duplicate-token fraction, most
     frequent 2-gram character coverage, duplicated-5-gram character
     coverage, and the composite is_repetitive flag. Zero shuffle — every
-    signal is a per-row array fold. local_only: driver cap."""
+    signal is a per-row array fold."""
     return text_ops.repetition_stats(_t(spark, sf_dir, "documents"))
 
 
@@ -7211,14 +7056,12 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS punct_line_frac
     FROM s
     """,
-    local_only=True,
 )
 def text_structure_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4/FineWeb-style LINE-structure filter features (operators/text.py
     structure_stats): blank-line density, bullet-line fraction,
     terminal-punctuation-line fraction — the line-level signals token
-    stats can't see. Pure per-row array expressions, zero shuffle.
-    local_only: driver cap."""
+    stats can't see. Pure per-row array expressions, zero shuffle."""
     return text_ops.structure_stats(_t(spark, sf_dir, "documents"))
 
 
@@ -7254,14 +7097,14 @@ def _script_stats_oracle() -> str:
     """
 
 
-@_register("text_script_stats", _script_stats_oracle(), local_only=True)
+@_register("text_script_stats", _script_stats_oracle())
 def text_script_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document Unicode script mix (operators/text.py script_stats):
     Latin/digit/CJK/Cyrillic/Arabic/whitespace character fractions plus
     other_frac (the mojibake/binary-spill flag) — the multilingual
     curation signal lang-ID heuristics sit on top of, and a corpus
     card's script histogram. Zero shuffle, per-row regexp_count
-    projections. local_only: driver cap."""
+    projections."""
     return text_ops.script_stats(_t(spark, sf_dir, "documents"))
 
 
@@ -7292,13 +7135,12 @@ def text_script_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS entropy_bits
     FROM terms GROUP BY doc_id
     """,
-    local_only=True,
 )
 def text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Character-level Shannon entropy per document (operators/text.py
     char_entropy) — the cheap gibberish/encoded-blob signal. One explode +
     one (doc, char) count with map-side combine; per-char terms round at 9
-    and sum as exact DECIMAL. local_only: driver cap."""
+    and sum as exact DECIMAL."""
     return text_ops.char_entropy(_t(spark, sf_dir, "documents"))
 
 
@@ -7362,7 +7204,7 @@ def _bpe_encode_oracle() -> str:
     """
 
 
-@_register("text_bpe_encode", _bpe_encode_oracle(), local_only=True)
+@_register("text_bpe_encode", _bpe_encode_oracle())
 def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus tokenization with a shipped BPE vocabulary
     (operators/vocab.py:apply_bpe_replace): the merge list learned by
@@ -7372,7 +7214,7 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     first 8 tokens, and chars/token (the compression-ratio quality
     signal). Cross-engine value-hash oracle: DuckDB runs the identical
     replace chain — possible precisely because the encoder is expression-
-    level, not a UDF. local_only: driver cap."""
+    level, not a UDF."""
     from solana_etl_spark.operators.vocab import apply_bpe_replace
 
     docs = _t(spark, sf_dir, "documents")
@@ -7479,9 +7321,7 @@ def text_bpe_vocab_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
-    "stream_bpe_vocab", _bpe_train_oracle(_BPE_TRAIN_N_MERGES), local_only=True
-)
+@_register("stream_bpe_vocab", _bpe_train_oracle(_BPE_TRAIN_N_MERGES))
 def stream_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming tokenizer training (streaming/vocab_stream.py): the
     documents stream through as two DISJOINT micro-batches maintaining
@@ -7490,8 +7330,7 @@ def stream_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     training exactly (word counts are additive), so the oracle is the
     SAME unrolled classic merge loop as text_bpe_vocab_train. Eleventh
     stream-equals-batch gate family, and the streaming completion of
-    the r8 hybrid trainer. local_only: streaming state dirs are
-    per-run temp."""
+    the r8 hybrid trainer."""
     from solana_etl_spark.streaming.vocab_stream import (
         start_streaming_word_counts,
         train_bpe_from_state,
@@ -7549,14 +7388,13 @@ def _bpe_fertility_oracle() -> str:
     """
 
 
-@_register("text_bpe_fertility", _bpe_fertility_oracle(), local_only=True)
+@_register("text_bpe_fertility", _bpe_fertility_oracle())
 def text_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer fertility by language: tokens/word and chars/token of the
     shipped BPE vocabulary per lang — the standard diagnostic for how well
     a tokenizer serves each language slice of a corpus (a high-fertility
     language pays more sequence budget per word). Single codegen encode
-    projection + one bounded per-lang aggregate, zero extra shuffles.
-    local_only: driver cap."""
+    projection + one bounded per-lang aggregate, zero extra shuffles."""
     from solana_etl_spark.operators.text import tokens as ws_tokens
     from solana_etl_spark.operators.vocab import apply_bpe_replace
 
@@ -7699,7 +7537,7 @@ def _pretrain_e2e_oracle() -> str:
     """
 
 
-@_register("pipeline_pretrain_e2e", _pretrain_e2e_oracle(), local_only=True)
+@_register("pipeline_pretrain_e2e", _pretrain_e2e_oracle())
 def pipeline_pretrain_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full pre-training data pipeline as ONE lazy plan — the capstone
     composition of the operator library, every stage the individually
@@ -7716,7 +7554,7 @@ def pipeline_pretrain_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     intersected (the pipeline_clean_corpus formulation); the only
     shuffles are the per-stage set aggregates plus ONE pack window keyed
     by the group column. Cross-engine: the DuckDB oracle reproduces the
-    entire seven-stage composition bit-exactly. local_only: driver cap."""
+    entire seven-stage composition bit-exactly."""
     return _pretrain_parts(spark, sf_dir)["packed"]
 
 
@@ -7801,7 +7639,7 @@ def _pretrain_parts(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     }
 
 
-@_register("pipeline_bpe_pack", _bpe_pack_oracle(), local_only=True)
+@_register("pipeline_bpe_pack", _bpe_pack_oracle())
 def pipeline_bpe_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer→packing composite: encode the corpus with the shipped BPE
     vocabulary (codegen replace chain), then pack the REAL token counts
@@ -7809,8 +7647,7 @@ def pipeline_bpe_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/packing.py:pack_sequences with the n_tokens override).
     This is the accounting a pre-training data loader consumes: which
     sequences each document occupies and at which offsets. One window
-    shuffle keyed by the pack group; the encode adds zero shuffles.
-    local_only: driver cap."""
+    shuffle keyed by the pack group; the encode adds zero shuffles."""
     from solana_etl_spark.operators.packing import pack_sequences
     from solana_etl_spark.operators.prefix import quantile_splits
     from solana_etl_spark.operators.vocab import apply_bpe_replace
@@ -8033,7 +7870,7 @@ def _uni_vocab_oracle() -> str:
     """
 
 
-@_register("text_unigram_vocab", _uni_vocab_oracle(), local_only=True)
+@_register("text_unigram_vocab", _uni_vocab_oracle())
 def text_unigram_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM tokenizer TRAINING (operators/unigram.py
     train_unigram_vocab — Kudo 2018 / SentencePiece, hard-EM variant):
@@ -8044,7 +7881,7 @@ def text_unigram_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold, no Python. Cross-engine: the DuckDB oracle replays the entire
     training — seed selection, both EM rounds (unrolled DP + recursive
     backtrace), pruning — bit-exactly, which the 9-decimal DECIMAL cost
-    quantization makes possible. local_only: driver cap."""
+    quantization makes possible."""
     from solana_etl_spark.operators.unigram import train_unigram_vocab
 
     docs = _t(spark, sf_dir, "documents")
@@ -8087,7 +7924,7 @@ def _uni_encode_oracle() -> str:
     """
 
 
-@_register("text_unigram_encode", _uni_encode_oracle(), local_only=True)
+@_register("text_unigram_encode", _uni_encode_oracle())
 def text_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus tokenization with the shipped unigram-LM vocabulary
     (operators/unigram.py:encode_unigram): Viterbi min-cost segmentation
@@ -8095,8 +7932,7 @@ def text_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-order word stream and reassemble per document — two linear
     shuffles, zero Python, OOV chars via the fixed-cost fallback. Same
     output shape as text_bpe_encode (count / prefix / compression).
-    Cross-engine: DuckDB replays the DP exactly (DECIMAL costs).
-    local_only: driver cap."""
+    Cross-engine: DuckDB replays the DP exactly (DECIMAL costs)."""
     from decimal import Decimal
 
     from solana_etl_spark.operators.unigram import encode_unigram
@@ -8165,7 +8001,7 @@ def _uni_pack_oracle() -> str:
     """
 
 
-@_register("pipeline_unigram_pack", _uni_pack_oracle(), local_only=True)
+@_register("pipeline_unigram_pack", _uni_pack_oracle())
 def pipeline_unigram_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer->packing composite on the unigram-LM family: encode the
     corpus with the shipped unigram vocabulary, then pack the REAL token
@@ -8173,7 +8009,7 @@ def pipeline_unigram_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/packing.py:pack_sequences) — the pipeline_bpe_pack
     counterpart proving the second tokenizer chains into the same
     downstream accounting. One pack-window shuffle on top of the encode's
-    two linear ones. local_only: driver cap."""
+    two linear ones."""
     from decimal import Decimal
 
     from solana_etl_spark.operators.packing import pack_sequences
@@ -8218,7 +8054,6 @@ def pipeline_unigram_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS waste
     FROM swept
     """,
-    local_only=True,
 )
 def pack_efficiency_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence-length planning table (operators/packing.py
@@ -8226,8 +8061,7 @@ def pack_efficiency_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     concat-and-chunk sequence count, padded capacity and pad waste — the
     numbers that pick a training run's sequence length. One group
     aggregate + a 5-way per-row explode; all-int64 outputs (utilization
-    division left to the consumer — see the half-way-tie note).
-    local_only: driver cap."""
+    division left to the consumer — see the half-way-tie note)."""
     from solana_etl_spark.operators.packing import pack_efficiency
 
     return pack_efficiency(_t(spark, sf_dir, "documents"))
@@ -8285,7 +8119,7 @@ def _cluster_pack_oracle() -> str:
     """
 
 
-@_register("pipeline_cluster_pack", _cluster_pack_oracle(), local_only=True)
+@_register("pipeline_cluster_pack", _cluster_pack_oracle())
 def pipeline_cluster_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic-cluster packing (in-context pre-training shape, Shi et al.
     2023): documents are assigned to LEARNED k-means clusters of their
@@ -8294,7 +8128,7 @@ def pipeline_cluster_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents share a training context instead of random neighbors. One
     doc_id-keyed join (token counts ⋈ assignments) + the single pack-group
     window; the Lloyd rounds are the same bounded-training plan as
-    ann_ivf_assign. local_only: driver cap."""
+    ann_ivf_assign."""
     from solana_etl_spark.operators.packing import pack_sequences
 
     docs = _t(spark, sf_dir, "documents")
@@ -8375,7 +8209,7 @@ def _er_oracle() -> str:
     """
 
 
-@_register("er_entity_resolution", _er_oracle(), local_only=True)
+@_register("er_entity_resolution", _er_oracle())
 def er_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity resolution over the customer roster (operators/er.py):
     deletion-neighborhood (FastSS) blocking -> Levenshtein<=1 match pairs
@@ -8386,8 +8220,7 @@ def er_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE closure. Roster capped at 2000 records: the synthetic
     names are sequential, so the whole table chains into one component and
     the ORACLE's closure fixpoint is |component|^2 — the cap keeps the
-    check bounded at every sf (the operator itself stays linear).
-    local_only: driver cap."""
+    check bounded at every sf (the operator itself stays linear)."""
     from solana_etl_spark.operators.er import resolve_entities
 
     return resolve_entities(
@@ -8464,13 +8297,12 @@ def _ivf_recall_oracle(
         similarity.IVF_NPROBE,
         similarity.TOPK,
     ),
-    local_only=True,
 )
 def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN index evaluation: recall@k of the nprobe IVF probe vs exact
     search under the same quantized metric, from ONE shared scored pass
     (operators/similarity.py:ivf_recall). The number that decides whether
-    an nprobe setting is safe to ship. local_only: driver cap."""
+    an nprobe setting is safe to ship."""
     return similarity.ivf_recall(_t(spark, sf_dir, "embeddings"))
 
 
@@ -8512,7 +8344,6 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         LEFT JOIN p ON p.user_id = u.user_id
     ) GROUP BY stage
     """,
-    local_only=True,
 )
 def st_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Funnel analysis (view -> click -> purchase with strict event-time
@@ -8522,7 +8353,7 @@ def st_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     are user-cardinality (orders of magnitude below event volume), so the
     event log is scanned, never self-joined at event grain. The 48-hour
     analysis window leaves users spread across all four stages (the whole
-    log funnels everyone to stage 3). local_only: driver cap."""
+    log funnels everyone to stage 3)."""
     ev = _t(spark, sf_dir, "events").filter(
         F.col("ts") < F.lit("2024-01-03").cast("timestamp")
     )
@@ -8593,14 +8424,13 @@ def st_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT event_id, event_type, z FROM enriched
     WHERE abs(z) > 2.5
     """,
-    local_only=True,
 )
 def a18_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group z-score outlier detection: one sufficient-statistics
     aggregate per event_type (count, exact-decimal sum, exact-decimal sum
     of squares — order-independent, partition-safe), broadcast back, z
     computed per row in fixed double arithmetic. Never a per-group sort or
-    second scan at event grain. local_only: driver cap."""
+    second scan at event grain."""
     ev = _t(spark, sf_dir, "events")
     stats = ev.groupBy(F.col("event_type").alias("_et")).agg(
         F.count(F.lit(1)).alias("_n"),
@@ -8655,14 +8485,13 @@ def a18_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
            bucket_sum IS NULL AS was_gap
     FROM j
     """,
-    local_only=True,
 )
 def ts_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-series regularization (operators/timeseries.py): hourly bucket
     sums per user, gap-filled against an executor-generated time spine and
     forward-filled with one `last(ignorenulls)` window pass — no driver
     loops, no self-joins; values are exact-decimal sums carried through
-    the fill unchanged. local_only: driver cap."""
+    the fill unchanged."""
     from solana_etl_spark.operators.timeseries import gapfill_ffill
 
     ev = _t(spark, sf_dir, "events").filter(F.col("user_id") < 30)
@@ -8694,7 +8523,6 @@ def ts_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT n.n_nodes, (SELECT COUNT(*) FROM edges) AS n_edges, t.n_triangles
     FROM nodes n, tri t
     """,
-    local_only=True,
 )
 def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle counting over the co-purchase graph (parts sharing an
@@ -8702,7 +8530,7 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/graph.py:triangle_count): each triangle counted at its
     lowest-ranked vertex, wedge volume bounded O(|E|^1.5) with no
     hot-vertex blowup. The oracle is the naive a<b<c three-way self-join —
-    same count, orientation-free. local_only: driver cap."""
+    same count, orientation-free."""
     from solana_etl_spark.operators.graph import triangle_count
 
     li = (
@@ -8760,14 +8588,12 @@ def _ivf_ndcg_oracle(
         similarity.IVF_NPROBE,
         similarity.TOPK,
     ),
-    local_only=True,
 )
 def ann_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rank-aware ANN evaluation: NDCG@k of the IVF probe vs exact search
     (operators/similarity.py:ivf_ndcg) — complements recall@k by weighting
     each hit with 1/log2(position+1); discount terms round at 9 decimals
-    and sum as exact DECIMAL so the float sum is order-independent.
-    local_only: driver cap."""
+    and sum as exact DECIMAL so the float sum is order-independent."""
     return similarity.ivf_ndcg(_t(spark, sf_dir, "embeddings"))
 
 
@@ -8809,14 +8635,13 @@ def _diff_oracle() -> str:
     """
 
 
-@_register("snapshot_diff", _diff_oracle(), local_only=True)
+@_register("snapshot_diff", _diff_oracle())
 def snapshot_diff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot diff (operators/diff.py): added/removed/changed keys
     between two table versions, each side reduced to (key, md5-hash64 row
     signature) in the scan projection — the full-outer join shuffles ~24
     bytes/row regardless of table width. Snapshots are synthesized
-    deterministically from orders (drop %7 / drop %11 + rewrite %5).
-    local_only: driver cap."""
+    deterministically from orders (drop %7 / drop %11 + rewrite %5)."""
     from solana_etl_spark.operators.diff import snapshot_diff
 
     o = _t(spark, sf_dir, "orders")
@@ -8851,13 +8676,13 @@ def _weighted_sample_oracle(n: int) -> str:
     """
 
 
-@_register("s6_weighted_sample", _weighted_sample_oracle(40), local_only=True)
+@_register("s6_weighted_sample", _weighted_sample_oracle(40))
 def s6_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted sample without replacement (Efraimidis-Spirakis, operators/
     sampling.py): top-n documents by the deterministic ln(u)/weight key,
     weighted by length — heavier documents win more often, the draw is a
     pure function of row content (retry-safe), and the top-n runs as
-    TakeOrderedAndProject, never a global sort. local_only: driver cap."""
+    TakeOrderedAndProject, never a global sort."""
     from solana_etl_spark.operators.sampling import weighted_sample
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars", "source")
@@ -8879,17 +8704,14 @@ def _corpus_shuffle_oracle(n_shards: int) -> str:
     """
 
 
-@_register(
-    "s7_corpus_shuffle", _corpus_shuffle_oracle(_SHUFFLE_SHARDS), local_only=True
-)
+@_register("s7_corpus_shuffle", _corpus_shuffle_oracle(_SHUFFLE_SHARDS))
 def s7_corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic corpus shuffle for training order (operators/
     sampling.py corpus_shuffle): every document gets a (shard, pos) —
     reading shards in pos order is a reproducible hash-random permutation
     of the corpus. The only shuffle is the per-shard window (parallel
     across shards, never a global sort); re-runs and retries produce the
-    identical order, unlike epoch-seeded rand() shuffles. local_only:
-    driver cap."""
+    identical order, unlike epoch-seeded rand() shuffles."""
     from solana_etl_spark.operators.sampling import corpus_shuffle
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
@@ -8905,14 +8727,13 @@ def s7_corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
     WHERE o.o_orderkey % 3 = 0
     """,
-    local_only=True,
 )
 def incr_join_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental JOIN maintenance (operators/incremental.py:
     maintain_join_append): the orders⋈lineitem view under append-only
     deltas — old result reused verbatim, only the three delta terms
     computed (delta rule ΔA⋈B ∪ A⋈ΔB ∪ ΔA⋈ΔB). The oracle is the full
-    recompute; equality proves the algebra. local_only: driver cap."""
+    recompute; equality proves the algebra."""
     from solana_etl_spark.operators.incremental import maintain_join_append
 
     o = (
@@ -8967,14 +8788,13 @@ def incr_join_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / CAST(COUNT(*) AS DOUBLE), 6) AS dup_chunk_frac
     FROM flagged GROUP BY doc_id
     """,
-    local_only=True,
 )
 def pipeline_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chunk-granularity cross-document dedup (the RAG-index dedup step,
     composing chunk_documents with first-occurrence-wins window dedup):
     per document, how many of its stride-overlapped chunks already exist
     verbatim elsewhere. One shuffle keyed by chunk hash (16 bytes/chunk),
-    one per-doc rollup. local_only: driver cap."""
+    one per-doc rollup."""
     from solana_etl_spark.operators.packing import chunk_documents
 
     chunks = chunk_documents(
@@ -9035,7 +8855,6 @@ def pipeline_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(*) AS n_users
     FROM j GROUP BY cohort, week_offset
     """,
-    local_only=True,
 )
 def st_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly cohort retention (the standard growth-analytics triangle):
@@ -9045,7 +8864,7 @@ def st_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     offsets are exact integer day arithmetic on week-truncated timestamps
     (both engines truncate to ISO Monday). A deterministic hash keeps
     ~25% of user-weeks (sparse engagement) so cohorts spread over 5 weeks
-    instead of collapsing to one. local_only: driver cap."""
+    instead of collapsing to one."""
     from solana_etl_spark.functions.hashing import hash64
 
     # date form on both sides: DuckDB's date_trunc('week') yields DATE
@@ -9095,15 +8914,13 @@ def st_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY c_nationkey, c_mktsegment,
              CAST(floor(c_acctbal / 2000) AS BIGINT)
     """,
-    local_only=True,
 )
 def dq_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity audit (data-governance family, alongside the constraint
     gate and PII redaction): size of every quasi-identifier group
     (nationality x market segment x coarse balance band) with a
     violates-k flag — one map-side-combined aggregate; groups below k are
-    the re-identification risk a release gate blocks on.
-    local_only: driver cap."""
+    the re-identification risk a release gate blocks on."""
     c = _t(spark, sf_dir, "customer")
     band = F.floor(F.col("c_acctbal") / 2000).cast("long")
     return c.groupBy(
@@ -9133,13 +8950,12 @@ def dq_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY c_nationkey, c_mktsegment,
              CAST(floor(c_custkey / 200) AS BIGINT)
     """,
-    local_only=True,
 )
 def dq_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """l-diversity audit: distinct sensitive-attribute values (1k-wide
     balance bands) per quasi-identifier group — the leak k-anonymity
     misses when a big group is homogeneous. One two-phase count-distinct
-    aggregate. local_only: driver cap."""
+    aggregate."""
     c = _t(spark, sf_dir, "customer")
     band = F.floor(F.col("c_acctbal") / 1000).cast("long")
     block = F.floor(F.col("c_custkey") / 200).cast("long")
@@ -9205,14 +9021,14 @@ def _drift_oracle() -> str:
     """
 
 
-@_register("dq_drift_psi", _drift_oracle(), local_only=True)
+@_register("dq_drift_psi", _drift_oracle())
 def dq_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution-drift report (operators/drift.py): PSI + KS statistic
     of document length, comparing the odd-numbered sources (the "new
     ingest") against the even-numbered reference slice — balanced halves
     at every fixture scale. One bounded histogram aggregate per slice, a
     broadcast bounds join, and a 16-row window — corpus-size-independent
-    state throughout. local_only: driver cap."""
+    state throughout."""
     from solana_etl_spark.operators.drift import drift_report
 
     docs = _t(spark, sf_dir, "documents")
@@ -9267,13 +9083,13 @@ def _centroid_drift_oracle() -> str:
     """
 
 
-@_register("dq_drift_centroid", _centroid_drift_oracle(), local_only=True)
+@_register("dq_drift_centroid", _centroid_drift_oracle())
 def dq_drift_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-space drift (operators/drift.py:embedding_centroid_drift):
     centroid L2 / cosine / per-dimension sup-norm between the even- and
     odd-vec_id embedding slices. One posexplode + dim-keyed aggregate per
     slice; every cross-row float sum is exact-DECIMAL so the report is
-    partition-order-independent. local_only: driver cap."""
+    partition-order-independent."""
     from solana_etl_spark.operators.drift import embedding_centroid_drift
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -9296,13 +9112,12 @@ def dq_drift_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY event_type, CAST(floor(value / 50) AS BIGINT)
     """,
-    local_only=True,
 )
 def a19_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-width value histogram per event type (width-50 buckets): one
     map-side-combined aggregate producing exact counts and exact-decimal
     bucket sums — the distribution statistic data cards and join-size
-    estimators consume. local_only: driver cap."""
+    estimators consume."""
     ev = _t(spark, sf_dir, "events")
     bucket = F.floor(F.col("value") / 50).cast("long")
     return ev.groupBy("event_type", bucket.alias("bucket")).agg(
@@ -9350,7 +9165,6 @@ def a19_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS n_beyond_1h_watermark
     FROM lateness
     """,
-    local_only=True,
 )
 def st_disorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time disorder measurement ("measure, don't guess" applied to
@@ -9359,8 +9173,7 @@ def st_disorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-derived network delay up to 2h — the fixture stream itself is
     perfectly ordered), rolled into corpus counts, max lateness, and how
     many events a 1-hour watermark would drop. One per-user window pass;
-    guard and counters share the same exact-microsecond comparison.
-    local_only: driver cap."""
+    guard and counters share the same exact-microsecond comparison."""
     from solana_etl_spark.functions.hashing import hash64
 
     ev = _t(spark, sf_dir, "events").select(
@@ -9412,7 +9225,6 @@ def st_disorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY 1, 2, 3
     """,
-    local_only=True,
 )
 def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time windowed aggregation as a REAL Structured-Streaming run
@@ -9423,7 +9235,7 @@ def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming_windows.py), and the final result must value-
     hash-equal the plain batch GROUP BY oracle. Third member of the
     stream-equals-batch gate family (join view, CDC snapshot, windowed
-    agg). local_only: streaming state dirs are per-run temp."""
+    agg)."""
     from solana_etl_spark.streaming.windows import windowed_event_counts
 
     ev = _t(spark, sf_dir, "events").select("ts", "event_type", "value")
@@ -9517,9 +9329,7 @@ def _stream_corpus_pipeline_oracle() -> str:
     """
 
 
-@_register(
-    "stream_corpus_pipeline", _stream_corpus_pipeline_oracle(), local_only=True
-)
+@_register("stream_corpus_pipeline", _stream_corpus_pipeline_oracle())
 def stream_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL CorpusPipeline cleaning chain (quality -> exact dedup ->
     LSH near-dedup -> n-gram decontamination) as a REAL Structured-
@@ -9529,8 +9339,7 @@ def stream_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline's output and the re-ingest pass must add zero rows —
     stream-equals-batch for the whole capstone composition, not just the
     dedup stage. Eval slice (src19) is static model-side state. The
-    oracle is the batch-SQL pipeline. local_only: streaming state dirs
-    are per-run temp."""
+    oracle is the batch-SQL pipeline."""
     from solana_etl_spark.streaming.corpus_stream import (
         start_streaming_corpus_pipeline,
     )
@@ -9567,7 +9376,6 @@ def stream_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT s.user_id, signup_ts, purchase_ts, value
     FROM s JOIN p USING (user_id)
     """,
-    local_only=True,
 )
 def stream_attribution_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A REAL Structured Streaming run inside the correctness gate: the
@@ -9578,8 +9386,7 @@ def stream_attribution_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning) maintains signups ⋈ purchases incrementally. The returned
     final view is value-hash-checked against the plain batch join oracle —
     the stream-equals-batch exactly-once claim, enforced by the gate
-    rather than only by pytest. local_only: streaming state dirs are
-    per-run temp."""
+    rather than only by pytest."""
     from solana_etl_spark.streaming.view_stream import (
         current_view,
         start_view_stream,
@@ -9616,7 +9423,6 @@ def stream_attribution_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT user_id, event_type, value
     FROM latest WHERE rn = 1 AND event_type <> 'error'
     """,
-    local_only=True,
 )
 def stream_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CDC merge stream under the correctness gate: events become a
@@ -9630,8 +9436,7 @@ def stream_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE micro-batch — the snapshot is then a pure function of the data,
     independent of batch ordering (cross-batch, later batches win by
     construction; a version-ordered split is a stream-source ordering
-    assumption this gate query must not make). local_only: streaming state
-    dirs are per-run temp."""
+    assumption this gate query must not make)."""
     from solana_etl_spark.streaming.merge_stream import (
         current_snapshot,
         start_merge_stream,
@@ -9676,7 +9481,7 @@ def _stream_dedup_oracle() -> str:
     """
 
 
-@_register("stream_dedup_ingest", _stream_dedup_oracle(), local_only=True)
+@_register("stream_dedup_ingest", _stream_dedup_oracle())
 def stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming corpus ingest with the persisted dedup index as a REAL
     Structured-Streaming run under the gate (streaming/dedup_stream.py):
@@ -9687,8 +9492,7 @@ def stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole corpus adds zero rows. Because both micro-batches carry the
     identical corpus, the final survivor set is independent of file
     processing order, which makes the streaming run batch-SQL-expressible.
-    Fourth member of the stream-equals-batch gate family. local_only:
-    streaming state dirs are per-run temp."""
+    Fourth member of the stream-equals-batch gate family."""
     from solana_etl_spark.streaming.dedup_stream import (
         start_streaming_corpus_ingest,
     )
@@ -9749,7 +9553,6 @@ def _read_web(spark: SparkSession) -> DataFrame:
     SELECT page_id, text
     FROM read_parquet('{_web_pages_path()}')
     """,
-    local_only=True,
 )
 def web_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HTML→text extraction (operators/web.py html_to_text): the crawl
@@ -9758,8 +9561,7 @@ def web_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags, decode entities, trim lines. A pure scan-fused
     regexp_replace chain (RE2-safe, zero shuffle — raw HTML is the
     bulkiest thing a 100 TB crawl holds, so this stage must not be a
-    UDF). The oracle is the planted ground truth. local_only: driver
-    cap."""
+    UDF). The oracle is the planted ground truth."""
     from solana_etl_spark.operators.web import extract_html_pages
 
     return extract_html_pages(_read_web(spark).select("page_id", "html"))
@@ -9862,14 +9664,14 @@ def _web_url_canonical_oracle() -> str:
     """
 
 
-@_register("web_url_canonical", _web_url_canonical_oracle(), local_only=True)
+@_register("web_url_canonical", _web_url_canonical_oracle())
 def web_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL canonicalization (operators/web.py canonical_url): lowercase
     scheme/host, fragment + default-port + www + tracking-param strip,
     param sort, trailing-slash strip — one codegen projection over the
     scan, zero shuffle, zero UDFs. The synthetic web corpus plants every
     variant class (case, :443/:80, utm/fbclid/ref noise, fragments,
-    trailing slashes). local_only: reads the generated pages table."""
+    trailing slashes)."""
     from solana_etl_spark.operators.web import canonicalize
 
     return canonicalize(_read_web(spark)).select(
@@ -9891,14 +9693,13 @@ def _dedup_url_oracle() -> str:
     """
 
 
-@_register("dedup_url_keep_best", _dedup_url_oracle(), local_only=True)
+@_register("dedup_url_keep_best", _dedup_url_oracle())
 def dedup_url_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical-URL dedup, keep-best (operators/web.py): the same
     resource served under tracking noise collapses to its longest-text
     copy (ties to smallest id) via ONE hash aggregate with the
     struct-argmax — no window, no sort, no pair materialization; the
-    oracle states the same semantics as a rank-1 window. local_only:
-    reads the generated pages table."""
+    oracle states the same semantics as a rank-1 window."""
     from solana_etl_spark.operators.web import url_dedup_keep_best
 
     return url_dedup_keep_best(_read_web(spark))
@@ -9920,7 +9721,7 @@ def _domain_cap_oracle() -> str:
     """
 
 
-@_register("s9_domain_cap", _domain_cap_oracle(), local_only=True)
+@_register("s9_domain_cap", _domain_cap_oracle())
 def s9_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-registrable-domain cap (operators/web.py per_domain_cap):
     keep ≤ cap pages per domain by deterministic md5 order. The plan is
@@ -9928,7 +9729,7 @@ def s9_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     any window partition to ~domain/16, then over the ≤ cap*16 per-domain
     survivors — so a mega-domain never pins one reducer; provably equal
     to the oracle's single global rank (each global winner ranks ≤ cap
-    in its own shard). local_only: reads the generated pages table."""
+    in its own shard)."""
     from solana_etl_spark.operators.web import per_domain_cap
 
     return per_domain_cap(_read_web(spark))
@@ -9979,14 +9780,13 @@ def _c4_line_filter_oracle() -> str:
     """
 
 
-@_register("text_c4_line_filter", _c4_line_filter_oracle(), local_only=True)
+@_register("text_c4_line_filter", _c4_line_filter_oracle())
 def text_c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4 line + page rules (operators/c4.py c4_line_filter; Raffel et
     al. 2020 §2.2): terminal-punctuation lines of ≥5 words without
     'javascript', pages without bad words / 'lorem ipsum' / braces and
     with ≥3 surviving lines. Bare array expressions over one scan —
-    zero shuffle; at 100 TB this is a map-only stage. local_only:
-    reads the generated pages table."""
+    zero shuffle; at 100 TB this is a map-only stage."""
     from solana_etl_spark.operators.c4 import c4_line_filter
 
     return c4_line_filter(_read_web(spark))
@@ -10049,15 +9849,14 @@ def _c4_span_dedup_oracle() -> str:
     """
 
 
-@_register("dedup_c4_spans", _c4_span_dedup_oracle(), local_only=True)
+@_register("dedup_c4_spans", _c4_span_dedup_oracle())
 def dedup_c4_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4 three-sentence-span corpus dedup (operators/c4.py
     c4_span_dedup): every 3-consecutive-line window hashes (md5), the
     globally (page, pos)-first occurrence survives, all lines covered by
     other occurrences are removed. Catches the planted per-site cookie
     blocks and cross-site syndicated blocks. Shuffles only 32-byte
-    (hash, page, pos) rows — linear, never pairwise. local_only:
-    reads the generated pages table."""
+    (hash, page, pos) rows — linear, never pairwise."""
     from solana_etl_spark.operators.c4 import c4_span_dedup
 
     return c4_span_dedup(_read_web(spark))
@@ -10113,7 +9912,7 @@ def _pipeline_web_clean_oracle() -> str:
     """
 
 
-@_register("pipeline_web_clean", _pipeline_web_clean_oracle(), local_only=True)
+@_register("pipeline_web_clean", _pipeline_web_clean_oracle())
 def pipeline_web_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Web-curation capstone, FROM RAW HTML: scan-fused HTML→text
     extraction → canonicalize → canonical-URL keep-best → C4 line/page
@@ -10123,8 +9922,7 @@ def pipeline_web_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     (extraction must reproduce the planted text EXACTLY or every
     downstream stage drifts). Stage costs at scale: two projections
     (0 shuffles — raw HTML dies at the first one) + keep-best (1 hash
-    agg) + line rules (0) + span dedup (hash-keyed linear). local_only:
-    reads the generated pages table."""
+    agg) + line rules (0) + span dedup (hash-keyed linear)."""
     from solana_etl_spark.corpus import WebPipeline
     from solana_etl_spark.operators.c4 import c4_line_filter, c4_span_dedup
     from solana_etl_spark.operators.web import (
@@ -10169,7 +9967,7 @@ def _stream_web_oracle() -> str:
     """
 
 
-@_register("stream_web_pipeline", _stream_web_oracle(), local_only=True)
+@_register("stream_web_pipeline", _stream_web_oracle())
 def stream_web_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WebPipeline crawl chain as a REAL Structured-Streaming run under
     the gate (streaming/web_stream.py): the pages table streams through
@@ -10178,7 +9976,7 @@ def stream_web_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     C4 line/page rules → span dedup) and the SECOND pass must be fully
     suppressed by the persisted canonical-URL index — re-ingesting the
     whole crawl adds zero rows. Fifth member of the stream-equals-batch
-    gate family. local_only: streaming state dirs are per-run temp."""
+    gate family."""
     from solana_etl_spark.streaming.web_stream import (
         start_streaming_web_pipeline,
     )
@@ -10305,9 +10103,7 @@ def _wordpiece_encode_oracle() -> str:
     """
 
 
-@_register(
-    "text_wordpiece_encode", _wordpiece_encode_oracle(), local_only=True
-)
+@_register("text_wordpiece_encode", _wordpiece_encode_oracle())
 def text_wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus tokenization with a shipped WordPiece vocabulary
     (operators/wordpiece.py apply_wordpiece) — the THIRD tokenizer
@@ -10317,8 +10113,7 @@ def text_wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     word (Zipf-bounded) as a membership-map build + per-row fold — zero
     Python — then joins back in word order. The DuckDB oracle replays
     the greedy walk as a recursive CTE over (word, cursor) states.
-    Returns per-doc token count, [UNK] count, first 8 tokens.
-    local_only: driver cap."""
+    Returns per-doc token count, [UNK] count, first 8 tokens."""
     from solana_etl_spark.operators.wordpiece import UNK, apply_wordpiece
 
     docs = _t(spark, sf_dir, "documents")
@@ -10481,7 +10276,6 @@ _WP_TRAIN_N_MERGES = 12
 @_register(
     "text_wordpiece_vocab_train",
     _wp_train_oracle(_WP_TRAIN_N_MERGES),
-    local_only=True,
 )
 def text_wordpiece_vocab_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WordPiece vocabulary TRAINING certified end-to-end, the
@@ -10490,7 +10284,7 @@ def text_wordpiece_vocab_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, likelihood-score greedy merges on the driver via
     operators/vocab_driver.py) learns alphabet + merges on THIS sf's
     documents, and DuckDB independently re-learns them with the merge
-    loop unrolled as SQL stages. local_only: driver cap."""
+    loop unrolled as SQL stages."""
     from solana_etl_spark.operators.wordpiece import train_wordpiece_vocab
 
     docs = _t(spark, sf_dir, "documents")
@@ -10500,7 +10294,7 @@ def text_wordpiece_vocab_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("pipeline_wordpiece_pack", _wp_pack_oracle(), local_only=True)
+@_register("pipeline_wordpiece_pack", _wp_pack_oracle())
 def pipeline_wordpiece_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer->packing composite on the WordPiece family: encode the
     corpus with the shipped WordPiece vocabulary (greedy longest-match,
@@ -10508,8 +10302,7 @@ def pipeline_wordpiece_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts into fixed 2048-token training sequences per language — the
     pipeline_bpe_pack / pipeline_unigram_pack counterpart proving the
     THIRD tokenizer chains into the same downstream accounting. One
-    pack-window shuffle on top of the encode's linear ones. local_only:
-    driver cap."""
+    pack-window shuffle on top of the encode's linear ones."""
     from solana_etl_spark.operators.packing import pack_sequences
     from solana_etl_spark.operators.wordpiece import apply_wordpiece
 
@@ -10552,15 +10345,13 @@ def pipeline_wordpiece_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM li
     GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (ship_year), ())
     """,
-    local_only=True,
 )
 def a22_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS — the general form of a12's ROLLUP / a16's
     CUBE (SURVEY §2.4 'absent in ref' family): three unrelated groupings
     ((flag, status), (ship year), grand total) in ONE pass. Spark expands
     the sets map-side before a single exchange — vs three group-bys +
-    union, which would scan the fact table three times. local_only:
-    driver cap."""
+    union, which would scan the fact table three times."""
     li = _t(spark, sf_dir, "lineitem").withColumn(
         "ship_year", F.year("l_shipdate").cast("long")
     )
@@ -10591,7 +10382,6 @@ def a22_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW wt AS (PARTITION BY o_custkey ORDER BY o_orderdate),
            wu AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
     """,
-    local_only=True,
 )
 def w5_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ranking-function surface (SURVEY §2.8 'absent in ref'):
@@ -10601,7 +10391,7 @@ def w5_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment is positional, not tie-aware. Both specs partition on the
     same key, so it stays one shuffle with two in-partition sorts.
     percent_rank/cume_dist are exact-integer ratios divided once in
-    IEEE doubles — bit-identical cross-engine. local_only: driver cap."""
+    IEEE doubles — bit-identical cross-engine."""
     o = _t(spark, sf_dir, "orders").filter(F.col("o_custkey") <= 200)
     wt = Window.partitionBy("o_custkey").orderBy("o_orderdate")
     wu = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
@@ -10635,13 +10425,12 @@ def w5_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
                  ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
     """,
-    local_only=True,
 )
 def ts_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing 5-row moving sum/mean/min/max per user (operators/
     timeseries.py rolling_stats): the moving-average smoother, as one
     ROWS-frame window pass — complements w4's RANGE (time-distance)
-    frame with the row-count frame. local_only: driver cap."""
+    frame with the row-count frame."""
     from solana_etl_spark.operators.timeseries import rolling_stats
 
     return rolling_stats(_t(spark, sf_dir, "events"))
@@ -10677,7 +10466,6 @@ def ts_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS rfm_segment
     FROM m
     """,
-    local_only=True,
 )
 def st_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM segmentation (recency / frequency / monetary quartiles — the
@@ -10817,7 +10605,6 @@ def st_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
                       ELSE e.value END, 6) AS value_imputed
     FROM events e LEFT JOIN grp USING (user_id), allobs
     """,
-    local_only=True,
 )
 def dq_impute_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Missing-value repair (operators/impute.py impute_group_median):
@@ -10825,7 +10612,7 @@ def dq_impute_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     user's median OBSERVED value, global-median fallback for all-error
     users — the data-quality family's repair step next to the detect
     steps (constraints/drift/outliers). Exact continuous-interpolation
-    medians (a13-proven cross-engine). local_only: driver cap."""
+    medians (a13-proven cross-engine)."""
     from solana_etl_spark.operators.impute import impute_group_median
 
     e = _t(spark, sf_dir, "events")
@@ -10947,14 +10734,14 @@ def _rp_oracle() -> str:
     """
 
 
-@_register("ann_rp_topk", _rp_oracle(), local_only=True)
+@_register("ann_rp_topk", _rp_oracle())
 def ann_rp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-projection (Johnson-Lindenstrauss) ANN (operators/
     similarity.py rp_topk): candidates scored in an 8-dim ±1-projection
     sketch (matrix = a pure function of the cross-engine hash — never
     stored), exact cosine rerank of the top 4k. The dimensionality-
     REDUCTION rung of the compression ladder next to the precision rungs
-    (sign-LSH / SQ8 / PQ). local_only: driver cap."""
+    (sign-LSH / SQ8 / PQ)."""
     from solana_etl_spark.operators.similarity import rp_topk
 
     return rp_topk(_t(spark, sf_dir, "embeddings"))
@@ -11071,7 +10858,6 @@ def mm_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY sample_rank, doc_id
     LIMIT 100
     """,
-    local_only=True,
 )
 def stream_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming deterministic sample (streaming/sample_stream.py): the
@@ -11079,8 +10865,7 @@ def stream_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the full corpus), yet the maintained hash-rank sample equals
     the batch ORDER BY rank LIMIT n — min-n over a set is idempotent and
     order-free, which is what makes a 'reservoir' exactly maintainable
-    under at-least-once streaming. Ninth stream-equals-batch gate row.
-    local_only: streaming state dirs are per-run temp."""
+    under at-least-once streaming. Ninth stream-equals-batch gate row."""
     from solana_etl_spark.streaming.sample_stream import (
         read_sample,
         start_streaming_sample,
@@ -11139,7 +10924,6 @@ def stream_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cums, totals
     GROUP BY n_a, n_b
     """,
-    local_only=True,
 )
 def dq_drift_ks_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact two-sample KS between purchase and view value distributions
@@ -11149,7 +10933,7 @@ def dq_drift_ks_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     bin). One distributed value-grain groupBy, then the two-phase
     range-bucketed prefix sum (operators/prefix.py) — no unpartitioned
     window anywhere, so a continuous domain whose distinct-value grain
-    equals the row count still runs wide. local_only: driver cap."""
+    equals the row count still runs wide."""
     from solana_etl_spark.operators.drift import exact_ks
 
     e = _t(spark, sf_dir, "events")
@@ -11187,7 +10971,6 @@ def dq_drift_ks_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                  6) AS corr_qty_price
     FROM suff
     """,
-    local_only=True,
 )
 def a23_exact_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson correlation from EXACT sufficient statistics (the z-score
@@ -11198,8 +10981,7 @@ def a23_exact_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     double ONCE before the closed-form ratio, so both engines run the
     identical IEEE expression (corr is scale-invariant, so the cents
     scaling needs no undo). The built-in corr() exists for the 100 TB
-    path but cannot be oracle-matched (float accumulation order).
-    local_only: driver cap."""
+    path but cannot be oracle-matched (float accumulation order)."""
     li = _t(spark, sf_dir, "lineitem")
     x = F.round(F.col("l_quantity") * 100, 0).cast("long")
     y = F.round(F.col("l_extendedprice") * 100, 0).cast("long")
@@ -11244,7 +11026,6 @@ def a23_exact_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND((2 * six - (n_docs + 1) * sx) / (n_docs * sx), 6) AS gini
     FROM s
     """,
-    local_only=True,
 )
 def a24_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini concentration of document mass per language — the data-mix
@@ -11265,7 +11046,7 @@ def a24_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``div 2`` on whichever of cnt/cnt+1 is even) and all products cast
     to DECIMAL(38,0) BEFORE multiplying (int64 i·x would silently wrap
     where DuckDB's BIGINT errors), with ONE double conversion before the
-    closed-form ratio — the a23 recipe. local_only: driver cap."""
+    closed-form ratio — the a23 recipe."""
     from solana_etl_spark.operators.prefix import (
         exclusive_offsets,
         nullsafe_offsets_join,
@@ -11354,7 +11135,6 @@ def a24_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
                       ELSE raw END, 4) AS hll_estimate
     FROM est
     """,
-    local_only=True,
 )
 def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog distinct-text estimate per source
@@ -11366,8 +11146,7 @@ def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     2^61) with ONE double division; the m·ln(m/V) small-range branch is
     the only libm call, rounded to 4. ONE map-side-combined max
     aggregate with state = sources × 1024 rows at any corpus size — the
-    mergeable fixed-state sibling of a14's KMV. local_only: driver
-    cap."""
+    mergeable fixed-state sibling of a14's KMV."""
     from solana_etl_spark.operators.sketch import hll_distinct
 
     docs = _t(spark, sf_dir, "documents")
@@ -11404,7 +11183,6 @@ def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
            ) AS chunk_text
     FROM c
     """,
-    local_only=True,
 )
 def text_chunk_token_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding token-window chunking (operators/text.py
@@ -11413,7 +11191,7 @@ def text_chunk_token_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero shuffles, zero Python, so it fuses into the document scan and
     the only growth is the ~n/step row explode. Value-hash oracle:
     chunk ids, offsets and the joined chunk text are all deterministic
-    integer/token arithmetic. local_only: driver cap."""
+    integer/token arithmetic."""
     from solana_etl_spark.operators.text import chunk_token_windows
 
     docs = _t(spark, sf_dir, "documents")
@@ -11458,7 +11236,6 @@ def text_chunk_token_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
                       ELSE raw END, 4) AS hll_estimate
     FROM est
     """,
-    local_only=True,
 )
 def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming HLL (streaming/hll_stream.py): documents stream through
@@ -11467,8 +11244,7 @@ def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored with the shared estimator — and equals the BATCH sketch over
     the same corpus exactly, because max-merge over registers is
     idempotent and order-free. Tenth stream-equals-batch gate family;
-    the oracle is the batch HLL SQL. local_only: streaming state dirs
-    are per-run temp."""
+    the oracle is the batch HLL SQL."""
     from solana_etl_spark.streaming.hll_stream import (
         hll_estimate_from_state,
         read_hll_state,
@@ -11562,7 +11338,7 @@ def _chi2_oracle() -> str:
     """
 
 
-@_register("dq_drift_chi2", _chi2_oracle(), local_only=True)
+@_register("dq_drift_chi2", _chi2_oracle())
 def dq_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson chi-square homogeneity drift test over the shared
     reference-defined binning (operators/drift.py chi2_report) — the
@@ -11570,7 +11346,7 @@ def dq_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the KS sup-norm, on the same odd-vs-even source slices of
     document length. Expected counts from the pooled bin distribution;
     all inputs exact integers, two bounded histogram aggregates and
-    arithmetic over ≤ 16 rows. local_only: driver cap."""
+    arithmetic over ≤ 16 rows."""
     from solana_etl_spark.operators.drift import chi2_report
 
     docs = _t(spark, sf_dir, "documents")
@@ -11605,7 +11381,6 @@ def dq_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS median_price_cents
     FROM c GROUP BY f
     """,
-    local_only=True,
 )
 def a25_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT weighted median per group (lower median: the smallest value
@@ -11615,8 +11390,7 @@ def a25_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     (group, range-bucket) local cumulative window + broadcast exclusive
     offsets, then one argmin over the half-total threshold. No
     unpartitioned window, no per-group single reducer, values exact
-    integer cents / integer quantities throughout. local_only: driver
-    cap."""
+    integer cents / integer quantities throughout."""
     from solana_etl_spark.operators.prefix import (
         exclusive_offsets,
         nullsafe_offsets_join,

@@ -859,7 +859,7 @@ def test_connected_components_empty_pairs(spark):
 
 def test_minhash_signatures_duckdb_parity(spark):
     """The demoted-from-driver-registry signatures query still holds exact
-    cross-engine parity (local gate entry; see queries.py local_only)."""
+    cross-engine parity (a local gate entry, not a DRIVER_ROWS one)."""
     import duckdb
 
     from solana_etl_spark.queries import all_queries, all_oracle_sql

@@ -285,3 +285,15 @@ def test_unary_cap_and_truncation_errors():
         flac._read_rice_vec(
             flac._BitReader(b"\x00" * ((1 << 17) + 8) + b"\x01", 0), 1, 0
         )
+    # an over-cap code whose terminator IS found, followed by a code (or
+    # low bits) running off the end: the sequential reader stops at the
+    # earlier unbounded code, so the vectorized one must too
+    over_cap = b"\x00" * ((1 << 17) + 8) + b"\x01"
+    with pytest.raises(ValueError, match="unbounded unary"):
+        flac._read_rice_vec(flac._BitReader(over_cap, 0), 2, 0)
+    with pytest.raises(ValueError, match="unbounded unary"):
+        flac._read_rice_vec(flac._BitReader(over_cap, 0), 1, 4)
+    with pytest.raises(ValueError, match="unbounded unary"):
+        br = flac._BitReader(over_cap, 0)
+        for _ in range(2):
+            br.read_unary()
