@@ -22,6 +22,7 @@ from enum import Enum
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from solana_etl_spark.plans.tasks import COIN_ACCOUNTS, SYSVAR_ACCOUNTS
 from solana_etl_spark.plans.views import transactions_view, transfers_view
 
 
@@ -97,24 +98,21 @@ class Transactions:
 
     def accounts_by_type(self) -> dict[str, set[str]]:
         """Distinct accounts per type across the collection (A7)."""
-        sysvar = F.transform(
-            F.filter("account_types", lambda a: a["is_sysvar"]),
-            lambda a: a["pubkey"],
-        )
-        coin = F.transform(
-            F.filter(
-                "account_types",
-                lambda a: ~a["is_sysvar"] & ~a["is_program"] & ~a["is_token"],
-            ),
-            lambda a: a["pubkey"],
-        )
-        row = self.df.agg(
-            F.array_distinct(F.flatten(F.collect_list(sysvar))).alias("SYSVAR"),
-            F.array_distinct(F.flatten(F.collect_list("programs"))).alias("PROGRAM"),
-            F.array_distinct(F.flatten(F.collect_list("token_pubkeys"))).alias("TOKEN"),
-            F.array_distinct(F.flatten(F.collect_list(coin))).alias("COIN"),
+        # the same account classification as the transactions task's
+        # accountsByType column (plans/tasks.py)
+        by_type = {
+            "SYSVAR": SYSVAR_ACCOUNTS,
+            "PROGRAM": "programs",
+            "TOKEN": "token_pubkeys",
+            "COIN": COIN_ACCOUNTS,
+        }
+        row = self.df.selectExpr(
+            *(
+                f"array_distinct(flatten(collect_list({e}))) AS {k}"
+                for k, e in by_type.items()
+            )
         ).first()
-        return {k: set(row[k] or []) for k in ("SYSVAR", "PROGRAM", "TOKEN", "COIN")}
+        return {k: set(row[k] or []) for k in by_type}
 
     def find(self, signature: str) -> DataFrame:
         """F7: membership in the FULL signatures array (Block.py:71-77)."""

@@ -15,6 +15,15 @@ import sys
 
 VALID_TASKS = ("transactions", "transfers", "blocks")
 
+# the error-row ``name`` each task's row failures carry (plans/tasks.py;
+# ``blocks`` emits none). The reference runs only the selected tasks, so its
+# errors table holds the ``json_to_blocks`` rows plus those tasks' rows
+# (src/load/FileOutput.py:66-91,157-166).
+TASK_ERROR_NAMES = {
+    "transactions": "blocks_to_transactions",
+    "transfers": "blocks_to_transfers",
+}
+
 
 def expand_tasks(names: list[str]) -> set[str]:
     """Task-name normalization: case-insensitive, 'all' expands
@@ -52,6 +61,8 @@ def cmd_load_file(argv: list[str]) -> int:
     )
     args = p.parse_args(argv)
 
+    from pyspark.sql import functions as F
+
     from solana_etl_spark.session import get_spark
     from solana_etl_spark.sources import read_blocks
     from solana_etl_spark.plans.tasks import run_all_tasks
@@ -67,7 +78,15 @@ def cmd_load_file(argv: list[str]) -> int:
     spark = get_spark(app_name="load-file")
     blocks = read_blocks(spark, f"{args.blocks_dir}/**/*.json*")
     outputs = run_all_tasks(blocks)
-    selected = {k: v for k, v in outputs.items() if k in tasks or k == "errors"}
+    selected = {k: v for k, v in outputs.items() if k in tasks}
+    # a literal name filter: Spark prunes the union branches of unselected
+    # tasks, so their views are never built
+    selected["errors"] = outputs["errors"].filter(
+        F.col("name").isin(
+            "json_to_blocks",
+            *(TASK_ERROR_NAMES[t] for t in tasks if t in TASK_ERROR_NAMES),
+        )
+    )
     write_task_outputs(
         selected,
         args.destination_dir,

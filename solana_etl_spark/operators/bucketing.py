@@ -11,7 +11,7 @@ the shuffle away from every downstream query.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -27,11 +27,3 @@ def write_bucketed(
     if sort_col:
         writer = writer.sortBy(sort_col)
     writer.saveAsTable(table)
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: str
-) -> DataFrame:
-    """Join two tables bucketed on the same key: no Exchange in the plan
-    when bucket counts match."""
-    return spark.table(left_table).join(spark.table(right_table), on)

@@ -238,6 +238,15 @@ def resize_payload(
     ``image/*`` when PIL is present, cyclic-resample stub otherwise."""
     if payload is None:
         raise NotImplementedError("no payload")
+    return _decode_resize(payload, mime, width, height, pil_image)[1]
+
+
+def _decode_resize(
+    payload: bytes, mime: str, width: int, height: int, pil_image=None
+) -> tuple[tuple[int, int], bytes]:
+    """(source dims, resized bytes) from ONE open of the payload — the
+    same gate and values as :func:`decode_dims` + :func:`resize_payload`,
+    which would decode it twice."""
     pil = _decoder_for(
         pil_image if pil_image is not None else _PIL_IMAGE, mime
     )
@@ -245,8 +254,9 @@ def resize_payload(
         import io
 
         with pil.open(io.BytesIO(payload)) as im:
-            return im.resize((width, height)).tobytes()
-    return _resize_stub(payload, width, height)
+            src = (int(im.width), int(im.height))
+            return src, im.resize((width, height)).tobytes()
+    return _decode_stub(payload), _resize_stub(payload, width, height)
 
 
 RESIZE_SCHEMA = StructType(
@@ -297,11 +307,24 @@ def _features(payload: bytes, mime: str) -> tuple:
     return (mime, len(payload), _md5(payload), *decode_dims(payload, mime))
 
 
-def _resized(payload: bytes, mime: str, width: int, height: int) -> tuple:
-    """The resize columns of a :func:`resize` / :func:`decode_report` row:
-    (width, height, resized_md5)."""
-    resized = resize_payload(payload, mime, width, height)
-    return (width, height, _md5(resized))
+def _resize_row(
+    payload: bytes, mime: str, width: int, height: int, pil_image=None
+) -> tuple:
+    """One :func:`resize` row without ``media_id``: (mime, src_width,
+    src_height, width, height, resized_md5), from one open of the
+    payload. ``pil_image`` is :func:`decode_dims`' injectable seam."""
+    src, resized = _decode_resize(payload, mime, width, height, pil_image)
+    return (mime, *src, width, height, _md5(resized))
+
+
+def _report_row(
+    payload: bytes, mime: str, width: int, height: int, pil_image=None
+) -> tuple:
+    """One :func:`decode_report` row without ``media_id``: the
+    :func:`extract_features` columns, then the resize columns, with the
+    dims and the resized bytes from one open of the payload."""
+    resized = _resize_row(payload, mime, width, height, pil_image)
+    return (mime, len(payload), _md5(payload), *resized[1:])
 
 
 def resize(media: DataFrame, width: int = 32, height: int = 32) -> DataFrame:
@@ -312,12 +335,12 @@ def resize(media: DataFrame, width: int = 32, height: int = 32) -> DataFrame:
     Emits the resized content hash rather than the raw bytes so results
     stay comparable across engines.
     """
-
-    def row(payload, mime):
-        src = decode_dims(payload, mime)
-        return ((mime, *src, *_resized(payload, mime, width, height)),)
-
-    return map_payloads(media, row, RESIZE_SCHEMA, ("payload", "mime"))
+    return map_payloads(
+        media,
+        lambda p, m: (_resize_row(p, m, width, height),),
+        RESIZE_SCHEMA,
+        ("payload", "mime"),
+    )
 
 
 def sample_frames(
@@ -363,11 +386,12 @@ def decode_report(media: DataFrame, width: int = 32, height: int = 32) -> DataFr
     deterministic functions of the payload (md5 / len arithmetic / cyclic
     resample), so this whole Python-kernel surface carries a DuckDB
     value-hash oracle in the registry."""
-
-    def row(payload, mime):
-        return (_features(payload, mime) + _resized(payload, mime, width, height),)
-
-    return map_payloads(media, row, DECODE_REPORT_SCHEMA, ("payload", "mime"))
+    return map_payloads(
+        media,
+        lambda p, m: (_report_row(p, m, width, height),),
+        DECODE_REPORT_SCHEMA,
+        ("payload", "mime"),
+    )
 
 
 def extract_features(media: DataFrame) -> DataFrame:

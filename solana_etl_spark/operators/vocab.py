@@ -1,21 +1,25 @@
-"""Distributed BPE vocabulary induction: the tokenizer-training pass of an
-LLM data pipeline, run where the data is.
+"""BPE vocabulary induction: the tokenizer-training pass of an LLM data
+pipeline, run where the data is.
 
 Training a byte-pair-encoding vocabulary over a 100 TB corpus cannot
-collect text to a driver; the standard factorization keeps it distributed:
+collect text to a driver. :func:`train_bpe_merges` has two engines
+behind one distributed scan:
 
 1. one corpus scan reduces the text to a (word, freq) table — typically
-   10^6-10^8 rows regardless of corpus size (Zipf), cached for the rounds;
-2. each merge round is ONE shuffle: explode each word's adjacent symbol
-   pairs weighted by freq, partial-agg'd pair counts, argmax to the driver
-   (a single tiny row — the merge decision is the only driver state, as in
-   fairseq/HF tokenizer trainers);
-3. the chosen merge is applied to every word with a pure column
-   expression — a greedy left-to-right fold (``aggregate``) over the
-   symbol array. No Python UDF anywhere: rounds stay in codegen.
+   10^6-10^8 rows regardless of corpus size (Zipf);
+2. if that table fits under ``DRIVER_WORD_TABLE_CAP`` the classic merge
+   loop runs on the driver (operators/vocab_driver.py, the
+   SentencePiece/HF trainer shape);
+3. otherwise each merge round is ONE shuffle: explode each word's
+   adjacent symbol pairs weighted by freq, partial-agg'd pair counts,
+   argmax to the driver (a single tiny row — the merge decision is the
+   only driver state, as in fairseq/HF tokenizer trainers), and the
+   chosen merge is applied to every word with a pure column expression —
+   a greedy left-to-right fold (``aggregate``) over the symbol array. No
+   Python UDF anywhere: rounds stay in codegen.
 
 Ties on pair count break on (pair_a, pair_b) lexical order, so the merge
-sequence is deterministic across partitionings and engines.
+sequence is deterministic across partitionings, engines and both loops.
 
 The reference has no text surface at all; this is charter LLM-pipeline
 machinery (SURVEY §2.11 family: text analysis / tokenization).
@@ -137,168 +141,6 @@ def _pair_counts(words: DataFrame) -> DataFrame:
     )
 
 
-def _triple_counts(words: DataFrame) -> DataFrame:
-    """Adjacent symbol triples weighted by word freq — the batched-round
-    safety data: any pair CREATED by merging (a, b) has count bounded by
-    some adjacent triple (·, a, b) / (a, b, ·) count (each created-pair
-    occurrence contains a merge site with its left/right neighbor)."""
-    n = F.size("symbols")
-    triples = F.arrays_zip(
-        F.slice("symbols", 1, n - 2).alias("s1"),
-        F.slice("symbols", 2, n - 2).alias("s2"),
-        F.slice("symbols", 3, n - 2).alias("s3"),
-    )
-    return (
-        words.filter(n >= 3)
-        .select(F.explode(triples).alias("t"), "freq")
-        .groupBy(
-            F.col("t.s1").alias("s1"),
-            F.col("t.s2").alias("s2"),
-            F.col("t.s3").alias("s3"),
-        )
-        .agg(F.sum("freq").alias("cnt3"))
-    )
-
-
-def _candidate_adjacent_triple_counts(
-    words: DataFrame, cand: list
-) -> DataFrame:
-    """Triple counts restricted to triples adjacent to the candidate
-    pairs, with the adjacency filter pushed BELOW the shuffle: the
-    explode emits every triple but a literal key-set test drops
-    non-adjacent rows before they pay the exchange, so the triple job's
-    shuffle is candidate-bounded instead of corpus-trigram-bounded.
-    The NUL-joined key can only FALSE-MATCH if a symbol itself contains
-    NUL — which admits extra triples, and extra triples only make the
-    batch policy's bounds more conservative (never unsound)."""
-    keys = sorted({f"{r['a']}\x00{r['b']}" for r in cand})
-    n = F.size("symbols")
-    triples = F.arrays_zip(
-        F.slice("symbols", 1, n - 2).alias("s1"),
-        F.slice("symbols", 2, n - 2).alias("s2"),
-        F.slice("symbols", 3, n - 2).alias("s3"),
-    )
-    exploded = (
-        words.filter(n >= 3)
-        .select(F.explode(triples).alias("t"), "freq")
-        .select(
-            F.col("t.s1").alias("s1"),
-            F.col("t.s2").alias("s2"),
-            F.col("t.s3").alias("s3"),
-            "freq",
-        )
-    )
-    left_key = F.concat_ws("\x00", "s1", "s2")
-    right_key = F.concat_ws("\x00", "s2", "s3")
-    return (
-        exploded.filter(left_key.isin(keys) | right_key.isin(keys))
-        .groupBy("s1", "s2", "s3")
-        .agg(F.sum("freq").alias("cnt3"))
-    )
-
-
-def collect_adjacent_triples(
-    tri: DataFrame, cand: list, cap: int
-) -> tuple[list, int]:
-    """All triples (``tri``: s1, s2, s3, cnt3 rows) adjacent to the
-    candidate pairs (a triple matches a candidate (a, b) as (·, a, b) or
-    (a, b, ·)), sorted by count desc, limited to ``cap`` rows; second
-    value is the conservative floor for uncollected triples (0 unless
-    the collect hit ``cap``, in which case any uncollected adjacent
-    triple has count ≤ the smallest collected one)."""
-    # literal key-set filter instead of two broadcast semi-joins over a
-    # per-round createDataFrame (r10: the createDataFrame + join build
-    # cost ~0.3 s of driver time per round). Same NUL-joined key trick as
-    # _candidate_adjacent_triple_counts: a false match needs a symbol
-    # containing NUL and only ADDS rows, which can only make the cap/floor
-    # (and therefore the batch policy) more conservative, never unsound —
-    # the caller's per-candidate maps still match tuples exactly. tri rows
-    # are grouped (unique), so the old union's distinct() is not needed.
-    keys = sorted({f"{r['a']}\x00{r['b']}" for r in cand})
-    left_key = F.concat_ws("\x00", "s1", "s2")
-    right_key = F.concat_ws("\x00", "s2", "s3")
-    rows = (
-        tri.filter(left_key.isin(keys) | right_key.isin(keys))
-        .orderBy(F.desc("cnt3"), "s1", "s2", "s3")
-        .limit(cap)
-        .collect()
-    )
-    floor = min((r["cnt3"] for r in rows), default=0) if len(rows) == cap else 0
-    return rows, floor
-
-
-def _adjacent_triples(
-    tri: DataFrame, cand: list, cap: int
-) -> tuple[dict[tuple[str, str], int], int]:
-    """{(a, b): max adjacent triple count} + uncollected floor — the BPE
-    batch policy's created-pair bound data."""
-    rows, floor = collect_adjacent_triples(tri, cand, cap)
-    candset = {(c["a"], c["b"]) for c in cand}
-    best: dict[tuple[str, str], int] = {}
-    for r in rows:
-        for key in ((r["s1"], r["s2"]), (r["s2"], r["s3"])):
-            if key in candset:
-                best[key] = max(best.get(key, 0), r["cnt3"])
-    return best, floor
-
-
-TRIPLE_COLLECT_CAP = 8192
-
-
-def _select_bpe_batch(
-    cand: list,
-    want: int,
-    known: set[str],
-    triple_best: dict[tuple[str, str], int],
-    triple_floor: int,
-) -> list[tuple[str, str]]:
-    """The conflict-free batch: the maximal CONTIGUOUS prefix of the
-    (cnt desc, a, b)-sorted candidates that is provably the same sequence
-    classic one-at-a-time training would pick. Candidate c_i joins the
-    batch iff
-
-    1. its symbols {a_i, b_i} and merged token m_i are disjoint from
-       every earlier accepted pair's {a_j, b_j, m_j} — then applying the
-       earlier merges changes neither c_i's count nor its application
-       (old-symbol pairs only ever DECREASE under a merge: adjacency
-       between surviving symbols is never created), and
-    2. cnt(c_i) strictly exceeds every earlier accepted pair's max
-       adjacent-triple count (+ the collect floor when the triple
-       collect was truncated) — every pair CREATED by merge j, including
-       the (m_j, m_j) run case via the (b_j, a_j, b_j) triple, has count
-       ≤ that bound, so classic could not have picked a created pair
-       before c_i, and
-    3. no earlier accepted merged token m_j collides with a pre-existing
-       vocabulary symbol (a collision conflates counts with the existing
-       symbol's pairs, invalidating bound 2) — c_1 itself may collide
-       (classic performs the identical merge), but then the batch stops
-       at size 1.
-
-    Stopping at the FIRST rejection (never skipping) is what preserves
-    equality: a skipped conflicting candidate might still outrank later
-    ones after its count drops."""
-    accepted: list[tuple[str, str]] = []
-    used: set[str] = set()
-    bound = 0
-    stop_after = False
-    for r in cand:
-        a, b, cnt = r["a"], r["b"], r["cnt"]
-        m = a + b
-        if accepted:
-            if stop_after or cnt <= bound:
-                break
-            if {a, b, m} & used:
-                break
-        accepted.append((a, b))
-        used |= {a, b, m}
-        if m in known:
-            stop_after = True
-        bound = max(bound, triple_best.get((a, b), 0), triple_floor)
-        if len(accepted) >= want:
-            break
-    return accepted
-
-
 def train_bpe_merges(
     docs: DataFrame,
     text_col: str = "text",
@@ -314,7 +156,7 @@ def train_bpe_merges(
 
     ``strategy`` picks the training engine for the merge loop; the
     corpus scan that builds the (word, freq) table is distributed in
-    every mode, and ALL modes learn the bit-identical merge list:
+    both modes, and both learn the bit-identical merge list:
 
     - ``"auto"`` (default): collect the word table under
       ``driver_word_cap`` (LIMIT cap+1, so an over-cap table never
@@ -322,26 +164,20 @@ def train_bpe_merges(
       in-process — the SentencePiece/HF trainer shape, exploiting that
       the word table is Zipf-bounded (the operators/lm.py argument):
       ~10^6-10^8 rows at ANY corpus size. Measured on the 50k-doc
-      scaling corpus: 512 merges in ~3 s where the distributed classic
-      loop extrapolates to ~258 s and the batched loop measured 447 s —
-      this is the production 32k-merge path. Falls back to the
-      distributed rounds past the cap.
-    - ``"driver"``: force the driver path; raises past the cap (the
-      train_cap/BROADCAST_CANDIDATE_CAP fail-loudly discipline).
-    - ``"distributed"``: the r6/r7 round loop. ``batch_size=1`` is the
-      classic one-merge-per-round oracle mode; ``batch_size>1`` applies
-      up to that many merges per round under :func:`_select_bpe_batch`'s
-      provable conflict policy (identical merge list, property-tested in
-      tests/test_vocab_batched.py). Measured honestly: provable classic
-      equality caps the realized batch factor at ~1.7 on Zipf text
-      (created-successor chains are real sequential dependencies), so
-      batching pays only where per-job scheduler round-trips dominate —
-      and the driver path above beats both whenever the word table fits,
-      which is why it is the default.
+      scaling corpus: 512 merges in ~3 s where the distributed loop
+      extrapolates to ~258 s — this is the production 32k-merge path.
+      Falls back to the distributed rounds past the cap.
+    - ``"distributed"``: the classic round loop, one merge per round
+      (pair-count shuffle → argmax row → fold apply → localCheckpoint).
+      It is the over-cap fallback and the bench's equality anchor.
 
-    Classic distributed measurements at sf0.01 (localCheckpoint
-    lineage truncation): ~0.3 s/round, flat with round count; the
-    32-merge run's first 16 merges equal the 16-merge run's."""
+    ``batch_size`` must be 1 (one merge per round). The parameter
+    remains only because existing callers (bench.py's classic anchor)
+    pass ``batch_size=1``; any other value raises.
+
+    Distributed measurements at sf0.01 (localCheckpoint lineage
+    truncation): ~0.3 s/round, flat with round count; the 32-merge
+    run's first 16 merges equal the 16-merge run's."""
     from solana_etl_spark.operators.vocab_driver import (
         DRIVER_WORD_TABLE_CAP,
         bpe_merges_from_word_freqs,
@@ -349,10 +185,14 @@ def train_bpe_merges(
 
     if driver_word_cap is None:
         driver_word_cap = DRIVER_WORD_TABLE_CAP
-    if strategy not in ("auto", "driver", "distributed"):
+    if strategy not in ("auto", "distributed"):
         raise ValueError(f"unknown strategy {strategy!r}")
+    if batch_size != 1:
+        raise ValueError(
+            f"batch_size must be 1 (one merge per round), got {batch_size!r}"
+        )
     words_tbl = word_freq_table(docs, text_col)
-    if strategy in ("auto", "driver"):
+    if strategy == "auto":
         rows = words_tbl.limit(driver_word_cap + 1).collect()
         if len(rows) <= driver_word_cap:
             if stats is not None:
@@ -363,62 +203,23 @@ def train_bpe_merges(
                 n_merges,
                 append_eow,
             )
-        if strategy == "driver":
-            raise ValueError(
-                f"word table exceeds driver_word_cap={driver_word_cap}; "
-                "use strategy='auto' (distributed fallback) or raise the cap"
-            )
     if stats is not None:
         stats["strategy"] = "distributed"
     words = words_tbl.withColumn(
         "symbols", _initial_symbols(F.col("word"), append_eow)
     )
-    # the words table's symbol set is exactly (initial alphabet ∪ applied
-    # merges) — symbols never appear any other way — so merged-token
-    # collisions (policy rule 3) are checked against driver state, free
-    known: set[str] = set()
-    if batch_size > 1:
-        known = {
-            r["s"]
-            for r in words.select(F.explode("symbols").alias("s"))
-            .distinct()
-            .collect()
-        }
     merges: list[tuple[str, str]] = []
     while len(merges) < n_merges:
-        want = min(batch_size, n_merges - len(merges))
-        if want == 1:
-            top = (
-                _pair_counts(words)
-                .orderBy(F.desc("cnt"), F.asc("a"), F.asc("b"))
-                .first()
-            )
-            batch = [(top["a"], top["b"])] if top is not None else []
-        else:
-            cand = (
-                _pair_counts(words)
-                .orderBy(F.desc("cnt"), F.asc("a"), F.asc("b"))
-                .limit(want)
-                .collect()
-            )
-            batch = []
-            if cand:
-                # second (cheap) job: triple counts with the candidate-
-                # adjacency filter pushed below the shuffle
-                tri = _candidate_adjacent_triple_counts(words, cand)
-                triple_best, triple_floor = _adjacent_triples(
-                    tri, cand, TRIPLE_COLLECT_CAP
-                )
-                batch = _select_bpe_batch(
-                    cand, want, known, triple_best, triple_floor
-                )
-        if not batch:
+        top = (
+            _pair_counts(words)
+            .orderBy(F.desc("cnt"), F.asc("a"), F.asc("b"))
+            .first()
+        )
+        if top is None:
             break
         if stats is not None:
             stats["rounds"] = stats.get("rounds", 0) + 1
-            stats.setdefault("batch_sizes", []).append(len(batch))
-        merges.extend(batch)
-        known.update(a + b for a, b in batch)
+        merges.append((top["a"], top["b"]))
         # localCheckpoint, NOT persist+count: a persist chain keeps every
         # prior round's (large, interpreted) merge-fold plan as an
         # un-executed child, and Catalyst re-canonicalizes that
@@ -428,13 +229,10 @@ def train_bpe_merges(
         # default 16 merges the persist chain was still fine (~2 s/round),
         # but the loop is O(rounds²) either way — truncation makes it
         # linear. Same learned merges: checkpointing changes lineage only.
-        # Batched rounds chain the (mutually disjoint, hence commuting)
-        # merges as nested folds in ONE projection before the checkpoint —
-        # composed as SQL text, one parse per round (r10, guide §7.3)
-        expr = "symbols"
-        for a, b in batch:
-            expr = merge_pair_sql(expr, a, b)
-        words = words.withColumn("symbols", F.expr(expr)).localCheckpoint()
+        # The fold is SQL text, one parse per round (r10, guide §7.3).
+        words = words.withColumn(
+            "symbols", F.expr(merge_pair_sql("symbols", top["a"], top["b"]))
+        ).localCheckpoint()
     return merges
 
 

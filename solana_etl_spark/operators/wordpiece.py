@@ -7,8 +7,11 @@ merge loop where each round merges the adjacent symbol pair maximizing
 increases corpus likelihood under a unigram LM — instead of raw pair
 frequency. Continuation symbols carry the ``##`` prefix; merging
 ``(a, ##b)`` produces ``a + b`` (``##`` stays only on the left piece's
-prefix). The loop reuses vocab.py's fold-based greedy pair merge; each
-round costs one pair-count shuffle + one bounded symbol-count aggregate,
+prefix). Like BPE, training has two engines behind one distributed
+(word, freq) scan: the driver loop (operators/vocab_driver.py) when the
+table fits under ``DRIVER_WORD_TABLE_CAP``, else a distributed loop that
+reuses vocab.py's fold-based greedy pair merge — one merge per round,
+each round one pair-count shuffle + one bounded symbol-count aggregate,
 with only the argmax row collected (driver state = the vocabulary, like
 BPE merges / k-means centroids).
 
@@ -50,178 +53,11 @@ def _strip_cont(sym: str) -> str:
     return sym[len(CONT) :] if sym.startswith(CONT) else sym
 
 
-def _select_wp_batch(
-    cand: list,
-    want: int,
-    known: set[str],
-    adj: dict[tuple[str, str], list[tuple[int, str]]],
-    truncated: bool,
-    sym_cnt: dict[str, int],
-) -> list[tuple[str, str, str]]:
-    """Conflict-free WordPiece batch: the maximal contiguous prefix of
-    the (score desc, a, b)-sorted candidates provably equal to classic
-    one-at-a-time selection. ``cand`` holds ``want + 1`` collected rows
-    when available — the first ``want`` are the batch window; the extra
-    row witnesses the exact score FLOOR of every uncollected pair.
-
-    After merging (a, b) → m, the pairs whose score can RISE (and could
-    therefore out-rank the next candidate in classic's ordering) are:
-
-    * created pairs (z, m)/(m, z)/(m, m) — count bounded by the matching
-      PRE-round adjacent triple (z, a, b)/(a, b, z) (the run case (m, m)
-      maps to (b, a, b); neighbors that are other accepted pairs' merged
-      tokens reduce to pre-round triples over their constituents), so
-      score ≤ cnt3 / (z_lb · m_lb) with z_lb the neighbor's post-count
-      lower bound (min'd with a constituent pair's m_lb when z is one of
-      its symbols, covering the merged-token reading);
-    * surviving old-symbol pairs touching shrunk symbols. Their COUNTS
-      never rise (adjacency between surviving symbols is never created),
-      so score_post ≤ score_pre · Π (cs_pre / cs_post) over their shrunk
-      symbol slots. Pairs OUTSIDE the collected window have
-      score_pre ≤ the floor row's exact score: bound = floor · f_max²
-      with f_max the largest single-symbol shrink factor so far. Pairs
-      INSIDE the window get exact per-row bounds cnt_r/(lb_a · lb_b)
-      whenever they touch an accepted symbol (and are rejected outright
-      if they become the current candidate — their live score is stale).
-
-    A bound whose data is incomplete (triple collect truncated, a
-    created-pair neighbor later consumed — guarded by rejecting
-    candidates whose symbols appear as earlier bound neighbors — or a
-    post-count lower bound ≤ 0) stops the batch instead of guessing.
-    All comparisons are exact integer cross-products (cnt·q > p·ca·cb),
-    never doubles. For a ≠ b the post counts are exact (every adjacency
-    occurrence greedily merges: overlaps need a == b); for a == b merges
-    ∈ [cnt/2, cnt], so m_lb = ceil(cnt/2) and post ≥ ca − 2·cnt. Stops
-    at the FIRST rejection — skipping a conflicted candidate could
-    reorder classic's later picks. Classic never sees a batch > 1 whose
-    equality this policy cannot prove; corpora whose top scores chain
-    into created pieces (the common WordPiece regime) degenerate to
-    classic, correctly."""
-    window = cand[:want]
-    extra = cand[want] if len(cand) > want else None
-    accepted: list[tuple[str, str, str]] = []
-    used: set[str] = set()
-    pair_of: dict[str, tuple[int, int]] = {}  # symbol -> (post_lb, m_lb)
-    neighbors: set[str] = set()
-    bounds: list[tuple[int, int]] = []  # rationals p/q: score must be > p/q
-    fmax: tuple[int, int] | None = None  # largest (pre, post) shrink factor
-    stop_after = False
-    for idx, r in enumerate(window):
-        a, b, cnt, ca, cb = r["a"], r["b"], r["cnt"], r["ca"], r["cb"]
-        m = a + _strip_cont(b)
-        if accepted:
-            if stop_after or ({a, b, m} & used) or ({a, b} & neighbors):
-                break
-            denom = ca * cb
-            if not all(cnt * q > p * denom for p, q in bounds):
-                break
-        accepted.append((a, b, m))
-        used |= {a, b, m}
-        if m in known or truncated:
-            stop_after = True
-        if a != b:
-            m_lb, a_post, b_post = cnt, ca - cnt, cb - cnt
-        else:
-            # at least ceil(cnt/2) merges; each consumes two a's
-            m_lb, a_post, b_post = (cnt + 1) // 2, ca - 2 * cnt, ca - 2 * cnt
-        if m_lb <= 0 or a_post <= 0 or b_post <= 0:
-            stop_after = True
-            continue
-        own = {a: (a_post, m_lb), b: (b_post, m_lb)}
-        pair_of.update(own)
-        # created pairs of THIS merge: one exact bound per adjacent
-        # pre-round triple (later merges only shrink triple counts)
-        for cnt3, z in adj.get((a, b), ()):
-            if z in own:
-                z_lb = min(*own[z])
-            elif z in pair_of:
-                z_lb = min(*pair_of[z])
-            elif z in sym_cnt:
-                z_lb = sym_cnt[z]
-            else:
-                z_lb = 0
-            if z_lb <= 0:
-                stop_after = True
-                break
-            bounds.append((cnt3, z_lb * m_lb))
-            neighbors.add(z)
-        # boosted survivors OUTSIDE the window: floor score × f_max²
-        for s_pre, s_post in ((ca, a_post), (cb, b_post)):
-            if fmax is None or s_pre * fmax[1] > fmax[0] * s_post:
-                fmax = (s_pre, s_post)
-        if extra is not None:
-            fp, fq = extra["cnt"], extra["ca"] * extra["cb"]
-            bounds.append(
-                (fp * fmax[0] * fmax[0], fq * fmax[1] * fmax[1])
-            )
-        # boosted survivors INSIDE the window (later rows touching any
-        # accepted symbol): exact per-row bounds with post-count lbs
-        for rr in window[idx + 1:]:
-            if rr["a"] in pair_of or rr["b"] in pair_of:
-                lb_a = (
-                    pair_of[rr["a"]][0]
-                    if rr["a"] in pair_of
-                    else rr["ca"]
-                )
-                lb_b = (
-                    pair_of[rr["b"]][0]
-                    if rr["b"] in pair_of
-                    else rr["cb"]
-                )
-                if lb_a <= 0 or lb_b <= 0:
-                    stop_after = True
-                    break
-                bounds.append((rr["cnt"], lb_a * lb_b))
-    return accepted
-
-
-def _wp_adjacent_data(
-    words: DataFrame, syms: DataFrame, cand: list
-) -> tuple[
-    dict[tuple[str, str], list[tuple[int, str]]], bool, dict[str, int]
-]:
-    """Batch-safety data for one WordPiece round: per candidate pair the
-    (adjacent triple count, neighbor symbol) list, whether the triple
-    collect truncated, and the neighbor symbols' counts (read from the
-    round's already-persisted symbol-count table)."""
-    from solana_etl_spark.operators.vocab import (
-        _triple_counts,
-        collect_adjacent_triples,
-    )
-
-    rows, floor = collect_adjacent_triples(
-        _triple_counts(words), cand, TRIPLE_COLLECT_CAP
-    )
-    candset = {(c["a"], c["b"]) for c in cand}
-    adj: dict[tuple[str, str], list[tuple[int, str]]] = {}
-    neighbors: set[str] = set()
-    for r in rows:
-        if (r["s2"], r["s3"]) in candset:
-            adj.setdefault((r["s2"], r["s3"]), []).append((r["cnt3"], r["s1"]))
-            neighbors.add(r["s1"])
-        if (r["s1"], r["s2"]) in candset:
-            adj.setdefault((r["s1"], r["s2"]), []).append((r["cnt3"], r["s3"]))
-            neighbors.add(r["s3"])
-    sym_cnt: dict[str, int] = {}
-    if neighbors:
-        sym_cnt = {
-            r["s"]: r["scnt"]
-            for r in syms.filter(
-                F.col("s").isin(list(neighbors))
-            ).collect()
-        }
-    return adj, floor > 0, sym_cnt
-
-
-TRIPLE_COLLECT_CAP = 8192
-
-
 def train_wordpiece_vocab(
     docs: DataFrame,
     text_col: str = "text",
     n_merges: int = 16,
     max_piece_len: int = MAX_PIECE_LEN,
-    batch_size: int = 1,
     strategy: str = "auto",
     driver_word_cap: int | None = None,
 ) -> list[str]:
@@ -234,22 +70,12 @@ def train_wordpiece_vocab(
 
     Merge candidates whose merged CONTENT (##-stripped) would exceed
     ``max_piece_len`` are skipped: the greedy encoder
-    (:func:`wordpiece_encode`) only matches pieces up to that many word
+    (:func:`wordpiece_segment`) only matches pieces up to that many word
     chars, so a longer merged piece would be silently unreachable —
     trained but never matched, shifting encode segmentations toward
     shorter pieces. Training and encoding therefore share one bound by
     construction. (No fixture merge ever reached the bound, so learned
     vocabularies at the defaults are unchanged.)
-
-    ``batch_size>1`` applies up to that many merges per round under
-    :func:`_select_wp_batch`'s provable conflict policy — the learned
-    vocabulary is IDENTICAL to classic ``batch_size=1`` (the oracle
-    mode; property-tested), at one pair-score round-trip per BATCH
-    instead of per merge. WordPiece batches shallower than BPE by
-    nature: the likelihood score rewards chaining into just-created
-    pieces (cnt_m is tiny, so created pairs often win the next round),
-    and the policy correctly degenerates to classic exactly when
-    classic's own choices are sequentially dependent.
 
     ``strategy="auto"`` (default) runs the merge loop DRIVER-SIDE over
     the collected (word, freq) table when it fits under
@@ -257,10 +83,10 @@ def train_wordpiece_vocab(
     so this is the production path for large vocabularies (the
     SentencePiece/HF trainer shape; see
     operators/vocab_driver.py:wordpiece_vocab_from_word_freqs) — and
-    falls back to the distributed rounds past the cap. The learned
-    vocabulary is bit-identical in every mode. ``strategy="driver"``
-    forces the driver path (raises past the cap);
-    ``strategy="distributed"`` forces the round loop."""
+    falls back to the distributed rounds past the cap.
+    ``strategy="distributed"`` forces the round loop: one merge per
+    round, from one collected argmax row. The learned vocabulary is
+    bit-identical in both modes."""
     from solana_etl_spark.operators.vocab_driver import (
         DRIVER_WORD_TABLE_CAP,
         wordpiece_vocab_from_word_freqs,
@@ -268,9 +94,9 @@ def train_wordpiece_vocab(
 
     if driver_word_cap is None:
         driver_word_cap = DRIVER_WORD_TABLE_CAP
-    if strategy not in ("auto", "driver", "distributed"):
+    if strategy not in ("auto", "distributed"):
         raise ValueError(f"unknown strategy {strategy!r}")
-    if strategy in ("auto", "driver"):
+    if strategy == "auto":
         rows = (
             word_freq_table(docs, text_col)
             .limit(driver_word_cap + 1)
@@ -281,11 +107,6 @@ def train_wordpiece_vocab(
                 ((r["word"], r["freq"]) for r in rows),
                 n_merges,
                 max_piece_len,
-            )
-        if strategy == "driver":
-            raise ValueError(
-                f"word table exceeds driver_word_cap={driver_word_cap}; "
-                "use strategy='auto' (distributed fallback) or raise the cap"
             )
     base = word_freq_table(docs, text_col).withColumn(
         "symbols", _initial_wp_symbols(F.col("word"))
@@ -302,10 +123,8 @@ def train_wordpiece_vocab(
             .orderBy("s")
             .collect()
         ]
-        known = set(alphabet)
         merges: list[str] = []
         while len(merges) < n_merges:
-            want = min(batch_size, n_merges - len(merges))
             n = F.size("symbols")
             content_len = F.length(
                 F.regexp_replace(F.col("p.a"), f"^{CONT}", "")
@@ -354,30 +173,13 @@ def train_wordpiece_vocab(
                 )
                 .orderBy(F.desc("score"), F.asc("a"), F.asc("b"))
             )
-            # one extra row beyond the batch window: the exact score
-            # floor of every uncollected pair (see _select_wp_batch)
-            cand = scored.limit(want + 1 if want > 1 else 1).collect()
-            if not cand:
-                syms.unpersist()
-                break
-            if want > 1 and len(cand) > 1:
-                adj, truncated, sym_cnt = _wp_adjacent_data(
-                    words, syms, cand[:want]
-                )
-                batch = _select_wp_batch(
-                    cand, want, known, adj, truncated, sym_cnt
-                )
-            else:
-                batch = [
-                    (
-                        cand[0]["a"],
-                        cand[0]["b"],
-                        cand[0]["a"] + _strip_cont(cand[0]["b"]),
-                    )
-                ]
+            top = scored.limit(1).collect()
             syms.unpersist()
-            merges.extend(m for _, _, m in batch)
-            known.update(m for _, _, m in batch)
+            if not top:
+                break
+            a, b = top[0]["a"], top[0]["b"]
+            merged = a + _strip_cont(b)
+            merges.append(merged)
             # localCheckpoint (not persist+count): the merge fold is a
             # large interpreted expression tree, and a persist keeps every
             # prior round's plan as its un-executed child — Catalyst then
@@ -386,14 +188,9 @@ def train_wordpiece_vocab(
             # 24 rounds on the 31-word fixture blew past 15 min; with
             # truncation the loop is seconds per round). Same fix as the
             # pointer-jumping CC loop (dedup.connected_components).
-            # Batched rounds chain the (mutually disjoint, commuting)
-            # merge folds in ONE projection before the checkpoint —
-            # composed as SQL text, one parse per round (r10, guide §7.3)
-            expr = "symbols"
-            for a, b, merged in batch:
-                expr = merge_pair_sql(expr, a, b, merged=merged)
+            # The fold is SQL text, one parse per round (r10, guide §7.3).
             words = words.withColumn(
-                "symbols", F.expr(expr)
+                "symbols", F.expr(merge_pair_sql("symbols", a, b, merged))
             ).localCheckpoint()
         return alphabet + merges
     finally:

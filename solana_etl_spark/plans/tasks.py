@@ -36,10 +36,6 @@ from solana_etl_spark.plans.views import transactions_view, transfers_view
 _SOURCE = "element_at(split(path, '/'), -1)"
 
 
-def _source(path_col: Column) -> Column:
-    return F.element_at(F.split(path_col, "/"), -1)
-
-
 def _json_int_map_sql(mode_case: str) -> str:
     """Per-mint aggregated token change as a JSON map mint → float.
 
@@ -66,10 +62,10 @@ to_json(map_from_entries(transform(mints, m ->
 _OUT_MODE = "CASE WHEN c.change < 0 THEN c.change ELSE 0 END"
 _IN_MODE = "CASE WHEN c.change > 0 THEN c.change ELSE 0 END"
 
-_SYSVAR_ACCOUNTS = (
+SYSVAR_ACCOUNTS = (
     "transform(filter(account_types, a -> a.is_sysvar), a -> a.pubkey)"
 )
-_COIN_ACCOUNTS = (
+COIN_ACCOUNTS = (
     "transform(filter(account_types,"
     " a -> NOT a.is_sysvar AND NOT a.is_program AND NOT a.is_token),"
     " a -> a.pubkey)"
@@ -88,10 +84,10 @@ def transactions_task(txs: DataFrame) -> DataFrame:
         "to_json(programs) AS programs",
         "CAST(num_accounts AS TINYINT) AS numAccounts",
         f"""to_json(struct(
-            {_SYSVAR_ACCOUNTS} AS SYSVAR,
+            {SYSVAR_ACCOUNTS} AS SYSVAR,
             programs AS PROGRAM,
             token_pubkeys AS TOKEN,
-            {_COIN_ACCOUNTS} AS COIN)) AS accountsByType""",
+            {COIN_ACCOUNTS} AS COIN)) AS accountsByType""",
         "lamports_out AS lamportsOut",
         "lamports_in AS lamportsIn",
         "CAST(size(mints) AS TINYINT) AS numMints",
@@ -153,7 +149,7 @@ def blocks_task(txs: DataFrame, blocks_raw: DataFrame) -> DataFrame:
     error row — per-row isolation is strictly more informative, so the
     rollup keeps the block.
     """
-    per_tx = txs.withColumn("coin_pubkeys", F.expr(_COIN_ACCOUNTS))
+    per_tx = txs.withColumn("coin_pubkeys", F.expr(COIN_ACCOUNTS))
 
     def partition_aggs(flag: str, prefix: str, num_name: str) -> list[Column]:
         def cnt(cond: str, alias: str) -> str:

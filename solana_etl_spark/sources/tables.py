@@ -27,8 +27,3 @@ def load_tables(
 ) -> dict[str, DataFrame]:
     """Load the named tables; parquet keeps pushdown + pruning intact."""
     return {t: spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in tables}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

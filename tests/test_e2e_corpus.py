@@ -51,3 +51,23 @@ def test_e2e_corpus_all_tasks(spark):
         .collect()
     )
     assert any(k.is_sol for k in kinds) and any(not k.is_sol for k in kinds)
+
+
+def test_accounts_by_type_equals_transactions_task(spark):
+    """api.Transactions.accounts_by_type classifies accounts exactly like
+    the transactions task's accountsByType column: its sets are the union
+    of that column over the corpus."""
+    import json
+
+    from solana_etl_spark.api import Transactions
+
+    corpus = ensure_e2e_corpus()
+    blocks_raw = read_blocks(spark, f"{corpus}/*/*.json.gz")
+    got = Transactions.from_blocks(blocks_raw).accounts_by_type()
+    want: dict[str, set] = {k: set() for k in got}
+    task = run_all_tasks(blocks_raw, persist=False)["transactions"]
+    for r in task.select("accountsByType").collect():
+        for k, accounts in json.loads(r.accountsByType).items():
+            want[k].update(accounts)
+    assert got == want
+    assert all(want.values())

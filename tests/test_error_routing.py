@@ -187,3 +187,29 @@ def test_null_blocktime_block_still_aggregates(spark, tmp_path):
     assert rows[0].time is None
     assert rows[0].numTransactions == 1
     assert rows[0].numSuccessful == 1
+
+
+def test_load_file_errors_hold_only_selected_tasks(spark, tmp_path):
+    """load-file's errors table holds the json_to_blocks rows plus the
+    SELECTED tasks' rows, like the reference, which runs only those tasks
+    (src/load/FileOutput.py:66-91,157-166)."""
+    from solana_etl_spark.cli import cmd_load_file
+
+    blocks = tmp_path / "blocks" / "0"
+    blocks.mkdir(parents=True)
+    with gzip.open(blocks / "7.json.gz", "w") as f:
+        f.write(json.dumps(BROKEN_TOKEN_TRANSFER_BLOCK).encode())
+    (blocks / "900000002.json").write_text("not json {{{")
+
+    def error_names(tasks):
+        dest = tmp_path / f"out_{tasks}"
+        assert cmd_load_file([tasks, str(tmp_path / "blocks"), str(dest)]) == 0
+        rows = spark.read.csv(
+            str(dest / "errors"),
+            header=True,
+            schema="name string, block string, message string",
+        ).collect()
+        return sorted(r.name for r in rows)
+
+    assert error_names("transactions") == ["json_to_blocks"]
+    assert error_names("all") == ["blocks_to_transfers", "json_to_blocks"]

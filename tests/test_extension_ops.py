@@ -382,6 +382,66 @@ def test_multimodal_codec_capability_gate():
         decode_dims(None, "image/png", pil_image=_FakePIL)
 
 
+def test_resize_rows_open_each_payload_once():
+    """The resize and decode_report row kernels take the source dims and
+    the resized bytes from ONE open of the payload, with the same values
+    as decode_dims + resize_payload."""
+    import hashlib
+
+    from solana_etl_spark.operators.multimodal import (
+        _report_row,
+        _resize_row,
+        decode_dims,
+        resize_payload,
+    )
+
+    class _Im:
+        width, height = 7, 5
+
+        def resize(self, wh):
+            self._wh = wh
+            return self
+
+        def tobytes(self):
+            return b"\x02" * (self._wh[0] * self._wh[1])
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *a):
+            return False
+
+    class _CountingPIL:
+        opens = 0
+
+        @classmethod
+        def open(cls, fh):
+            cls.opens += 1
+            return _Im()
+
+    payload = b"\x89PNG counted payload"
+    dims = decode_dims(payload, "image/png", pil_image=_CountingPIL)
+    resized_md5 = hashlib.md5(
+        resize_payload(payload, "image/png", 4, 2, pil_image=_CountingPIL)
+    ).hexdigest()
+    _CountingPIL.opens = 0
+    row = _resize_row(payload, "image/png", 4, 2, pil_image=_CountingPIL)
+    assert _CountingPIL.opens == 1
+    assert row == ("image/png", *dims, 4, 2, resized_md5)
+    _CountingPIL.opens = 0
+    row = _report_row(payload, "image/png", 4, 2, pil_image=_CountingPIL)
+    assert _CountingPIL.opens == 1
+    assert row == (
+        "image/png",
+        len(payload),
+        hashlib.md5(payload).hexdigest(),
+        *dims,
+        4,
+        2,
+        resized_md5,
+    )
+
+
 def test_vendored_png_error_contract():
     """functions/png.py promises ValueError on ANYTHING undecodable:
     truncated headers and corrupt zlib streams must not leak struct.error

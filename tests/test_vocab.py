@@ -7,6 +7,7 @@ from __future__ import annotations
 import re
 from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from solana_etl_spark.operators.vocab import (
@@ -93,6 +94,22 @@ def test_bpe_merge_sequence_matches_reference(spark):
     assert got == _ref_train(CORPUS, 12)
     dist = train_bpe_merges(docs, n_merges=12, strategy="distributed")
     assert dist == got
+
+
+def test_distributed_loop_is_one_merge_per_round(spark):
+    """bench.py's classic-anchor call shape learns the reference merges;
+    batched rounds and the forced driver mode no longer exist."""
+    docs = spark.createDataFrame([(t,) for t in CORPUS], "text string")
+    stats: dict = {}
+    got = train_bpe_merges(
+        docs, n_merges=12, strategy="distributed", batch_size=1, stats=stats
+    )
+    assert got == _ref_train(CORPUS, 12)
+    assert stats == {"strategy": "distributed", "rounds": 12}
+    with pytest.raises(ValueError, match="batch_size"):
+        train_bpe_merges(docs, n_merges=12, batch_size=2)
+    with pytest.raises(ValueError, match="unknown strategy"):
+        train_bpe_merges(docs, n_merges=12, strategy="driver")
 
 
 def test_apply_bpe_consistent_with_training(spark):

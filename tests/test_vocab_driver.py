@@ -8,7 +8,6 @@ from __future__ import annotations
 
 from collections import Counter
 
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -87,21 +86,12 @@ def test_hybrid_dispatch_cap_fallback(spark):
     stats = {}
     got = train_bpe_merges(docs, n_merges=12, stats=stats, driver_word_cap=3)
     assert got == want and stats["strategy"] == "distributed"
-    # forced driver over the cap fails loudly
-    with pytest.raises(ValueError, match="driver_word_cap"):
-        train_bpe_merges(
-            docs, n_merges=12, strategy="driver", driver_word_cap=3
-        )
     # wordpiece: same dispatch contract
     wp_want = _wp_ref(dict(_word_freqs(CORPUS)), n_merges=8)
     assert train_wordpiece_vocab(docs, n_merges=8) == wp_want
     assert (
         train_wordpiece_vocab(docs, n_merges=8, driver_word_cap=3) == wp_want
     )
-    with pytest.raises(ValueError, match="driver_word_cap"):
-        train_wordpiece_vocab(
-            docs, n_merges=8, strategy="driver", driver_word_cap=3
-        )
 
 
 def test_driver_word_table_memory_per_row_is_budgeted():

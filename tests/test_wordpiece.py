@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from solana_etl_spark.operators.wordpiece import (
@@ -91,6 +92,8 @@ def test_training_matches_reference(spark):
     assert got == want
     # distributed round loop learns the identical vocabulary
     assert train_wordpiece_vocab(docs, n_merges=8, strategy="distributed") == want
+    with pytest.raises(ValueError, match="unknown strategy"):
+        train_wordpiece_vocab(docs, n_merges=8, strategy="driver")
 
 
 def test_greedy_segment_matches_reference(spark):
