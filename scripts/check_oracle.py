@@ -8,12 +8,13 @@ Usage: python scripts/check_oracle.py [sf_dir] [query_name ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from solana_etl_spark.queries import all_queries, all_oracle_sql  # noqa: E402
 from solana_etl_spark.session import get_spark  # noqa: E402

@@ -100,8 +100,7 @@ def word_shingles(text_col: str = "text") -> Column:
 def expand_sorted_pairs(postings: DataFrame, docs_col: str = "_docs") -> DataFrame:
     """Expand each row's sorted ``docs_col`` array into its ordered pairs
     ``(doc_a < doc_b)`` — the shared kernel of every bucket/posting-list pair
-    emitter (minhash LSH, shingle/ngram Jaccard inverted index, prefix
-    filter).
+    emitter (minhash LSH, shingle/ngram Jaccard inverted index).
 
     Two codegen Generate ops (posexplode anchor, then explode of the suffix
     slice) instead of one interpreted flatten/transform lambda building the
@@ -742,7 +741,8 @@ def ngram_jaccard_pairs(
     # Round-4 measurements, auto-selecting a dense-corpus variant REJECTED:
     # on a 50k-doc Zipf-vocab corpus (hot grams in ~every doc) this plan
     # streams 1.15B candidate rows (133 s for 22 true pairs), but the
-    # prefix-filtered PPJoin variant is NOT the answer — it still admits
+    # prefix-filtered PPJoin variant (slower on both corpora — 12.1 s vs
+    # 5.1 s at sf0.1 — and since deleted) is NOT the answer — it admitted
     # 18.9M distinct candidates at t=0.7 (long docs ⇒ ~90-gram prefixes)
     # plus a per-doc rank of the whole gram stream (147 s), and riding the
     # doc sizes through the postings (struct collect_list, 4-key pair agg)
@@ -903,85 +903,6 @@ def ngram_containment_pairs(
     )
 
 
-def ngram_jaccard_pairs_prefix(
-    documents: DataFrame, threshold: float = JACCARD_THRESHOLD
-) -> DataFrame:
-    """Prefix-filtered exact Jaccard (AllPairs/PPJoin family): identical
-    output to :func:`ngram_jaccard_pairs`, different asymptotics.
-
-    Order the gram universe by ascending document frequency; index only each
-    document's prefix — its ``n - ceil(t*n) + 1`` RAREST grams. The prefix
-    lemma (Chaudhuri/Ganti/Kaushik; Bayardo et al. "Scaling Up All Pairs
-    Similarity Search") guarantees any pair with Jaccard ≥ t shares a prefix
-    gram, so candidates from prefix postings have perfect recall; each
-    candidate is then verified exactly with one ``array_intersect``.
-
-    Tradeoff, measured on the synthetic corpus at sf0.1: the inverted-index
-    count plan streams 9.8M (pair × shared-gram) rows but is one fused
-    shuffle (5.1 s); this plan cuts the candidate stream to 1.1M (rare grams
-    have short postings) at the cost of a df join + per-doc rank + verify
-    joins (12.1 s). The count plan's stream grows ~quadratically with
-    per-(lang, source) group size while the prefix stream tracks true-
-    near-dup density, so THIS is the formulation to reach for when groups
-    are 10-100× larger than bench scale; both are exact, pick by corpus
-    shape.
-    """
-    base = (
-        ensure_compute_parallelism(documents)
-        .select(
-            "doc_id",
-            "lang",
-            "source",
-            char_ngrams("text", NGRAM_N).alias("grams"),
-        )
-        .withColumn("n", F.size("grams"))
-    )
-    g = base.select(
-        "doc_id", "lang", "source", "n", F.explode("grams").alias("ngram")
-    )
-    dfreq = g.groupBy("ngram").agg(F.count(F.lit(1)).alias("df"))
-    w = Window.partitionBy("doc_id").orderBy("df", "ngram")
-    prefix = (
-        g.join(dfreq, "ngram")
-        .withColumn("rk", F.row_number().over(w))
-        .filter(
-            F.col("rk")
-            <= F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1
-        )
-    )
-    postings = (
-        prefix.groupBy("ngram", "lang", "source")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("_docs"))
-        .filter(F.size("_docs") > 1)
-    )
-    cands = expand_sorted_pairs(postings).distinct()
-    ga = base.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("grams").alias("grams_a"),
-        F.col("n").alias("na"),
-    )
-    gb = base.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("grams").alias("grams_b"),
-        F.col("n").alias("nb"),
-    )
-    return (
-        cands.join(ga, "doc_a")
-        .join(gb, "doc_b")
-        .withColumn("n_inter", F.size(F.array_intersect("grams_a", "grams_b")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter")
-                / (F.col("na") + F.col("nb") - F.col("n_inter")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-
-
 SPAN_W = 8  # duplicated-span window length in tokens (Lee et al. use 50
 # BPE tokens on web corpora; fixture docs are 10-100 words, so 8 keeps the
 # operator non-vacuous at every sf — 45/47/477 spans at sf0.001/0.01/0.1)
@@ -1090,10 +1011,10 @@ def lsh_jaccard_pairs(
     Why it exists (round-4 measurements on the 50k-doc Zipf corpus,
     threshold 0.7): the inverted-index count plan generates 1.15 BILLION
     candidate (pair × shared-gram) rows (Σ C(df,2) over hot grams — 133 s
-    for 22 true pairs); the prefix-filtered PPJoin variant still admits
-    18.9 M distinct candidates (long docs ⇒ prefixes of ~90 grams keep
-    plenty of shared ones) and pays a per-doc rank of the whole gram
-    stream on top (147 s). LSH banding is the only candidate generator
+    for 22 true pairs); a prefix-filtered PPJoin variant (since deleted)
+    admitted 18.9 M distinct candidates (long docs ⇒ prefixes of ~90
+    grams keep plenty of shared ones) and paid a per-doc rank of the
+    whole gram stream on top (147 s). LSH banding is the only candidate generator
     whose volume tracks TRUE near-dup density (313 k candidates, ~10 s)
     rather than gram-frequency skew. Shapes: signatures are per-row
     expressions, ONE bucket shuffle, candidates << corpus², verify joins

@@ -56,20 +56,6 @@ def char_ngrams(text_col: str, n: int = NGRAM_N) -> Column:
     )
 
 
-def token_stats(documents: DataFrame) -> DataFrame:
-    """doc_id, n_tokens, n_uniq_tokens, avg_token_len (rounded)."""
-    toks = tokens(F.col("text"))
-    total_len = F.aggregate(
-        toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
-    )
-    return documents.select(
-        "doc_id",
-        F.size(toks).alias("n_tokens"),
-        F.size(F.array_distinct(toks)).alias("n_uniq_tokens"),
-        F.round(total_len / F.size(toks), 6).alias("avg_token_len"),
-    )
-
-
 def quality_predicate() -> Column:
     """The quality gate as a bare per-row boolean expression — usable as a
     plain ``filter`` (fuses into the scan; no join). Identical semantics
@@ -140,24 +126,12 @@ WINNOW_K = 5  # char-gram length for winnowing
 WINNOW_W = 4  # window of consecutive gram hashes
 
 
-def bpe_token_stats(documents: DataFrame) -> DataFrame:
-    """Token counts under a BPE-ish regex pre-tokenizer vs whitespace —
+def token_report(documents: DataFrame) -> DataFrame:
+    """Whitespace + BPE-ish token statistics in ONE per-row projection
+    (same scan, zero shuffle): whitespace token count, distinct count and
+    mean length, the BPE-ish pre-token count, and BPE tokens per word —
     the cost estimator every training-data pipeline runs before a real
     tokenizer pass."""
-    toks = F.regexp_extract_all(F.col("text"), F.lit(BPE_PATTERN), 0)
-    ws = tokens(F.col("text"))
-    return documents.select(
-        "doc_id",
-        F.size(toks).alias("n_bpe_tokens"),
-        F.size(ws).alias("n_ws_tokens"),
-        F.round(F.size(toks) / F.size(ws), 6).alias("bpe_per_word"),
-    )
-
-
-def token_report(documents: DataFrame) -> DataFrame:
-    """Whitespace + BPE-ish token statistics in ONE per-row projection —
-    the combined form of :func:`token_stats` and :func:`bpe_token_stats`
-    (same scan, zero shuffle); the registry checks this merged surface."""
     toks = tokens(F.col("text"))
     bpe = F.regexp_extract_all(F.col("text"), F.lit(BPE_PATTERN), 0)
     total_len = F.aggregate(

@@ -28,6 +28,11 @@ SEMANTIC_CONFS = {
     # Spark has no TIMESTAMP(NANOS) type: read raw int64 nanos (testdata
     # events.ts), converted downstream via timestamp_micros(ns div 1000)
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Bounded StreamingQuery.stop(): the default 0 waits for ever on a
+    # foreachBatch callback that never returns, so streaming/state.await_end
+    # could hang instead of raising TimeoutError. A query reads it from its
+    # session when it starts.
+    "spark.sql.streaming.stopTimeout": "5000",
 }
 
 # Scale-oriented: these are safe on local[32] and what we would run with on a

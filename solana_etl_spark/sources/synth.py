@@ -31,6 +31,8 @@ import gzip
 import json
 import os
 import random
+import shutil
+from collections.abc import Callable
 
 CORPUS_VERSION = 1
 N_BLOCKS = 240
@@ -293,36 +295,52 @@ def _default_root() -> str:
     return os.path.join(repo, ".e2e_corpus")
 
 
-def ensure_e2e_corpus(root: str | None = None, n_blocks: int = N_BLOCKS) -> str:
-    """Generate the corpus if absent; atomic (tmp dir + rename), idempotent,
-    safe under concurrent callers. Returns the corpus directory."""
-    root = root or _default_root()
-    out = os.path.join(root, f"v{CORPUS_VERSION}_{n_blocks}")
+def _generate_once(out: str, build: Callable[[str], None]) -> str:
+    """Return the directory ``out``, generating it first if absent:
+    ``build`` fills a private ``<out>.tmp.<pid>`` directory that is then
+    renamed into place. Atomic, idempotent and safe under concurrent
+    callers — a caller that loses the rename race drops its copy, and a
+    ``build`` that raises leaves nothing behind."""
     if os.path.isdir(out):
         return out
     tmp = f"{out}.tmp.{os.getpid()}"
-    for slot in range(BASE_SLOT, BASE_SLOT + n_blocks):
-        bucket = slot // SLOTS_PER_DIR * SLOTS_PER_DIR
-        d = os.path.join(tmp, str(bucket))
-        os.makedirs(d, exist_ok=True)
-        with gzip.open(os.path.join(d, f"{slot}.json.gz"), "wb", compresslevel=1) as f:
-            f.write(json.dumps(make_block(slot)).encode())
-    # block-level error probes: two missing-result envelopes + one malformed
-    probe_dir = os.path.join(tmp, str(BASE_SLOT // SLOTS_PER_DIR * SLOTS_PER_DIR))
-    for probe_slot in (BASE_SLOT + n_blocks + 1, BASE_SLOT + n_blocks + 2):
-        with gzip.open(os.path.join(probe_dir, f"{probe_slot}.json.gz"), "wb") as f:
-            f.write(json.dumps({"jsonrpc": "2.0", "id": 1}).encode())
-    with gzip.open(os.path.join(probe_dir, f"{BASE_SLOT + n_blocks + 3}.json.gz"), "wb") as f:
-        f.write(b"this is not json {{{")
+    os.makedirs(tmp, exist_ok=True)
+    try:
+        build(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
     try:
         os.rename(tmp, out)
     except OSError:
         if not os.path.isdir(out):  # genuine failure, not a concurrent winner
             raise
-        import shutil
-
         shutil.rmtree(tmp, ignore_errors=True)
     return out
+
+
+def ensure_e2e_corpus(root: str | None = None, n_blocks: int = N_BLOCKS) -> str:
+    """Generate the corpus if absent; atomic (tmp dir + rename), idempotent,
+    safe under concurrent callers. Returns the corpus directory."""
+
+    def build(tmp: str) -> None:
+        for slot in range(BASE_SLOT, BASE_SLOT + n_blocks):
+            bucket = slot // SLOTS_PER_DIR * SLOTS_PER_DIR
+            d = os.path.join(tmp, str(bucket))
+            os.makedirs(d, exist_ok=True)
+            with gzip.open(os.path.join(d, f"{slot}.json.gz"), "wb", compresslevel=1) as f:
+                f.write(json.dumps(make_block(slot)).encode())
+        # block-level error probes: two missing-result envelopes + one malformed
+        probe_dir = os.path.join(tmp, str(BASE_SLOT // SLOTS_PER_DIR * SLOTS_PER_DIR))
+        for probe_slot in (BASE_SLOT + n_blocks + 1, BASE_SLOT + n_blocks + 2):
+            with gzip.open(os.path.join(probe_dir, f"{probe_slot}.json.gz"), "wb") as f:
+                f.write(json.dumps({"jsonrpc": "2.0", "id": 1}).encode())
+        with gzip.open(os.path.join(probe_dir, f"{BASE_SLOT + n_blocks + 3}.json.gz"), "wb") as f:
+            f.write(b"this is not json {{{")
+
+    root = root or _default_root()
+    out = os.path.join(root, f"v{CORPUS_VERSION}_{n_blocks}")
+    return _generate_once(out, build)
 
 
 def ensure_solana_replicated_corpus(
@@ -341,33 +359,25 @@ def ensure_solana_replicated_corpus(
     real extract run. Atomic tmp-dir + rename, idempotent, safe under
     concurrent callers."""
     import glob as _glob
-    import shutil as _sh
+
+    def build(tmp: str) -> None:
+        fixtures = sorted(
+            _glob.glob("/root/reference/test/resources/blocks/*/*.json.gz")
+        )
+        if not fixtures:
+            raise FileNotFoundError("reference fixture blocks not found")
+        slot = BASE_SLOT
+        for _ in range(n_copies):
+            for src in fixtures:
+                bucket = slot // SLOTS_PER_DIR * SLOTS_PER_DIR
+                d = os.path.join(tmp, str(bucket))
+                os.makedirs(d, exist_ok=True)
+                shutil.copyfile(src, os.path.join(d, f"{slot}.json.gz"))
+                slot += 1
 
     root = root or _default_root()
     out = os.path.join(root, f"solana_x{n_copies}")
-    if os.path.isdir(out):
-        return out
-    fixtures = sorted(
-        _glob.glob("/root/reference/test/resources/blocks/*/*.json.gz")
-    )
-    if not fixtures:
-        raise FileNotFoundError("reference fixture blocks not found")
-    tmp = f"{out}.tmp.{os.getpid()}"
-    slot = BASE_SLOT
-    for _ in range(n_copies):
-        for src in fixtures:
-            bucket = slot // SLOTS_PER_DIR * SLOTS_PER_DIR
-            d = os.path.join(tmp, str(bucket))
-            os.makedirs(d, exist_ok=True)
-            _sh.copyfile(src, os.path.join(d, f"{slot}.json.gz"))
-            slot += 1
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if not os.path.isdir(out):  # genuine failure, not a concurrent winner
-            raise
-        _sh.rmtree(tmp, ignore_errors=True)
-    return out
+    return _generate_once(out, build)
 
 
 # ---------------------------------------------------------------------------
@@ -547,48 +557,37 @@ def ensure_sf_tables(
     if profile not in _PROFILES:
         raise ValueError(f"unknown profile {profile!r}")
     tag = "" if profile == "fixture" else f"{profile[0]}{_SCALING_GEN}"
+    def build(tmp: str) -> None:
+        docs = _synth_documents(n_docs, profile)
+        pq.write_table(
+            pa.table(
+                {
+                    "doc_id": pa.array([r[0] for r in docs], pa.int64()),
+                    "text": pa.array([r[1] for r in docs], pa.string()),
+                    "lang": pa.array([r[2] for r in docs], pa.string()),
+                    "source": pa.array([r[3] for r in docs], pa.string()),
+                    "n_chars": pa.array([r[4] for r in docs], pa.int64()),
+                }
+            ),
+            os.path.join(tmp, "documents.parquet"),
+        )
+        embs = _synth_embeddings(n_vecs)
+        pq.write_table(
+            pa.table(
+                {
+                    "vec_id": pa.array([r[0] for r in embs], pa.int64()),
+                    "embedding": pa.array(
+                        [r[1] for r in embs], pa.list_(pa.float32())
+                    ),
+                    "label": pa.array([r[2] for r in embs], pa.int32()),
+                }
+            ),
+            os.path.join(tmp, "embeddings.parquet"),
+        )
+
     root = root or _tables_root()
     out = os.path.join(root, f"v{TABLES_VERSION}{tag}_d{n_docs}_e{n_vecs}")
-    if os.path.isdir(out):
-        return out
-    tmp = f"{out}.tmp.{os.getpid()}"
-    os.makedirs(tmp, exist_ok=True)
-
-    docs = _synth_documents(n_docs, profile)
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array([r[0] for r in docs], pa.int64()),
-                "text": pa.array([r[1] for r in docs], pa.string()),
-                "lang": pa.array([r[2] for r in docs], pa.string()),
-                "source": pa.array([r[3] for r in docs], pa.string()),
-                "n_chars": pa.array([r[4] for r in docs], pa.int64()),
-            }
-        ),
-        os.path.join(tmp, "documents.parquet"),
-    )
-    embs = _synth_embeddings(n_vecs)
-    pq.write_table(
-        pa.table(
-            {
-                "vec_id": pa.array([r[0] for r in embs], pa.int64()),
-                "embedding": pa.array(
-                    [r[1] for r in embs], pa.list_(pa.float32())
-                ),
-                "label": pa.array([r[2] for r in embs], pa.int32()),
-            }
-        ),
-        os.path.join(tmp, "embeddings.parquet"),
-    )
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if not os.path.isdir(out):
-            raise
-        import shutil
-
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return _generate_once(out, build)
 
 
 # ---------------------------------------------------------------------------
@@ -841,60 +840,49 @@ def ensure_images_table(
     from solana_etl_spark.functions import jpeg as jpeg_mod
     from solana_etl_spark.functions.png import encode_gray
 
+    def build(tmp: str) -> None:
+        rows = []
+        prev = None
+        for img_id in range(n_images):
+            w, h, px = _synth_image(img_id, prev)
+            prev = (w, h, px)
+            rows.append((img_id, encode_gray(w, h, bytes(px)), px, w, h))
+        jprev = None
+        for j in range(n_images // _N_JPEGS_PER):
+            pay, pix, w, h = _synth_jpeg(j, jprev)
+            jprev = (pay, pix, w, h)
+            # build-time self-check: the REAL decoder must reproduce the
+            # reference pixels exactly, or the fixture fails loudly here
+            with jpeg_mod.open(io.BytesIO(pay)) as im:
+                got = im.tobytes()
+                if im.channels == 1:
+                    dec = list(got)
+                else:
+                    dec = [
+                        got[3 * i] + got[3 * i + 1] + got[3 * i + 2]
+                        for i in range(w * h)
+                    ]
+            if dec != pix or (im.width, im.height) != (w, h):
+                raise AssertionError(
+                    f"jpeg fixture {j}: decoder disagrees with reference"
+                )
+            rows.append((n_images + j, pay, pix, w, h))
+        pq.write_table(
+            pa.table(
+                {
+                    "img_id": pa.array([r[0] for r in rows], pa.int64()),
+                    "payload": pa.array([r[1] for r in rows], pa.binary()),
+                    "pixels": pa.array([r[2] for r in rows], pa.list_(pa.int32())),
+                    "width": pa.array([r[3] for r in rows], pa.int32()),
+                    "height": pa.array([r[4] for r in rows], pa.int32()),
+                }
+            ),
+            os.path.join(tmp, "images.parquet"),
+        )
+
     root = root or _tables_root()
     out = os.path.join(root, f"img_v{IMAGES_VERSION}_{n_images}")
-    if os.path.isdir(out):
-        return out
-    tmp = f"{out}.tmp.{os.getpid()}"
-    os.makedirs(tmp, exist_ok=True)
-
-    rows = []
-    prev = None
-    for img_id in range(n_images):
-        w, h, px = _synth_image(img_id, prev)
-        prev = (w, h, px)
-        rows.append((img_id, encode_gray(w, h, bytes(px)), px, w, h))
-    jprev = None
-    for j in range(n_images // _N_JPEGS_PER):
-        pay, pix, w, h = _synth_jpeg(j, jprev)
-        jprev = (pay, pix, w, h)
-        # build-time self-check: the REAL decoder must reproduce the
-        # reference pixels exactly, or the fixture fails loudly here
-        with jpeg_mod.open(io.BytesIO(pay)) as im:
-            got = im.tobytes()
-            if im.channels == 1:
-                dec = list(got)
-            else:
-                dec = [
-                    got[3 * i] + got[3 * i + 1] + got[3 * i + 2]
-                    for i in range(w * h)
-                ]
-        if dec != pix or (im.width, im.height) != (w, h):
-            raise AssertionError(
-                f"jpeg fixture {j}: decoder disagrees with reference"
-            )
-        rows.append((n_images + j, pay, pix, w, h))
-    pq.write_table(
-        pa.table(
-            {
-                "img_id": pa.array([r[0] for r in rows], pa.int64()),
-                "payload": pa.array([r[1] for r in rows], pa.binary()),
-                "pixels": pa.array([r[2] for r in rows], pa.list_(pa.int32())),
-                "width": pa.array([r[3] for r in rows], pa.int32()),
-                "height": pa.array([r[4] for r in rows], pa.int32()),
-            }
-        ),
-        os.path.join(tmp, "images.parquet"),
-    )
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if not os.path.isdir(out):
-            raise
-        import shutil
-
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return _generate_once(out, build)
 
 
 # ---------------------------------------------------------------------------
@@ -1090,35 +1078,25 @@ def ensure_web_table(n_pages: int = N_PAGES, root: str | None = None) -> str:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    def build(tmp: str) -> None:
+        rows = _synth_web_pages(n_pages)
+        pq.write_table(
+            pa.table(
+                {
+                    "page_id": pa.array([r[0] for r in rows], pa.int64()),
+                    "url": pa.array([r[1] for r in rows], pa.string()),
+                    "text": pa.array([r[2] for r in rows], pa.string()),
+                    "html": pa.array(
+                        [_page_html(r[0], r[2]) for r in rows], pa.string()
+                    ),
+                }
+            ),
+            os.path.join(tmp, "pages.parquet"),
+        )
+
     root = root or _tables_root()
     out = os.path.join(root, f"web_v{WEB_VERSION}g{_WEB_GEN}_{n_pages}")
-    if os.path.isdir(out):
-        return out
-    tmp = f"{out}.tmp.{os.getpid()}"
-    os.makedirs(tmp, exist_ok=True)
-    rows = _synth_web_pages(n_pages)
-    pq.write_table(
-        pa.table(
-            {
-                "page_id": pa.array([r[0] for r in rows], pa.int64()),
-                "url": pa.array([r[1] for r in rows], pa.string()),
-                "text": pa.array([r[2] for r in rows], pa.string()),
-                "html": pa.array(
-                    [_page_html(r[0], r[2]) for r in rows], pa.string()
-                ),
-            }
-        ),
-        os.path.join(tmp, "pages.parquet"),
-    )
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if not os.path.isdir(out):
-            raise
-        import shutil
-
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return _generate_once(out, build)
 
 
 # ---------------------------------------------------------------------------
@@ -1208,55 +1186,44 @@ def ensure_audio_table(n_clips: int = N_CLIPS, root: str | None = None) -> str:
     )
     from solana_etl_spark.functions.wav import encode_pcm16
 
+    def build(tmp: str) -> None:
+        rows = []
+        prev: list | None = None
+        for clip_id in range(n_clips):
+            samples, extra = _synth_clip(clip_id, prev)
+            prev = samples
+            if clip_id % 3 == 2:
+                # the re-serve case (`extra` non-empty) maps to the FLAC
+                # analogue of the LIST chunk: a byte-different re-encoding
+                # (verbatim subframes + PADDING) of the identical PCM;
+                # % 9 == 2 clips take LPC subframes (v3)
+                payload = encode_flac(
+                    _AUDIO_RATE,
+                    samples,
+                    force_verbatim=bool(extra),
+                    padding=32 if extra else 0,
+                    lpc=([3, -3, 1], 1)
+                    if clip_id % 9 == 2 and not extra
+                    else None,
+                )
+            else:
+                payload = encode_pcm16(_AUDIO_RATE, samples, extra)
+            rows.append((clip_id, payload, samples))
+        pq.write_table(
+            pa.table(
+                {
+                    "clip_id": pa.array([r[0] for r in rows], pa.int64()),
+                    "payload": pa.array([r[1] for r in rows], pa.binary()),
+                    "samples": pa.array([r[2] for r in rows], pa.list_(pa.int32())),
+                    "sample_rate": pa.array(
+                        [_AUDIO_RATE] * len(rows), pa.int32()
+                    ),
+                    "n_samples": pa.array([len(r[2]) for r in rows], pa.int32()),
+                }
+            ),
+            os.path.join(tmp, "audio.parquet"),
+        )
+
     root = root or _tables_root()
     out = os.path.join(root, f"wav_v{AUDIO_VERSION}_{n_clips}")
-    if os.path.isdir(out):
-        return out
-    tmp = f"{out}.tmp.{os.getpid()}"
-    os.makedirs(tmp, exist_ok=True)
-
-    rows = []
-    prev: list | None = None
-    for clip_id in range(n_clips):
-        samples, extra = _synth_clip(clip_id, prev)
-        prev = samples
-        if clip_id % 3 == 2:
-            # the re-serve case (`extra` non-empty) maps to the FLAC
-            # analogue of the LIST chunk: a byte-different re-encoding
-            # (verbatim subframes + PADDING) of the identical PCM;
-            # % 9 == 2 clips take LPC subframes (v3)
-            payload = encode_flac(
-                _AUDIO_RATE,
-                samples,
-                force_verbatim=bool(extra),
-                padding=32 if extra else 0,
-                lpc=([3, -3, 1], 1)
-                if clip_id % 9 == 2 and not extra
-                else None,
-            )
-        else:
-            payload = encode_pcm16(_AUDIO_RATE, samples, extra)
-        rows.append((clip_id, payload, samples))
-    pq.write_table(
-        pa.table(
-            {
-                "clip_id": pa.array([r[0] for r in rows], pa.int64()),
-                "payload": pa.array([r[1] for r in rows], pa.binary()),
-                "samples": pa.array([r[2] for r in rows], pa.list_(pa.int32())),
-                "sample_rate": pa.array(
-                    [_AUDIO_RATE] * len(rows), pa.int32()
-                ),
-                "n_samples": pa.array([len(r[2]) for r in rows], pa.int32()),
-            }
-        ),
-        os.path.join(tmp, "audio.parquet"),
-    )
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if not os.path.isdir(out):
-            raise
-        import shutil
-
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return _generate_once(out, build)

@@ -42,6 +42,7 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
@@ -75,13 +76,20 @@ def await_end(query: StreamingQuery, timeout_s: float) -> None:
     """Wait up to ``timeout_s`` for ``query`` to end. A query still
     running then is stopped and raises TimeoutError: its state is
     partial, and a caller that read it would compare half a stream. A
-    query that failed raises its own error (awaitTermination's)."""
-    if not query.awaitTermination(timeout_s):
+    query that failed raises its own error (awaitTermination's).
+
+    The stop waits at most ``spark.sql.streaming.stopTimeout`` (set by
+    the session module) for an in-flight batch; a batch that outlasts it
+    is left to finish on its own thread and the TimeoutError still
+    raises, instead of the caller hanging inside ``stop()``."""
+    if query.awaitTermination(timeout_s):
+        return
+    msg = f"stream {query.name or query.id} did not end within {timeout_s} s"
+    try:
         query.stop()
-        raise TimeoutError(
-            f"stream {query.name or query.id} did not end within "
-            f"{timeout_s} s; stopped it"
-        )
+    except Py4JJavaError as e:  # the in-flight batch outlasted the stop wait
+        raise TimeoutError(f"{msg}; its batch did not return either") from e
+    raise TimeoutError(f"{msg}; stopped it")
 
 
 def _fs(spark: SparkSession, path: str):

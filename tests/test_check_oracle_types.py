@@ -7,12 +7,13 @@ These tests pin the guard's behavior, including the deliberate un-cast
 COUNT_IF probe VERDICT r2 asked for.
 """
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from scripts.check_oracle import _type_class, type_parity_problems  # noqa: E402
 

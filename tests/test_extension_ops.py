@@ -1137,21 +1137,6 @@ def test_semantic_dedup_clusters_and_keepers(spark):
     assert rows[4]["cluster_id"] == 4 and rows[4]["is_keeper"]
 
 
-def test_ngram_jaccard_prefix_variant_equality(spark):
-    """Prefix-filtered (AllPairs/PPJoin) exact Jaccard returns EXACTLY the
-    inverted-index-count plan's output (prefix lemma: perfect recall, exact
-    verify) — same pairs, same scores, on the real sf0.001 corpus."""
-    from solana_etl_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-        ngram_jaccard_pairs_prefix,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    cur = set(map(tuple, ngram_jaccard_pairs(docs).collect()))
-    pre = set(map(tuple, ngram_jaccard_pairs_prefix(docs).collect()))
-    assert pre == cur and len(cur) > 0
-
-
 def test_minhash_lsh_recall_vs_exact_shingle_jaccard(spark):
     """Measured recall of the banded MinHash-LSH candidate set against
     EXACT word-shingle Jaccard ground truth (the space minhash estimates —

@@ -11,6 +11,7 @@ import ast
 import os
 import pathlib
 import shutil
+import threading
 import time
 from datetime import datetime
 
@@ -243,6 +244,29 @@ def test_await_end_stops_a_stalled_stream_and_raises(spark, tmp_path):
     with pytest.raises(TimeoutError, match="did not end within 2"):
         state.await_end(q, 2)
     assert not q.isActive
+
+
+def test_await_end_raises_when_a_batch_never_returns(spark, tmp_path):
+    """A batch that blocks far past the timeout cannot hang the caller:
+    the stop waits at most the session's spark.sql.streaming.stopTimeout,
+    then await_end raises TimeoutError all the same."""
+    release = threading.Event()
+
+    def stuck_batch(batch_df, batch_id):
+        release.wait(600)
+
+    q = state.start_batches(
+        _id_stream(spark, tmp_path), stuck_batch, str(tmp_path / "ckpt")
+    )
+    t0 = time.monotonic()
+    try:
+        with pytest.raises(TimeoutError, match="did not return either"):
+            state.await_end(q, 2)
+        assert time.monotonic() - t0 < 12
+        assert not q.isActive
+    finally:
+        release.set()  # let the stuck batch return so its thread ends
+        q.awaitTermination(60)
 
 
 def test_await_end_propagates_a_failed_batch(spark, tmp_path):
