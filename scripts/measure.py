@@ -63,6 +63,7 @@ BNLJ_EXPECTED = {
     "cluster_balanced_sample": "composes the IVF centroid broadcasts",
     "graph_triangles": "1-row (n_nodes, n_edges) stats",
     "dq_drift_psi": "1-row bounds + 1-row totals broadcasts",
+    "dq_drift_chi2": "1-row bounds, totals and stats broadcasts (psi's shape)",
     "decontam_semantic": "bounded eval-set broadcast x corpus scan",
     "dsir_importance_weights": "1-row vocab-stats/OOV scalars for both LMs",
     "pipeline_cluster_pack": "k-row IVF centroids feeding the pack window",

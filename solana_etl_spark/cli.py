@@ -13,16 +13,13 @@ from __future__ import annotations
 import argparse
 import sys
 
-VALID_TASKS = ("transactions", "transfers", "blocks")
-
-# the error-row ``name`` each task's row failures carry (plans/tasks.py;
-# ``blocks`` emits none). The reference runs only the selected tasks, so its
-# errors table holds the ``json_to_blocks`` rows plus those tasks' rows
-# (src/load/FileOutput.py:66-91,157-166).
-TASK_ERROR_NAMES = {
-    "transactions": "blocks_to_transactions",
-    "transfers": "blocks_to_transfers",
-}
+from solana_etl_spark.plans.tasks import (
+    INGEST_ERROR_NAME,
+    TASK_ERROR_NAMES,
+    VALID_TASKS,
+    run_all_tasks,
+)
+from solana_etl_spark.sinks import FORMATS, write_task_outputs
 
 
 def expand_tasks(names: list[str]) -> set[str]:
@@ -46,7 +43,7 @@ def cmd_load_file(argv: list[str]) -> int:
     p.add_argument("destination_dir")
     p.add_argument(
         "--destination_format",
-        choices=("csv", "parquet", "orc", "json"),
+        choices=FORMATS,
         default="csv",
         help="csv/parquet mirror the reference; orc/json (JSONL) are extras",
     )
@@ -56,8 +53,8 @@ def cmd_load_file(argv: list[str]) -> int:
         "--single_file",
         action=argparse.BooleanOptionalAction,
         default=True,
-        help="coalesce each output to one file (--no-single_file for "
-        "many-file parallel writes)",
+        help="coalesce each output to one file, one per slot bucket under "
+        "--keep_subdirs (--no-single_file for many-file parallel writes)",
     )
     args = p.parse_args(argv)
 
@@ -65,8 +62,6 @@ def cmd_load_file(argv: list[str]) -> int:
 
     from solana_etl_spark.session import get_spark
     from solana_etl_spark.sources import read_blocks
-    from solana_etl_spark.plans.tasks import run_all_tasks
-    from solana_etl_spark.sinks import write_task_outputs
 
     try:
         tasks = expand_tasks(args.tasks.split(","))
@@ -83,7 +78,7 @@ def cmd_load_file(argv: list[str]) -> int:
     # tasks, so their views are never built
     selected["errors"] = outputs["errors"].filter(
         F.col("name").isin(
-            "json_to_blocks",
+            INGEST_ERROR_NAME,
             *(TASK_ERROR_NAMES[t] for t in tasks if t in TASK_ERROR_NAMES),
         )
     )

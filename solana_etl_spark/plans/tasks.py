@@ -13,10 +13,10 @@ Scale notes:
   aggregation applies to every measure; the distinct-account counts use
   per-tx pre-deduplicated arrays so the exchange carries only small per-tx
   summaries, never raw JSON.
-* callers processing many files should ``.persist()`` the transactions view
-  before fanning out to the three sinks (the dask reference computes the
-  shared bag once for all outputs — src/load/FileOutput.py:167-169; Spark
-  re-scans per action unless persisted).
+* ``run_all_tasks`` persists the transactions view that the three sinks fan
+  out from (the dask reference computes the shared bag once for all
+  outputs — src/load/FileOutput.py:167-169; Spark re-scans per action
+  unless persisted). ``run_all_tasks_with_handle`` returns it for unpersist.
 """
 
 from __future__ import annotations
@@ -24,7 +24,20 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from solana_etl_spark.functions.sqltext import string_lit
 from solana_etl_spark.plans.views import transactions_view, transfers_view
+
+VALID_TASKS = ("transactions", "transfers", "blocks")
+
+# the error-row ``name`` of each stage: block ingest, then each task's row
+# failures (``blocks`` emits none). The reference runs only the selected
+# tasks, so its errors table holds the ingest rows plus those tasks' rows
+# (src/load/FileOutput.py:66-91,157-166).
+INGEST_ERROR_NAME = "json_to_blocks"
+TASK_ERROR_NAMES = {
+    "transactions": "blocks_to_transactions",
+    "transfers": "blocks_to_transfers",
+}
 
 
 # Expression texts (r9): derived columns are SQL strings parsed JVM-side in
@@ -105,7 +118,7 @@ def transaction_errors(txs: DataFrame) -> DataFrame:
     src/load/TransformTask.py:24-50; row shape mirrors
     src/load/FileOutput.py:157-166)."""
     return txs.filter("tx_error IS NOT NULL").selectExpr(
-        "'blocks_to_transactions' AS name",
+        f"{string_lit(TASK_ERROR_NAMES['transactions'])} AS name",
         f"{_SOURCE} AS block",
         "tx_error AS message",
     )
@@ -127,7 +140,7 @@ def transfers_task(txs: DataFrame) -> tuple[DataFrame, DataFrame]:
         f"{_SOURCE} AS path",
     )
     errors = t.filter("error IS NOT NULL").selectExpr(
-        "'blocks_to_transfers' AS name",
+        f"{string_lit(TASK_ERROR_NAMES['transfers'])} AS name",
         f"{_SOURCE} AS block",
         "error AS message",
     )
@@ -215,7 +228,7 @@ def ingest_errors(blocks_raw: DataFrame) -> DataFrame:
     missing blocks (no ``result`` key → downstream field access raises)."""
     bad = blocks_raw.filter(F.col("missing") | F.col("_corrupt_record").isNotNull())
     return bad.selectExpr(
-        "'json_to_blocks' AS name",
+        f"{string_lit(INGEST_ERROR_NAME)} AS name",
         f"{_SOURCE} AS block",
         "CASE WHEN _corrupt_record IS NOT NULL THEN 'malformed block json'"
         " ELSE 'missing block result' END AS message",
@@ -223,17 +236,15 @@ def ingest_errors(blocks_raw: DataFrame) -> DataFrame:
 
 
 def run_all_tasks_with_handle(
-    blocks_raw: DataFrame, persist: bool = True
-) -> tuple[dict[str, DataFrame], DataFrame | None]:
+    blocks_raw: DataFrame,
+) -> tuple[dict[str, DataFrame], DataFrame]:
     """All three task tables + the errors table from one pass over the raw
-    blocks, plus the persisted transactions view (or None) so long-running
-    callers (streaming micro-batches) can unpersist after their writes.
+    blocks, plus the persisted transactions view so long-running callers
+    (streaming micro-batches) can unpersist after their writes.
     Persisting the transactions view mirrors the reference's compute-once
     fan-out (src/load/FileOutput.py:167-169)."""
     good_blocks = blocks_raw.filter(F.col("_corrupt_record").isNull())
-    txs = transactions_view(good_blocks)
-    if persist:
-        txs = txs.persist()
+    txs = transactions_view(good_blocks).persist()
     transfers, transfer_errors = transfers_task(txs)
     outputs = {
         "transactions": transactions_task(txs),
@@ -243,9 +254,9 @@ def run_all_tasks_with_handle(
         .unionByName(transaction_errors(txs))
         .unionByName(transfer_errors),
     }
-    return outputs, (txs if persist else None)
+    return outputs, txs
 
 
-def run_all_tasks(blocks_raw: DataFrame, persist: bool = True) -> dict[str, DataFrame]:
-    outputs, _ = run_all_tasks_with_handle(blocks_raw, persist)
+def run_all_tasks(blocks_raw: DataFrame) -> dict[str, DataFrame]:
+    outputs, _ = run_all_tasks_with_handle(blocks_raw)
     return outputs

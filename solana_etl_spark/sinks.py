@@ -7,10 +7,11 @@ Reference behaviors reproduced (file:line into /root/reference):
 * Parquet sink — src/load/FileOutput.py:176-178
 * CSV streaming append with header-only-on-create —
   src/extract/ExtractStreaming.py:28-33
-* gzip-JSON block files bucketed by ``slot // N * N`` —
-  src/extract/ExtractBatch.py:16-23
 * errors table written alongside as ``{name}_errors`` —
   src/load/FileOutput.py:157-166
+
+The gzip-JSON block files of the extract stage (ExtractBatch.py:16-23) are
+written by ``sources/extract.write_block_file``, not here.
 """
 
 from __future__ import annotations
@@ -21,49 +22,30 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SLOTS_PER_BUCKET = 10_000  # reference default (ExtractBatch.py:45)
+FORMATS = ("csv", "parquet", "orc", "json")
 
 
-def write_csv(df: DataFrame, path: str, single_file: bool = True, mode: str = "overwrite") -> None:
+def write_table(
+    df: DataFrame,
+    path: str,
+    fmt: str,
+    single_file: bool = False,
+    partition_by: tuple[str, ...] = (),
+    header: bool = True,
+) -> None:
+    """The one load-table writer: ``fmt`` in ``FORMATS`` (json = JSONL),
+    overwriting ``path``. ``single_file`` coalesces to one task, so each
+    output directory (each ``partition_by`` directory) holds one file. CSV
+    is Spark's default dialect: NULL is an empty field, "" is ``""``."""
+    if fmt not in FORMATS:
+        raise ValueError(f"unknown format: {fmt}")
     out = df.coalesce(1) if single_file else df
-    out.write.mode(mode).option("header", True).csv(path)
-
-
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).parquet(path)
-
-
-# format name -> (writer, reader) for the batch-sink matrix; every format
-# round-trips the task outputs value-identically (tests/test_format_matrix.py)
-def write_table(df: DataFrame, path: str, fmt: str = "parquet", mode: str = "overwrite") -> None:
+    w = out.write.mode("overwrite").format(fmt)
+    if partition_by:
+        w = w.partitionBy(*partition_by)
     if fmt == "csv":
-        # header on, explicit null marker so empty string != NULL survives
-        df.write.mode(mode).option("header", True).option(
-            "nullValue", "\\N"
-        ).csv(path)
-    else:
-        df.write.mode(mode).format(fmt).save(path)
-
-
-def read_table(spark, path: str, fmt: str = "parquet", schema=None):
-    r = spark.read
-    if fmt == "csv":
-        # schema REQUIRED for csv (text format erases types); others embed it
-        return r.schema(schema).option("header", True).option(
-            "nullValue", "\\N"
-        ).csv(path)
-    if schema is not None:
-        r = r.schema(schema)
-    return r.format(fmt).load(path)
-
-
-def append_csv(df: DataFrame, path: str) -> None:
-    """Append semantics with header-only-on-create (streaming CSV sink,
-    ExtractStreaming.py:28-33): Spark writes header per file; on append we
-    only add headerless part files if data already exists."""
-    exists = os.path.isdir(path) and any(
-        f.endswith(".csv") for f in os.listdir(path)
-    )
-    df.coalesce(1).write.mode("append").option("header", not exists).csv(path)
+        w = w.option("header", header)
+    w.save(path)
 
 
 def append_csv_exactly_once(df: DataFrame, path: str, batch_id: int) -> None:
@@ -80,37 +62,19 @@ def append_csv_exactly_once(df: DataFrame, path: str, batch_id: int) -> None:
     if not os.path.exists(header):
         with open(header, "w") as f:
             f.write(",".join(df.columns) + "\n")
-    df.coalesce(1).write.mode("overwrite").option("header", False).csv(
-        os.path.join(path, f"batch-{batch_id:05d}")
+    write_table(
+        df, os.path.join(path, f"batch-{batch_id:05d}"), "csv",
+        single_file=True, header=False,
     )
 
 
-def write_blocks_json(
-    blocks_raw: DataFrame, path: str, slots_per_bucket: int = SLOTS_PER_BUCKET
-) -> None:
-    """Raw block documents re-emitted as gzip JSON partitioned by slot
-    bucket (M8: ``slot // N * N``) — the extract-batch file layout. The
-    many-file layout is deliberate: gzip is non-splittable, so file count =
-    read parallelism downstream."""
-    with_bucket = blocks_raw.withColumn(
-        "slot_bucket", _slot_bucket(F.col("path"), slots_per_bucket)
-    )
-    (
-        with_bucket.select("slot_bucket", F.to_json(F.struct("result")).alias("value"))
-        .write.mode("overwrite")
-        .partitionBy("slot_bucket")
-        .option("compression", "gzip")
-        .text(path)
-    )
-
-
-def _slot_bucket(path_col, slots_per_bucket: int = SLOTS_PER_BUCKET):
+def _slot_bucket(path_col):
     return (
         F.floor(
             F.regexp_extract(path_col, r"(\d+)\.json", 1).cast("long")
-            / slots_per_bucket
+            / SLOTS_PER_BUCKET
         )
-        * slots_per_bucket
+        * SLOTS_PER_BUCKET
     ).cast("long")
 
 
@@ -131,29 +95,15 @@ def write_task_outputs(
     physical layout — time/slot-range queries prune whole partitions.
     """
     for name, df in outputs.items():
-        path = os.path.join(destination_dir, name)
+        partition_by: tuple[str, ...] = ()
         if keep_subdirs:
             src = df["block"] if "block" in df.columns else df["path"]
-            partitioned = df.withColumn("slot_bucket", _slot_bucket(src))
-            w = partitioned.write.mode("overwrite").partitionBy("slot_bucket")
-            if fmt == "csv":
-                w.option("header", True).csv(path)
-            elif fmt in ("parquet", "orc", "json"):
-                getattr(w, fmt)(path)
-            else:
-                raise ValueError(f"unknown format: {fmt}")
-            continue
-        if fmt == "csv":
-            write_csv(df, path, single_file=single_file)
-        elif fmt == "parquet":
-            write_parquet(df, path)
-        elif fmt in ("orc", "json"):
-            # beyond-reference conveniences (spark json = JSONL);
-            # single_file honors the CLI contract the same way csv does
-            out = df.coalesce(1) if single_file else df
-            getattr(out.write.mode("overwrite"), fmt)(path)
-        else:
-            raise ValueError(f"unknown format: {fmt}")
+            df = df.withColumn("slot_bucket", _slot_bucket(src))
+            partition_by = ("slot_bucket",)
+        write_table(
+            df, os.path.join(destination_dir, name), fmt,
+            single_file=single_file, partition_by=partition_by,
+        )
 
 
 def write_corpus_shards(

@@ -1,4 +1,4 @@
 from solana_etl_spark.sources.blocks import read_blocks
-from solana_etl_spark.sources.tables import TESTDATA_TABLES, load_tables
+from solana_etl_spark.sources.tables import TESTDATA_TABLES
 
-__all__ = ["read_blocks", "load_tables", "TESTDATA_TABLES"]
+__all__ = ["read_blocks", "TESTDATA_TABLES"]

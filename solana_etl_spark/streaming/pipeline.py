@@ -51,14 +51,13 @@ def start_streaming_load(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         # unpersist after the per-task writes: a long-running stream would
         # otherwise accumulate one cached transactions view per micro-batch
-        outputs, persisted = run_all_tasks_with_handle(batch_df, persist=True)
+        outputs, persisted = run_all_tasks_with_handle(batch_df)
         try:
             for name, df in outputs.items():
                 append_csv_exactly_once(
                     df, os.path.join(destination_dir, name), batch_id
                 )
         finally:
-            if persisted is not None:
-                persisted.unpersist()
+            persisted.unpersist()
 
     return state.start_batches(stream, process_batch, checkpoint_dir)

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from solana_etl_spark.plans.tasks import run_all_tasks
+from solana_etl_spark.plans.tasks import run_all_tasks, run_all_tasks_with_handle
 from solana_etl_spark.sources import read_blocks
 from solana_etl_spark.sources.synth import N_BLOCKS, ensure_e2e_corpus, make_block
 
@@ -65,9 +65,10 @@ def test_accounts_by_type_equals_transactions_task(spark):
     blocks_raw = read_blocks(spark, f"{corpus}/*/*.json.gz")
     got = Transactions.from_blocks(blocks_raw).accounts_by_type()
     want: dict[str, set] = {k: set() for k in got}
-    task = run_all_tasks(blocks_raw, persist=False)["transactions"]
-    for r in task.select("accountsByType").collect():
+    outputs, view = run_all_tasks_with_handle(blocks_raw)
+    for r in outputs["transactions"].select("accountsByType").collect():
         for k, accounts in json.loads(r.accountsByType).items():
             want[k].update(accounts)
+    view.unpersist()
     assert got == want
     assert all(want.values())

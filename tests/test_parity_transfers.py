@@ -8,7 +8,7 @@ import json
 import pyspark.sql.functions as F
 
 from solana_etl_spark.plans.views import transfers_view
-from solana_etl_spark.plans.tasks import run_all_tasks
+from solana_etl_spark.plans.tasks import run_all_tasks_with_handle
 
 
 def test_transfer_counts_110130000(txs_110130000):
@@ -23,7 +23,7 @@ def test_transfer_counts_110130000(txs_110130000):
 def test_e2e_output_shapes(blocks_raw):
     """Reference test/load/test_FileOutput.py:35-47: transfers 394×9 / 194×9,
     transactions 3439×16 / 4435×16, blocks 1×22 each, errors 0×3."""
-    out = run_all_tasks(blocks_raw, persist=False)
+    out, view = run_all_tasks_with_handle(blocks_raw)
 
     transfers = out["transfers"].cache()
     assert len(transfers.columns) == 9
@@ -43,13 +43,15 @@ def test_e2e_output_shapes(blocks_raw):
 
     assert len(out["errors"].columns) == 3
     assert out["errors"].count() == 0
+    view.unpersist()
 
 
 def test_blocks_task_values(blocks_raw):
     """block_info golden values for 110130000 derived from the collection
     goldens (num/votes/fees/balanceChange per partition)."""
-    out = run_all_tasks(blocks_raw, persist=False)
+    out, view = run_all_tasks_with_handle(blocks_raw)
     b = out["blocks"].filter(F.col("path") == "110130000.json.gz").first()
+    view.unpersist()
     assert b.numTransactions == 3439
     # all 3439 txs are only_fee and successful.only_fee == 3185 ⇒
     # successful.more_than_fee == 0 ⇒ numSuccessful == 3185

@@ -1,10 +1,8 @@
 """Input-schema variants the reference tolerates (SURVEY §1.3):
-plain-string accountKeys, scalar `parsed`, missing meta fields — plus the
-partitioned block re-writer."""
+plain-string accountKeys, scalar `parsed`, missing meta fields."""
 
 from __future__ import annotations
 
-import glob
 import gzip
 import json
 
@@ -107,19 +105,3 @@ def test_memo_instruction_never_matches_filters(spark, tmp_path):
     # with a type requested, a scalar-parsed memo never matches (type is null)
     memo_typed = filter_instructions(txs, "spl-memo", "transfer", flatten=True, output_col="f")
     assert memo_typed.select(F.size("f")).first()[0] == 0
-
-
-def test_write_blocks_json_partitioned(spark, tmp_path, blocks_raw):
-    from solana_etl_spark.sinks import write_blocks_json
-
-    out = str(tmp_path / "blocks_out")
-    write_blocks_json(blocks_raw, out)
-    # fixture slots 110130000 / 110360000 → buckets 110130000 / 110360000
-    parts = sorted(glob.glob(f"{out}/slot_bucket=*"))
-    assert [p.split("=")[-1] for p in parts] == ["110130000", "110360000"]
-    # gzip round-trip: re-read one bucket as a block document
-    files = glob.glob(f"{out}/slot_bucket=110130000/*.txt.gz")
-    assert files
-    with gzip.open(files[0]) as f:
-        doc = json.loads(f.readline())
-    assert doc["result"]["blockhash"] == "7FRPQq2kvN5NWudpiHstcpQnxEDFeDBJN54sU1TeTF9t"

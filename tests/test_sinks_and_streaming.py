@@ -1,4 +1,4 @@
-"""Sinks (CSV append header semantics, task-output writing) and the
+"""Sinks (stream CSV header semantics, task-output writing) and the
 streaming pipeline (foreachBatch reuse of batch tasks) + stateful
 sessionization."""
 
@@ -11,7 +11,7 @@ import time
 import pyspark.sql.functions as F
 import pytest
 
-from solana_etl_spark.sinks import append_csv, write_task_outputs
+from solana_etl_spark.sinks import append_csv_exactly_once, write_task_outputs
 from solana_etl_spark.streaming.state import await_end
 from tests.conftest import BLOCK_110130000
 
@@ -26,14 +26,16 @@ def _csv_rows(path):
 
 
 def test_append_csv_header_only_on_create(spark, tmp_path):
+    """The stream sink writes the header once (ExtractStreaming.py:28-33):
+    one ``_header.csv``, headerless batch files, and a replayed batch
+    overwrites its own rows instead of adding them again."""
     path = str(tmp_path / "out")
-    df = spark.createDataFrame([(1, "a")], ["id", "v"])
-    append_csv(df, path)
-    append_csv(spark.createDataFrame([(2, "b")], ["id", "v"]), path)
-    rows = _csv_rows(path)
-    # exactly one header line despite two appends (ExtractStreaming.py:28-33)
-    assert sum(1 for r in rows if r == "id,v") == 1
-    assert len(rows) == 3
+    append_csv_exactly_once(spark.createDataFrame([(1, "a")], ["id", "v"]), path, 0)
+    b = spark.createDataFrame([(2, "b")], ["id", "v"])
+    append_csv_exactly_once(b, path, 1)
+    append_csv_exactly_once(b, path, 1)  # replay after a crash
+    assert _csv_rows(path) == ["id,v", "1,a", "2,b"]
+    assert len(glob.glob(os.path.join(path, "batch-*", "*.csv"))) == 2
 
 
 def test_write_task_outputs_csv(spark, tmp_path, blocks_raw):
@@ -157,7 +159,7 @@ def test_write_corpus_shards_layout_and_manifest(spark, tmp_path):
 def test_write_task_outputs_orc_and_jsonl(spark, tmp_path):
     """Beyond-reference sink formats: ORC and JSONL round-trip the task
     outputs with identical rows."""
-    from solana_etl_spark.sinks import write_task_outputs
+    from solana_etl_spark.sinks import append_csv_exactly_once, write_task_outputs
 
     df = spark.createDataFrame(
         [(1, "a", True), (2, "b", False)], "id long, s string, ok boolean"
