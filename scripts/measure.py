@@ -20,7 +20,7 @@ into the plans/ directory and the Spark job descriptions.
       each. One JSON line; "comparable" sums the rows bench.py's judged
       total sums, and a failed row is timed -1 and named in "failed".
   measure.py shuffle > SHUFFLE.md
-      Shuffle-write and input bytes per query at sf0.01 and sf0.1, and the
+      Shuffle-write bytes per query at sf0.01 and sf0.1, and the
       shuffle growth for 10x input (~5 min).
   measure.py codecs [jpeg|png|flac|wav|all] [n_items]
       Per-item decode time and a cProfile of the vendored codecs over the
@@ -264,33 +264,26 @@ def _time(spark, qs, label: str, args: list[str]) -> None:
 
 
 def _headline(spark, qs, label: str) -> None:
-    from solana_etl_spark.plans.tasks import run_all_tasks, run_all_tasks_with_handle
+    from solana_etl_spark.plans.tasks import run_all_tasks_with_handle
     from solana_etl_spark.sources import read_blocks
     from solana_etl_spark.sources.synth import ensure_e2e_corpus
 
-    def count_all(outs) -> None:
+    def all_tasks(glob: str) -> None:
+        """Count every task output, then release the persisted view so the
+        next rep recomputes it (bench.py's e2e rows)."""
+        outs, persisted = run_all_tasks_with_handle(read_blocks(spark, glob))
         for df in outs.values():
             df.count()
-
-    def fixture_blocks() -> None:
-        count_all(run_all_tasks(read_blocks(
-            spark, "/root/reference/test/resources/blocks/*/*.json.gz"
-        )))
-
-    def corpus_blocks() -> None:
-        outs, persisted = run_all_tasks_with_handle(
-            read_blocks(spark, f"{ensure_e2e_corpus()}/*/*.json.gz")
-        )
-        count_all(outs)
-        if persisted is not None:
-            persisted.unpersist()
+        persisted.unpersist()
 
     rows = {
         name: (lambda n=name: _best_of(2, lambda: qs[n](spark, SF_DIR).count()))
         for name in _headline_names()
     }
-    rows["solana_e2e_2blocks"] = lambda: _best_of(2, fixture_blocks)
-    rows["solana_e2e_corpus_all_tasks"] = lambda: _best_of(2, corpus_blocks)
+    rows["solana_e2e_2blocks"] = lambda: _best_of(2, lambda: all_tasks(
+        "/root/reference/test/resources/blocks/*/*.json.gz"))
+    rows["solana_e2e_corpus_all_tasks"] = lambda: _best_of(2, lambda: all_tasks(
+        f"{ensure_e2e_corpus()}/*/*.json.gz"))
     _warm_up(spark, SF_DIR)
     timings = {name: -1.0 if err else dt for name, dt, err in _each(spark, label, rows)}
     failed = [name for name, dt in timings.items() if dt < 0]
@@ -302,9 +295,9 @@ def _headline(spark, qs, label: str) -> None:
                      separators=(",", ":")))
 
 
-def _stage_totals(spark, after: int) -> tuple[int, int, int]:
-    """(newest stage id, shuffle-write bytes, input bytes) of the completed
-    stages newer than stage ``after``, from the in-process status store (no
+def _stage_totals(spark, after: int) -> tuple[int, int]:
+    """(newest stage id, shuffle-write bytes) of the completed stages newer
+    than stage ``after``, from the in-process status store (no
     UI needed). The listener bus is drained first, so no stage of the last
     action is missed here and charged to the next one."""
     from py4j.java_collections import ListConverter
@@ -317,7 +310,7 @@ def _stage_totals(spark, after: int) -> tuple[int, int, int]:
     stages = jsc.statusStore().stageList(
         empty, False, False, gw.new_array(sc._jvm.double, 0), empty
     )
-    newest, shuffle, inp = after, 0, 0
+    newest, shuffle = after, 0
     for i in range(stages.size()):
         st = stages.apply(i)
         if st.stageId() <= after:
@@ -325,34 +318,33 @@ def _stage_totals(spark, after: int) -> tuple[int, int, int]:
         newest = max(newest, st.stageId())
         if st.status().toString() == "COMPLETE":
             shuffle += st.shuffleWriteBytes()
-            inp += st.inputBytes()
-    return newest, shuffle, inp
+    return newest, shuffle
 
 
 SHUFFLE_HEAD = """# SHUFFLE — measured shuffle-volume audit of the headline queries
 
-Generated by scripts/measure.py shuffle: the shuffle-write and input
-bytes of the stages each query completed, read in-process from the
-Spark status store after one execution per query at sf0.01 and sf0.1.
+Generated by scripts/measure.py shuffle: the shuffle-write bytes of
+the stages each query completed, read in-process from the Spark
+status store after one execution per query at sf0.01 and sf0.1.
 `xN` = shuffle-bytes growth for 10x more input — ~10x is linear data
 movement; pair-emitting dedup queries (marked *) legitimately exceed
 it on the dup-heavy synthetic corpus because their OUTPUT (the
 near-dup pair set) is the quadratic object.
 
-| query | shuffle MB @sf0.01 | shuffle MB @sf0.1 | growth | input MB @sf0.1 |
-|---|---|---|---|---|"""
+| query | shuffle MB @sf0.01 | shuffle MB @sf0.1 | growth |
+|---|---|---|---|"""
 
 
 def _shuffle(spark, qs) -> None:
     names = [n for n in _headline_names() + EXTRA if n in qs]
     mark = _stage_totals(spark, -1)[0]
-    results: dict[str, dict[str, tuple[int, int]]] = {}
+    results: dict[str, dict[str, int]] = {}
     for sf_dir in SFS:
         rows = {n: (lambda n=n: qs[n](spark, sf_dir).count()) for n in names}
         for name, _, err in _each(spark, "shuffle", rows):
-            mark, shuffle, inp = _stage_totals(spark, mark)
+            mark, shuffle = _stage_totals(spark, mark)
             if not err:
-                results.setdefault(name, {})[sf_dir] = (shuffle, inp)
+                results.setdefault(name, {})[sf_dir] = shuffle
 
     print(SHUFFLE_HEAD)
     flagged = []
@@ -360,13 +352,12 @@ def _shuffle(spark, qs) -> None:
     for name in names:
         if len(results.get(name, {})) != 2:
             continue
-        (s_small, _), (s_big, in_big) = (results[name][sf] for sf in SFS)
+        s_small, s_big = (results[name][sf] for sf in SFS)
         growth = (s_big / s_small) if s_small > 0 else float("nan")
         print(
             f"| {name}{'*' if name in PAIR_EMITTERS else ''} "
             f"| {s_small / mb:.2f} | {s_big / mb:.2f} "
-            f"| {f'x{growth:.1f}' if s_small > 0 else '(no shuffle)'} "
-            f"| {in_big / mb:.1f} |"
+            f"| {f'x{growth:.1f}' if s_small > 0 else '(no shuffle)'} |"
         )
         if growth > 15 and name not in PAIR_EMITTERS:
             flagged.append(f"- **{name}**: x{growth:.1f}")

@@ -17,7 +17,7 @@ from solana_etl_spark.plans.tasks import (
     INGEST_ERROR_NAME,
     TASK_ERROR_NAMES,
     VALID_TASKS,
-    run_all_tasks,
+    run_all_tasks_with_handle,
 )
 from solana_etl_spark.sinks import FORMATS, write_task_outputs
 
@@ -72,7 +72,7 @@ def cmd_load_file(argv: list[str]) -> int:
     owns_session = SparkSession.getActiveSession() is None
     spark = get_spark(app_name="load-file")
     blocks = read_blocks(spark, f"{args.blocks_dir}/**/*.json*")
-    outputs = run_all_tasks(blocks)
+    outputs, persisted = run_all_tasks_with_handle(blocks)
     selected = {k: v for k, v in outputs.items() if k in tasks}
     # a literal name filter: Spark prunes the union branches of unselected
     # tasks, so their views are never built
@@ -82,13 +82,16 @@ def cmd_load_file(argv: list[str]) -> int:
             *(TASK_ERROR_NAMES[t] for t in tasks if t in TASK_ERROR_NAMES),
         )
     )
-    write_task_outputs(
-        selected,
-        args.destination_dir,
-        fmt=args.destination_format,
-        single_file=args.single_file,
-        keep_subdirs=args.keep_subdirs,
-    )
+    try:
+        write_task_outputs(
+            selected,
+            args.destination_dir,
+            fmt=args.destination_format,
+            single_file=args.single_file,
+            keep_subdirs=args.keep_subdirs,
+        )
+    finally:
+        persisted.unpersist()
     if owns_session:
         spark.stop()
     return 0

@@ -9,20 +9,26 @@ memory cut, and queries score candidates with an Asymmetric Distance
 Computation (ADC): per-subspace lookup table of query-to-sub-centroid
 distances, approximate distance = sum of M table entries.
 
-Everything runs on the same scaled-int64 quantization as IVF
-(`similarity.quantized`), so codebook training, code assignment, and ADC
-scores are exact integer arithmetic — bit-identical across engines and
-partitionings, value-hash oracle-checkable.
+The coarse quantizer and the sub-quantizers are the same k-means, so this
+module owns no k-means of its own: it runs similarity.py's vector-index
+core with M subspaces instead of one — ``split_subspaces`` cuts vectors
+into (sub, svec) rows, ``_lloyd`` trains all M codebooks as ONE job keyed
+by (sub, cid) with the shared training-set policy, ``_assign`` encodes,
+and the IVF variants reuse ``_probes`` and the one ``_query`` pick (the
+query is picked once by TakeOrdered, then split into subspaces). What is
+PQ's own is the ADC step, :func:`_adc_topk`. Everything runs on the same
+scaled-int64 quantization as IVF, so codebooks, codes and ADC scores are
+exact integer arithmetic — value-hash oracle-checkable.
 
 Spark shapes (100 TB / 10^9-vector corpus):
 
 * subspace split = one per-row explode into M (sub, svec) rows — no
-  shuffle; the M codebooks train as ONE k-means job keyed by (sub, cid)
-  (each Lloyd round: one broadcast-assign scan + one narrow
-  (sub, cid, dim) partial-sum shuffle), not M sequential jobs.
+  shuffle; each Lloyd round is one broadcast-assign scan + one narrow
+  (sub, cid, dim) partial-sum shuffle.
 * codebook = M*K rows → always broadcast; encoding is an embarrassingly
-  parallel scan. Train on a ``hash_sample`` at real scale — codebook
-  quality needs ~10^5 vectors, assignment is the full pass.
+  parallel scan. Training is bounded by default (``train_cap``) or runs on
+  a hash sample (``train_bp``) — codebook quality needs ~10^5 vectors,
+  assignment is the full pass.
 * ADC = broadcast the M*K distance table, one scan summing M array
   lookups per row, global top-k via TakeOrdered. No shuffle of vectors.
 """
@@ -31,13 +37,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from solana_etl_spark.functions.hashing import hash64
 from solana_etl_spark.operators.similarity import (
+    IVF_NPROBE,
     TRAIN_CAP,
-    bounded_training,
+    _assign,
+    _ivf,
+    _lloyd,
+    _probed,
+    _probes,
+    _query,
+    _sqdist,
     quantized,
+    split_subspaces,
 )
 
 PQ_M = 8  # subspaces
@@ -47,60 +59,10 @@ PQ_ITERS = 2  # fixed Lloyd rounds (SQL-unrollable)
 PQ_TOPK = 10
 
 
-def _ssqdist(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
-def split_subspaces(
-    df: DataFrame, vec_col: str, m: int = PQ_M, subdim: int = PQ_SUBDIM
-) -> DataFrame:
-    """All of ``df``'s columns except ``vec_col``, plus (sub, svec): the
-    int64-array column split into m contiguous subspaces. Pure per-row
-    explode — zero shuffle. Works on raw quantized vectors AND on IVF
-    residuals (any int64 array)."""
-    subs = F.array(
-        *[
-            F.struct(
-                F.lit(s).alias("sub"),
-                F.slice(vec_col, s * subdim + 1, subdim).alias("svec"),
-            )
-            for s in range(m)
-        ]
-    )
-    keep = [c for c in df.columns if c != vec_col]
-    return df.select(*keep, F.explode(subs).alias("s")).select(
-        *keep, F.col("s.sub").alias("sub"), F.col("s.svec").alias("svec")
-    )
-
-
 def subvectors(embeddings: DataFrame, m: int = PQ_M, subdim: int = PQ_SUBDIM) -> DataFrame:
     """(vec_id, sub, svec): the quantized vector split into m contiguous
     subspaces. Pure per-row explode — zero shuffle."""
     return split_subspaces(quantized(embeddings), "qvec", m, subdim)
-
-
-def _assign_codes(subs: DataFrame, codebooks: DataFrame) -> DataFrame:
-    """Nearest sub-centroid per (vec_id, sub); tiebreak smaller cid. The
-    codebook (m*k rows) broadcasts; this is a parallel scan."""
-    d = _ssqdist(F.col("svec"), F.col("cvec"))
-    return (
-        subs.join(F.broadcast(codebooks), "sub")
-        .select(
-            "vec_id",
-            "sub",
-            "svec",
-            F.struct(d.alias("dist"), F.col("cid")).alias("dc"),
-        )
-        .groupBy("vec_id", "sub")
-        .agg(F.min("dc").alias("dc"), F.first("svec").alias("svec"))
-        .select(
-            "vec_id", "sub", "svec", F.col("dc.cid").alias("cid"), F.col("dc.dist").alias("dist")
-        )
-    )
 
 
 def pq_codebooks(
@@ -112,26 +74,11 @@ def pq_codebooks(
     train_bp: int = 10000,
     train_cap: int | None = TRAIN_CAP,
 ) -> DataFrame:
-    """(sub, cid, cvec): m codebooks of k sub-centroids, trained jointly as
-    one (sub)-keyed exact-integer Lloyd loop. Init = each subspace's slice
-    of the k vectors with the smallest (hash64(vec_id), vec_id) — the same
-    deterministic draw as IVF. Empty clusters keep their previous
-    sub-centroid. Truncating mean (s − s % n)/n keeps Spark `div` and
-    DuckDB `//` identical on negative sums.
-
-    ``train_bp`` < 10000 trains on the deterministic vec_id hash-sample
-    (same predicate as ``sampling.hash_sample``) and overrides the cap;
-    otherwise ``train_cap`` (default :data:`similarity.TRAIN_CAP` = 10⁵
-    vectors) bounds the training set — codebook quality needs a bounded
-    training set, not the corpus; at 100 TB only ENCODING (``pq_codes``)
-    touches every row."""
-    subs = subvectors(embeddings, m, subdim)
-    if train_bp < 10000:
-        from solana_etl_spark.operators.sampling import sample_bucket
-
-        subs = subs.filter(sample_bucket(F.col("vec_id")) < train_bp)
-        return train_codebooks(subs, k, iters, train_cap=None)
-    return train_codebooks(subs, k, iters, train_cap=train_cap)
+    """(sub, cid, cvec): m codebooks of k sub-centroids — the shared Lloyd
+    trainer over the m-subspace stream. ``train_bp`` < 10000 trains on the
+    vec_id hash-sample; otherwise ``train_cap`` bounds the training set.
+    At 100 TB only ENCODING (``pq_codes``) touches every row."""
+    return _lloyd(subvectors(embeddings, m, subdim), k, iters, train_bp, train_cap)
 
 
 def train_codebooks(
@@ -140,63 +87,46 @@ def train_codebooks(
     iters: int = PQ_ITERS,
     train_cap: int | None = TRAIN_CAP,
 ) -> DataFrame:
-    """The (sub)-keyed exact-integer Lloyd loop over any (vec_id, sub, svec)
-    stream — raw subvectors or IVF residual subvectors alike.
+    """The shared Lloyd trainer over any (vec_id, sub, svec) stream — raw
+    subvectors or IVF residual subvectors alike — bounded at ``train_cap``
+    vectors (``None`` trains on the full input)."""
+    return _lloyd(subs, k, iters, train_cap=train_cap)
 
-    Training is bounded at ``train_cap`` vectors (default
-    :data:`similarity.TRAIN_CAP`) via :func:`similarity.bounded_training`,
-    counting distinct vectors as the sub-0 rows (every vector contributes
-    exactly one sub-0 row by construction of :func:`split_subspaces`).
-    Init no longer ranks the whole stream through a per-sub window: the k
-    init vec_ids are ONE TakeOrdered (every sub shares the same vec_id
-    set, so the per-sub init slices are the same k vectors) broadcast
-    back onto the training stream. ``train_cap=None`` trains on the full
-    input (used when the caller already sampled)."""
-    if train_cap is None:
-        tsubs = subs
-    else:
-        tsubs = bounded_training(
-            subs, subs.filter(F.col("sub") == 0), train_cap
-        )
-    init_ids = (
-        tsubs.filter(F.col("sub") == 0)
-        .select(hash64(F.col("vec_id").cast("string")).alias("_h"), "vec_id")
-        .orderBy("_h", "vec_id")
-        .limit(k)
+
+def _codes(subs: DataFrame, codebooks: DataFrame) -> DataFrame:
+    """(vec_id, sub, code): each subvector's nearest sub-centroid id."""
+    return _assign(subs, codebooks).select("vec_id", "sub", F.col("cid").alias("code"))
+
+
+def _adc_topk(
+    codes: DataFrame,
+    queries: DataFrame,
+    codebooks: DataFrame,
+    topk: int,
+    m: int = PQ_M,
+    subdim: int = PQ_SUBDIM,
+) -> DataFrame:
+    """(vec_id, adc_dist): the ADC search. ``queries`` is (q) for one
+    query, or (cid, q) for one query residual per probed list; the table
+    holds the squared distance of each query subvector to every
+    sub-centroid of its subspace, and every table column but the distance
+    is a join key onto ``codes``. The table broadcasts, each candidate
+    sums its M lookups, and TakeOrdered cuts the global top-k by
+    (adc_dist, vec_id)."""
+    qsubs = split_subspaces(queries, "q", m, subdim)
+    keys = [c for c in qsubs.columns if c != "svec"] + ["code"]
+    table = (
+        codebooks.select("sub", F.col("cid").alias("code"), "cvec")
+        .join(F.broadcast(qsubs), "sub")
+        .select(*keys, _sqdist(F.col("svec"), F.col("cvec")).alias("d"))
     )
-    init_ids = init_ids.withColumn(
-        "_rn", F.row_number().over(Window.orderBy("_h", "vec_id"))
-    ).select("vec_id", (F.col("_rn") - 1).alias("cid"))
-    codebooks = tsubs.join(F.broadcast(init_ids), "vec_id").select(
-        "sub", "cid", F.col("svec").alias("cvec")
+    return (
+        codes.join(F.broadcast(table), keys)
+        .groupBy("vec_id")
+        .agg(F.sum("d").alias("adc_dist"))
+        .orderBy("adc_dist", "vec_id")
+        .limit(topk)
     )
-    for _ in range(iters):
-        assigned = _assign_codes(tsubs.select("vec_id", "sub", "svec"), codebooks)
-        per_dim = (
-            assigned.select("sub", "cid", F.posexplode("svec").alias("dim", "v"))
-            .groupBy("sub", "cid", "dim")
-            .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
-        )
-        updated = (
-            per_dim.select(
-                "sub", "cid", "dim", F.expr("(s - (s % n)) div n").alias("cm")
-            )
-            .groupBy("sub", "cid")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "cm"))).alias("_dm"))
-            .select(
-                "sub", "cid", F.expr("transform(_dm, x -> x.cm)").alias("cvec")
-            )
-        )
-        codebooks = (
-            codebooks.alias("old")
-            .join(updated.alias("new"), ["sub", "cid"], "left")
-            .select(
-                "sub",
-                "cid",
-                F.coalesce(F.col("new.cvec"), F.col("old.cvec")).alias("cvec"),
-            )
-        )
-    return codebooks
 
 
 def pq_codes(embeddings: DataFrame, codebooks: DataFrame | None = None) -> DataFrame:
@@ -205,11 +135,25 @@ def pq_codes(embeddings: DataFrame, codebooks: DataFrame | None = None) -> DataF
     to pack codes into subspace order."""
     cb = codebooks if codebooks is not None else pq_codebooks(embeddings)
     return (
-        _assign_codes(subvectors(embeddings), cb)
+        _codes(subvectors(embeddings), cb)
         .groupBy("vec_id")
-        .agg(F.array_sort(F.collect_list(F.struct("sub", "cid"))).alias("_sc"))
-        .select("vec_id", F.expr("transform(_sc, x -> x.cid)").alias("codes"))
+        .agg(F.array_sort(F.collect_list(F.struct("sub", "code"))).alias("_sc"))
+        .select("vec_id", F.expr("transform(_sc, x -> x.code)").alias("codes"))
     )
+
+
+def pq_adc_topk(embeddings: DataFrame, topk: int = PQ_TOPK) -> DataFrame:
+    """ADC search: approximate top-k nearest (by PQ distance) to the query
+    (= the min-vec_id vector, matching the IVF query convention). Returns
+    (vec_id, adc_dist) ordered by (adc_dist, vec_id).
+
+    The query is picked once by TakeOrdered and split into subspaces; the
+    per-subspace query-to-centroid distance table (m*k rows) joins
+    broadcast-side; the scan sums m lookups per row and TakeOrdered
+    resolves the global top-k without a full sort."""
+    cb = pq_codebooks(embeddings)
+    query = _query(quantized(embeddings), q="qvec").select("q")
+    return _adc_topk(_codes(subvectors(embeddings), cb), query, cb, topk)
 
 
 def ivfpq_topk(
@@ -230,54 +174,15 @@ def ivfpq_topk(
     Plan: centroids (k rows) and the probe list broadcast; candidates =
     assignment ⋈ probe (broadcast semi); ADC = candidates' codes ⋈
     broadcast M*K table, sum, TakeOrdered."""
-    from solana_etl_spark.operators.similarity import (
-        IVF_NPROBE,
-        kmeans_centroids,
-        _sqdist,
-        quantized,
-    )
-
     nprobe = IVF_NPROBE if nprobe is None else nprobe
-    vecs = quantized(embeddings)
-    centroids = kmeans_centroids(embeddings)
-    query = vecs.orderBy("vec_id").limit(1).select(F.col("qvec").alias("q"))
-    probe_cids = (
-        centroids.crossJoin(F.broadcast(query))
-        .select("cid", _sqdist(F.col("cvec"), F.col("q")).alias("qd"))
-        .orderBy("qd", "cid")
-        .limit(nprobe)
-        .select("cid")
-    )
-    from solana_etl_spark.operators.similarity import _assign
-
-    assigned = _assign(vecs, centroids).select("vec_id", "cid")
+    points, centroids = _ivf(embeddings)
+    query = _query(points, q="svec")
+    candidates = _probed(points, centroids, query, nprobe).select("vec_id")
     cb = pq_codebooks(embeddings)
-    codes = _assign_codes(subvectors(embeddings), cb).select(
-        "vec_id", "sub", F.col("cid").alias("code")
+    codes = _codes(subvectors(embeddings), cb).join(
+        F.broadcast(candidates), "vec_id", "left_semi"
     )
-    qsubs = (
-        subvectors(embeddings)
-        .withColumn(
-            "_rn",
-            F.row_number().over(Window.partitionBy("sub").orderBy("vec_id")),
-        )
-        .filter(F.col("_rn") == 1)
-        .select("sub", F.col("svec").alias("qsvec"))
-    )
-    table = cb.join(F.broadcast(qsubs), "sub").select(
-        "sub",
-        F.col("cid").alias("code"),
-        _ssqdist(F.col("qsvec"), F.col("cvec")).alias("d"),
-    )
-    candidates = assigned.join(F.broadcast(probe_cids), "cid").select("vec_id")
-    return (
-        codes.join(F.broadcast(candidates), "vec_id", "left_semi")
-        .join(F.broadcast(table), ["sub", "code"])
-        .groupBy("vec_id")
-        .agg(F.sum("d").alias("adc_dist"))
-        .orderBy("adc_dist", "vec_id")
-        .limit(topk)
-    )
+    return _adc_topk(codes, query.select("q"), cb, topk)
 
 
 def ivfpq_residual_topk(
@@ -306,99 +211,29 @@ def ivfpq_residual_topk(
     broadcast tables on (cid, sub, code), sum, TakeOrdered. The corpus
     shuffles zero times outside the codebook training rounds.
     """
-    from solana_etl_spark.operators.similarity import (
-        IVF_NPROBE,
-        _assign,
-        _sqdist,
-        kmeans_centroids,
-        quantized,
-    )
-
     nprobe = IVF_NPROBE if nprobe is None else nprobe
     spark = embeddings.sparkSession
-    vecs = quantized(embeddings)
     # the centroid set and codebooks are the ONLY driver state (k and m*k
     # rows) — collect them to literals so the many consumers below don't
     # each re-execute the full Lloyd lineage
-    trained = kmeans_centroids(embeddings)
+    points, trained = _ivf(embeddings)
     centroids = spark.createDataFrame(trained.collect(), trained.schema)
-    assigned = _assign(vecs, centroids).select("vec_id", "qvec", "cid")
-    residuals = assigned.join(F.broadcast(centroids), "cid").select(
+    cvecs = F.broadcast(centroids)
+    assigned = _assign(points, centroids)
+    residuals = assigned.join(cvecs, "cid").select(
         "vec_id",
         "cid",
-        F.zip_with("qvec", "cvec", lambda x, y: x - y).alias("rvec"),
+        F.zip_with("svec", "cvec", lambda x, y: x - y).alias("rvec"),
     )
-    rsubs = split_subspaces(residuals, "rvec", m, subdim)
-    cb_trained = train_codebooks(rsubs.select("vec_id", "sub", "svec"), k, iters)
+    rsubs = split_subspaces(residuals, "rvec", m, subdim).select("vec_id", "sub", "svec")
+    cb_trained = train_codebooks(rsubs, k, iters)
     cb = spark.createDataFrame(cb_trained.collect(), cb_trained.schema)
-    codes = _assign_codes(rsubs.select("vec_id", "sub", "svec"), cb).select(
-        "vec_id", "sub", F.col("cid").alias("code")
-    )
 
-    query = vecs.orderBy("vec_id").limit(1).select(F.col("qvec").alias("q"))
-    probe_cids = (
-        centroids.crossJoin(F.broadcast(query))
-        .select("cid", _sqdist(F.col("cvec"), F.col("q")).alias("qd"))
-        .orderBy("qd", "cid")
-        .limit(nprobe)
-        .select("cid")
-    )
+    probes = _probes(centroids, _query(points, q="svec"), nprobe)
     # per-probed-list query residual, split into subspaces
-    qres = (
-        probe_cids.join(F.broadcast(centroids), "cid")
-        .crossJoin(F.broadcast(query))
-        .select("cid", F.zip_with("q", "cvec", lambda x, y: x - y).alias("rq"))
+    qres = probes.join(cvecs, "cid").select(
+        "cid", F.zip_with("q", "cvec", lambda x, y: x - y).alias("q")
     )
-    qsubs = split_subspaces(qres, "rq", m, subdim).select(
-        "cid", "sub", F.col("svec").alias("qsvec")
-    )
-    tables = qsubs.join(
-        cb.select("sub", F.col("cid").alias("code"), "cvec"), "sub"
-    ).select(
-        "cid", "sub", "code", _ssqdist(F.col("qsvec"), F.col("cvec")).alias("d")
-    )
-    candidates = assigned.join(F.broadcast(probe_cids), "cid").select(
-        "vec_id", "cid"
-    )
-    return (
-        codes.join(F.broadcast(candidates), "vec_id")
-        .join(F.broadcast(tables), ["cid", "sub", "code"])
-        .groupBy("vec_id")
-        .agg(F.sum("d").alias("adc_dist"))
-        .orderBy("adc_dist", "vec_id")
-        .limit(topk)
-    )
-
-
-def pq_adc_topk(embeddings: DataFrame, topk: int = PQ_TOPK) -> DataFrame:
-    """ADC search: approximate top-k nearest (by PQ distance) to the query
-    (= the min-vec_id vector, matching the IVF query convention). Returns
-    (vec_id, adc_dist) ordered by (adc_dist, vec_id).
-
-    The per-subspace query-to-centroid distance table (m*k rows) and the
-    codes join broadcast-side; the scan sums m lookups per row and
-    TakeOrdered resolves the global top-k without a full sort."""
-    cb = pq_codebooks(embeddings)
-    codes = _assign_codes(subvectors(embeddings), cb)
-    query = (
-        subvectors(embeddings)
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("sub").orderBy("vec_id")
-            ),
-        )
-        .filter(F.col("_rn") == 1)
-        .select("sub", F.col("svec").alias("qsvec"))
-    )
-    table = (
-        cb.join(F.broadcast(query), "sub")
-        .select("sub", "cid", _ssqdist(F.col("qsvec"), F.col("cvec")).alias("d"))
-    )
-    return (
-        codes.join(F.broadcast(table), ["sub", "cid"])
-        .groupBy("vec_id")
-        .agg(F.sum("d").alias("adc_dist"))
-        .orderBy("adc_dist", "vec_id")
-        .limit(topk)
-    )
+    candidates = assigned.join(F.broadcast(probes), "cid").select("vec_id", "cid")
+    codes = _codes(rsubs, cb).join(F.broadcast(candidates), "vec_id")
+    return _adc_topk(codes, qres, cb, topk, m, subdim)

@@ -10,6 +10,18 @@ Scale design:
 * **bucketed near-dup / LSH** — pair generation keyed by bucket (label or a
   deterministic sign-projection signature), never all-pairs; the standard
   sub-quadratic path at 100 TB. IVF-style: probe only matching buckets.
+* **the vector-index core** — the IVF coarse quantizer here and the PQ
+  sub-quantizers in ``operators/pq.py`` are one k-means [Jégou, Douze,
+  Schmid, TPAMI 2011], written once over a (vec_id, sub, svec) stream
+  of scaled-int64 vectors (exact integer math, value-hash oracle-able):
+  :func:`split_subspaces` cuts vectors into m subspaces keyed by sub
+  (IVF is the unkeyed m = 1 case, :func:`_one_subspace`); :func:`_lloyd`
+  is the one Lloyd trainer with the one training-set policy (hash sample
+  or ``train_cap`` bound); :func:`_assign` is the one nearest-centroid
+  assignment under the one :func:`_sqdist`; :func:`_probes` is the one
+  probe-list step (nprobe nearest centroids per query, by (qd, cid));
+  and :func:`_query` is the one single-query pick (the min-vec_id
+  vector, by TakeOrdered) for every single-query operator in both files.
 
 Floating point: dot products are folded sequentially over the array in BOTH
 engines (Spark ``aggregate``, DuckDB ``list_reduce``-equivalent comprehension
@@ -52,6 +64,15 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _query(df: DataFrame, **cols: str) -> DataFrame:
+    """The single-query convention: ``df``'s min-vec_id row as (q_id,
+    *cols), each keyword an alias of a ``df`` column, picked by TakeOrdered
+    (orderBy+limit: per-partition top-1, no global sort and no window)."""
+    return df.orderBy("vec_id").limit(1).select(
+        F.col("vec_id").alias("q_id"), *[F.col(c).alias(a) for a, c in cols.items()]
+    )
+
+
 def normalized(embeddings: DataFrame) -> DataFrame:
     """Pre-normalize embeddings once (÷ L2 norm) so pairwise cosine becomes
     a single dot product — norms are NOT recomputed per pair. The oracle
@@ -72,9 +93,7 @@ def cosine_topk(embeddings: DataFrame, k: int = TOPK) -> DataFrame:
     dim), score per row, global top-k via sort+limit (Spark runs this as
     TakeOrderedAndProject — no full sort materialization)."""
     nemb = normalized(embeddings)
-    q = nemb.orderBy("vec_id").limit(1).select(
-        F.col("vec_id").alias("q_id"), F.col("_nemb").alias("q_vec")
-    )
+    q = _query(nemb, q_vec="_nemb")
     scored = nemb.crossJoin(F.broadcast(q)).filter(F.col("vec_id") != F.col("q_id"))
     return (
         scored.select(
@@ -129,15 +148,7 @@ def ann_bucketed_topk(embeddings: DataFrame, k: int = TOPK) -> DataFrame:
     scored_space = normalized(embeddings).select(
         "vec_id", "_nemb", _sign_bucket(LSH_SIGN_BITS).alias("bucket")
     )
-    q = (
-        scored_space.orderBy("vec_id")
-        .limit(1)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("_nemb").alias("q_vec"),
-            F.col("bucket").alias("q_bucket"),
-        )
-    )
+    q = _query(scored_space, q_vec="_nemb", q_bucket="bucket")
     candidates = scored_space.join(
         F.broadcast(q),
         (F.col("bucket") == F.col("q_bucket")) & (F.col("vec_id") != F.col("q_id")),
@@ -224,12 +235,15 @@ def lsh_sign_buckets(embeddings: DataFrame, bits: int = LSH_SIGN_BITS) -> DataFr
     )
 
 
-# --- IVF with learned centroids (deterministic integer k-means) ------------
+# --- the vector-index core: IVF k-means and PQ codebooks -------------------
 IVF_K = 8  # centroid count
 IVF_ITERS = 2  # fixed Lloyd iterations (no convergence check → SQL-unrollable)
 IVF_SCALE = 1_000_000  # float → scaled-int64 quantization factor
 IVF_DIM = 64
 IVF_NPROBE = 2
+TRAIN_CAP = 100_000  # default k-means training-set bound (vectors)
+MAXSIM_M = 8  # subvectors per vector (matches pq.PQ_M)
+MAXSIM_SUBDIM = 8
 
 
 def quantized(embeddings: DataFrame) -> DataFrame:
@@ -250,6 +264,7 @@ def quantized(embeddings: DataFrame) -> DataFrame:
 
 
 def _sqdist(a: Column, b: Column) -> Column:
+    """Exact squared L2 distance of two int64 arrays (a sequential fold)."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
         F.lit(0).cast("long"),
@@ -257,20 +272,56 @@ def _sqdist(a: Column, b: Column) -> Column:
     )
 
 
-def _assign(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Nearest centroid per vector (tiebreak: smaller cid). The centroid set
-    is k rows → broadcast; assignment is an embarrassingly parallel scan."""
-    d = _sqdist(F.col("qvec"), F.col("cvec"))
-    return (
-        vecs.crossJoin(F.broadcast(centroids))
-        .select("vec_id", "qvec", F.struct(d.alias("dist"), F.col("cid")).alias("dc"))
-        .groupBy("vec_id")
-        .agg(F.min("dc").alias("dc"), F.first("qvec").alias("qvec"))
-        .select("vec_id", "qvec", F.col("dc.cid").alias("cid"), F.col("dc.dist").alias("dist"))
+def split_subspaces(
+    df: DataFrame, vec_col: str, m: int = MAXSIM_M, subdim: int = MAXSIM_SUBDIM
+) -> DataFrame:
+    """All of ``df``'s columns except ``vec_col``, plus (sub, svec): the
+    array column split into m contiguous subspaces. Pure per-row explode —
+    zero shuffle. Splits quantized vectors, IVF residuals and the PQ query
+    (``operators/pq.py``) as well as MaxSim's float token vectors."""
+    subs = F.array(
+        *[
+            F.struct(
+                F.lit(s).alias("sub"),
+                F.slice(vec_col, s * subdim + 1, subdim).alias("svec"),
+            )
+            for s in range(m)
+        ]
+    )
+    keep = [c for c in df.columns if c != vec_col]
+    return df.select(*keep, F.explode(subs).alias("s")).select(
+        *keep, F.col("s.sub").alias("sub"), F.col("s.svec").alias("svec")
     )
 
 
-TRAIN_CAP = 100_000  # default k-means training-set bound (vectors)
+def _one_subspace(vecs: DataFrame) -> DataFrame:
+    """(vec_id, svec): quantized vectors as an unkeyed stream — IVF
+    k-means is the PQ trainer on one subspace, which needs no sub key."""
+    return vecs.select("vec_id", F.col("qvec").alias("svec"))
+
+
+def _keys(df: DataFrame) -> list[str]:
+    """The subspace key of a point stream or centroid table: ["sub"] for
+    the PQ subspaces, [] for the one-subspace IVF stream."""
+    return [c for c in df.columns if c == "sub"]
+
+
+def _assign(points: DataFrame, centroids: DataFrame) -> DataFrame:
+    """(vec_id, [sub,] svec, cid, dist): the nearest centroid of each
+    (vec_id[, sub]) among the centroids of its subspace (tiebreak: smaller
+    cid). The centroid table (k rows per subspace) broadcasts; assignment
+    is an embarrassingly parallel scan."""
+    keys = _keys(centroids)
+    d = _sqdist(F.col("svec"), F.col("cvec"))
+    return (
+        points.join(F.broadcast(centroids), keys or None)
+        .select("vec_id", *keys, "svec", F.struct(d.alias("dist"), F.col("cid")).alias("dc"))
+        .groupBy("vec_id", *keys)
+        .agg(F.min("dc").alias("dc"), F.first("svec").alias("svec"))
+        .select(
+            "vec_id", *keys, "svec", F.col("dc.cid").alias("cid"), F.col("dc.dist").alias("dist")
+        )
+    )
 
 
 def bounded_training(
@@ -299,6 +350,141 @@ def bounded_training(
     )
 
 
+def _lloyd(
+    subs: DataFrame,
+    k: int,
+    iters: int,
+    train_bp: int = 10000,
+    train_cap: int | None = TRAIN_CAP,
+) -> DataFrame:
+    """([sub,] cid, cvec): k centroids per subspace after ``iters``
+    exact-integer Lloyd rounds over a (vec_id, [sub,] svec) stream — the
+    m PQ subspaces train in ONE job keyed by sub, not m sequential jobs;
+    the one-subspace IVF stream carries no key.
+
+    Training set: ``train_bp`` < 10000 trains on the deterministic vec_id
+    hash-sample (same predicate as ``sampling.hash_sample``); otherwise
+    ``train_cap`` bounds it via :func:`bounded_training`, counting vectors
+    as their sub-0 rows (every vector has exactly one); ``train_cap=None``
+    trains on the whole stream. Centroid quality needs ~10⁴–10⁶ vectors,
+    not the corpus, so at 100 TB training is sample-scale and only
+    assignment touches every row.
+
+    Init = each subspace's slice of the k vectors with the smallest
+    (hash64(vec_id), vec_id) — a deterministic pseudo-random draw, taken
+    as ONE TakeOrdered over one row per vector (per-partition top-k, no
+    global sort) and ranked by a row_number over just those k rows; the
+    PQ subspaces broadcast the k vec_ids back onto the training stream.
+    Each round = one broadcast-assign scan + one narrow ([sub,] cid, dim)
+    partial-sum shuffle; the update is the per-dimension truncating mean
+    (s − s % n) / n, so Spark's `div` and DuckDB's `//` agree on negative
+    sums. Empty clusters keep their previous centroid."""
+    from solana_etl_spark.functions.hashing import hash64
+    from solana_etl_spark.operators.sampling import sample_bucket
+
+    keys = _keys(subs)
+    first = F.col("sub") == 0 if keys else F.lit(True)  # one row per vector
+    if train_bp < 10000:
+        subs = subs.filter(sample_bucket(F.col("vec_id")) < train_bp)
+    elif train_cap is not None:
+        subs = bounded_training(subs, subs.filter(first), train_cap)
+    # a PQ vector's other subspaces are other rows: those join back onto
+    # the k picked vec_ids; an IVF vector is its one row, carried as is
+    carried = [] if keys else ["svec"]
+    init = (
+        subs.filter(first)
+        .select(hash64(F.col("vec_id").cast("string")).alias("_h"), "vec_id", *carried)
+        .orderBy("_h", "vec_id")
+        .limit(k)
+    )
+    init = init.select(
+        "vec_id",
+        *carried,
+        (F.row_number().over(Window.orderBy("_h", "vec_id")) - 1).alias("cid"),
+    )
+    if keys:
+        init = subs.join(F.broadcast(init), "vec_id")
+    centroids = init.select(*keys, "cid", F.col("svec").alias("cvec"))
+    for _ in range(iters):
+        per_dim = (
+            _assign(subs, centroids)
+            .select(*keys, "cid", F.posexplode("svec").alias("dim", "v"))
+            .groupBy(*keys, "cid", "dim")
+            .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
+        )
+        updated = (
+            per_dim.select(*keys, "cid", "dim", F.expr("(s - (s % n)) div n").alias("cm"))
+            .groupBy(*keys, "cid")
+            .agg(F.array_sort(F.collect_list(F.struct("dim", "cm"))).alias("_dm"))
+            .select(*keys, "cid", F.expr("transform(_dm, x -> x.cm)").alias("cvec"))
+        )
+        centroids = (
+            centroids.alias("old")
+            .join(updated.alias("new"), [*keys, "cid"], "left")
+            .select(
+                *keys,
+                "cid",
+                F.coalesce(F.col("new.cvec"), F.col("old.cvec")).alias("cvec"),
+            )
+        )
+    return centroids
+
+
+def _ivf(
+    embeddings: DataFrame,
+    k: int = IVF_K,
+    iters: int = IVF_ITERS,
+    train_bp: int = 10000,
+    train_cap: int | None = TRAIN_CAP,
+) -> tuple[DataFrame, DataFrame]:
+    """(points, centroids): the quantized corpus as its one-subspace
+    (vec_id, svec) stream and the (cid, cvec) IVF centroids trained on it."""
+    points = _one_subspace(quantized(embeddings))
+    return points, _lloyd(points, k, iters, train_bp, train_cap)
+
+
+def _probes(centroids: DataFrame, queries: DataFrame, nprobe: int) -> DataFrame:
+    """(q_id, q, cid): each query's probe list — the ``nprobe`` centroids
+    nearest it, ordered by (qd, cid). The (q_id, q) query side broadcasts
+    onto the k centroids and each query's k (qd, cid) pairs are sorted
+    inside one aggregate: no window, so one query and a batch plan alike.
+    The query vector rides along, so scoring needs no second query join."""
+    qd = F.struct(_sqdist(F.col("cvec"), F.col("q")).alias("qd"), F.col("cid"))
+    return (
+        centroids.crossJoin(F.broadcast(queries))
+        .groupBy("q_id", "q")
+        .agg(F.slice(F.array_sort(F.collect_list(qd)), 1, nprobe).alias("_p"))
+        .select("q_id", "q", F.explode("_p.cid").alias("cid"))
+    )
+
+
+def _probed(
+    points: DataFrame, centroids: DataFrame, queries: DataFrame, nprobe: int
+) -> DataFrame:
+    """(q_id, vec_id, dist): the vectors of each query's probe lists,
+    scored exactly against it — nprobe/k of the corpus per query, reached
+    by one broadcast join (no corpus shuffle)."""
+    return (
+        _assign(points, centroids)
+        .join(F.broadcast(_probes(centroids, queries, nprobe)), "cid")
+        .select("q_id", "vec_id", _sqdist(F.col("svec"), F.col("q")).alias("dist"))
+    )
+
+
+def _top_per_query(scored: DataFrame, topk: int) -> DataFrame:
+    """The ``topk`` rows of each q_id by (dist, vec_id): one q_id-partitioned
+    window over a (q_id, vec_id, dist) stream."""
+    rank = F.row_number().over(Window.partitionBy("q_id").orderBy("dist", "vec_id"))
+    return scored.withColumn("_rn", rank).filter(F.col("_rn") <= topk).drop("_rn")
+
+
+def _batch_queries(points: DataFrame, query_pred: Column) -> DataFrame:
+    """(q_id, q): every vector matching ``query_pred`` as a query."""
+    return points.filter(query_pred).select(
+        F.col("vec_id").alias("q_id"), F.col("svec").alias("q")
+    )
+
+
 def kmeans_centroids(
     embeddings: DataFrame,
     k: int = IVF_K,
@@ -306,82 +492,16 @@ def kmeans_centroids(
     train_bp: int = 10000,
     train_cap: int | None = TRAIN_CAP,
 ) -> DataFrame:
-    """(cid, cvec): centroids after ``iters`` exact-integer Lloyd rounds.
-
-    Init = the k vectors with the smallest (hash64(vec_id), vec_id) — a
-    deterministic pseudo-random draw, computed as orderBy+limit
-    (TakeOrderedAndProject: per-partition top-k, no global sort) with the
-    cid ranking as a row_number over just those k rows. Update =
-    per-dimension truncating integer mean, computed as (s − s % n) / n so
-    Spark's `div` and DuckDB agree on negative sums. Empty clusters keep
-    their previous centroid (never arises with hash-drawn init on this
-    data, but defined behavior).
+    """(cid, cvec): the IVF centroids — the shared Lloyd trainer
+    (:func:`_lloyd`) over the one-subspace stream of the quantized corpus.
 
     Training is BOUNDED BY DEFAULT: unless ``train_bp`` < 10000 requests
     an explicit hash-sample rate, ``train_cap`` (default 10⁵ vectors)
-    bounds the Lloyd scan via :func:`bounded_training` — centroid quality
-    needs ~10⁴–10⁶ vectors, not the corpus, so at 100 TB training is
-    sample-scale by default and only ASSIGNMENT touches every row (one
-    broadcast-join scan, handled by the callers). Each Lloyd round = one
-    narrow shuffle keyed by (cid, dim) for the partial per-dimension sums
-    — exchange count per round is unchanged by sampling; only the scan
-    width shrinks. ``train_cap=None`` restores full-corpus training.
+    bounds the Lloyd scan via :func:`bounded_training`; only ASSIGNMENT
+    touches every row (one broadcast-join scan, handled by the callers).
+    ``train_cap=None`` restores full-corpus training.
     """
-    from solana_etl_spark.functions.hashing import hash64
-    from solana_etl_spark.operators.sampling import sample_bucket
-
-    vecs = quantized(embeddings)
-    if train_bp < 10000:
-        vecs = vecs.filter(sample_bucket(F.col("vec_id")) < train_bp)
-    elif train_cap is not None:
-        vecs = bounded_training(vecs, vecs, train_cap)
-    sel = (
-        vecs.select(
-            hash64(F.col("vec_id").cast("string")).alias("_h"),
-            "vec_id",
-            "qvec",
-        )
-        .orderBy("_h", "vec_id")
-        .limit(k)
-    )
-    centroids = (
-        sel.withColumn(
-            "_rn", F.row_number().over(Window.orderBy("_h", "vec_id"))
-        )
-        .select((F.col("_rn") - 1).alias("cid"), F.col("qvec").alias("cvec"))
-    )
-    for _ in range(iters):
-        assigned = _assign(vecs, centroids)
-        dims = assigned.select(
-            "cid", F.posexplode("qvec").alias("dim", "v")
-        )
-        per_dim = dims.groupBy("cid", "dim").agg(
-            F.sum("v").alias("s"), F.count(F.lit(1)).alias("n")
-        )
-        new_centroids = (
-            per_dim.select(
-                "cid",
-                "dim",
-                F.expr("(s - (s % n)) div n").alias("m"),
-            )
-            .groupBy("cid")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("dim", "m"))
-                ).alias("_dm")
-            )
-            .select("cid", F.expr("transform(_dm, x -> x.m)").alias("cvec"))
-        )
-        # empty clusters (no assigned rows) fall back to the previous centroid
-        centroids = (
-            centroids.alias("old")
-            .join(new_centroids.alias("new"), "cid", "left")
-            .select(
-                "cid",
-                F.coalesce(F.col("new.cvec"), F.col("old.cvec")).alias("cvec"),
-            )
-        )
-    return centroids
+    return _ivf(embeddings, k, iters, train_bp, train_cap)[1]
 
 
 def ivf_assignments(
@@ -397,12 +517,14 @@ def ivf_assignments(
     vectors by default (``train_bp`` < 10000 requests an explicit sample
     rate instead) while still assigning EVERY vector — the 100 TB shape:
     bounded training scan, full assignment."""
-    centroids = kmeans_centroids(embeddings, k, iters, train_bp, train_cap)
-    return ivf_assign_with(quantized(embeddings), centroids)
+    points, centroids = _ivf(embeddings, k, iters, train_bp, train_cap)
+    return _assign(points, centroids).select("vec_id", "cid", "dist")
 
 
 def ivf_assign_with(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
-    return _assign(vecs, centroids).select("vec_id", "cid", "dist")
+    """(vec_id, cid, dist) of quantized (vec_id, qvec) vectors under given
+    (cid, cvec) centroids."""
+    return _assign(_one_subspace(vecs), centroids).select("vec_id", "cid", "dist")
 
 
 def ivf_topk(
@@ -416,21 +538,10 @@ def ivf_topk(
     min-vec_id vector, deterministic), then exact top-k within those
     inverted lists only — the scan touches nprobe/k of the corpus instead
     of all of it. Output (vec_id, dist) is exact integer math."""
-    vecs = quantized(embeddings)
-    centroids = kmeans_centroids(embeddings, k, iters)
-    query = vecs.orderBy("vec_id").limit(1).select(F.col("qvec").alias("q"))
-    probe_cids = (
-        centroids.crossJoin(F.broadcast(query))
-        .select("cid", _sqdist(F.col("cvec"), F.col("q")).alias("qd"))
-        .orderBy("qd", "cid")
-        .limit(nprobe)
-        .select("cid")
-    )
-    assigned = _assign(vecs, centroids)
-    candidates = assigned.join(F.broadcast(probe_cids), "cid")
+    points, centroids = _ivf(embeddings, k, iters)
     return (
-        candidates.crossJoin(F.broadcast(query))
-        .select("vec_id", _sqdist(F.col("qvec"), F.col("q")).alias("dist"))
+        _probed(points, centroids, _query(points, q="svec"), nprobe)
+        .select("vec_id", "dist")
         .orderBy("dist", "vec_id")
         .limit(topk)
     )
@@ -455,39 +566,9 @@ def ivf_batch_topk(
     that candidate stream only. Exact integer math end-to-end, same
     determinism contract as :func:`ivf_topk`.
     """
-    from pyspark.sql.window import Window
-
-    vecs = quantized(embeddings)
-    centroids = kmeans_centroids(embeddings, k, iters)
-    queries = vecs.filter(query_pred).select(
-        F.col("vec_id").alias("q_id"), F.col("qvec").alias("q")
-    )
-    probe_rank = F.row_number().over(
-        Window.partitionBy("q_id").orderBy("qd", "cid")
-    )
-    probes = (
-        centroids.crossJoin(F.broadcast(queries))
-        .select("q_id", "cid", _sqdist(F.col("cvec"), F.col("q")).alias("qd"))
-        .withColumn("_rn", probe_rank)
-        .filter(F.col("_rn") <= nprobe)
-        .select("q_id", "cid")
-    )
-    assigned = _assign(vecs, centroids)
-    scored = (
-        assigned.join(F.broadcast(probes), "cid")
-        .join(F.broadcast(queries), "q_id")
-        .select(
-            "q_id", "vec_id", _sqdist(F.col("qvec"), F.col("q")).alias("dist")
-        )
-    )
-    top_rank = F.row_number().over(
-        Window.partitionBy("q_id").orderBy("dist", "vec_id")
-    )
-    return (
-        scored.withColumn("_rn", top_rank)
-        .filter(F.col("_rn") <= topk)
-        .select("q_id", "vec_id", "dist")
-    )
+    points, centroids = _ivf(embeddings, k, iters)
+    queries = _batch_queries(points, query_pred)
+    return _top_per_query(_probed(points, centroids, queries, nprobe), topk)
 
 
 def ivf_batch_recall(
@@ -508,46 +589,23 @@ def ivf_batch_recall(
     Lloyd; the approx branch is the :func:`ivf_batch_topk` shape
     (broadcast probe join, no corpus shuffle), the exact branch scores
     |corpus|×Q via a broadcast query cross join and per-query windows.
-    Queries with zero probe hits still report (left join, n_hit 0)."""
-    from pyspark.sql.window import Window
-
+    Every query reports: the approx branch is the left side of the join,
+    and a query always lies in its own nearest list, which is always
+    probed, so each query has approx rows (n_hit counts those that are
+    also in its exact top-k)."""
     spark = embeddings.sparkSession
-    vecs = quantized(embeddings)
-    trained = kmeans_centroids(embeddings, k, iters)
+    points, trained = _ivf(embeddings, k, iters)
     centroids = spark.createDataFrame(trained.collect(), trained.schema)
-    queries = vecs.filter(query_pred).select(
-        F.col("vec_id").alias("q_id"), F.col("qvec").alias("q")
-    )
-    rank = lambda: F.row_number().over(  # noqa: E731
-        Window.partitionBy("q_id").orderBy("dist", "vec_id")
-    )
-
-    exact = (
-        vecs.crossJoin(F.broadcast(queries))
-        .select("q_id", "vec_id", _sqdist(F.col("qvec"), F.col("q")).alias("dist"))
-        .withColumn("_rn", rank())
-        .filter(F.col("_rn") <= topk)
-        .select("q_id", "vec_id", F.lit(1).alias("is_rel"))
-    )
-    probe_rank = F.row_number().over(
-        Window.partitionBy("q_id").orderBy("qd", "cid")
-    )
-    probes = (
-        centroids.crossJoin(F.broadcast(queries))
-        .select("q_id", "cid", _sqdist(F.col("cvec"), F.col("q")).alias("qd"))
-        .withColumn("_rn", probe_rank)
-        .filter(F.col("_rn") <= nprobe)
-        .select("q_id", "cid")
-    )
-    approx = (
-        _assign(vecs, centroids)
-        .join(F.broadcast(probes), "cid")
-        .join(F.broadcast(queries), "q_id")
-        .select("q_id", "vec_id", _sqdist(F.col("qvec"), F.col("q")).alias("dist"))
-        .withColumn("_rn", rank())
-        .filter(F.col("_rn") <= topk)
-        .select("q_id", "vec_id")
-    )
+    queries = _batch_queries(points, query_pred)
+    exact = _top_per_query(
+        points.crossJoin(F.broadcast(queries)).select(
+            "q_id", "vec_id", _sqdist(F.col("svec"), F.col("q")).alias("dist")
+        ),
+        topk,
+    ).select("q_id", "vec_id", F.lit(1).alias("is_rel"))
+    approx = _top_per_query(
+        _probed(points, centroids, queries, nprobe), topk
+    ).select("q_id", "vec_id")
     return (
         approx.join(exact, ["q_id", "vec_id"], "left")
         .groupBy("q_id")
@@ -574,25 +632,17 @@ def _probe_scored(
     result and then ``scored.unpersist()`` — see :func:`_finalize_eval` —
     otherwise each eval leaks a cached corpus-sized block in a long-lived
     session."""
-    vecs = quantized(embeddings)
-    centroids = kmeans_centroids(embeddings, k, iters)
-    query = vecs.orderBy("vec_id").limit(1).select(F.col("qvec").alias("q"))
-    probe_cids = (
-        centroids.crossJoin(F.broadcast(query))
-        .select("cid", _sqdist(F.col("cvec"), F.col("q")).alias("qd"))
-        .orderBy("qd", "cid")
-        .limit(nprobe)
-        .select("cid")
-    )
+    points, centroids = _ivf(embeddings, k, iters)
+    query = _query(points, q="svec")
     scored = (
-        _assign(vecs, centroids)
+        _assign(points, centroids)
         .crossJoin(F.broadcast(query))
         .select(
-            "vec_id", "cid", _sqdist(F.col("qvec"), F.col("q")).alias("qd")
+            "vec_id", "cid", _sqdist(F.col("svec"), F.col("q")).alias("qd")
         )
         .persist()
     )
-    return scored, probe_cids
+    return scored, _probes(centroids, query, nprobe).select("cid")
 
 
 def _finalize_eval(result: DataFrame, scored: DataFrame) -> DataFrame:
@@ -658,8 +708,6 @@ def ivf_ndcg(
     partitioning)."""
     import math
 
-    from pyspark.sql.window import Window
-
     scored, probe_cids = _probe_scored(embeddings, k, iters, nprobe)
     exact = scored.orderBy("qd", "vec_id").limit(topk).select("vec_id")
     approx = scored.join(F.broadcast(probe_cids), "cid").orderBy(
@@ -688,22 +736,8 @@ def ivf_ndcg(
 
 # --- late-interaction (MaxSim) retrieval -----------------------------------
 
-MAXSIM_M = 8  # subvectors per vector (matches pq.PQ_M)
-MAXSIM_SUBDIM = 8
 MAXSIM_QUERIES = 4
 MAXSIM_K = 5
-
-
-def _subvecs(col: Column, m: int, subdim: int) -> Column:
-    return F.array(
-        *[
-            F.struct(
-                F.lit(s).alias("sub"),
-                F.slice(col, s * subdim + 1, subdim).alias("sv"),
-            )
-            for s in range(m)
-        ]
-    )
 
 
 def maxsim_topk(
@@ -729,16 +763,17 @@ def maxsim_topk(
     broadcast against one corpus-subvector scan, then two aggregates
     keyed by (query, candidate[, subvector]) and one per-query window —
     volume is queries × corpus × m², bounded by the query batch."""
-    subs = _subvecs(F.col("embedding"), m, subdim)
-    docs = embeddings.select(
-        "vec_id", F.explode(subs).alias("d")
-    ).select("vec_id", F.col("d.sv").alias("dv"))
-    queries = (
+    docs = split_subspaces(
+        embeddings.select("vec_id", "embedding"), "embedding", m, subdim
+    ).select("vec_id", F.col("svec").alias("dv"))
+    queries = split_subspaces(
         embeddings.orderBy("vec_id")
         .limit(n_queries)
-        .select(F.col("vec_id").alias("q_id"), F.explode(subs).alias("q"))
-        .select("q_id", F.col("q.sub").alias("qsub"), F.col("q.sv").alias("qv"))
-    )
+        .select(F.col("vec_id").alias("q_id"), "embedding"),
+        "embedding",
+        m,
+        subdim,
+    ).select("q_id", F.col("sub").alias("qsub"), F.col("svec").alias("qv"))
     scored = (
         docs.crossJoin(F.broadcast(queries))
         .filter(F.col("vec_id") != F.col("q_id"))
@@ -834,11 +869,7 @@ def sq8_topk(
     space = normalized(embeddings).withColumn(
         "_codes", _sq8_codes(F.col("embedding"), stats)
     )
-    q = space.orderBy("vec_id").limit(1).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("_codes").alias("q_codes"),
-        F.col("_nemb").alias("q_vec"),
-    )
+    q = _query(space, q_codes="_codes", q_vec="_nemb")
     score = F.aggregate(
         F.zip_with(F.col("_codes"), F.col("q_codes"), lambda a, b: a * b),
         F.lit(0).cast("long"),
@@ -939,11 +970,7 @@ def rp_topk(
     Candidate scores round at 6 decimals with vec_id tie-breaks, so the
     cut is deterministic and the operator value-hash oracle-checkable."""
     space = normalized(rp_project(embeddings, out_dim))
-    q = space.orderBy("vec_id").limit(1).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("_rp").alias("q_rp"),
-        F.col("_nemb").alias("q_vec"),
-    )
+    q = _query(space, q_rp="_rp", q_vec="_nemb")
     cand = (
         space.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("q_id"))

@@ -111,7 +111,10 @@ def test_load_file_layout_and_rows(
     argv = ["all", blocks_dir, dest, "--destination_format", fmt]
     argv += [] if single_file else ["--no-single_file"]
     argv += ["--keep_subdirs"] if keep_subdirs else []
+    spark.catalog.clearCache()
     assert cmd_load_file(argv) == 0
+    # the transactions view load-file persists is released after the write
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     for name in TABLES:
         want, path = expected[name], os.path.join(dest, name)

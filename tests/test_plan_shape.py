@@ -210,8 +210,9 @@ def test_kmeans_init_is_take_ordered_not_global_window(spark):
     """Centroid init must plan as TakeOrderedAndProject (per-partition
     top-k + driver merge), never a row_number window over the full
     training set (a single-partition sort at 100 TB). The one allowed
-    Window ranks only the k limited rows. Applies to both the IVF k-means
-    and the PQ codebook Lloyd loops."""
+    Window ranks only the k limited rows. IVF k-means and the PQ
+    codebooks are the same Lloyd trainer with one subspace or m, so both
+    entry points are checked."""
     import re
 
     from solana_etl_spark.operators.pq import pq_codebooks
@@ -316,7 +317,15 @@ def test_rolling_stats_single_window_pass(spark):
 def test_sq8_and_rp_topk_cuts_are_take_ordered(spark):
     """Both ANN candidate cuts and final top-ks must plan as
     TakeOrderedAndProject (streaming top-k) — never a global sort
-    materialization or a single-partition row_number window."""
+    materialization or a single-partition row_number window. The PQ
+    searches pick their query the same way (TakeOrdered, then split into
+    subspaces), never by ranking the whole subvector stream: no
+    WindowGroupLimit, and every Window ranks only the k rows of a
+    centroid-init TakeOrdered."""
+    import re
+
+    from solana_etl_spark.operators.pq import PQ_K
+    from solana_etl_spark.operators.similarity import IVF_K
     from solana_etl_spark.queries import all_queries
 
     for name in ("ann_sq8_topk", "ann_rp_topk"):
@@ -325,6 +334,18 @@ def test_sq8_and_rp_topk_cuts_are_take_ordered(spark):
         )
         assert "TakeOrderedAndProject" in plan, name
         assert "Window" not in plan, name
+
+    for name in ("ann_pq_adc_topk", "ann_ivfpq_topk"):
+        df = all_queries()[name](spark, "/root/testdata/sf0.001")
+        lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+        top = lines[1] if lines[0].startswith("AdaptiveSparkPlan") else lines[0]
+        assert "TakeOrderedAndProject" in top, name  # the top-k cut
+        assert not any("WindowGroupLimit" in line for line in lines), name
+        windows = [i for i, line in enumerate(lines) if re.search(r"\bWindow\b", line)]
+        assert windows, name
+        for i in windows:
+            init = re.search(r"TakeOrderedAndProject\(limit=(\d+)", lines[i + 1])
+            assert init and int(init.group(1)) in (IVF_K, PQ_K), (name, lines[i])
 
 
 def test_bloom_prefilter_runs_below_the_join(spark):
