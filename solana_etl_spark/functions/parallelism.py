@@ -20,7 +20,7 @@ form always targeted ``defaultParallelism``, so a 400-row fixture fanned
 into 32 tasks of ~12 rows and the bench's fixed overhead grew WITH core
 count): when the scan is a few-file local-parquet read, the footer
 metadata also yields the exact row count, and the target becomes
-``min(cores·min_factor, ceil(rows / COMPUTE_ROWS_PER_TASK))`` with a
+``min(cores, ceil(rows / COMPUTE_ROWS_PER_TASK))`` with a
 floor of 1 (an empty or single-batch input is never shuffled at all).
 ``COMPUTE_ROWS_PER_TASK`` (a constant, 64) is sized to the measured
 per-row kernel costs — 0.07–7 ms for the media decodes, ~1 ms/doc for
@@ -66,9 +66,8 @@ def _parquet_meta(files: list[str]) -> tuple[int, int] | None:
     return rows, groups
 
 
-def ensure_compute_parallelism(df: DataFrame, min_factor: int = 1) -> DataFrame:
-    sc = df.sparkSession.sparkContext
-    cores_target = sc.defaultParallelism * min_factor
+def ensure_compute_parallelism(df: DataFrame) -> DataFrame:
+    cores_target = df.sparkSession.sparkContext.defaultParallelism
     try:
         files = df.inputFiles()
     except Exception:

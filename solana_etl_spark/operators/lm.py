@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from solana_etl_spark.operators.text import tokens
+from solana_etl_spark.operators.vocab import word_split
 
 _LP_DECIMALS = 9
 _LP_TYPE = "decimal(28,9)"
@@ -34,8 +34,8 @@ _LP_TYPE = "decimal(28,9)"
 
 def _doc_tokens(docs: DataFrame, text_col: str) -> DataFrame:
     return docs.select(
-        "doc_id", F.explode(tokens(F.col(text_col))).alias("tok")
-    ).filter(F.col("tok") != "")
+        "doc_id", F.explode(word_split(F.col(text_col))).alias("tok")
+    )
 
 
 def smoothed_log_prob(c: Column, n: Column, v: Column) -> Column:

@@ -39,9 +39,15 @@ shuffles (word join + per-doc regroup), never a per-row Python UDF.
 Out-of-vocabulary characters take a fixed-cost single-char fallback
 (the byte-fallback analog), so every word is segmentable.
 
+Shared tokenizer core (operators/vocab.py): the word split and the
+(word, freq) table, the (start, length) piece lattice packed into one
+map per word (``piece_spans`` / ``piece_map`` / ``piece_at`` — the same
+lattice WordPiece's longest-match encoder indexes), and the distinct-word
+encoder ``encode_distinct_words``; this module keeps the Viterbi DP, the
+EM loop and the costs.
+
 The reference has no text surface; this is charter LLM-pipeline
-machinery (SURVEY §2.11 family), sharing word_freq_table with the BPE
-trainer.
+machinery (SURVEY §2.11 family).
 """
 
 from __future__ import annotations
@@ -51,7 +57,14 @@ from decimal import Decimal
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from solana_etl_spark.operators.vocab import word_freq_table
+from solana_etl_spark.operators.vocab import (
+    KEY_BASE,  # noqa: F401 - the piece-map packing bound, re-exported
+    encode_distinct_words,
+    piece_at,
+    piece_map,
+    piece_spans,
+    word_freq_table,
+)
 
 MAX_PIECE_LEN = 4
 SEED_SIZE = 64
@@ -65,43 +78,6 @@ ACC_T = "decimal(28,9)"
 # 10^100 to reach it), so the fallback is only taken when nothing in
 # the vocabulary covers the character.
 UNK_COST = Decimal("99.999999999")
-# Edge-map key packing: (start0, len) -> start0 * KEY_BASE + len.
-# len <= max_piece_len < KEY_BASE keeps keys collision-free.
-KEY_BASE = 64
-
-
-def _piece_structs(word: Column, max_piece_len: int) -> Column:
-    """array<struct<s,j,piece>> of every substring of ``word`` up to
-    ``max_piece_len`` chars — ``s`` 1-based start, ``j`` length."""
-    return F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), F.length(word)),
-            lambda s: F.transform(
-                F.sequence(
-                    F.lit(1),
-                    F.least(F.lit(max_piece_len), F.length(word) - s + 1),
-                ),
-                lambda j: F.struct(
-                    s.alias("s"), j.alias("j"), word.substr(s, j).alias("piece")
-                ),
-            ),
-        )
-    )
-
-
-def _check_key_base(max_piece_len: int) -> None:
-    """Every edge/DP map in this module packs (start0, len) keys as
-    ``start0 * KEY_BASE + len``; ``len <= max_piece_len < KEY_BASE`` is
-    what keeps the packing collision-free. Fail loudly at call time
-    (same contract as wordpiece._match_maps) instead of surfacing as a
-    duplicate-map-key runtime error — or, under the LEGACY
-    mapKeyDedupPolicy, silently wrong segmentations."""
-    if max_piece_len >= KEY_BASE:
-        raise ValueError(
-            f"max_piece_len must be < {KEY_BASE} (key packing "
-            f"(start * {KEY_BASE} + len) is collision-free only below it), "
-            f"got {max_piece_len}"
-        )
 
 
 def piece_candidates(
@@ -109,13 +85,9 @@ def piece_candidates(
 ) -> DataFrame:
     """(s, j, piece, freq) for every substring occurrence of every
     distinct word — the seed-harvest relation. Runs on the word-freq
-    table, so its size is (words × len × max_piece_len), Zipf-bounded."""
-    _check_key_base(max_piece_len)
-    return words.select(
-        "word",
-        "freq",
-        F.explode(_piece_structs(F.col("word"), max_piece_len)).alias("c"),
-    ).select("word", "freq", "c.s", "c.j", "c.piece")
+    table, so its size is (words × len × max_piece_len), Zipf-bounded.
+    Refuses ``max_piece_len >= KEY_BASE`` (``vocab.piece_spans``)."""
+    return piece_spans(words.select("word", "freq"), max_piece_len)
 
 
 def _vocab_df(
@@ -127,23 +99,52 @@ def _vocab_df(
     )
 
 
-def _costs_rows(counts: DataFrame) -> list[tuple[str, Decimal]]:
-    """M-step: (piece, cnt) -> collected [(piece, cost)] with
+def _with_costs(counts: DataFrame) -> DataFrame:
+    """M-step: (piece, cnt) -> (piece, cnt, cost) with
     cost = ROUND(-log10(cnt/total), 9), computed IN-PLAN so the engine's
     log10/round pair matches the DuckDB oracle at the 9-decimal boundary
     (the validated cross-engine contract — see text_char_entropy)."""
     total = counts.agg(F.sum("cnt").cast("double").alias("_t"))
-    rows = (
-        counts.crossJoin(F.broadcast(total))
-        .select(
-            "piece",
-            F.round(
-                -F.log10(F.col("cnt").cast("double") / F.col("_t")), 9
-            ).alias("cost"),
-        )
-        .collect()
+    cost = F.round(-F.log10(F.col("cnt").cast("double") / F.col("_t")), 9)
+    return counts.crossJoin(F.broadcast(total)).select(
+        "piece", "cnt", cost.alias("cost")
     )
+
+
+def _costs_rows(counts: DataFrame) -> list[tuple[str, Decimal]]:
+    """The collected [(piece, cost)] of :func:`_with_costs`."""
+    rows = _with_costs(counts).collect()
     return [(r["piece"], Decimal(str(r["cost"]))) for r in rows]
+
+
+def _top_pieces(counts: DataFrame, n: int) -> DataFrame:
+    """The top ``n`` multi-char pieces by (cnt DESC, piece ASC) —
+    TakeOrdered, not a global window — plus every single character."""
+    multi = (
+        counts.filter(F.length("piece") > 1)
+        .orderBy(F.desc("cnt"), F.asc("piece"))
+        .limit(n)
+    )
+    return multi.unionByName(counts.filter(F.length("piece") == 1))
+
+
+def _edge_map(
+    words: DataFrame, vocab_df: DataFrame, max_piece_len: int
+) -> DataFrame:
+    """word -> ``_map`` of (start0, len) -> piece cost: every in-vocab
+    piece, plus every single char at UNK_COST when the vocabulary lacks
+    it (``vocab.piece_map``)."""
+
+    def edges(cand: DataFrame) -> DataFrame:
+        return (
+            cand.join(F.broadcast(vocab_df), "piece", "left")
+            .filter((F.col("j") == 1) | F.col("cost").isNotNull())
+            .withColumn(
+                "v", F.coalesce("cost", F.lit(UNK_COST).cast(COST_T))
+            )
+        )
+
+    return piece_map(words, max_piece_len, edges)
 
 
 def viterbi_segment(
@@ -162,29 +163,10 @@ def viterbi_segment(
     ``aggregate`` passes (forward costs, backtrace), exact DECIMAL sums,
     no Python, no further shuffle. Never quadratic in anything: the DP
     is O(len × max_piece_len) per distinct word."""
-    _check_key_base(max_piece_len)
-    cand = piece_candidates(words, max_piece_len)
-    edges = (
-        cand.join(F.broadcast(vocab_df), "piece", "left")
-        .filter((F.col("j") == 1) | F.col("cost").isNotNull())
-        .withColumn(
-            "cost", F.coalesce("cost", F.lit(UNK_COST).cast(COST_T))
-        )
-    )
-    emaps = edges.groupBy("word").agg(
-        F.map_from_entries(
-            F.collect_list(
-                F.struct(
-                    ((F.col("s") - 1) * KEY_BASE + F.col("j")).alias("k"),
-                    F.col("cost").alias("v"),
-                )
-            )
-        ).alias("_emap")
-    )
-    with_map = words.join(emaps, "word")
+    with_map = words.join(_edge_map(words, vocab_df, max_piece_len), "word")
 
     word = F.col("word")
-    emap = F.col("_emap")
+    emap = F.col("_map")
 
     def best_at(acc: Column, p: Column) -> Column:
         # candidates: struct(cost, mj, back) — lexicographic array_min is
@@ -197,7 +179,7 @@ def viterbi_segment(
                         F.when(p == j, F.lit(0).cast(ACC_T)).otherwise(
                             F.element_at(acc, (p - j).cast("int"))["cost"]
                         )
-                        + F.element_at(emap, ((p - j) * KEY_BASE + j).cast("int"))
+                        + piece_at(emap, p - j, j)
                     )
                     .cast(ACC_T)
                     .alias("cost"),
@@ -241,8 +223,7 @@ def viterbi_segment(
         ).otherwise(acc),
         lambda acc: acc["toks"],
     )
-    keep = [c for c in words.columns]
-    return staged.withColumn("pieces", trace).select(*keep, "pieces")
+    return staged.withColumn("pieces", trace).select(*words.columns, "pieces")
 
 
 def word_nll(words: DataFrame, vocab_df: DataFrame,
@@ -250,22 +231,6 @@ def word_nll(words: DataFrame, vocab_df: DataFrame,
     """(word, freq, nll): the Viterbi path cost per word — Σ freq·nll is
     the corpus objective hard-EM monotonically improves (the property
     test's invariant)."""
-    cand = piece_candidates(words, max_piece_len)
-    edges = (
-        cand.join(F.broadcast(vocab_df), "piece", "left")
-        .filter((F.col("j") == 1) | F.col("cost").isNotNull())
-        .withColumn("cost", F.coalesce("cost", F.lit(UNK_COST).cast(COST_T)))
-    )
-    emaps = edges.groupBy("word").agg(
-        F.map_from_entries(
-            F.collect_list(
-                F.struct(
-                    ((F.col("s") - 1) * KEY_BASE + F.col("j")).alias("k"),
-                    F.col("cost").alias("v"),
-                )
-            )
-        ).alias("_emap")
-    )
     seg = viterbi_segment(words, vocab_df, max_piece_len)
     # path cost = sum of piece costs re-looked-up from the map: cheaper to
     # recompute from the DP, but this keeps word_nll independent of DP
@@ -276,10 +241,7 @@ def word_nll(words: DataFrame, vocab_df: DataFrame,
         lambda acc, piece: F.struct(
             (
                 acc["c"]
-                + F.element_at(
-                    F.col("_emap"),
-                    (acc["p"] * KEY_BASE + F.length(piece)).cast("int"),
-                )
+                + piece_at(F.col("_map"), acc["p"], F.length(piece))
             )
             .cast(ACC_T)
             .alias("c"),
@@ -288,7 +250,7 @@ def word_nll(words: DataFrame, vocab_df: DataFrame,
         lambda acc: acc["c"],
     )
     return (
-        seg.join(emaps, "word")
+        seg.join(_edge_map(words, vocab_df, max_piece_len), "word")
         .select("word", "freq", pieces_cost.alias("nll"))
     )
 
@@ -301,17 +263,10 @@ def seed_vocab_counts(
     """(piece, cnt): top ``seed_size`` multi-char substrings by
     (freq-weighted count DESC, piece ASC) — TakeOrdered, not a global
     window — plus every single character with its count."""
-    cand = piece_candidates(words, max_piece_len)
-    counts = cand.groupBy("piece").agg(
+    counts = piece_candidates(words, max_piece_len).groupBy("piece").agg(
         F.sum("freq").cast("long").alias("cnt")
     )
-    multi = (
-        counts.filter(F.length("piece") > 1)
-        .orderBy(F.desc("cnt"), F.asc("piece"))
-        .limit(seed_size)
-    )
-    chars = counts.filter(F.length("piece") == 1)
-    return multi.unionByName(chars)
+    return _top_pieces(counts, seed_size)
 
 
 def _char_table(words: DataFrame) -> DataFrame:
@@ -387,25 +342,8 @@ def train_unigram_vocab(
         # then renormalize costs over the kept set. The result is bounded
         # (vocab_size + alphabet) driver state — collect it so every
         # cache this function pinned can be released before returning.
-        multi = (
-            last.filter(F.length("piece") > 1)
-            .orderBy(F.desc("cnt"), F.asc("piece"))
-            .limit(vocab_size)
-        )
-        kept = multi.unionByName(last.filter(F.length("piece") == 1))
-        total = kept.agg(F.sum("cnt").cast("double").alias("_t"))
-        final_rows = (
-            kept.crossJoin(F.broadcast(total))
-            .select(
-                "piece",
-                "cnt",
-                F.round(
-                    -F.log10(F.col("cnt").cast("double") / F.col("_t")), 9
-                ).alias("cost"),
-            )
-            .orderBy("piece")
-            .collect()
-        )
+        kept = _with_costs(_top_pieces(last, vocab_size))
+        final_rows = kept.orderBy("piece").collect()
         return spark.createDataFrame(
             final_rows, schema="piece string, cnt long, cost double"
         ).orderBy("piece")
@@ -424,50 +362,26 @@ def encode_unigram(
     out_col: str = "unigram_tokens",
     max_piece_len: int = MAX_PIECE_LEN,
 ) -> DataFrame:
-    """Tokenize a corpus with a shipped unigram vocabulary: Viterbi runs
-    ONCE PER DISTINCT WORD (Zipf-bounded), the corpus word stream joins
-    its segmentations back and reassembles per document in word order.
+    """Tokenize a corpus with a shipped unigram vocabulary:
+    ``vocab.encode_distinct_words`` with :func:`viterbi_segment` as the
+    segmenter — Viterbi runs ONCE PER DISTINCT WORD (Zipf-bounded), the
+    corpus word stream joins its segmentations back and reassembles per
+    document in word order.
 
     Normalization matches the BPE encoder: lowercase, split on \\s+.
     NULL text -> NULL tokens; empty/whitespace-only -> empty array.
     Shuffles: the bounded candidate regroup inside viterbi_segment, the
     word-keyed segment join, and one per-doc regroup — all linear in the
     corpus; no Python in any hot path."""
-    spark = docs.sparkSession
-    stream = docs.select(
-        F.col(id_col).alias("_eid"),
-        F.posexplode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), r"\s+"),
-                lambda w: w != "",
-            )
-        ).alias("_pos", "word"),
-    )
-    distinct_words = stream.select("word").distinct().withColumn(
-        "freq", F.lit(1).cast("long")
-    )
-    seg = viterbi_segment(
-        distinct_words, _vocab_df(spark, vocab), max_piece_len
-    ).select("word", "pieces")
-    per_doc = (
-        stream.join(seg, "word")
-        .groupBy("_eid")
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("_pos", "pieces"))
-                    ),
-                    lambda s: s["pieces"],
-                )
-            ).alias("_toks")
-        )
-    )
-    return docs.join(
-        per_doc, docs[id_col] == per_doc["_eid"], "left"
-    ).select(
-        *docs.columns,
-        F.when(F.col(text_col).isNull(), F.lit(None).cast("array<string>"))
-        .otherwise(F.coalesce("_toks", F.array().cast("array<string>")))
-        .alias(out_col),
+    vocab_df = _vocab_df(docs.sparkSession, vocab)
+    return encode_distinct_words(
+        docs,
+        lambda words: viterbi_segment(
+            words.withColumn("freq", F.lit(1).cast("long")),
+            vocab_df,
+            max_piece_len,
+        ),
+        text_col,
+        id_col,
+        out_col,
     )

@@ -1,5 +1,6 @@
-"""BPE vocabulary induction: the tokenizer-training pass of an LLM data
-pipeline, run where the data is.
+"""BPE vocabulary induction, and the Spark half of the tokenizer core the
+three tokenizer families (BPE here, WordPiece in operators/wordpiece.py,
+unigram-LM in operators/unigram.py) share.
 
 Training a byte-pair-encoding vocabulary over a 100 TB corpus cannot
 collect text to a driver. :func:`train_bpe_merges` has two engines
@@ -21,30 +22,58 @@ behind one distributed scan:
 Ties on pair count break on (pair_a, pair_b) lexical order, so the merge
 sequence is deterministic across partitionings, engines and both loops.
 
+The shared pieces, one of each:
+
+- :func:`word_split` — the word split (lowercase, split on ``\\s+``,
+  drop empty strings) of every trainer, encoder and operators/lm.py;
+- :func:`train_on_words` — the capped collect and the driver/distributed
+  dispatch of both merge trainers and the stream trainers;
+- :func:`merge_rounds` — the distributed merge round; each trainer
+  passes only its score and its candidate filter;
+- :func:`piece_spans` / :func:`piece_map` / :func:`piece_at` — the
+  (start, length) piece lattice of WordPiece's longest-match encoder and
+  unigram's Viterbi, packed into one map per word under ``KEY_BASE``;
+- :func:`encode_distinct_words` — segment each distinct word once and
+  reassemble each document in word order; each encoder passes only its
+  segmenter.
+
 The reference has no text surface at all; this is charter LLM-pipeline
 machinery (SURVEY §2.11 family: text analysis / tokenization).
 """
 
 from __future__ import annotations
 
+import operator
+from typing import Callable, TypeVar
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from solana_etl_spark.functions.sqltext import string_lit
+from solana_etl_spark.operators.vocab_driver import (
+    DRIVER_WORD_TABLE_CAP,
+    EOW,
+    bpe_merges_from_word_freqs,
+)
 
-EOW = "</w>"  # end-of-word sentinel, as in the original BPE formulation
+T = TypeVar("T")
+
+# Piece-map key packing: (start0, len) -> start0 * KEY_BASE + len, which
+# is collision-free while len < KEY_BASE.
+KEY_BASE = 64
+
+
+def word_split(text: Column) -> Column:
+    """The words of ``text``: lowercased, split on ``\\s+``, empty
+    strings dropped (NULL text -> NULL)."""
+    return F.array_remove(F.split(F.lower(text), r"\s+"), "")
 
 
 def word_freq_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Corpus → (word, freq): the one full scan; everything after runs on
     this (much smaller) table."""
     return (
-        docs.select(
-            F.explode(
-                F.split(F.lower(F.col(text_col)), r"\s+")
-            ).alias("word")
-        )
-        .filter(F.col("word") != "")
+        docs.select(F.explode(word_split(F.col(text_col))).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
@@ -127,18 +156,85 @@ def merge_pair_sql(
     )
 
 
-def _pair_counts(words: DataFrame) -> DataFrame:
+def train_on_words(
+    words: DataFrame,
+    driver: Callable[[list[tuple[str, int]]], T],
+    distributed: Callable[[DataFrame], T],
+    strategy: str = "auto",
+    cap: int | None = None,
+    stats: dict | None = None,
+) -> T:
+    """The one trainer dispatch over a (word, freq) table.
+    ``strategy="auto"`` collects the table with LIMIT cap+1 (so an
+    over-cap table never materializes on the driver) and, when it fits
+    under ``cap`` (default ``DRIVER_WORD_TABLE_CAP``), returns
+    ``driver([(word, freq), …])``; otherwise, and always under
+    ``strategy="distributed"``, returns ``distributed(words)``.
+    ``stats`` (optional) records the engine taken and the rows
+    collected."""
+    cap = DRIVER_WORD_TABLE_CAP if cap is None else cap
+    if strategy not in ("auto", "distributed"):
+        raise ValueError(f"unknown strategy {strategy!r}")
+    if strategy == "auto":
+        rows = words.limit(cap + 1).collect()
+        if len(rows) <= cap:
+            if stats is not None:
+                stats.update(strategy="driver", words_collected=len(rows))
+            return driver([(r["word"], r["freq"]) for r in rows])
+    if stats is not None:
+        stats["strategy"] = "distributed"
+    return distributed(words)
+
+
+def merge_rounds(
+    words: DataFrame,
+    n_merges: int,
+    score: Callable[[DataFrame, DataFrame], DataFrame],
+    eligible: Column | str = "true",
+    merged: Callable[[str, str], str] = operator.add,
+    stats: dict | None = None,
+) -> list[tuple[str, str]]:
+    """The distributed merge loop over words(word, freq, symbols), one
+    merge per round: freq-weighted adjacent pair counts (a, b, cnt),
+    kept where ``eligible`` holds, ranked by the ``score`` column of
+    ``score(pairs, words)``; the argmax on (score desc, a, b) is the one
+    collected row. The merge is applied to every word as one SQL-text
+    fold producing ``merged(a, b)``. Returns the merged pairs in order;
+    ``stats["rounds"]`` counts the rounds.
+
+    Each round ends in localCheckpoint, NOT persist+count: a persist
+    chain keeps every prior round's (large, interpreted) merge-fold plan
+    as an un-executed child, and Catalyst re-canonicalizes that
+    O(rounds)-deep tree per cache lookup — measured on WordPiece's loop:
+    24 rounds blew past 15 min with persist+count vs seconds per round
+    truncated. Same learned merges: checkpointing changes lineage only.
+    The fold is SQL text, one parse per round (r10, guide §7.3).
+    Measured for BPE at sf0.01: ~0.3 s/round, flat with round count."""
     n = F.size("symbols")
-    pairs = F.arrays_zip(
+    adjacent = F.arrays_zip(
         F.slice("symbols", 1, n - 1).alias("a"),
         F.slice("symbols", 2, n - 1).alias("b"),
     )
-    return (
-        words.filter(n >= 2)
-        .select(F.explode(pairs).alias("p"), "freq")
-        .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .agg(F.sum("freq").alias("cnt"))
-    )
+    merges: list[tuple[str, str]] = []
+    while len(merges) < n_merges:
+        pairs = (
+            words.filter(n >= 2)
+            .select(F.explode(adjacent).alias("p"), "freq")
+            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+            .agg(F.sum("freq").alias("cnt"))
+            .filter(eligible)
+        )
+        ranked = score(pairs, words).orderBy(F.desc("score"), "a", "b")
+        top = ranked.first()
+        if top is None:
+            break
+        if stats is not None:
+            stats["rounds"] = stats.get("rounds", 0) + 1
+        a, b = top["a"], top["b"]
+        merges.append((a, b))
+        fold = merge_pair_sql("symbols", a, b, merged(a, b))
+        words = words.withColumn("symbols", F.expr(fold)).localCheckpoint()
+    return merges
 
 
 def train_bpe_merges(
@@ -154,86 +250,47 @@ def train_bpe_merges(
     """Learn ``n_merges`` BPE merges over the corpus. Returns the ordered
     merge list — the vocabulary artifact a tokenizer ships with.
 
-    ``strategy`` picks the training engine for the merge loop; the
-    corpus scan that builds the (word, freq) table is distributed in
-    both modes, and both learn the bit-identical merge list:
+    ``strategy`` picks the training engine through
+    :func:`train_on_words`; the corpus scan that builds the (word, freq)
+    table is distributed in both modes, and both learn the bit-identical
+    merge list:
 
-    - ``"auto"`` (default): collect the word table under
-      ``driver_word_cap`` (LIMIT cap+1, so an over-cap table never
-      materializes on the driver) and run classic greedy merges
-      in-process — the SentencePiece/HF trainer shape, exploiting that
-      the word table is Zipf-bounded (the operators/lm.py argument):
-      ~10^6-10^8 rows at ANY corpus size. Measured on the 50k-doc
-      scaling corpus: 512 merges in ~3 s where the distributed loop
-      extrapolates to ~258 s — this is the production 32k-merge path.
-      Falls back to the distributed rounds past the cap.
-    - ``"distributed"``: the classic round loop, one merge per round
-      (pair-count shuffle → argmax row → fold apply → localCheckpoint).
-      It is the over-cap fallback and the bench's equality anchor.
+    - ``"auto"`` (default): under ``driver_word_cap`` the classic greedy
+      merges run in-process (:func:`bpe_merges_from_word_freqs`) — the
+      SentencePiece/HF trainer shape, exploiting that the word table is
+      Zipf-bounded (the operators/lm.py argument): ~10^6-10^8 rows at
+      ANY corpus size. Measured on the 50k-doc scaling corpus: 512
+      merges in ~3 s where the distributed loop extrapolates to ~258 s —
+      this is the production 32k-merge path. Falls back to the
+      distributed rounds past the cap.
+    - ``"distributed"``: :func:`merge_rounds` ranked by raw pair count —
+      the over-cap fallback and the bench's equality anchor.
 
     ``batch_size`` must be 1 (one merge per round). The parameter
     remains only because existing callers (bench.py's classic anchor)
-    pass ``batch_size=1``; any other value raises.
-
-    Distributed measurements at sf0.01 (localCheckpoint lineage
-    truncation): ~0.3 s/round, flat with round count; the 32-merge
-    run's first 16 merges equal the 16-merge run's."""
-    from solana_etl_spark.operators.vocab_driver import (
-        DRIVER_WORD_TABLE_CAP,
-        bpe_merges_from_word_freqs,
-    )
-
-    if driver_word_cap is None:
-        driver_word_cap = DRIVER_WORD_TABLE_CAP
-    if strategy not in ("auto", "distributed"):
-        raise ValueError(f"unknown strategy {strategy!r}")
+    pass ``batch_size=1``; any other value raises."""
     if batch_size != 1:
         raise ValueError(
             f"batch_size must be 1 (one merge per round), got {batch_size!r}"
         )
-    words_tbl = word_freq_table(docs, text_col)
-    if strategy == "auto":
-        rows = words_tbl.limit(driver_word_cap + 1).collect()
-        if len(rows) <= driver_word_cap:
-            if stats is not None:
-                stats["strategy"] = "driver"
-                stats["words_collected"] = len(rows)
-            return bpe_merges_from_word_freqs(
-                ((r["word"], r["freq"]) for r in rows),
-                n_merges,
-                append_eow,
-            )
-    if stats is not None:
-        stats["strategy"] = "distributed"
-    words = words_tbl.withColumn(
-        "symbols", _initial_symbols(F.col("word"), append_eow)
-    )
-    merges: list[tuple[str, str]] = []
-    while len(merges) < n_merges:
-        top = (
-            _pair_counts(words)
-            .orderBy(F.desc("cnt"), F.asc("a"), F.asc("b"))
-            .first()
+
+    def distributed(words: DataFrame) -> list[tuple[str, str]]:
+        symbols = _initial_symbols(F.col("word"), append_eow)
+        return merge_rounds(
+            words.withColumn("symbols", symbols),
+            n_merges,
+            lambda pairs, _: pairs.withColumn("score", F.col("cnt")),
+            stats=stats,
         )
-        if top is None:
-            break
-        if stats is not None:
-            stats["rounds"] = stats.get("rounds", 0) + 1
-        merges.append((top["a"], top["b"]))
-        # localCheckpoint, NOT persist+count: a persist chain keeps every
-        # prior round's (large, interpreted) merge-fold plan as an
-        # un-executed child, and Catalyst re-canonicalizes that
-        # O(rounds)-deep tree per cache lookup — measured on the WordPiece
-        # twin of this loop (operators/wordpiece.py): 24 rounds blew past
-        # 15 min with persist+count vs seconds per round truncated. At the
-        # default 16 merges the persist chain was still fine (~2 s/round),
-        # but the loop is O(rounds²) either way — truncation makes it
-        # linear. Same learned merges: checkpointing changes lineage only.
-        # The fold is SQL text, one parse per round (r10, guide §7.3).
-        words = words.withColumn(
-            "symbols", F.expr(merge_pair_sql("symbols", top["a"], top["b"]))
-        ).localCheckpoint()
-    return merges
+
+    return train_on_words(
+        word_freq_table(docs, text_col),
+        lambda rows: bpe_merges_from_word_freqs(rows, n_merges, append_eow),
+        distributed,
+        strategy,
+        driver_word_cap,
+        stats,
+    )
 
 
 def apply_bpe(
@@ -250,9 +307,6 @@ def apply_bpe(
     actual corpus encoding use :func:`apply_bpe_replace`, which produces
     identical output (property-tested) and measured 27× faster at sf0.1
     (18.8 s → 0.69 s, 12 merges)."""
-    words = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != ""
-    )
 
     def segment(word: Column) -> Column:
         syms = _initial_symbols(word, append_eow)
@@ -260,8 +314,98 @@ def apply_bpe(
             syms = merge_pair_expr(syms, a, b)
         return syms
 
-    return docs.withColumn(
-        out_col, F.flatten(F.transform(words, segment))
+    words = word_split(F.col(text_col))
+    return docs.withColumn(out_col, F.flatten(F.transform(words, segment)))
+
+
+def piece_spans(
+    words: DataFrame, max_piece_len: int, cont: str = ""
+) -> DataFrame:
+    """words(word, …) -> (word, …, s, j, piece): one row per substring of
+    each word up to ``max_piece_len`` chars — ``s`` its 1-based start,
+    ``j`` its length; a piece starting after the first char carries the
+    ``cont`` prefix (WordPiece's ``##``). Refuses
+    ``max_piece_len >= KEY_BASE`` at call time: :func:`piece_map` packs
+    (s, j) as ``(s-1) * KEY_BASE + j``, collision-free only below it,
+    and a collision would otherwise surface as a duplicate-map-key
+    runtime error — or, under the LEGACY mapKeyDedupPolicy, as silently
+    wrong segmentations."""
+    if max_piece_len >= KEY_BASE:
+        raise ValueError(
+            f"max_piece_len must be < {KEY_BASE} (key packing (start * "
+            f"{KEY_BASE} + len) is collision-free only below it), got "
+            f"{max_piece_len}"
+        )
+    word, n = F.col("word"), F.length("word")
+
+    def piece(s: Column, j: Column) -> Column:
+        text = word.substr(s, j)
+        prefixed = F.when(s == 1, text).otherwise(F.concat(F.lit(cont), text))
+        return F.struct(s.alias("s"), j.alias("j"), prefixed.alias("piece"))
+
+    spans = F.flatten(
+        F.transform(
+            F.sequence(F.lit(1), n),
+            lambda s: F.transform(
+                F.sequence(F.lit(1), F.least(F.lit(max_piece_len), n - s + 1)),
+                lambda j: piece(s, j),
+            ),
+        )
+    )
+    return words.select("*", F.explode(spans).alias("_c")).select(
+        *words.columns, "_c.s", "_c.j", "_c.piece"
+    )
+
+
+def piece_map(
+    words: DataFrame,
+    max_piece_len: int,
+    edges: Callable[[DataFrame], DataFrame],
+    cont: str = "",
+) -> DataFrame:
+    """words(word, …) -> (word, _map): the packed piece map of each word.
+    ``edges`` turns the :func:`piece_spans` candidates (word, s, j,
+    piece) into the kept (word, s, j, v) rows; ``_map`` maps each kept
+    (s, j) to ``v`` (read it with :func:`piece_at`). One shuffle of the
+    bounded candidate relation."""
+    kept = edges(piece_spans(words.select("word"), max_piece_len, cont))
+    key = (F.col("s") - 1) * KEY_BASE + F.col("j")
+    entries = F.collect_list(F.struct(key.alias("k"), F.col("v").alias("v")))
+    return kept.groupBy("word").agg(F.map_from_entries(entries).alias("_map"))
+
+
+def piece_at(pmap: Column, start0: Column, length: Column) -> Column:
+    """The :func:`piece_map` value of the ``length``-char piece at 0-based
+    ``start0`` (NULL when the map has no such piece)."""
+    return F.element_at(pmap, (start0 * KEY_BASE + length).cast("int"))
+
+
+def encode_distinct_words(
+    docs: DataFrame,
+    segment: Callable[[DataFrame], DataFrame],
+    text_col: str,
+    id_col: str,
+    out_col: str,
+) -> DataFrame:
+    """Tokenize a corpus by segmenting each DISTINCT word once (the
+    Zipf-bounded table): ``segment`` maps words(word) to (word, pieces,
+    …); the in-order word stream joins the segmentations back and each
+    document reassembles in word order. NULL text -> NULL tokens;
+    empty/whitespace-only -> empty array. Shuffles: the segment join and
+    one per-doc regroup — both linear in the corpus — plus whatever
+    ``segment`` runs on the distinct words."""
+    stream = docs.select(
+        F.col(id_col).alias("_eid"),
+        F.posexplode(word_split(F.col(text_col))).alias("_pos", "word"),
+    )
+    seg = segment(stream.select("word").distinct()).select("word", "pieces")
+    in_order = F.array_sort(F.collect_list(F.struct("_pos", "pieces")))
+    toks = F.flatten(F.transform(in_order, lambda s: s["pieces"]))
+    per_doc = stream.join(seg, "word").groupBy("_eid").agg(toks.alias("_toks"))
+    out = F.when(F.col(text_col).isNull(), F.lit(None).cast("array<string>"))
+    out = out.otherwise(F.coalesce("_toks", F.array().cast("array<string>")))
+    return docs.join(per_doc, docs[id_col] == per_doc["_eid"], "left").select(
+        *docs.columns, out.alias(out_col)
     )
 
 

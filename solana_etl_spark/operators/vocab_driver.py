@@ -1,29 +1,32 @@
 """Driver-side classic BPE / WordPiece training over the bounded
-(word, freq) table — the hybrid fast path of the distributed trainers.
+(word, freq) table — the fast engine of the two tokenizer trainers, and
+the driver half of the shared tokenizer core.
 
-Why this exists: the distributed merge loop (operators/vocab.py,
-operators/wordpiece.py) is exact but pays one or two Spark jobs PER
-MERGE ROUND, and the provably-classic-equal batching policy realizes
-only ~1.5 merges/round on Zipf text (measured, BENCH_LOCAL r7
-``vocab_batched``) — a production 32k-merge vocabulary would be hours
-of scheduler overhead. But the table the rounds iterate on is the
-(word, freq) aggregate, which is Zipf-BOUNDED: ~10^6-10^8 rows
-regardless of corpus size — the same bounded-vocab argument
-operators/lm.py and operators/unigram.py already rely on. This is
-exactly how SentencePiece and the HF tokenizer trainers work: one
-distributed pass reduces the corpus to word counts, the greedy merge
-loop runs in one process over that table.
+Why this exists: the distributed merge loop (``vocab.merge_rounds``) is
+exact but pays one or two Spark jobs PER MERGE, so a production
+32k-merge vocabulary would be hours of scheduler overhead. The table the
+rounds iterate on is the (word, freq) aggregate, which is Zipf-BOUNDED:
+~10^6-10^8 rows regardless of corpus size — the same bounded-vocab
+argument operators/lm.py and operators/unigram.py rely on. This is how
+SentencePiece and the HF tokenizer trainers work: one distributed pass
+reduces the corpus to word counts, and the greedy merge loop runs in one
+process over that table. ``vocab.train_on_words`` is the one dispatch:
+it collects the table under ``DRIVER_WORD_TABLE_CAP`` and runs the loops
+here, and past the cap it runs the distributed rounds.
 
-So the hybrid: ONE corpus scan builds the word table distributed; if it
-fits under a counted cap it is collected and classic greedy training
-runs here with an incremental pair index + lazy max-heap (each merge
-touches only the words containing the pair — the textbook fast BPE
-trainer); past the cap the caller falls back to the distributed round
-loop. The learned artifact is BIT-EQUAL to the classic distributed mode
-by construction — same counts, same (count desc, pair lexical) /
-(score desc, pair lexical) tie-breaks (Python code-point string order ==
-Spark/DuckDB binary UTF-8 order; UTF-8 preserves code-point order) —
-and is pinned by the property tests in tests/test_vocab_driver.py.
+Both loops share one pair index (pair → count, pair → containing words)
+and one per-merge step (:func:`_merge_words`): greedy-merge only the
+words that hold the pair and update the index from each word's pair
+diff — the textbook fast BPE trainer. Each loop keeps only its own
+argmax: a lazy max-heap on (count desc, pair lexical) for BPE, and on
+(score desc, pair lexical) for WordPiece, whose score also needs the
+symbol counts. The learned artifact is BIT-EQUAL to the distributed mode
+by construction — same counts, same tie-breaks (Python code-point string
+order == Spark/DuckDB binary UTF-8 order) — and is pinned by the
+property tests in tests/test_vocab_driver.py.
+
+This module also defines the symbol alphabet both engines share:
+``EOW``, ``CONT`` and WordPiece's ``MAX_PIECE_LEN``.
 
 The reference has no tokenizer surface; charter LLM-pipeline machinery
 (SURVEY §2.11 text-analysis family).
@@ -35,8 +38,11 @@ import heapq
 from collections import Counter, defaultdict
 from typing import Iterable
 
-EOW = "</w>"
-CONT = "##"
+EOW = "</w>"  # BPE end-of-word sentinel, as in the original formulation
+CONT = "##"  # WordPiece continuation prefix
+# Longest WordPiece piece, in word chars: the trainer's merge bound and
+# the encoder's match bound, so every trained piece is reachable.
+MAX_PIECE_LEN = 12
 
 # Cap on collected (word, freq) rows for the driver path — the
 # train_cap / BROADCAST_CANDIDATE_CAP discipline: count first (the
@@ -47,6 +53,13 @@ CONT = "##"
 # BPE, ~1053 B/word WordPiece → ~0.7-1.0 GiB at this cap, well inside
 # the 16g driver session.get_spark provisions.
 DRIVER_WORD_TABLE_CAP = 1_000_000
+
+Pair = tuple[str, str]
+
+
+def strip_cont(sym: str) -> str:
+    """A WordPiece symbol's word chars (the ``##`` prefix dropped)."""
+    return sym[len(CONT) :] if sym.startswith(CONT) else sym
 
 
 def _greedy_merge(syms: list[str], a: str, b: str, merged: str) -> list[str]:
@@ -64,31 +77,70 @@ def _greedy_merge(syms: list[str], a: str, b: str, merged: str) -> list[str]:
     return out
 
 
+def _pair_index(words: list[list]):
+    """(pair → freq-weighted count, pair → indexes of the words that
+    hold it)."""
+    pair_counts: dict[Pair, int] = defaultdict(int)
+    pair_words: dict[Pair, set[int]] = defaultdict(set)
+    for idx, (syms, f) in enumerate(words):
+        for p in zip(syms, syms[1:]):
+            pair_counts[p] += f
+            pair_words[p].add(idx)
+    return pair_counts, pair_words
+
+
+def _merge_words(
+    words: list[list],
+    pair_counts: dict[Pair, int],
+    pair_words: dict[Pair, set[int]],
+    a: str,
+    b: str,
+    merged: str,
+) -> tuple[set[Pair], int]:
+    """Apply one merge to the words holding (a, b) and update the pair
+    index from each word's pair diff; pairs whose count reaches zero
+    leave the index. Returns the pairs whose count changed and the
+    freq-weighted number of merges applied (each one turns an a and a b
+    into one ``merged``)."""
+    changed: set[Pair] = set()
+    applied = 0
+    for idx in sorted(pair_words.get((a, b), ())):
+        syms, f = words[idx]
+        new_syms = _greedy_merge(syms, a, b, merged)
+        words[idx][0] = new_syms
+        applied += (len(syms) - len(new_syms)) * f
+        old = Counter(zip(syms, syms[1:]))
+        new = Counter(zip(new_syms, new_syms[1:]))
+        for p in old.keys() | new.keys():
+            d = new[p] - old[p]
+            if d:
+                pair_counts[p] += d * f
+                changed.add(p)
+            if new[p]:
+                pair_words[p].add(idx)
+            else:
+                pair_words[p].discard(idx)
+    for p in changed:
+        if pair_counts[p] <= 0:
+            del pair_counts[p]
+            pair_words.pop(p, None)
+    return changed, applied
+
+
 def bpe_merges_from_word_freqs(
     word_freqs: Iterable[tuple[str, int]],
     n_merges: int,
     append_eow: bool = True,
 ) -> list[tuple[str, str]]:
     """Classic BPE over a collected (word, freq) table: argmax pair by
-    (count desc, a, b) each round, greedy-left apply. Incremental: a
-    pair → containing-words index confines each round's recount to the
-    words the merge touches, and a lazy heap keeps the argmax O(log P).
-    An entry with each pair's CURRENT count is always present (every
-    count change pushes a fresh entry), so stale pops are skipped by a
-    count check without re-pushing."""
-    words: list[list] = []  # [symbols, freq]
-    for w, f in word_freqs:
-        syms = list(w)
-        if append_eow:
-            syms.append(EOW)
-        words.append([syms, f])
-
-    pair_counts: dict[tuple[str, str], int] = defaultdict(int)
-    pair_words: dict[tuple[str, str], set[int]] = defaultdict(set)
-    for idx, (syms, f) in enumerate(words):
-        for p in zip(syms, syms[1:]):
-            pair_counts[p] += f
-            pair_words[p].add(idx)
+    (count desc, a, b) each round, greedy-left apply. A lazy heap keeps
+    the argmax O(log P): every pair whose count a merge changed gets a
+    fresh entry, so an entry with each live pair's CURRENT count is
+    always present and stale pops are skipped by a count check."""
+    words = [
+        [list(w) + [EOW] if append_eow else list(w), f] for w, f in word_freqs
+    ]
+    pair_counts, pair_words = _pair_index(words)
     heap = [(-c, a, b) for (a, b), c in pair_counts.items()]
     heapq.heapify(heap)
 
@@ -99,39 +151,16 @@ def bpe_merges_from_word_freqs(
         if cur <= 0 or -negc != cur:
             continue  # stale entry; a current one is elsewhere in the heap
         merges.append((a, b))
-        merged = a + b
-        for idx in sorted(pair_words.get((a, b), ())):
-            syms, f = words[idx]
-            old = Counter(zip(syms, syms[1:]))
-            new_syms = _greedy_merge(syms, a, b, merged)
-            new = Counter(zip(new_syms, new_syms[1:]))
-            words[idx][0] = new_syms
-            for p in old.keys() | new.keys():
-                d = new[p] - old[p]
-                if d:
-                    pair_counts[p] += d * f
-                    heapq.heappush(heap, (-pair_counts[p], p[0], p[1]))
-                if new[p]:
-                    pair_words[p].add(idx)
-                else:
-                    pair_words[p].discard(idx)
-        # fully consumed (greedy removed every occurrence in every
-        # containing word), unless a == merged-prefix chains — the
-        # per-word deltas above already left the true residual count
-        if pair_counts.get((a, b), 0) <= 0:
-            pair_counts.pop((a, b), None)
-            pair_words.pop((a, b), None)
+        changed, _ = _merge_words(words, pair_counts, pair_words, a, b, a + b)
+        for p in changed & pair_counts.keys():
+            heapq.heappush(heap, (-pair_counts[p], p[0], p[1]))
     return merges
-
-
-def _wp_content_len(sym: str) -> int:
-    return len(sym) - len(CONT) if sym.startswith(CONT) else len(sym)
 
 
 def wordpiece_vocab_from_word_freqs(
     word_freqs: Iterable[tuple[str, int]],
     n_merges: int,
-    max_piece_len: int = 12,
+    max_piece_len: int = MAX_PIECE_LEN,
 ) -> list[str]:
     """Classic WordPiece over a collected (word, freq) table: merge the
     pair maximizing count(ab) / (count(a)·count(b)) (IEEE-double ratio of
@@ -146,99 +175,65 @@ def wordpiece_vocab_from_word_freqs(
     merged token only, so the scores of exactly the pairs touching those
     symbols move — each gets a fresh entry pushed; pops verify the full
     (cnt, ca, cb) triple against current state."""
-    words: list[list] = []
-    for w, f in word_freqs:
-        syms = [w[0]] + [CONT + c for c in w[1:]] if w else []
-        if syms:
-            words.append([syms, f])
-
-    pair_counts: dict[tuple[str, str], int] = defaultdict(int)
-    pair_words: dict[tuple[str, str], set[int]] = defaultdict(set)
+    words = [
+        [[w[0]] + [CONT + c for c in w[1:]], f] for w, f in word_freqs if w
+    ]
+    pair_counts, pair_words = _pair_index(words)
     sym_counts: dict[str, int] = defaultdict(int)
-    sym_pairs: dict[str, set[tuple[str, str]]] = defaultdict(set)
-    for idx, (syms, f) in enumerate(words):
+    sym_pairs: dict[str, set[Pair]] = defaultdict(set)
+    for syms, f in words:
         for s in syms:
             sym_counts[s] += f
-        for p in zip(syms, syms[1:]):
-            pair_counts[p] += f
-            pair_words[p].add(idx)
-            sym_pairs[p[0]].add(p)
-            sym_pairs[p[1]].add(p)
-
+    for p in pair_counts:
+        sym_pairs[p[0]].add(p)
+        sym_pairs[p[1]].add(p)
     alphabet = sorted(sym_counts)
 
-    def entry(p: tuple[str, str]):
-        c = pair_counts[p]
-        ca, cb = sym_counts[p[0]], sym_counts[p[1]]
-        return (-(c / (ca * cb)), p[0], p[1], c, ca, cb)
+    def push(p: Pair) -> None:
+        if len(strip_cont(p[0])) + len(strip_cont(p[1])) <= max_piece_len:
+            c = pair_counts[p]
+            ca, cb = sym_counts[p[0]], sym_counts[p[1]]
+            heapq.heappush(heap, (-(c / (ca * cb)), p[0], p[1], c, ca, cb))
 
-    heap = [
-        entry(p)
-        for p in pair_counts
-        if _wp_content_len(p[0]) + _wp_content_len(p[1]) <= max_piece_len
-    ]
-    heapq.heapify(heap)
+    heap: list = []
+    for p in pair_counts:
+        push(p)
 
     merges: list[str] = []
     while len(merges) < n_merges and heap:
         _, a, b, c, ca, cb = heapq.heappop(heap)
-        p = (a, b)
         if (
-            pair_counts.get(p, 0) != c
+            pair_counts.get((a, b), 0) != c
             or c <= 0
             or sym_counts.get(a, 0) != ca
             or sym_counts.get(b, 0) != cb
         ):
             continue
-        merged = a + (b[len(CONT):] if b.startswith(CONT) else b)
+        merged = a + strip_cont(b)
         merges.append(merged)
-        touched_pairs: set[tuple[str, str]] = set()
-        for idx in sorted(pair_words.get(p, ())):
-            syms, f = words[idx]
-            old_p = Counter(zip(syms, syms[1:]))
-            old_s = Counter(syms)
-            new_syms = _greedy_merge(syms, a, b, merged)
-            new_p = Counter(zip(new_syms, new_syms[1:]))
-            new_s = Counter(new_syms)
-            words[idx][0] = new_syms
-            for q in old_p.keys() | new_p.keys():
-                d = new_p[q] - old_p[q]
-                if d:
-                    pair_counts[q] += d * f
-                    touched_pairs.add(q)
-                if new_p[q]:
-                    pair_words[q].add(idx)
-                    sym_pairs[q[0]].add(q)
-                    sym_pairs[q[1]].add(q)
-                else:
-                    pair_words[q].discard(idx)
-            for s in old_s.keys() | new_s.keys():
-                d = new_s[s] - old_s[s]
-                if d:
-                    sym_counts[s] += d * f
-        # scores moved for every pair touching a changed-count symbol
-        # (a, b, merged) plus every pair whose own count changed
-        for s in (a, b, merged):
-            touched_pairs |= sym_pairs.get(s, set())
-        for q in touched_pairs:
-            if pair_counts.get(q, 0) <= 0:
-                pair_counts.pop(q, None)
-                pair_words.pop(q, None)
-                # prune the per-symbol reverse index too: a dead pair
-                # left in sym_pairs would be re-pushed by every later
-                # merge touching its symbols (skipped on pop, but heap
-                # and set growth would track all-pairs-ever, not live
-                # pairs)
-                for s in (q[0], q[1]):
-                    ps = sym_pairs.get(s)
-                    if ps is not None:
-                        ps.discard(q)
-                        if not ps:
-                            sym_pairs.pop(s, None)
+        changed, applied = _merge_words(
+            words, pair_counts, pair_words, a, b, merged
+        )
+        sym_counts[a] -= applied
+        sym_counts[b] -= applied
+        sym_counts[merged] += applied
+        # scores moved for every pair whose own count changed plus every
+        # pair touching a changed-count symbol (a, b, merged)
+        touched = changed.union(
+            *(sym_pairs.get(s, ()) for s in (a, b, merged))
+        )
+        for q in touched:
+            if q in pair_counts:
+                sym_pairs[q[0]].add(q)
+                sym_pairs[q[1]].add(q)
+                push(q)
                 continue
-            if (
-                _wp_content_len(q[0]) + _wp_content_len(q[1])
-                <= max_piece_len
-            ):
-                heapq.heappush(heap, entry(q))
+            # a dead pair leaves the per-symbol index too, or every later
+            # merge touching its symbols would re-push it
+            for s in q:
+                ps = sym_pairs.get(s)
+                if ps is not None:
+                    ps.discard(q)
+                    if not ps:
+                        del sym_pairs[s]
     return alphabet + merges

@@ -25,11 +25,19 @@ seconds-scale driver pass over it.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from solana_etl_spark.operators.vocab import word_freq_table
+from solana_etl_spark.operators.vocab import train_on_words, word_freq_table
+from solana_etl_spark.operators.vocab_driver import (
+    DRIVER_WORD_TABLE_CAP,
+    MAX_PIECE_LEN,
+    bpe_merges_from_word_freqs,
+    wordpiece_vocab_from_word_freqs,
+)
 from solana_etl_spark.streaming import state
 
 _STATE_SCHEMA = "word string, freq long"
@@ -85,16 +93,19 @@ def start_streaming_word_counts(
     return state.start_batches(docs_stream, process_batch, checkpoint_dir)
 
 
-def _collect_state(
-    spark: SparkSession, state_dir: str, word_cap: int
-) -> list[tuple[str, int]]:
-    rows = read_word_state(spark, state_dir).limit(word_cap + 1).collect()
-    if len(rows) > word_cap:
+def _train_from_state(spark: SparkSession, state_dir: str, word_cap, driver):
+    """``vocab.train_on_words`` over the state; an over-cap table raises
+    instead of running the distributed rounds."""
+    cap = DRIVER_WORD_TABLE_CAP if word_cap is None else word_cap
+
+    def over_cap(_words: DataFrame):
         raise ValueError(
-            f"streamed word table exceeds word_cap={word_cap}; raise the "
+            f"streamed word table exceeds word_cap={cap}; raise the "
             "cap or train with the distributed loop over read_word_state"
         )
-    return [(r["word"], r["freq"]) for r in rows]
+
+    words = read_word_state(spark, state_dir)
+    return train_on_words(words, driver, over_cap, cap=cap)
 
 
 def train_bpe_from_state(
@@ -106,31 +117,23 @@ def train_bpe_from_state(
 ) -> list[tuple[str, str]]:
     """BPE merges from the maintained word state — bit-equal to batch
     training over the same streamed rows (counts are additive)."""
-    from solana_etl_spark.operators.vocab_driver import (
-        DRIVER_WORD_TABLE_CAP,
-        bpe_merges_from_word_freqs,
+    train = partial(
+        bpe_merges_from_word_freqs, n_merges=n_merges, append_eow=append_eow
     )
-
-    cap = DRIVER_WORD_TABLE_CAP if word_cap is None else word_cap
-    return bpe_merges_from_word_freqs(
-        _collect_state(spark, state_dir, cap), n_merges, append_eow
-    )
+    return _train_from_state(spark, state_dir, word_cap, train)
 
 
 def train_wordpiece_from_state(
     spark: SparkSession,
     state_dir: str,
     n_merges: int,
-    max_piece_len: int = 12,
+    max_piece_len: int = MAX_PIECE_LEN,
     word_cap: int | None = None,
 ) -> list[str]:
     """WordPiece vocabulary from the maintained word state."""
-    from solana_etl_spark.operators.vocab_driver import (
-        DRIVER_WORD_TABLE_CAP,
+    train = partial(
         wordpiece_vocab_from_word_freqs,
+        n_merges=n_merges,
+        max_piece_len=max_piece_len,
     )
-
-    cap = DRIVER_WORD_TABLE_CAP if word_cap is None else word_cap
-    return wordpiece_vocab_from_word_freqs(
-        _collect_state(spark, state_dir, cap), n_merges, max_piece_len
-    )
+    return _train_from_state(spark, state_dir, word_cap, train)

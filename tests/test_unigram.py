@@ -198,8 +198,8 @@ def test_roundtrip_property(spark, text):
 def test_key_base_guard_rejects_oversized_piece_len(spark):
     """(start, len) edge-map keys pack as start * KEY_BASE + len, so
     max_piece_len >= KEY_BASE would collide keys — the module must refuse
-    loudly (same contract as wordpiece._match_maps) instead of surfacing
-    a duplicate-map-key error or silently wrong segmentations."""
+    loudly (vocab.piece_spans' guard, which WordPiece shares) instead of
+    surfacing a duplicate-map-key error or silently wrong segmentations."""
     from solana_etl_spark.operators.unigram import (
         KEY_BASE,
         _vocab_df,

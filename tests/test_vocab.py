@@ -4,12 +4,15 @@ apply and (count desc, pair lexical) tie-break)."""
 
 from __future__ import annotations
 
+import ast
+import pathlib
 import re
 from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
+from solana_etl_spark.operators import vocab
 from solana_etl_spark.operators.vocab import (
     EOW,
     apply_bpe,
@@ -257,3 +260,85 @@ def test_bpe_encode_roundtrip_reconstructs_text(spark):
         joined = "".join(r.bpe_tokens)
         words = [w for w in joined.split(EOW) if w != ""]
         assert " ".join(words) == norm, (r.text[:80], r.bpe_tokens[:10])
+
+
+# --- source guard: one word split, one piece-key packing ----------------
+
+PKG = pathlib.Path(vocab.__file__).resolve().parent.parent
+TOKENIZER_MODULES = (
+    "operators/vocab.py",
+    "operators/vocab_driver.py",
+    "operators/wordpiece.py",
+    "operators/unigram.py",
+    "streaming/vocab_stream.py",
+    "operators/lm.py",
+)
+# (module path, enclosing function) allowed to split text into words
+SPLIT_ALLOWED = {("operators/vocab.py", "word_split")}
+# ... and to touch KEY_BASE: its definition, the guard + packing, the read
+KEY_ALLOWED = {
+    ("operators/vocab.py", None),
+    ("operators/vocab.py", "piece_spans"),
+    ("operators/vocab.py", "piece_map"),
+    ("operators/vocab.py", "piece_at"),
+}
+
+
+def _tokenizer_sites(path: pathlib.Path, rel: str) -> list[tuple]:
+    """Every whitespace word split — a ``split`` call with the ``\\s+``
+    pattern, or a ``tokens`` call (operators/text.py's split) — as
+    ("split", module path, outermost enclosing function or None), and
+    every ``KEY_BASE`` reference as ("key", …)."""
+    found = []
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            inner = fn
+            if fn is None and isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef)
+            ):
+                inner = child.name
+            if isinstance(child, ast.Call):
+                f = child.func
+                name = getattr(f, "attr", getattr(f, "id", None))
+                args = [getattr(a, "value", None) for a in child.args]
+                if (name == "split" and r"\s+" in args) or name == "tokens":
+                    found.append(("split", rel, inner))
+            if isinstance(child, ast.Name) and child.id == "KEY_BASE":
+                found.append(("key", rel, inner))
+            visit(child, inner)
+
+    visit(ast.parse(path.read_text(), str(path)), None)
+    return found
+
+
+def test_word_split_and_key_packing_live_in_the_shared_helpers():
+    sites = [
+        s
+        for rel in TOKENIZER_MODULES
+        for s in _tokenizer_sites(PKG / rel, rel)
+    ]
+    splits = {(rel, fn) for kind, rel, fn in sites if kind == "split"}
+    keys = {(rel, fn) for kind, rel, fn in sites if kind == "key"}
+    assert splits == SPLIT_ALLOWED, "split words with vocab.word_split"
+    assert keys == KEY_ALLOWED, "pack piece keys with vocab.piece_map/piece_at"
+
+
+def test_tokenizer_guard_sees_stray_splits_and_keys(tmp_path):
+    probe = tmp_path / "probe.py"
+    probe.write_text(
+        "def words(docs):\n"
+        "    return F.split(F.lower(docs.text), r'\\s+')\n"
+        "def toks(c):\n"
+        "    return tokens(c)\n"
+        "def key(s, j):\n"
+        "    return s * KEY_BASE + j\n"
+        "x = re.split('\\\\s+', s)\n"
+        "y = F.split(c, '')\n"
+    )
+    assert _tokenizer_sites(probe, "probe.py") == [
+        ("split", "probe.py", "words"),
+        ("split", "probe.py", "toks"),
+        ("key", "probe.py", "key"),
+        ("split", "probe.py", None),
+    ]

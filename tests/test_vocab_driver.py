@@ -92,6 +92,25 @@ def test_hybrid_dispatch_cap_fallback(spark):
     assert (
         train_wordpiece_vocab(docs, n_merges=8, driver_word_cap=3) == wp_want
     )
+    # the distributed loop's hooks: WordPiece's piece-length filter where
+    # it binds (the 12th unbounded merge is the 4-char 'than') and BPE
+    # without the end-of-word sentinel, each equal to the driver engine
+    freqs = list(_word_freqs(CORPUS).items())
+    wp3 = wordpiece_vocab_from_word_freqs(freqs, 12, max_piece_len=3)
+    assert wp3 != wordpiece_vocab_from_word_freqs(freqs, 12)
+    assert (
+        train_wordpiece_vocab(
+            docs, n_merges=12, max_piece_len=3, driver_word_cap=3
+        )
+        == wp3
+    )
+    stats = {}
+    got = train_bpe_merges(
+        docs, n_merges=8, append_eow=False, stats=stats, driver_word_cap=3
+    )
+    assert stats["strategy"] == "distributed"
+    assert got == bpe_merges_from_word_freqs(freqs, 8, append_eow=False)
+    assert got != _bpe_ref(CORPUS, 8)
 
 
 def test_driver_word_table_memory_per_row_is_budgeted():
